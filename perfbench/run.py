@@ -330,9 +330,27 @@ def per_layer(workload, raw):
     return layers
 
 
+def run_all(spec, args):
+    """Every workload of BENCHMARK.json in turn, each in its own process;
+    prints each one's metric lines under its name and, last, one JSON
+    object of all results. Non-zero when any run fails its checks."""
+    results, rc = {}, 0
+    for w in (x["name"] for x in spec["workloads"]):
+        r = subprocess.run([sys.executable, os.path.abspath(__file__), "--workload", w,
+                            "--seed", str(args.seed), "--seconds", str(args.seconds),
+                            "--trace", str(args.trace)], stdout=subprocess.PIPE, text=True)
+        lines = r.stdout.strip().splitlines()
+        for line in lines[:-1]:
+            print(f"{w}: {line}")
+        results[w] = json.loads(lines[-1]) if lines and lines[-1].startswith("{") else None
+        rc = rc or r.returncode or (results[w] is None)
+    print(json.dumps(results))
+    return int(rc)
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=WORKLOADS + ("all",))
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
@@ -343,6 +361,8 @@ def main():
         return 2
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
+    if args.workload == "all":
+        return run_all(spec, args)
     bb = os.path.join(ROOT, os.environ.get("CARGO_TARGET_DIR", ".bench_build"))
     os.makedirs(bb, exist_ok=True)
     cp = build(bb)
