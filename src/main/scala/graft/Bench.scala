@@ -215,7 +215,7 @@ object Bench {
       // cycles ~2.4k distinct codegen units per SF through
       // CodeGenerator.cache, so with the default every timed rep
       // re-Janino-compiles its whole query — measured 2,661 compiles
-      // per steady-state pass (DevProbe SPARK_GRAFT_PROBE_CODEGEN),
+      // per steady-state pass (SCALE.md round-20 codegen section),
       // falling to ~30 with a suite-sized cache and cutting the pure
       // fixed-cost pass wall 84.4 -> 49.7 s at sf0.01. Static conf, set
       // before the session exists; env-overridable for A/B probes. Not

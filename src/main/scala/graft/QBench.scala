@@ -3,7 +3,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time individual queries by name (args), min of `reps`
   * (env SPARK_GRAFT_REPS, default 2), same session shape as Bench.
-  * Not part of the engine surface — iteration harness only.
+  * Each rep is split into build (DataFrame construction), plan
+  * (analysis + optimization + physical planning, forced through
+  * `executedPlan`) and exec (the `count()` action, which also plans
+  * its own aggregate over the frame); the line shows the split of the
+  * fastest rep. Not part of the engine surface — iteration harness
+  * only.
   */
 object QBench {
   def main(args: Array[String]): Unit = {
@@ -30,12 +35,19 @@ object QBench {
       catch { case _: Throwable => () }
     }
     names.foreach { n =>
-      val times = (1 to reps).map { _ =>
+      val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(n)(spark, sfDir).count()
-        ((System.nanoTime() - t0) / 1e9, rows)
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val t2 = System.nanoTime()
+        val rows = df.count()
+        val t3 = System.nanoTime()
+        (Seq(t1 - t0, t2 - t1, t3 - t2).map(_ / 1e9), rows)
       }
-      println(f"$n%-28s min=${times.map(_._1).min}%8.3f s  all=${times.map(t => f"${t._1}%.3f").mkString(",")}  rows=${times.head._2}")
+      val Seq(build, plan, exec) = runs.minBy(_._1.sum)._1
+      println(f"$n%-28s min=${build + plan + exec}%8.3f s  all=${runs.map(r => f"${r._1.sum}%.3f").mkString(",")}  " +
+        f"build=$build%.3f plan=$plan%.3f exec=$exec%.3f  rows=${runs.head._2}")
     }
     spark.stop()
   }

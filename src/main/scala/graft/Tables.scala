@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -17,7 +19,7 @@ object Tables {
     * re-reads a footer for the schema (~30–60 ms per table on this
     * box), and the suite calls it 1–5 times per query per rep, so a
     * bench pass paid seconds of repeated driver-side metadata work for
-    * identical plans (measured via the DevProbe build/plan/exec split:
+    * identical plans (measured with a build/plan/exec split:
     * q2_join_agg spent 0.3 s of its 0.7 s wall CONSTRUCTING the frame).
     * Reusing the immutable DataFrame is the catalog-table idiom (a
     * production session resolves a table once); every action on it
@@ -37,11 +39,40 @@ object Tables {
     * life (the WeakHashMap javadoc's value-references-key warning; r20
     * ADVICE item 1). The listener fires when the session's
     * SparkContext stops — the only way a session "stops" — and drops
-    * exactly that session's entry (TablesMemoSpec pins this).
+    * the entries of exactly that context's sessions (TablesMemoSpec
+    * pins this).
     */
   private val frameMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]]()
+
+  /** The eviction listener of one SparkContext: the session keys it
+    * has served, all dropped from [[frameMemo]] on application end.
+    */
+  private final class MemoEvictor extends SparkListener {
+    val sessions: java.util.Set[String] =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+      sessions.forEach(uuid => frameMemo.remove(uuid))
+  }
+
+  /** One [[MemoEvictor]] per SparkContext, so a memo re-populated after
+    * an eviction adds no listener to the bus. Weakly keyed: the
+    * evictor never references its context, so a stopped context can
+    * still be collected.
+    */
+  private val evictors = new java.util.WeakHashMap[SparkContext, MemoEvictor]()
+
+  private def evictorFor(sc: SparkContext): MemoEvictor = evictors.synchronized {
+    val existing = evictors.get(sc)
+    if (existing != null) existing
+    else {
+      val fresh = new MemoEvictor
+      evictors.put(sc, fresh)
+      sc.addSparkListener(fresh)
+      fresh
+    }
+  }
 
   /** Test seam: whether [[frameMemo]] holds an entry for a session. */
   private[graft] def frameMemoHas(sessionUUID: String): Boolean =
@@ -64,9 +95,9 @@ object Tables {
     * eviction lifecycle. r21: `materializedFrame` store reads paid the
     * un-memoized `spark.read.parquet` per CALL (~0.1 s of driver
     * re-list + footer re-read per store-served query invocation — the
-    * exact r20 frame-memo lesson, unapplied to the store paths; the
-    * DevProbe split showed dedup_image_phash build=0.10-0.12 s, all of
-    * it this).
+    * exact r20 frame-memo lesson, unapplied to the store paths; a
+    * build/plan/exec split showed dedup_image_phash build=0.10-0.12 s,
+    * all of it this; SCALE.md round 21).
     */
   def loadPath(spark: SparkSession, path: String): DataFrame = {
     val stamp =
@@ -75,24 +106,10 @@ object Tables {
         return spark.read.parquet(path)
       }
     val uuid = sessionKey(spark)
-    val perSession = {
-      val existing = frameMemo.get(uuid)
-      if (existing != null) existing
-      else {
-        val fresh = new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
-        val prev = frameMemo.putIfAbsent(uuid, fresh)
-        if (prev != null) prev
-        else {
-          // registered once per session, by the putIfAbsent winner
-          spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-              frameMemo.remove(uuid)
-          })
-          fresh
-        }
-      }
-    }
+    val perSession = frameMemo.computeIfAbsent(uuid, { _ =>
+      evictorFor(spark.sparkContext).sessions.add(uuid)
+      new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+    })
     val cached = perSession.get(path)
     if (cached != null && cached._1 == stamp) cached._2
     else {

@@ -73,7 +73,7 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   * tokens reconstructs the original bytes, so every window AND every
   * chunk is a contiguous byte range of the input — the scan feeds
   * those ranges straight into one thread-local MessageDigest, no
-  * intermediate strings at all. r16 DevProbe A/B at sf0.1 (same run,
+  * intermediate strings at all. r16 A/B at sf0.1 (same run,
   * min-of-7): full dedup_cdc_chunks 0.790 s (HOF) -> 0.414 s
   * (native); the md5 work itself is irreducible (the oracle pays it
   * too), the delta is the lambda/allocation overhead.
@@ -249,9 +249,9 @@ case class DistinctShingleStructs(child: Expression, n: Int) extends UnaryExpres
   * O(tokens) counting scan; terms are zero-copy UTF8String slices
   * over the input's backing bytes (the distinct-shingle pattern).
   * Per-doc work is linear, so the win over the HOF formulation GROWS
-  * with document length at scale; concrete timings live in the
-  * committed `DevProbe` A/B probes and the per-round BENCH artifacts,
-  * not here (in-code numbers go stale and aren't reproducible).
+  * with document length at scale; concrete timings live in SCALE.md
+  * and the per-round BENCH artifacts, not here (in-code numbers go
+  * stale and aren't reproducible).
   *
   * Memory note: because each emitted term is a zero-copy slice, every
   * (term, tf) struct pins the FULL document's byte array until the

@@ -562,7 +562,7 @@ object Hnsw {
     * hops x layers + efRounds, independent of corpus size.
     *
     * Defaults ef=32 / efRounds=4 are the MEASURED floor of the r19
-    * recall sweep (DevProbe R19H, 5 query ids x 3 SFs): at 20k
+    * recall sweep (5 query ids x 3 SFs, SCALE.md round 19): at 20k
     * vectors, (16, 3) collapsed to 0-2 of the brute top-10 on two
     * queries while (32, 4) held >= 9/10 against brute top-10 and
     * 10/10 against top-20 on every (qid, SF) cell — the navigability

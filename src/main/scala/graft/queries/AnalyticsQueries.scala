@@ -24,8 +24,8 @@ object AnalyticsQueries {
     * pattern): the quantized-CDF derivation is a pure function of the
     * corpus, and before this memo every q29b invocation re-ran the
     * CDF window + target join + a 9-row collect INSIDE the query
-    * lambda (~0.3 s of per-call build measured via the DevProbe
-    * split). Target ranks use the parquet footer row count directly
+    * lambda (~0.3 s of per-call build; SCALE.md round-20 table).
+    * Target ranks use the parquet footer row count directly
     * (the nHint convention) — sum of CDF counts == row count by
     * construction, so the former total-aggregate + broadcast is a
     * literal. Recompute per JVM per corpus version.
@@ -592,7 +592,7 @@ object AnalyticsQueries {
           Tables.orders(s, dir).filter(col("o_orderkey") % 11 === 0)
             .select((col("o_orderkey") + 10000000L).as("k"),
               asInt(col("o_totalprice"), 100L).as("v_old")))
-      // SHAPE ADJUDICATION (r17 DevProbe A/B): a union + groupBy(k)
+      // SHAPE ADJUDICATION (r17 A/B, SCALE.md q28): a union + groupBy(k)
       // pivot looks like it saves an exchange, but k is UNIQUE within
       // each snapshot — the hash aggregate's cardinality equals its
       // input, so map-side partials combine nothing and the pivot

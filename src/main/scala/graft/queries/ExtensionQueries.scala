@@ -436,8 +436,8 @@ object ExtensionQueries {
       pagerankBuildFrame(s, dir)
     }
 
-  /** The store's CONSTRUCTION plan (exposed for PlanAuditSpec and
-    * DevProbe — the linkEdgeBuildFrame convention): 5 damped
+  /** The store's CONSTRUCTION plan (exposed for PlanAuditSpec — the
+    * linkEdgeBuildFrame convention): 5 damped
     * iterations in fixed-point integer ppm arithmetic (floor
     * divisions; integer sums are order-independent, so the result is
     * bit-exact across engines with NO rounding contract). Edges derive
@@ -548,7 +548,7 @@ object ExtensionQueries {
     * shape); memoizing the ~80-row result replaces the per-call eager
     * pass + localCheckpoint + eight broadcast-hash builds that
     * `sim_recall_report` used to pay on EVERY invocation (measured
-    * 1.3–1.4 s of per-call build via the DevProbe split probe) with
+    * 1.3–1.4 s of per-call build; SCALE.md round-20 table) with
     * eight pushed `isin` literals — recompute happens per JVM per
     * corpus version, the store lifecycle every other learned/derived
     * artifact here follows.
@@ -950,47 +950,6 @@ object ExtensionQueries {
         .repartitionByRange(para, col("term"))
         .sortWithinPartitions(col("term"))
     }
-
-  /** DevProbe hook: the bare cost of one matched-posting probe (store
-    * scan + term filter + count) — the floor under every lexical
-    * serving query at this SF.
-    */
-  private[graft] def postingProbeFloor(s: SparkSession, dir: String): Long =
-    postingFrame(s, dir).filter(col("term").isin(Bm25Terms: _*)).count()
-
-  /** DevProbe hooks (r17 `corpus_burstiness` isolation): the bare
-    * full-store scan cost, and the burstiness aggregate over an
-    * UNCLUSTERED store twin — separates "the term-clustered layout
-    * got slower to scan" from "the aggregate itself regressed".
-    */
-  private[graft] def postingStoreScan(s: SparkSession, dir: String): Long =
-    postingFrame(s, dir).count()
-
-  private[graft] def postingFrameUnclustered(s: SparkSession, dir: String): DataFrame =
-    materializedFrame(s,
-      s"postings-unclustered:$dir@${docsVer(s, dir)}") {
-      val docs0 = Tables.documents(s, dir)
-      val para = s.sparkContext.defaultParallelism
-      val docs =
-        if (docs0.rdd.getNumPartitions < para) docs0.repartition(para) else docs0
-      graft.operators.TextIndex.postingsOf(docs)
-    }
-
-  /** The `corpus_burstiness` aggregate over an arbitrary posting
-    * frame — one definition shared by the query and the DevProbe
-    * layout A/B. See the `corpus_burstiness` entry for semantics.
-    */
-  private[graft] def burstinessOver(postings: DataFrame): DataFrame =
-    postings
-      .groupBy(col("term"))
-      .agg(max(col("df")).as("df"), sum(col("tf")).as("cf"),
-        sum(col("tf") * col("tf")).as("sum_tf2"))
-      .filter(col("df") >= 5)
-      .select(col("term"), col("df"), col("cf"),
-        round((col("df") * col("sum_tf2") - col("cf") * col("cf")).cast("double") /
-          (col("df") * col("cf")).cast("double"), 6).as("vmr"))
-      .orderBy(col("vmr").desc, col("term"))
-      .limit(20)
 
   /** The posting store's total token count as a DRIVER-MEMOIZED
     * scalar (dir@rowCount lifecycle, one bounded 1-row head() at
@@ -2000,10 +1959,6 @@ object ExtensionQueries {
     * 24-token middle slice (tokens 9..32), so run extension must
     * stop at exactly 24 tokens instead of saturating to the full doc.
     */
-  /** DevProbe seam (R21S stage ladder). */
-  private[graft] def substringIngestProbe(s: SparkSession, dir: String): DataFrame =
-    substringIngest(s, dir)
-
   private def substringIngest(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val reups = base.filter(pmod(col("doc_id"), lit(7)) === 0)
@@ -2437,7 +2392,7 @@ object ExtensionQueries {
     // LSH-free pruning; a frequency cap on hot shingles would be the
     // skew guard at 100 TB).
     //
-    // PROFILE (round 7, sf0.1, min-of-7 isolated, DevProbe): the work
+    // PROFILE (round 7, sf0.1, min-of-7 isolated): the work
     // is answer-proportional and the plan is the best of the measured
     // architectures — closing the carried ratio question with numbers:
     //   posting scan alone          0.128 s (250,704 postings) = ~48%
@@ -2708,7 +2663,7 @@ object ExtensionQueries {
       // are a pure PROJECTION of the pivot (Σtf per doc = tf0+tf1+tf2
       // — the store holds one row per (doc, term)). Pre-fix: 3
       // independent store probes, 3 pivots and a full bm25 recompute —
-      // the r14 7.5x-at-10x finding; DevProbe ndcg_*.
+      // the r14 7.5x-at-10x finding (SCALE.md search_eval_ndcg rows).
       val pivot = lexPivotFrame(
         postingFrame(s, dir).filter(col("term").isin(qts: _*)))
         .localCheckpoint()
@@ -4625,18 +4580,24 @@ object ExtensionQueries {
     // numerator/denominator (the only double is the final rounded
     // division, mirrored by the oracle), df >= 5 kills the
     // small-sample tail, top-20 cut ties on term.
-    // PROFILE (r17 adjudication of the r16 382 -> 1733 ms weak mark):
-    // DevProbe min-of-7 at HEAD, sf0.1, idle box — full query 216 ms,
-    // over the UNCLUSTERED store twin 209 ms, bare full-store scan
-    // 129 ms, posting probe floor 137 ms. The query is ~90 ms of
-    // aggregate over a ~130 ms store scan; the term-clustered layout
-    // costs nothing (7 ms vs the unclustered twin) and r16's 1733 ms
-    // was the documented box aggregate-throughput oscillation
-    // (calib_mt_ms 267-293 that round), not a code or layout
-    // regression. Probe hooks: [[postingStoreScan]],
-    // [[postingFrameUnclustered]], [[burstinessOver]].
+    // PROFILE (r17 adjudication of the r16 382 -> 1733 ms weak mark,
+    // SCALE.md "corpus_burstiness"): min-of-7 at sf0.1 — full query
+    // 216 ms, over an unclustered store twin 209 ms, bare full-store
+    // scan 129 ms. The query is ~90 ms of aggregate over a ~130 ms
+    // store scan; the term-clustered layout costs nothing, and r16's
+    // 1733 ms was box aggregate-throughput oscillation, not a code or
+    // layout regression.
     "corpus_burstiness" -> ((s, dir) =>
-      burstinessOver(postingFrame(s, dir))),
+      postingFrame(s, dir)
+        .groupBy(col("term"))
+        .agg(max(col("df")).as("df"), sum(col("tf")).as("cf"),
+          sum(col("tf") * col("tf")).as("sum_tf2"))
+        .filter(col("df") >= 5)
+        .select(col("term"), col("df"), col("cf"),
+          round((col("df") * col("sum_tf2") - col("cf") * col("cf")).cast("double") /
+            (col("df") * col("cf")).cast("double"), 6).as("vmr"))
+        .orderBy(col("vmr").desc, col("term"))
+        .limit(20)),
 
     // Per-source token entropy (Shannon, in micro-nats) — the third
     // distributional-health diagnostic beside corpus_zipf (shape) and
@@ -5806,7 +5767,7 @@ object ExtensionQueries {
     // PROFILE (r16, regression watch): the r15 bench artifact's
     // 2.47->2.91 s drift was BOX LOAD, not a plan change — isolated
     // min-of-7 at r16 HEAD is 1.788 s (same-run denominators: the cdc
-    // A/B probes in the same DevProbe pass), in line with the r7 note
+    // A/B probes in the same pass), in line with the r7 note
     // (1.7 s vs DuckDB 2.2 s); in-pass bench figures on this query run
     // ~1.5x hotter than isolated pairs, exactly the repo's documented
     // QBench-vs-isolated calibration.
@@ -6480,7 +6441,7 @@ object ExtensionQueries {
       // community sizes via a WINDOW over the final labels, not a
       // self-join: the join's build side would re-evaluate the whole
       // 4-round subtree (no exchange for ReuseExchange to share —
-      // measured ~2x the query, see the lpa_* DevProbe family); the
+      // measured ~2x the query); the
       // window is one extra exchange on the label over a single
       // evaluation
       labels
@@ -6592,7 +6553,7 @@ object ExtensionQueries {
       // was written to kill. The native expression feeds each
       // window's and chunk's CONTIGUOUS byte range straight into one
       // thread-local MessageDigest — zero intermediate arrays or
-      // strings (r16 DevProbe A/B: cdc_native vs cdc_hof; the HOF
+      // strings (r16 A/B: cdc_native vs cdc_hof; the HOF
       // twin survives as TextExpressionsPropertySpec fuzz armor and
       // the DuckDB oracle still replays the declarative form, so the
       // hash gate proves native == declarative cross-engine).
@@ -7025,8 +6986,8 @@ object ExtensionQueries {
     // over vocab-sized inputs, and the 3 per-row probes fold into ONE
     // broadcast map row instead of three joins (the r14 5.9x was a
     // double corpus explode + three re-hashing broadcast joins; this
-    // shape is one corpus exchange + constant-size tails — DevProbe
-    // `cms_*` A/B).
+    // shape is one corpus exchange + constant-size tails; SCALE.md
+    // corpus_cms_counts row).
     "corpus_cms_counts" -> ((s, dir) => {
       def cell(j: Int, t: Column): Column =
         pmod(TextOps.portableHash32(concat(lit(s"cms$j|"), t)), lit(128L))

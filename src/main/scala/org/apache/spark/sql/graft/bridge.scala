@@ -27,11 +27,4 @@ object bridge {
       case c: org.apache.spark.sql.classic.SparkSession => Some(c.sessionUUID)
       case _ => None
     }
-  /** Post a synthetic ApplicationEnd through the REAL listener bus —
-    * lets TablesMemoSpec drive the frame-memo eviction listener end to
-    * end without stopping the suite-shared SparkContext.
-    */
-  def postApplicationEnd(sc: org.apache.spark.SparkContext): Unit =
-    sc.listenerBus.post(org.apache.spark.scheduler.SparkListenerApplicationEnd(
-      System.currentTimeMillis()))
 }

@@ -465,8 +465,8 @@ class SimilaritySpec extends SparkSpec {
       .orderBy(col("cs").desc, col("vec_id")).limit(20)
       .as[(Long, Double)].collect()
     // r19 pin: the (ef=32, efRounds=4, cosine-selected) defaults
-    // measured 10/10 vs brute top-20 across 5 qids x 3 SFs (DevProbe
-    // R19H); >= 8 is the honest gate — the r18 bar of 3 would have
+    // measured 10/10 vs brute top-20 across 5 qids x 3 SFs (SCALE.md
+    // round 19); >= 8 is the honest gate — the r18 bar of 3 would have
     // passed a badly navigating graph (measured ef=16 collapses
     // scored 4-7/20 at sf0.1)
     val overlap = got.tail.map(_._1).count(brute.map(_._1).toSet)
