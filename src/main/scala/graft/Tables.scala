@@ -92,7 +92,7 @@ object Tables {
     loadPath(spark, s"$dir/$name.parquet")
 
   /** [[load]] for an arbitrary parquet path — the same memo, stamp and
-    * eviction lifecycle. r21: `materializedFrame` store reads paid the
+    * eviction lifecycle. r21: the [[Stores]] parquet reads paid the
     * un-memoized `spark.read.parquet` per CALL (~0.1 s of driver
     * re-list + footer re-read per store-served query invocation — the
     * exact r20 frame-memo lesson, unapplied to the store paths; a
@@ -313,20 +313,15 @@ object Tables {
     if (estTasks >= target) df else df.repartition(target)
   }
 
-  /** Version TOKEN for store memo keys: `<rowcount>-<stampHash>`,
-    * where the stamp folds in file count, mtimes, and byte sizes from
-    * the same recursive listing the row count pays anyway. Before r18
-    * every train-once store (`doremiLossDirs`, `tokenCountsFrame`,
-    * `nbScoreFrame`, …) keyed on `dir@rowCount` alone, so an in-place
-    * corpus rewrite that preserved the row count (ScaleCorpus
-    * regenerating a perturbed replica into the same /tmp path) served
-    * STALE artifacts for the rest of the JVM. Keying on this token
-    * makes any byte-level rewrite miss the memo. Hash collisions are
-    * a non-risk here: the stamp only ever compares against rewrites
-    * of the SAME path, and mtime+bytes+count colliding across a
-    * rewrite while all 32 hash bits also collide is not a lifecycle
-    * this guards (a production store would version by explicit drop
-    * id).
+  /** Version TOKEN of a parquet path, the corpus-version part of the
+    * [[Stores]] key: `<rowcount>-<stampHash>`, where the stamp folds
+    * in file count, mtimes, and byte sizes from the same recursive
+    * listing the row count pays anyway, so any byte-level rewrite
+    * changes it. Hash collisions are a non-risk here: the stamp only
+    * ever compares against rewrites of the SAME path, and
+    * mtime+bytes+count colliding across a rewrite while all 32 hash
+    * bits also collide is not a lifecycle this guards (a production
+    * store would version by explicit drop id).
     */
   def parquetVersion(spark: SparkSession, path: String): String = {
     val (stamp, n) = stampedRowCount(spark, path)

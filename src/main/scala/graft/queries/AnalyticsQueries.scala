@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Stores, Tables}
 
 /** Analytics / SQL-surface coverage queries (SURVEY.md §2.2 categories the
   * engine ships beyond strict parity: aggregation, joins, windows,
@@ -30,25 +30,22 @@ object AnalyticsQueries {
     * construction, so the former total-aggregate + broadcast is a
     * literal. Recompute per JVM per corpus version.
     */
-  private val q29bCutsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
   private def q29bCuts(s: SparkSession, dir: String): Array[Long] =
-    q29bCutsMemo.computeIfAbsent(
-      s"$dir@${Tables.parquetVersion(s, s"$dir/events.parquet")}", _ => {
-        import org.apache.spark.sql.expressions.Window
-        val n = Tables.parquetRowCount(s, s"$dir/events.parquet")
-        val cdf = Tables.events(s, dir)
-          .withColumn("vc", asInt(col("value"), 100L))
-          .groupBy(col("vc")).agg(count(lit(1)).as("c"))
-          .withColumn("cum", sum(col("c")).over(Window.orderBy(col("vc"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        val targets = s.range(1, 10).toDF("i")
-          .select(col("i"), expr(s"(i * ${n}L + 9) div 10").as("t"))
-        broadcast(targets)
-          .join(cdf, cdf("cum") >= col("t"))
-          .groupBy(col("i")).agg(min(col("vc")).as("b"))
-          .orderBy(col("i")).collect().map(_.getLong(1))
-      })
+    Stores.value(s, "q29b-cuts", dir, "events") {
+      import org.apache.spark.sql.expressions.Window
+      val n = Tables.parquetRowCount(s, s"$dir/events.parquet")
+      val cdf = Tables.events(s, dir)
+        .withColumn("vc", asInt(col("value"), 100L))
+        .groupBy(col("vc")).agg(count(lit(1)).as("c"))
+        .withColumn("cum", sum(col("c")).over(Window.orderBy(col("vc"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      val targets = s.range(1, 10).toDF("i")
+        .select(col("i"), expr(s"(i * ${n}L + 9) div 10").as("t"))
+      broadcast(targets)
+        .join(cdf, cdf("cum") >= col("t"))
+        .groupBy(col("i")).agg(min(col("vc")).as("b"))
+        .orderBy(col("i")).collect().map(_.getLong(1))
+    }
 
   /** Session intervals (30-min gap, (ts, event_id) tie order) — ONE
     * derivation shared by `q14_sessionize` and `q38_concurrency_sweep`

@@ -64,7 +64,7 @@ class ScalePostureSpec extends SparkSpec {
   test("posting-store serving plans never re-tokenize the corpus") {
     // The build/serve lifecycle contract (r16 verdict item 8): the
     // inverted-index store is BUILT once per corpus version (at 100 TB
-    // a scheduled job, here the materializedFrame memo) and every
+    // a scheduled job, here the Stores registry) and every
     // lexical serving query SCANS it — no serving plan may contain the
     // tokenizer, or a store-miss regression would silently re-pay a
     // full-corpus tokenize per query. Same discipline the IVF index

@@ -38,4 +38,34 @@ class StoreStampSpec extends SparkSpec {
     // row-count memo itself must also have refreshed (same listing)
     assert(Tables.parquetRowCount(spark, p) === 2L)
   }
+
+  test("an in-place same-row-count embeddings rewrite rebuilds the PQ codebooks") {
+    import java.nio.file.{Files, Path, Paths}
+    def writeEmbeddings(dir: String, seed: Long): Unit = {
+      val rnd = new scala.util.Random(seed)
+      (0L until 300L).map(id => (id, Array.fill(64)(rnd.nextGaussian().toFloat)))
+        .toDF("vec_id", "embedding")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    val queries = Seq("sim_pq_topk", "sim_ivfpq_residual_topk")
+    def serve(dir: String): Map[String, Seq[org.apache.spark.sql.Row]] =
+      queries.map(q => q -> SparkEntry.queries(q)(spark, dir).collect().toSeq).toMap
+    val dir = Files.createTempDirectory("graft-stamp-spec-").toString
+    writeEmbeddings(dir, seed = 1L)
+    val first = serve(dir) // builds the codebooks of the first version
+    // in-place rewrite: new vectors, SAME row count
+    writeEmbeddings(dir, seed = 2L)
+    val fresh = Files.createTempDirectory("graft-stamp-spec-").toString
+    val src = Paths.get(dir, "embeddings.parquet")
+    Files.walk(src).forEach { (p: Path) =>
+      Files.copy(p, Paths.get(fresh, "embeddings.parquet").resolve(src.relativize(p)))
+    }
+    val want = serve(fresh)
+    val got = serve(dir)
+    queries.foreach { q =>
+      assert(first(q) !== want(q), s"$q: the rewrite must change the answer")
+      assert(got(q) === want(q),
+        s"$q served codebooks of the superseded corpus after an in-place rewrite")
+    }
+  }
 }
