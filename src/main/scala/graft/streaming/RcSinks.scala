@@ -1,13 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.graft.bridge
 
 /** The reference's four sinks (`scanner.py:143-175,221-249`,
   * `flaglog.py:37-66`) as a foreachBatch fan-out. One upstream
-  * micro-batch is persisted once and written to all enabled sinks —
-  * the streaming analog of the reference's per-event sequential writes,
-  * minus the O(log) read-modify-rewrite (Spark appends are atomic per
-  * batch; consumers see equivalent content).
+  * micro-batch is persisted and materialized once, sized to its data,
+  * and written to all enabled sinks at the same time — the streaming
+  * analog of the reference's per-event sequential writes, minus the
+  * O(log) read-modify-rewrite (Spark appends are atomic per batch;
+  * consumers see equivalent content).
   *
   * logLevel semantics (`examples/config.py:9`, `scanner.py:91-117`):
   * 0 console only, 1 +revid log, 2 +flag log (null folder/file),
@@ -23,6 +27,18 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
     * emitDeadLetter), those rows go to `$baseDir/dead_letter` and only
     * live rows reach K1-K4.
     *
+    * The frame is persisted and filled once, then coalesced to
+    * ceil(cached bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+    * partitions — AQE's own sizing rule, which AQE does not apply to a
+    * cached plan's output, so a micro-batch of a few hundred rows writes
+    * one file per sink instead of one per upstream partition (coalesce
+    * never raises the count). The dead-letter, K2, K3 and K4 writes then
+    * run at the same time on a per-call pool whose threads carry the
+    * caller's Spark local properties (job group, so a stopped query
+    * cancels them; scheduler pool; SQL execution root). Every write is
+    * awaited; the first failure in sink order is rethrown, with the
+    * others attached as suppressed.
+    *
     * Replay-safe: foreachBatch is at-least-once, so every file sink
     * writes into a deterministic `batch_id=N` subdirectory with
     * overwrite mode — re-executing a micro-batch after a mid-fan-out
@@ -31,41 +47,54 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
     * Consumers read the parent directory; `batch_id` surfaces as a
     * partition column.
     */
-  def writeBatch(full: DataFrame, batchId: Long): Unit = {
-    full.persist()
-    try {
-      val batch =
-        if (full.columns.contains("dead_letter")) {
-          full.filter(F.col("dead_letter"))
-            .write.mode("overwrite").parquet(s"$baseDir/dead_letter/batch_id=$batchId")
-          full.filter(!F.col("dead_letter")).drop("dead_letter")
-        } else full
+  def writeBatch(full: DataFrame, batchId: Long): Unit =
+    RcSinks.fanOut(full) { sized =>
       if (echoConsole)                                       // K1 scanner.py:143-152
-        batch.select(F.col("message")).show(20, truncate = false)
-      if (logLevel >= 1)
-        batch.select(F.col("revid").cast("string"))
-          .write.mode("overwrite")
-          .text(s"$baseDir/revids/batch_id=$batchId")          // K2 scanner.py:221-232
-      if (logLevel >= 2)
-        batch.select(
-            F.lit(filterName).as("filter"),
-            // `change` = the ORIGINAL full Change record when the
-            // pipeline threads it through (ChangeSchema.flagLogEntry /
-            // utils.py:42); projected-row fallback for ad-hoc frames.
-            (if (batch.columns.contains("change")) F.col("change")
-             else F.struct(batch.columns.toIndexedSeq.map(F.col): _*)).as("change"),
-            F.struct(                                          // nulls at level 2, scanner.py:162-165
-              (if (logLevel == 3) F.concat(F.lit("changes/"), F.col("event_date").cast("string"))
-               else F.lit(null).cast("string")).as("folder"),
-              (if (logLevel == 3) F.col("filename") else F.lit(null).cast("string")).as("file"))
-              .as("log"))
-          .write.mode("overwrite")
-          .parquet(s"$baseDir/flaglog/batch_id=$batchId")      // K3 flaglog.py:37-66
-      if (logLevel == 3)
-        batch.select(F.col("event_date"), F.col("filename"), F.col("message"))
-          .write.mode("overwrite").partitionBy("event_date")
-          .parquet(s"$baseDir/changes/batch_id=$batchId")      // K4 scanner.py:235-249
-    } finally full.unpersist()
+        live(sized).select(F.col("message")).show(20, truncate = false)
+      sinkWrites(sized, batchId)
+    }
+
+  private def live(full: DataFrame): DataFrame =
+    if (full.columns.contains("dead_letter"))
+      full.filter(!F.col("dead_letter")).drop("dead_letter")
+    else full
+
+  /** The enabled file sinks of one batch, each a write of its own
+    * `batch_id=N` directory; [[writeBatch]] runs them concurrently.
+    */
+  private[graft] def sinkWrites(full: DataFrame, batchId: Long): Seq[() => Unit] = {
+    val batch = live(full)
+    val deadLetter = Option.when(full.columns.contains("dead_letter")) { () =>
+      full.filter(F.col("dead_letter"))
+        .write.mode("overwrite").parquet(s"$baseDir/dead_letter/batch_id=$batchId")
+    }
+    val revids = Option.when(logLevel >= 1) { () =>
+      batch.select(F.col("revid").cast("string"))
+        .write.mode("overwrite")
+        .text(s"$baseDir/revids/batch_id=$batchId")            // K2 scanner.py:221-232
+    }
+    val flaglog = Option.when(logLevel >= 2) { () =>
+      batch.select(
+          F.lit(filterName).as("filter"),
+          // `change` = the ORIGINAL full Change record when the
+          // pipeline threads it through (ChangeSchema.flagLogEntry /
+          // utils.py:42); projected-row fallback for ad-hoc frames.
+          (if (batch.columns.contains("change")) F.col("change")
+           else F.struct(batch.columns.toIndexedSeq.map(F.col): _*)).as("change"),
+          F.struct(                                            // nulls at level 2, scanner.py:162-165
+            (if (logLevel == 3) F.concat(F.lit("changes/"), F.col("event_date").cast("string"))
+             else F.lit(null).cast("string")).as("folder"),
+            (if (logLevel == 3) F.col("filename") else F.lit(null).cast("string")).as("file"))
+            .as("log"))
+        .write.mode("overwrite")
+        .parquet(s"$baseDir/flaglog/batch_id=$batchId")        // K3 flaglog.py:37-66
+    }
+    val changes = Option.when(logLevel == 3) { () =>
+      batch.select(F.col("event_date"), F.col("filename"), F.col("message"))
+        .write.mode("overwrite").partitionBy("event_date")
+        .parquet(s"$baseDir/changes/batch_id=$batchId")        // K4 scanner.py:235-249
+    }
+    Seq(deadLetter, revids, flaglog, changes).flatten
   }
 
   /** Exact-parity K4: ONE FILE PER MATCH (`scanner.py:235-249`), body =
@@ -106,31 +135,30 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
     * their reason + exact reference skip message (`scanner.py:130-138`);
     * flagged events flow to the normal K1-K4 sinks; evaluated-no-hit
     * events surface only on the console echo (the reference's verb
-    * line, `scanner.py:143-146`).
+    * line, `scanner.py:143-146`). Same persist, sizing and concurrent
+    * fan-out as [[writeBatch]], with the skipped sink as one more write.
     */
-  def writeVerboseBatch(full: DataFrame, batchId: Long): Unit = {
-    full.persist()
-    try {
-      full.filter(F.col("reason").isNotNull)
-        .select(F.col("id"), F.col("title"), F.col("user"),
-          F.col("event_date"), F.col("reason"), F.col("skip_message"))
-        .write.mode("overwrite").parquet(s"$baseDir/skipped/batch_id=$batchId")
+  def writeVerboseBatch(full: DataFrame, batchId: Long): Unit =
+    RcSinks.fanOut(full) { sized =>
       if (echoConsole)
-        full.filter(F.col("reason").isNull)
+        sized.filter(F.col("reason").isNull)
           .select(F.concat(F.col("user"), F.lit(" "),
             graft.operators.RcOps.verb(F.col("change_type")), // edit->edited, create->created
             F.lit(" \""), F.col("title"), F.lit("\"")).as("line"))
           .show(20, truncate = false)
-      val flagged = full
+      val skipped = () => sized.filter(F.col("reason").isNotNull)
+        .select(F.col("id"), F.col("title"), F.col("user"),
+          F.col("event_date"), F.col("reason"), F.col("skip_message"))
+        .write.mode("overwrite").parquet(s"$baseDir/skipped/batch_id=$batchId")
+      val flagged = sized
         .filter(F.col("reason").isNull && F.size(F.col("matched")) > 0)
         .withColumn("matched", F.concat_ws(",", F.col("matched")))
         .withColumn("change", // declared-schema rehydration for K3/K4
           F.from_json(F.col("change_json"), graft.schema.ChangeSchema.change))
         .drop("pre_reason", "reason", "skip_message", "event_us", "editcount",
           "change_type", "change_json")
-      writeBatch(flagged, batchId)
-    } finally full.unpersist()
-  }
+      skipped +: sinkWrites(flagged, batchId)
+    }
 
   /** Idempotent K4 variant: dynamic partition overwrite replaces ONLY
     * the event-date partitions present in the batch, so replaying a
@@ -146,5 +174,47 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
       .write.mode("overwrite").partitionBy("event_date")
       .parquet(s"$baseDir/changes")
     finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+  }
+}
+
+object RcSinks {
+  /** Persists `full`, fills its cache once, coalesces it to
+    * ceil(cached bytes / advisory partition size) partitions and runs
+    * the writes `plan` builds on that frame concurrently.
+    */
+  private def fanOut(full: DataFrame)(plan: DataFrame => Seq[() => Unit]): Unit = {
+    full.persist()
+    try {
+      val spark = full.sparkSession
+      val bytes = bridge.materializedCacheBytes(full)
+      val target = bridge.advisoryPartitionBytes(spark)
+      val parts = ((bytes + target - 1) / target).max(1L).min(Int.MaxValue.toLong)
+      runAll(spark, plan(full.coalesce(parts.toInt)))
+    } finally full.unpersist()
+  }
+
+  /** Runs `writes` at the same time on a pool made for this call, each
+    * under the caller's Spark local properties; waits for all of them,
+    * then rethrows the first failure in `writes` order.
+    */
+  private def runAll(spark: SparkSession, writes: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(math.max(1, writes.size), (r: Runnable) => {
+      val t = new Thread(r, "rc-sinks-fanout")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val done = writes.map(w => bridge.captured(spark, pool)(w()))
+      val failures = done.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
   }
 }

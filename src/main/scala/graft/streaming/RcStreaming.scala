@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.RcOps
 
@@ -15,8 +16,9 @@ import graft.operators.RcOps
   *  - D1 repeat-dedup  -> dropDuplicates("title") with event-time watermark:
   *                        the reference keeps the first flagged title EVER
   *                        (unbounded state, `filter_.py:90-102`); streaming
-  *                        bounds state by watermark — documented deviation,
-  *                        batch twin (RcOps.firstPerKey) is exact.
+  *                        bounds state by watermark — documented deviation;
+  *                        the batch twin is an exact first-per-title
+  *                        row_number in one pass, dead letters kept.
   *  - J2 revision text -> stream-static join on revision.new, staged after
   *                        the cheap gates (cheap-predicates-first,
   *                        `scanner.py:131-141`)
@@ -138,18 +140,26 @@ object RcStreaming {
     // every title forever — watermark eviction requires the event-time
     // column in the key set); the batch twin is the deterministic
     // first-match-per-title (SURVEY §7.3 risk 3 documents the horizon
-    // deviation from the reference's unbounded log).
+    // deviation from the reference's unbounded log). The batch twin is
+    // ONE pass, a row_number over (title, dead_letter) that keeps every
+    // dead letter and the first live row per title: as two branches
+    // (live deduped ∪ dead letters) the optimizer turns the live
+    // branch's left joins into inner joins, the branches' dim broadcasts
+    // stop matching, and a live dim's API fetch runs once per branch.
     val deduped =
       if (!spec.skipRepeats) gated
-      else {
-        val live = gated.filter(!col("dead_letter"))
-        val dedupedLive =
-          if (gated.isStreaming)
-            live.withWatermark("event_time", spec.watermark)
-              .dropDuplicatesWithinWatermark("title")
-          else RcOps.firstPerKey(live, Seq("title"), "event_time", "id")
+      else if (gated.isStreaming) {
+        val dedupedLive = gated.filter(!col("dead_letter"))
+          .withWatermark("event_time", spec.watermark)
+          .dropDuplicatesWithinWatermark("title")
         if (emitDeadLetter) dedupedLive.unionByName(gated.filter(col("dead_letter")))
         else dedupedLive
+      } else {
+        val w = Window.partitionBy(col("title"), col("dead_letter"))
+          .orderBy(col("event_time"), col("id"))
+        gated.withColumn("__rn", row_number().over(w))
+          .filter(col("dead_letter") || col("__rn") === 1)
+          .drop("__rn")
       }
 
     val out = deduped.select(
@@ -331,7 +341,6 @@ object RcStreaming {
         // (event_us, id) eligible event of the same title matched. The
         // first flag CANDIDATE is always an actual flag, so counting
         // candidates is equivalent to counting flags for the >0 test.
-        import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy(col("title")).orderBy(col("event_us"), col("id"))
           .rowsBetween(Window.unboundedPreceding, -1)
         val flagCand = col("pre_reason").isNull && size(col("matched")) > 0

@@ -77,6 +77,55 @@ class EnrichmentSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("repeat dedup with dead letters fetches each enrichment key once") {
+    val inDir = Files.createTempDirectory("liveonce").toString
+    // One user (the editcount dim spreads its users over 4 partitions, so
+    // only a single user keeps its request count at ceil(users / 50)),
+    // three titles edited twice each, one deleted revision (race).
+    val events = Seq(
+      changeJson(31, "User:P", "onceuser", 9301),
+      changeJson(32, "User:P", "onceuser", 9302), // repeat of a flagged title
+      changeJson(33, "User:Q", "onceuser", 9303),
+      changeJson(34, "User:Q", "onceuser", 9304), // no regex hit
+      changeJson(35, "User:R", "onceuser", 9305), // deleted revision -> race
+      changeJson(36, "User:R", "onceuser", 9306))
+    Files.writeString(java.nio.file.Path.of(s"$inDir/b.json"), events.mkString("\n"))
+    val editCounts = Map("onceuser" -> 4L)
+    val texts = Map(9301L -> "userbox one", 9302L -> "userbox two",
+      9303L -> "userbox three", 9304L -> "plain", 9306L -> "userbox six")
+    val srv = new StubApiServer(editCounts, texts)
+    try {
+      val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), None,
+        skipRepeats = true, regexes = Seq("userbox"))
+      val batch = spark.read.schema(ChangeSchema.change).json(inDir)
+      val live = RcStreaming.livePipeline(batch, srv.url, spec, emitDeadLetter = true)
+      val l = live.collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("matched"),
+        r.getAs[Boolean]("dead_letter"))).sortBy(_._1).toSeq
+
+      object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec}
+      val plan = live.queryExecution.executedPlan
+      // each dim's fetch is one MapPartitions over its distinct keys: the
+      // users dim reads strings, the text dim revision ids
+      val fetches = plans.collectWithSubqueries(plan) { case m: MapPartitionsExec =>
+        m.child.collectFirst { case d: DeserializeToObjectExec =>
+          d.child.output.map(_.dataType.simpleString).mkString(",") }
+      }
+      assert(fetches.sortBy(_.toString) === Seq(Some("bigint"), Some("string")), plan.toString)
+      assert(srv.requests.get() === 6L + 1L, // 6 distinct revids + ceil(1 user / 50)
+        s"saw ${srv.requests.get()} requests")
+
+      val static0 = RcStreaming.pipeline(batch,
+        editCounts.toSeq.toDF("user", "editcount"),
+        texts.toSeq.toDF("revid", "text"), spec, emitDeadLetter = true)
+      val s = static0.select("id", "matched", "dead_letter")
+        .as[(Long, String, Boolean)].collect().sortBy(_._1).toSeq
+      assert(l === s)
+      assert(l === Seq((31L, "userbox", false), (33L, "userbox", false),
+        (35L, "", true), (36L, "userbox", false)))
+    } finally srv.close()
+  }
+
   test("per-site routing: each event's lookups hit its own wiki's API") {
     def siteJson(id: Long, site: String, user: String, rev: Long): String =
       changeJson(id, s"User:X$id", user, rev)

@@ -1,9 +1,16 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.Trigger
+import org.scalacheck.{Gen, Prop, Test => ScTest}
+import graft.operators.RcOps
 import graft.schema.ChangeSchema
 import graft.streaming.{RcSinks, RcStreaming}
 
@@ -224,5 +231,164 @@ class StreamingSpec extends SparkSpec {
     val got = RcStreaming.pipeline(batch, users, revisions, spec)
     assert(got.count() === 1)
     assert(got.select("matched").as[String].head() === "userbox")
+  }
+
+  // ---- D1 batch twin: one row_number pass vs the two-branch union -----
+
+  // `pz` has no edit count (race), `pb` is over maxEdits; revisions
+  // 9407-9408 have no text (race); 9401-9403 match.
+  private val propUsers = Seq(("pa", 5L), ("pb", 50L))
+  private val propTexts = Seq((9401L, "userbox a"), (9402L, "a userbox"),
+    (9403L, "userboxes b"), (9404L, "plain"), (9405L, "userbox c"), (9406L, "none"))
+  private val propSpec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), Some(20L),
+    skipRepeats = true, regexes = Seq("(?i)\\buserbox(e[ns])?\\b"))
+
+  /** (id, title, user, revid, minute), ids unique, titles repeated or
+    * null, minutes tied.
+    */
+  private val genEvents: Gen[Seq[(Long, Option[String], String, Long, Int)]] = for {
+    n <- Gen.choose(1, 24)
+    rows <- Gen.listOfN(n, for {
+      title <- Gen.oneOf(Some("User:A"), Some("User:B"), Some("User:C"), None)
+      user <- Gen.oneOf("pa", "pb", "pz")
+      rev <- Gen.choose(9401L, 9408L)
+      minute <- Gen.choose(0, 2)
+    } yield (title, user, rev, minute))
+  } yield rows.zipWithIndex.map { case ((t, u, r, m), i) => (i + 1L, t, u, r, m) }
+
+  /** One JSON file in (event_time, id) order, so the streaming dedup's
+    * first-seen row is also the earliest.
+    */
+  private def writeEvents(events: Seq[(Long, Option[String], String, Long, Int)]): String = {
+    val dir = Files.createTempDirectory("changesprop").toString
+    val lines = events.sortBy(e => (e._5, e._1)).map { case (id, title, user, rev, m) =>
+      changeJson(id, title.getOrElse("NULLTITLE"), user, rev, dt = s"2026-08-12T09:0$m:00Z")
+        .replace("\"title\":\"NULLTITLE\"", "\"title\":null")
+    }
+    Files.writeString(Path.of(s"$dir/b.json"), lines.mkString("\n"))
+    dir
+  }
+
+  /** The pre-rewrite batch D1, kept as the reference: first live row per
+    * title, dead letters unioned back.
+    */
+  private def unionDedup(batch: DataFrame, users: DataFrame, revisions: DataFrame,
+      emitDeadLetter: Boolean): DataFrame = {
+    val all = RcStreaming.pipeline(batch, users, revisions,
+      propSpec.copy(skipRepeats = false), emitDeadLetter = true)
+    val live = RcOps.firstPerKey(all.filter(!col("dead_letter")), Seq("title"), "event_time", "id")
+    if (emitDeadLetter) live.unionByName(all.filter(col("dead_letter")))
+    else live.drop("dead_letter")
+  }
+
+  private def sortedRows(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+
+  test("property: one-pass D1 == the union formulation == the streaming path") {
+    import spark.implicits._
+    val users = propUsers.toDF("user", "editcount")
+    val revisions = propTexts.toDF("revid", "text")
+    val prop = Prop.forAll(genEvents) { events =>
+      val dir = writeEvents(events)
+      val batch = spark.read.schema(ChangeSchema.change).json(dir)
+      Seq(true, false).forall { emit =>
+        val got = sortedRows(RcStreaming.pipeline(batch, users, revisions, propSpec,
+          emitDeadLetter = emit).collect().toSeq)
+        val reference = sortedRows(unionDedup(batch, users, revisions, emit).collect().toSeq)
+        val streamed = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+        val q = RcStreaming.pipeline(spark.readStream.schema(ChangeSchema.change).json(dir),
+            users, revisions, propSpec, emitDeadLetter = emit)
+          .writeStream
+          .foreachBatch((b: DataFrame, _: Long) => b.collect().foreach(streamed.add))
+          .option("checkpointLocation", Files.createTempDirectory("ckptprop").toString)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination(120000)
+        got == reference && got == sortedRows(streamed.asScala.toSeq)
+      }
+    }
+    val r = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(r.passed, r.status.toString)
+  }
+
+  // ---- Sink fan-out ----------------------------------------------------
+
+  private def fanOutThreadsAlive: Boolean = Thread.getAllStackTraces.keySet.asScala
+    .exists(t => t.getName.startsWith("rc-sinks-fanout") && t.isAlive)
+
+  private def sinkRows(dir: String, sink: String): Seq[String] =
+    sortedRows((if (sink == "revids") spark.read.text(dir) else spark.read.parquet(dir))
+      .collect().toSeq)
+
+  test("sink fan-out: a failing sink's error is rethrown, its replay equals a sequential write") {
+    import spark.implicits._
+    val inDir = Files.createTempDirectory("changesfo").toString
+    Files.writeString(Path.of(s"$inDir/b.json"), Seq(
+      changeJson(1, "User:A", "alice", 101),
+      changeJson(2, "User:B", "bob", 102, dt = "2026-08-13T10:00:00Z"),
+      changeJson(3, "User:C", "cara", 103)   // revision 103 missing -> dead letter
+    ).mkString("\n"))
+    val users = Seq(("alice", 10L), ("bob", 2L), ("cara", 1L)).toDF("user", "editcount")
+    val revisions = Seq((101L, "a userbox"), (102L, "userbox too")).toDF("revid", "text")
+    val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), None,
+      skipRepeats = false, regexes = Seq("userbox"))
+    val out = RcStreaming.pipeline(spark.read.schema(ChangeSchema.change).json(inDir),
+      users, revisions, spec, emitDeadLetter = true)
+    val outDir = Files.createTempDirectory("sinksfo")
+    val sinks = RcSinks(outDir.toString, logLevel = 3, filterName = "example")
+
+    // K3's target is a regular file: only that sink can fail
+    val obstacle = Files.writeString(outDir.resolve("flaglog"), "not a directory")
+    val err = intercept[Exception](sinks.writeBatch(out, 3L))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains(s"$outDir/flaglog")), err)
+    val deadline = System.nanoTime() + 10000000000L
+    while (fanOutThreadsAlive && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(!fanOutThreadsAlive, "a fan-out thread outlived writeBatch")
+
+    // replay with the obstacle gone, under a job group
+    Files.delete(obstacle)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("rc-fanout-replay", "replay of batch 3")
+    try sinks.writeBatch(out, 3L)
+    finally {
+      sc.clearJobGroup()
+      bridge.drainListenerBus(sc, 10000L)
+      sc.removeSparkListener(listener)
+    }
+    // the materialization plus one job per sink, all in the caller's group
+    assert(groups.size >= 5 && groups.asScala.forall(_ == "rc-fanout-replay"), groups)
+
+    val seqDir = Files.createTempDirectory("sinksseq").toString
+    RcSinks(seqDir, logLevel = 3, filterName = "example").sinkWrites(out, 3L).foreach(_())
+    Seq("dead_letter", "revids", "flaglog", "changes").foreach { sink =>
+      val got = sinkRows(s"$outDir/$sink/batch_id=3", sink)
+      assert(got.nonEmpty && got === sinkRows(s"$seqDir/$sink/batch_id=3", sink), sink)
+    }
+  }
+
+  test("sink fan-out is sized to the batch, never past its partitions") {
+    val batch = spark.range(0, 400, 1, 4).select(col("id").as("revid"),
+      concat(lit("match "), col("id")).as("message"),
+      to_date(lit("2026-08-12")).as("event_date"),
+      concat(lit("u_"), col("id")).as("filename"))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def filesPerSink(advisory: Option[Long]): Seq[Long] = {
+      val dir = Files.createTempDirectory("sinkssz")
+      advisory.foreach(b => spark.conf.set(key, b.toString))
+      try RcSinks(dir.toString, logLevel = 3, filterName = "example").writeBatch(batch, 0L)
+      finally spark.conf.unset(key)
+      Seq("revids", "flaglog", "changes").map(s => Files.walk(dir.resolve(s)).iterator.asScala
+        .count(_.getFileName.toString.startsWith("part-")).toLong)
+    }
+    assert(filesPerSink(None) === Seq(1L, 1L, 1L)) // 400 rows << 64 MB
+    batch.persist()
+    val bytes = try bridge.materializedCacheBytes(batch) finally batch.unpersist(blocking = true)
+    assert(filesPerSink(Some((bytes + 1) / 2)) === Seq(2L, 2L, 2L))
+    assert(filesPerSink(Some(1L)) === Seq(4L, 4L, 4L)) // capped at the 4 input partitions
   }
 }
