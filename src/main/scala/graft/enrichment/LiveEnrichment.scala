@@ -9,7 +9,7 @@ import scala.collection.concurrent.TrieMap
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Live per-event enrichment (reference `scanner.py:178-218`: one
@@ -37,23 +37,35 @@ import org.apache.spark.sql.functions._
   */
 object LiveEnrichment {
 
+  /** Users per `list=users` request: the MediaWiki API's own limit. */
+  private val UsersPerRequest = 50
+
+  /** Entries per (endpoint, kind) LRU. */
+  private val CacheSize = 10000
+
   /** Bounded per-JVM LRU (access-order LinkedHashMap), one per
     * (endpoint, kind) so unrelated streams don't evict each other.
     */
   private val caches = TrieMap.empty[String, java.util.LinkedHashMap[String, String]]
-  private def cache(key: String, capacity: Int): java.util.LinkedHashMap[String, String] =
+  private def cache(key: String): java.util.LinkedHashMap[String, String] =
     caches.getOrElseUpdate(key,
-      new java.util.LinkedHashMap[String, String](capacity, 0.75f, true) {
+      new java.util.LinkedHashMap[String, String](CacheSize, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, String]): Boolean = size() > capacity
+            e: java.util.Map.Entry[String, String]): Boolean = size() > CacheSize
       })
 
-  private lazy val http = HttpClient.newHttpClient()
+  /** Connect and per-request timeout: an API that accepts and never
+    * answers must fail the lookup (race route), not block the
+    * micro-batch forever.
+    */
+  private val Timeout = java.time.Duration.ofSeconds(10)
+
+  private lazy val http = HttpClient.newBuilder().connectTimeout(Timeout).build()
   private lazy val mapper = new ObjectMapper
 
   private def get(url: String): Option[String] =
     try {
-      val r = http.send(HttpRequest.newBuilder(URI.create(url)).GET().build(),
+      val r = http.send(HttpRequest.newBuilder(URI.create(url)).timeout(Timeout).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       if (r.statusCode() == 200) Some(r.body()) else None
     } catch { case _: Exception => None }
@@ -65,30 +77,28 @@ object LiveEnrichment {
     * fetchers stay O(chunk), not O(partition). Keys are deduplicated
     * within each chunk (and the LRU absorbs cross-chunk re-FETCHES);
     * callers that need globally distinct output pairs must pass
-    * distinct keys — the dim builders all do via `.distinct()`
-    * upstream.
+    * distinct keys — [[dim]] does via `.distinct()` upstream.
     */
   private val FetchChunk = 512
 
   /** `list=users&ususers=a|b|c` batch lookup (`scanner.py:199-218`),
-    * `batchSize` users per request. Returns found (user, editcount)
-    * pairs; missing users produce no pair (race downstream).
+    * [[UsersPerRequest]] users per request. Returns found (user,
+    * editcount) pairs; missing users produce no pair (race downstream).
     */
-  def fetchEditCountsPartition(apiUrl: String, users: Iterator[String],
-      batchSize: Int = 50, cacheSize: Int = 10000): Iterator[(String, Long)] =
-    users.grouped(FetchChunk).flatMap(chunk =>
-      fetchEditCountsChunk(apiUrl, chunk, batchSize, cacheSize))
+  def fetchEditCountsPartition(apiUrl: String,
+      users: Iterator[String]): Iterator[(String, Long)] =
+    users.grouped(FetchChunk).flatMap(chunk => fetchEditCountsChunk(apiUrl, chunk))
 
-  private def fetchEditCountsChunk(apiUrl: String, chunk: Seq[String],
-      batchSize: Int, cacheSize: Int): Iterator[(String, Long)] = {
-    val lru = cache(s"$apiUrl#editcount", cacheSize)
+  private def fetchEditCountsChunk(apiUrl: String,
+      chunk: Seq[String]): Iterator[(String, Long)] = {
+    val lru = cache(s"$apiUrl#editcount")
     // snapshot value AND membership in one synchronized read — a
     // separate containsKey/get pair races with eviction by other tasks
     val snapshot = chunk.distinct.map(u =>
       u -> lru.synchronized(Option(lru.get(u))))
     val hits = snapshot.collect { case (u, Some(v)) => u -> v.toLong }
     val toFetch = snapshot.collect { case (u, None) => u }
-    val fetched = toFetch.grouped(batchSize).flatMap { group =>
+    val fetched = toFetch.grouped(UsersPerRequest).flatMap { group =>
       val url = s"$apiUrl?format=json&action=query&list=users&usprop=editcount" +
         s"&ususers=${enc(group.mkString("|"))}"
       get(url).toSeq.flatMap { body =>
@@ -113,9 +123,9 @@ object LiveEnrichment {
     * (`scanner.py:178-196`); one request per revision on a keep-alive
     * client, LRU-cached. Missing `parse.wikitext.*` = race (no row).
     */
-  def fetchTextPartition(apiUrl: String, revids: Iterator[Long],
-      cacheSize: Int = 10000): Iterator[(Long, String)] = {
-    val lru = cache(s"$apiUrl#text", cacheSize)
+  def fetchTextPartition(apiUrl: String,
+      revids: Iterator[Long]): Iterator[(Long, String)] = {
+    val lru = cache(s"$apiUrl#text")
     revids.grouped(FetchChunk).flatMap(_.distinct).flatMap { rev =>
       val hit = lru.synchronized(Option(lru.get(rev.toString)))
       hit.map(rev -> _).orElse {
@@ -132,78 +142,52 @@ object LiveEnrichment {
     }
   }
 
-  /** Distinct users of `df.user` -> (user, editcount) dim frame, fetched
-    * on the executors. `partitions` bounds request parallelism (the
-    * polite-client knob; the reference is serial = 1).
+  /** The one dim builder: the distinct non-null `keys` of `df`, spread
+    * over `partitions` tasks (the polite-client knob; the reference is
+    * serial = 1), fetched on the executors and named `names`.
     */
-  def editCountDim(df: DataFrame, apiUrl: String, partitions: Int = 4,
-      batchSize: Int = 50): DataFrame = {
-    implicit val e1 = Encoders.STRING
-    implicit val e2 = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    df.select(col("user").cast("string")).na.drop().distinct()
+  private def dim[K, R](df: DataFrame, keys: Seq[Column], partitions: Int,
+      keyEnc: Encoder[K], rowEnc: Encoder[R], names: String*)(
+      fetch: Iterator[K] => Iterator[R]): DataFrame =
+    df.select(keys: _*).na.drop().distinct()
       .repartition(partitions)
-      .as[String](e1)
-      .mapPartitions(it => fetchEditCountsPartition(apiUrl, it, batchSize))(e2)
-      .toDF("user", "editcount")
-  }
+      .as[K](keyEnc)
+      .mapPartitions(fetch)(rowEnc)
+      .toDF(names: _*)
+
+  /** Distinct users of `df.user` -> (user, editcount) dim frame. */
+  def editCountDim(df: DataFrame, apiUrl: String, partitions: Int = 4): DataFrame =
+    dim(df, Seq(col("user").cast("string")), partitions, Encoders.STRING,
+      Encoders.tuple(Encoders.STRING, Encoders.scalaLong), "user", "editcount")(
+      fetchEditCountsPartition(apiUrl, _))
 
   /** Distinct revision ids -> (revid, text) dim frame. */
-  def textDim(df: DataFrame, apiUrl: String, partitions: Int = 4): DataFrame = {
-    implicit val e1 = Encoders.scalaLong
-    implicit val e2 = Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-    df.select(col("revision.new").cast("long")).na.drop().distinct()
-      .repartition(partitions)
-      .as[Long](e1)
-      .mapPartitions(it => fetchTextPartition(apiUrl, it))(e2)
-      .toDF("revid", "text")
-  }
+  def textDim(df: DataFrame, apiUrl: String, partitions: Int = 4): DataFrame =
+    dim(df, Seq(col("revision.new").cast("long")), partitions, Encoders.scalaLong,
+      Encoders.tuple(Encoders.scalaLong, Encoders.STRING), "revid", "text")(
+      fetchTextPartition(apiUrl, _))
 
   // ---- Per-site routing ---------------------------------------------
   // The reference builds one API session per configured site and routes
   // each event to its own wiki's endpoint (`filter_.py:57`,
   // `scanner.py:128` `apis[change['server_name']]`). Same here: the
   // batch's distinct (server_name, key) pairs are grouped by site inside
-  // each partition and fetched against that site's endpoint; the LRU
-  // caches are already endpoint-keyed, so sites never evict each other.
-  // A site absent from `apis` contributes no rows — its events surface
-  // as NULL enrichment and take the race / dead-letter route (the
-  // reference cannot reach this state: its streamfilter guarantees
-  // server_name ∈ sites; here it degrades instead of failing).
+  // each bounded chunk (never a whole-partition materialization; a
+  // mixed-site chunk can yield sub-[[UsersPerRequest]] requests per
+  // site, the bounded-memory tradeoff) and fetched against that site's
+  // endpoint; the LRU caches are already endpoint-keyed, so sites never
+  // evict each other. A site absent from `apis` contributes no rows —
+  // its events surface as NULL enrichment and take the race /
+  // dead-letter route (the reference cannot reach this state: its
+  // streamfilter guarantees server_name ∈ sites; here it degrades
+  // instead of failing).
 
-  /** The reference's site -> endpoint map (`filter_.py:57` builds a
-    * session per site from the standard MediaWiki path).
-    */
-  def siteApis(sites: Seq[String]): Map[String, String] =
-    sites.map(s => s -> s"https://$s/w/api.php").toMap
-
-  /** Per-site batched editcount fetch: rows are (server_name, user).
-    * Site-grouping happens within each bounded chunk (never a
-    * whole-partition materialization); a mixed-site chunk can yield
-    * sub-`batchSize` requests per site, the bounded-memory tradeoff.
-    */
-  def fetchEditCountsPartitionBySite(apis: Map[String, String],
-      rows: Iterator[(String, String)], batchSize: Int = 50,
-      cacheSize: Int = 10000): Iterator[(String, String, Long)] =
+  private def bySite[K, R](apis: Map[String, String], rows: Iterator[(String, K)])(
+      fetch: (String, Iterator[K]) => Iterator[R]): Iterator[(String, R)] =
     rows.grouped(FetchChunk).flatMap(_.groupBy(_._1).iterator.flatMap {
       case (site, siteRows) =>
-        apis.get(site).iterator.flatMap { url =>
-          fetchEditCountsPartition(url, siteRows.iterator.map(_._2), batchSize, cacheSize)
-            .map { case (u, ec) => (site, u, ec) }
-        }
-    })
-
-  /** Per-site revision-text fetch: rows are (server_name, revid); same
-    * bounded chunk-then-group shape as the editcount variant.
-    */
-  def fetchTextPartitionBySite(apis: Map[String, String],
-      rows: Iterator[(String, Long)],
-      cacheSize: Int = 10000): Iterator[(String, Long, String)] =
-    rows.grouped(FetchChunk).flatMap(_.groupBy(_._1).iterator.flatMap {
-      case (site, siteRows) =>
-        apis.get(site).iterator.flatMap { url =>
-          fetchTextPartition(url, siteRows.iterator.map(_._2), cacheSize)
-            .map { case (rev, text) => (site, rev, text) }
-        }
+        apis.get(site).iterator.flatMap(url =>
+          fetch(url, siteRows.iterator.map(_._2)).map(site -> _))
     })
 
   /** Distinct (server_name, user) -> (server_name, user, editcount) dim;
@@ -211,16 +195,12 @@ object LiveEnrichment {
     * same username can exist on every wiki with different counts).
     */
   def editCountDimBySite(df: DataFrame, apis: Map[String, String],
-      partitions: Int = 4, batchSize: Int = 50): DataFrame = {
-    implicit val e1 = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    implicit val e2 = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong)
-    df.select(col("server_name").cast("string"), col("user").cast("string"))
-      .na.drop().distinct()
-      .repartition(partitions)
-      .as[(String, String)](e1)
-      .mapPartitions(it => fetchEditCountsPartitionBySite(apis, it, batchSize))(e2)
-      .toDF("server_name", "user", "editcount")
-  }
+      partitions: Int = 4): DataFrame =
+    dim(df, Seq(col("server_name").cast("string"), col("user").cast("string")), partitions,
+      Encoders.tuple(Encoders.STRING, Encoders.STRING),
+      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong),
+      "server_name", "user", "editcount")(
+      bySite(apis, _)(fetchEditCountsPartition).map { case (s, (u, ec)) => (s, u, ec) })
 
   /** Distinct (server_name, revid) -> (server_name, revid, text) dim —
     * revision ids are only unique within one wiki, so the site key must
@@ -228,14 +208,10 @@ object LiveEnrichment {
     * wiki's text.
     */
   def textDimBySite(df: DataFrame, apis: Map[String, String],
-      partitions: Int = 4): DataFrame = {
-    implicit val e1 = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-    implicit val e2 = Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING)
-    df.select(col("server_name").cast("string"), col("revision.new").cast("long"))
-      .na.drop().distinct()
-      .repartition(partitions)
-      .as[(String, Long)](e1)
-      .mapPartitions(it => fetchTextPartitionBySite(apis, it))(e2)
-      .toDF("server_name", "revid", "text")
-  }
+      partitions: Int = 4): DataFrame =
+    dim(df, Seq(col("server_name").cast("string"), col("revision.new").cast("long")),
+      partitions, Encoders.tuple(Encoders.STRING, Encoders.scalaLong),
+      Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING),
+      "server_name", "revid", "text")(
+      bySite(apis, _)(fetchTextPartition).map { case (s, (rev, t)) => (s, rev, t) })
 }

@@ -28,26 +28,23 @@ object RcJob {
 
   /** Resolve CLI-style args exactly as `_get_sys_args` does
     * (`scanner.py:34-51`): missing name and unknown name produce the
-    * reference's error strings. `-v`/`--verbose` selects the verbose
-    * pipeline (every event with its skip reason, `scanner.py:132-138`)
-    * — [[run]] wires it through `pipelineVerbose` + `writeVerboseBatch`.
+    * reference's error strings. Returns the spec, the filter name and
+    * whether `-v`/`--verbose` selects the verbose pipeline (every event
+    * with its skip reason, `scanner.py:132-138`) — [[run]] wires it
+    * through `pipelineVerbose` + `writeVerboseBatch`.
     */
-  def resolveArgs(args: Seq[String]): Either[String, (RcStreaming.FilterSpec, Boolean)] = {
+  def resolveArgs(args: Seq[String])
+      : Either[String, (RcStreaming.FilterSpec, String, Boolean)] = {
     val verbose = args.contains("-v") || args.contains("--verbose")
     val positional = args.filterNot(a => a == "-v" || a == "--verbose")
     positional.headOption match {
       case None => Left("Error: No filter specified from `config.filters`.")
       case Some(name) => filterlist.get(name) match {
         case None => Left(s"Error: $name is not a valid key in `config.filters`.")
-        case Some(spec) => Right((spec, verbose))
+        case Some(spec) => Right((spec, name, verbose))
       }
     }
   }
-
-  /** Sink fan-out honoring the verbose flag (K1 console echo). */
-  def sinks(baseDir: String, logLevel: Int, filterName: String,
-      verbose: Boolean): RcSinks =
-    RcSinks(baseDir, logLevel, filterName, echoConsole = verbose)
 
   /** Assemble and start the full job — the `scanner.py:54-59` twin:
     * resolve args, validate config, build the multi-topic source, run
@@ -61,14 +58,13 @@ object RcJob {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : Either[String, org.apache.spark.sql.streaming.StreamingQuery] =
-    resolveArgs(args).flatMap { case (spec, verbose) =>
+    resolveArgs(args).flatMap { case (spec, name, verbose) =>
       // config errors surface through the SAME Either as arg errors
       // (the reference prints both and exits) — callers fold once;
       // nothing escapes run() as an exception
       scala.util.Try {
         RcStreaming.validate(logLevel, spec)
-        val name = args.filterNot(a => a == "-v" || a == "--verbose").head
-        val sk = sinks(outDir, logLevel, name, verbose)
+        val sk = RcSinks(outDir, logLevel, name, echoConsole = verbose)
         val src = source(spark, streamsDir, spec)
         // per-mode checkpoints: the verbose and standard pipelines have
         // incompatible stateful topologies (fMGWS vs dropDuplicates), so

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.graft.bridge
 
 /** The reference's four sinks (`scanner.py:143-175,221-249`,
@@ -54,10 +54,21 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
       sinkWrites(sized, batchId)
     }
 
+  /** Dead-lettered events never reach K1-K4 (the reference skips them
+    * before any sink, scanner.py:77-81 vs 143-175).
+    */
   private def live(full: DataFrame): DataFrame =
     if (full.columns.contains("dead_letter"))
       full.filter(!F.col("dead_letter")).drop("dead_letter")
     else full
+
+  /** The ORIGINAL full Change record when the pipeline threads it
+    * through (ChangeSchema.flagLogEntry / utils.py:42); the projected row
+    * for ad-hoc frames.
+    */
+  private def changeRecord(batch: DataFrame): Column =
+    if (batch.columns.contains("change")) F.col("change")
+    else F.struct(batch.columns.toIndexedSeq.map(F.col): _*)
 
   /** The enabled file sinks of one batch, each a write of its own
     * `batch_id=N` directory; [[writeBatch]] runs them concurrently.
@@ -76,11 +87,7 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
     val flaglog = Option.when(logLevel >= 2) { () =>
       batch.select(
           F.lit(filterName).as("filter"),
-          // `change` = the ORIGINAL full Change record when the
-          // pipeline threads it through (ChangeSchema.flagLogEntry /
-          // utils.py:42); projected-row fallback for ad-hoc frames.
-          (if (batch.columns.contains("change")) F.col("change")
-           else F.struct(batch.columns.toIndexedSeq.map(F.col): _*)).as("change"),
+          changeRecord(batch).as("change"),
           F.struct(                                            // nulls at level 2, scanner.py:162-165
             (if (logLevel == 3) F.concat(F.lit("changes/"), F.col("event_date").cast("string"))
              else F.lit(null).cast("string")).as("folder"),
@@ -108,18 +115,11 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
   def writePerEventFiles(full: DataFrame): Unit = {
     val dir = s"$baseDir/changes_files"
     val fname = filterName
-    // dead-lettered events never get content files (the reference skips
-    // them before any sink, scanner.py:77-81 vs 166-171)
-    val batch =
-      if (full.columns.contains("dead_letter")) full.filter(!F.col("dead_letter"))
-      else full
+    val batch = live(full)
     // body row section = the full Change record (scanner.py:171 writes
     // f"...{change}..." — the input dict, not the output projection)
     batch.select(F.col("event_date").cast("string"), F.col("filename"),
-        F.col("message"),
-        F.to_json(if (batch.columns.contains("change")) F.col("change")
-          else F.struct(batch.columns.toIndexedSeq.map(F.col): _*)),
-        F.col("text"))
+        F.col("message"), F.to_json(changeRecord(batch)), F.col("text"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         rows.foreach { r =>
           val folder = java.nio.file.Paths.get(dir, r.getString(0))
@@ -159,22 +159,6 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
           "change_type", "change_json")
       skipped +: sinkWrites(flagged, batchId)
     }
-
-  /** Idempotent K4 variant: dynamic partition overwrite replaces ONLY
-    * the event-date partitions present in the batch, so replaying a
-    * micro-batch after a failure (or a backfill of one day) converges
-    * instead of duplicating — exactly-once output without a
-    * transactional table format.
-    */
-  def writeContentIdempotent(batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try batch.select(F.col("event_date"), F.col("filename"), F.col("message"))
-      .write.mode("overwrite").partitionBy("event_date")
-      .parquet(s"$baseDir/changes")
-    finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
-  }
 }
 
 object RcSinks {

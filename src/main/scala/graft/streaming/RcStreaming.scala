@@ -61,15 +61,41 @@ object RcStreaming {
       "skip_repeats=true requires LOG_LEVEL >= 2")
   }
 
-  /** `spec.watermark` ("1 hour", "30 minutes", ...) as a Duration — the
-    * one state-horizon knob, shared by the watermark-timeout and
-    * TTL-based stateful operators so the two never disagree.
+  /** F1 → J1, shared by [[pipeline]] and [[pipelineVerbose]]. The
+    * ORIGINAL Change record rides along as one `change` struct column so
+    * the K3 flag log can persist it with the full declared schema
+    * (ChangeSchema.flagLogEntry / utils.py:42 embeds the whole input
+    * row, not the output projection). Edit counts join per site when the
+    * dim carries server_name (the reference queries each event's own
+    * site API, `scanner.py:128-130`); a user-only dim joins on user alone.
     */
-  def watermarkDuration(spec: FilterSpec): java.time.Duration = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils.stringToInterval(
-      org.apache.spark.unsafe.types.UTF8String.fromString(spec.watermark))
-    require(iv.months == 0, s"watermark '${spec.watermark}' must not use months")
-    java.time.Duration.ofDays(iv.days).plus(java.time.Duration.ofNanos(iv.microseconds * 1000L))
+  private def enrichUsers(changes: DataFrame, users: DataFrame,
+      spec: FilterSpec): DataFrame = {
+    val filtered = RcOps.streamFilter(changes, spec.effectiveStreamfilter)
+      .withColumn("change", struct(changes.columns.toIndexedSeq.map(col): _*))
+      .withColumn("event_time", to_timestamp(col("meta.dt")))
+    val userKeys =
+      if (users.columns.contains("server_name")) Seq("user", "server_name")
+      else Seq("user")
+    filtered.join(broadcast(users), userKeys, "left")
+  }
+
+  /** J2, shared by [[pipeline]] and [[pipelineVerbose]]: revision text
+    * by `revision.new`. A revisions dim carrying server_name is joined
+    * per site too (revision ids are only unique within one wiki — a
+    * cross-site collision must not hand event A the text of wiki B).
+    */
+  private def joinRevisions(events: DataFrame, revisions: DataFrame): DataFrame = {
+    val perSite = revisions.columns.contains("server_name")
+    val revs =
+      if (perSite) revisions.withColumnRenamed("server_name", "rev_server_name")
+      else revisions
+    val revCond =
+      if (perSite)
+        events("revision.new") === revs("revid") &&
+          events("server_name") === revs("rev_server_name")
+      else events("revision.new") === revs("revid")
+    events.join(broadcast(revs), revCond, "left").drop("rev_server_name")
   }
 
   /** Full pipeline: `changes` may be a streaming OR batch DataFrame —
@@ -79,21 +105,7 @@ object RcStreaming {
     */
   def pipeline(changes: DataFrame, users: DataFrame, revisions: DataFrame,
                spec: FilterSpec, emitDeadLetter: Boolean = false): DataFrame = {
-    // The ORIGINAL Change record rides along as one struct column so the
-    // K3 flag log can persist `change` with the full declared schema
-    // (ChangeSchema.flagLogEntry / utils.py:42 embeds the whole input
-    // row, not the output projection).
-    val filtered = RcOps.streamFilter(changes, spec.effectiveStreamfilter)
-      .withColumn("change", struct(changes.columns.toIndexedSeq.map(col): _*))
-      .withColumn("event_time", to_timestamp(col("meta.dt")))
-
-    // J1 — per-site edit counts when the dim carries server_name (the
-    // reference queries each event's own site API, `scanner.py:128-130`);
-    // a user-only dim joins on user alone.
-    val userKeys =
-      if (users.columns.contains("server_name")) Seq("user", "server_name")
-      else Seq("user")
-    val enriched = filtered.join(broadcast(users), userKeys, "left")
+    val enriched = enrichUsers(changes, users, spec)
 
     // F2 — threshold gate. A row whose edit-count lookup failed (NULL
     // editcount) is NOT silently dropped by three-valued logic: the
@@ -102,24 +114,11 @@ object RcStreaming {
     // routed to the dead-letter side below, same as missing text.
     val underMax = col("editcount").isNotNull && RcOps.countUnderMax(spec.maxEdits)
 
-    // J2 / E1 — text enrichment; missing editcount or missing text =>
-    // dead letter (skip-and-continue, never fail, `scanner.py:77-81`).
-    // A revisions dim carrying server_name is joined per-site too
-    // (revision ids are only unique within one wiki — a cross-site
-    // collision must not hand event A the text of wiki B).
-    val revs =
-      if (revisions.columns.contains("server_name"))
-        revisions.withColumnRenamed("server_name", "rev_server_name")
-      else revisions
-    val revCond =
-      if (revs.columns.contains("rev_server_name"))
-        enriched("revision.new") === revs("revid") &&
-          enriched("server_name") === revs("rev_server_name")
-      else enriched("revision.new") === revs("revid")
-    val withText = enriched
-      .filter(underMax || col("editcount").isNull)
-      .join(broadcast(revs), revCond, "left")
-      .drop("rev_server_name")
+    // J2 / E1 — text enrichment after the cheap gates; missing editcount
+    // or missing text => dead letter (skip-and-continue, never fail,
+    // `scanner.py:77-81`).
+    val withText =
+      joinRevisions(enriched.filter(underMax || col("editcount").isNull), revisions)
       .withColumn("dead_letter", col("editcount").isNull || col("text").isNull)
 
     // R1 — matched-set + match gate (RcOps.matchedPatterns, shared with
@@ -274,7 +273,10 @@ object RcStreaming {
     * reference `skip_message`. reason-null rows with a non-empty
     * `matched` are the flagged events (identical set to `pipeline`'s
     * live output); reason-null rows with empty `matched` are the
-    * evaluated-no-hit events the reference's verb line covers.
+    * evaluated-no-hit events the reference's verb line covers. F1, J1
+    * and J2 are [[pipeline]]'s own joins (per-site dims included); only
+    * the gates differ: every event is kept and labelled instead of
+    * filtered.
     *
     * Streaming caveat (bounded-state tradeoff): the fMGWS path applies
     * `withWatermark` BEFORE markRepeats, so an event arriving later
@@ -283,25 +285,14 @@ object RcStreaming {
     * to the configured watermark, not unconditionally. The batch twin
     * has no watermark and emits truly every row, so the two can
     * diverge exactly on late events. This is the price of bounded
-    * repeat-state; widen `spec.watermark` (or use the TWS path, whose
-    * TTL drops STATE but not events) if late arrivals matter more
+    * repeat-state; widen `spec.watermark` if late arrivals matter more
     * than state size.
     */
   def pipelineVerbose(changes: DataFrame, users: DataFrame,
-      revisions: DataFrame, spec0: FilterSpec,
-      useTransformWithState: Boolean = false): DataFrame = {
+      revisions: DataFrame, spec0: FilterSpec): DataFrame = {
     implicit val spec: FilterSpec = spec0
-    val filtered = RcOps.streamFilter(changes, spec.effectiveStreamfilter)
-      .withColumn("event_time", to_timestamp(col("meta.dt")))
-    val userKeys =
-      if (users.columns.contains("server_name")) Seq("user", "server_name")
-      else Seq("user")
-    val enriched = filtered.join(broadcast(users), userKeys, "left")
     val underMax = RcOps.countUnderMax(spec.maxEdits)
-    val withText = enriched
-      .join(broadcast(revisions),
-        enriched("revision.new") === revisions("revid"), "left")
-    val pre = withText
+    val pre = joinRevisions(enrichUsers(changes, users, spec), revisions)
       .withColumn("pre_reason",
         when(col("editcount").isNull, "race_editcount")
           .when(!underMax, "editcount")
@@ -322,21 +313,14 @@ object RcStreaming {
       // full Change record as JSON: typed encoders can't carry the raw
       // nested struct through flatMapGroupsWithState without a parallel
       // case-class tree; the sink rehydrates with the declared schema.
-      to_json(struct(changes.columns.toIndexedSeq.map(col): _*)).as("change_json"))
+      to_json(col("change")).as("change_json"))
 
     import rows.sparkSession.implicits._
     val resolved: DataFrame =
-      if (rows.isStreaming) {
-        // TWS runs in processing-time mode with declarative state TTL —
-        // no event-time watermark (mixing one in trips the event-time
-        // exec); fMGWS bounds state by watermark timeout instead.
-        if (useTransformWithState)
-          StatefulOps.markRepeatsTws(rows.as[VerboseRow],
-            ttl = watermarkDuration(spec)).toDF()
-        else
-          StatefulOps.markRepeats(
-            rows.withWatermark("event_time", spec.watermark).as[VerboseRow]).toDF()
-      } else {
+      if (rows.isStreaming)
+        StatefulOps.markRepeats(
+          rows.withWatermark("event_time", spec.watermark).as[VerboseRow]).toDF()
+      else {
         // Batch twin of markRepeats: an event is a repeat iff an earlier
         // (event_us, id) eligible event of the same title matched. The
         // first flag CANDIDATE is always an actual flag, so counting

@@ -367,52 +367,6 @@ object StatefulOps {
         TimeMode.ProcessingTime, OutputMode.Append)
   }
 
-  /** The repeat-state machine on Spark 4's transformWithState —
-    * the successor API to flatMapGroupsWithState: explicit named state
-    * variables with DECLARATIVE TTL (the runtime evicts; no manual
-    * timer bookkeeping), designed for the RocksDB state store v2.
-    * Kept alongside [[markRepeats]] as the forward path; both pass the
-    * same twin test.
-    */
-  private class RepeatProcessor(spec: RcStreaming.FilterSpec,
-      ttl: java.time.Duration)
-      extends StatefulProcessor[String, RcStreaming.VerboseRow, RcStreaming.VerboseRow] {
-    @transient private var flagged:
-      org.apache.spark.sql.streaming.ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      flagged = getHandle.getValueState[Boolean]("flagged",
-        Encoders.scalaBoolean, TTLConfig(ttl))
-
-    override def handleInputRows(title: String,
-        rows: Iterator[RcStreaming.VerboseRow],
-        timerValues: TimerValues): Iterator[RcStreaming.VerboseRow] = {
-      var f = flagged.exists() && flagged.get()
-      val out = rows.toSeq.sortBy(r => (r.event_us, r.id)).map { r =>
-        val resolved = RcStreaming.resolveReason(r, f)(spec)
-        if (resolved.flag) f = true
-        resolved.row
-      }
-      flagged.update(f)
-      out.iterator
-    }
-  }
-
-  /** transformWithState twin of [[markRepeats]]; state TTL bounds
-    * per-title state by processing time (vs the watermark horizon of
-    * the fMGWS variant — both are the "recent titles only" contract).
-    */
-  def markRepeatsTws(events: Dataset[RcStreaming.VerboseRow],
-      ttl: java.time.Duration = java.time.Duration.ofHours(1))(
-      implicit spec: RcStreaming.FilterSpec): Dataset[RcStreaming.VerboseRow] = {
-    implicit val enc: Encoder[RcStreaming.VerboseRow] =
-      Encoders.product[RcStreaming.VerboseRow]
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    events.groupByKey(_.title)
-      .transformWithState(new RepeatProcessor(spec, ttl),
-        TimeMode.ProcessingTime, OutputMode.Append)
-  }
-
   /** Verbose-mode skip-reason resolver (reference `scanner.py:120-175`
     * `-v` semantics): per title, the FIRST eligible matching event flags
     * the title; every later eligible event of a flagged title is a

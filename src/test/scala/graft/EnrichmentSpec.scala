@@ -126,6 +126,37 @@ class EnrichmentSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("an API that accepts and never answers dead-letters as race, bounded in time") {
+    val inDir = Files.createTempDirectory("livehung").toString
+    Files.writeString(java.nio.file.Path.of(s"$inDir/b.json"),
+      changeJson(41, "User:H", "hunguser", 9401))
+    // accepts every connection and never writes a byte
+    val hung = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[java.net.Socket]()
+    val acceptor = new Thread(() =>
+      try { while (true) held.add(hung.accept()) } catch { case _: java.io.IOException => () })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    val url = s"http://127.0.0.1:${hung.getLocalPort}/w/api.php"
+    val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), None,
+      skipRepeats = false, regexes = Seq("userbox"))
+    val batch = spark.read.schema(ChangeSchema.change).json(inDir)
+    val run = scala.concurrent.Future {
+      RcStreaming.livePipeline(batch, url, spec, emitDeadLetter = true)
+        .select("id", "dead_letter").as[(Long, Boolean)].collect().toSeq
+    }(scala.concurrent.ExecutionContext.global)
+    try {
+      // the guard: without a request timeout the lookups block forever
+      val rows = scala.concurrent.Await.result(run,
+        scala.concurrent.duration.Duration(60, "seconds"))
+      assert(rows === Seq((41L, true)))
+      assert(!held.isEmpty, "the lookups must have reached the hung API")
+    } finally {
+      hung.close()
+      held.forEach(_.close())
+    }
+  }
+
   test("per-site routing: each event's lookups hit its own wiki's API") {
     def siteJson(id: Long, site: String, user: String, rev: Long): String =
       changeJson(id, s"User:X$id", user, rev)

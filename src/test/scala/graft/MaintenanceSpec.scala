@@ -4,13 +4,9 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.operators.Compaction
-import graft.streaming.RcSinks
 
-/** Pipeline maintenance: small-files compaction and idempotent
-  * partition-overwrite reprocessing.
-  */
+/** Pipeline maintenance: small-files compaction and crash recovery. */
 class MaintenanceSpec extends SparkSpec {
-  import spark.implicits._
 
   test("compaction bin-packs many small files without changing data") {
     val dir = Files.createTempDirectory("smallfiles").toString + "/t"
@@ -51,26 +47,5 @@ class MaintenanceSpec extends SparkSpec {
     assert(Compaction.recover(spark, dir))
     assert(spark.read.parquet(dir).count() === 10)
     assert(!Compaction.recover(spark, dir)) // no-op when healthy
-  }
-
-  test("idempotent content sink: replaying a batch does not duplicate") {
-    val out = Files.createTempDirectory("idem").toString
-    val sinks = RcSinks(out, logLevel = 3, filterName = "example")
-    val batch = Seq(
-      (java.sql.Date.valueOf("2026-08-12"), "alice_101", "m1"),
-      (java.sql.Date.valueOf("2026-08-13"), "bob_102", "m2")
-    ).toDF("event_date", "filename", "message")
-    sinks.writeContentIdempotent(batch)
-    sinks.writeContentIdempotent(batch) // replay the SAME batch
-    val got = spark.read.parquet(s"$out/changes")
-    assert(got.count() === 2) // no duplicates
-    // and a partial backfill touches only its own partition
-    val backfill = Seq((java.sql.Date.valueOf("2026-08-12"), "alice_101", "m1-fixed"))
-      .toDF("event_date", "filename", "message")
-    sinks.writeContentIdempotent(backfill)
-    val after = spark.read.parquet(s"$out/changes")
-    assert(after.count() === 2)
-    assert(after.filter(col("message") === "m1-fixed").count() === 1)
-    assert(after.filter(col("message") === "m2").count() === 1) // other day untouched
   }
 }

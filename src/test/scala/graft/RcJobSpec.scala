@@ -16,7 +16,8 @@ class RcJobSpec extends SparkSpec {
       Left("Error: No filter specified from `config.filters`."))
     assert(RcJob.resolveArgs(Seq("nope")) ===
       Left("Error: nope is not a valid key in `config.filters`."))
-    val Right((spec, verbose)) = RcJob.resolveArgs(Seq("example", "-v"))
+    val Right((spec, name, verbose)) = RcJob.resolveArgs(Seq("example", "-v"))
+    assert(name === "example")
     assert(verbose)
     assert(spec.sites === Seq("en.wikipedia.org"))
     assert(spec.effectiveStreamfilter("server_name") === Seq("en.wikipedia.org"))

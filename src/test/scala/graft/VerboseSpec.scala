@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import graft.schema.ChangeSchema
 import graft.streaming.{RcSinks, RcStreaming}
@@ -102,36 +103,6 @@ class VerboseSpec extends SparkSpec {
     assert(flagged.select("change.meta.domain").as[String].head() === "en.wikipedia.org")
   }
 
-  test("transformWithState twin resolves the same reasons as fMGWS") {
-    val inDir = Files.createTempDirectory("verbtws").toString
-    val outDir = Files.createTempDirectory("verbtwsout").toString
-    writeFixture(inDir)
-    // transformWithState requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val changes = spark.readStream.schema(ChangeSchema.change).json(inDir)
-      val q = RcStreaming.pipelineVerbose(changes, users, revisions, spec,
-          useTransformWithState = true)
-        .writeStream.format("memory").queryName("verb_tws")
-        .option("checkpointLocation", s"$outDir/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-      q.stop()
-      val got = spark.sql("SELECT id, reason, skip_message FROM verb_tws")
-        .as[(Long, Option[String], Option[String])].collect()
-      assert(got.length === 7)
-      expectReasons(got)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("repeat state survives a checkpointed restart") {
     val inDir = Files.createTempDirectory("verbr").toString
     val outDir = Files.createTempDirectory("verbrout").toString
@@ -164,14 +135,35 @@ class VerboseSpec extends SparkSpec {
   }
 
   test("non-verbose pipeline and verbose pipeline flag the same events") {
+    def flaggedBoth(batch: DataFrame, users: DataFrame, revisions: DataFrame): Seq[Long] = {
+      val flaggedVerbose = RcStreaming.pipelineVerbose(batch, users, revisions, spec)
+        .filter("reason IS NULL AND size(matched) > 0")
+        .select("id").as[Long].collect().sorted.toSeq
+      val flaggedPlain = RcStreaming.pipeline(batch, users, revisions, spec)
+        .select("id").as[Long].collect().sorted.toSeq
+      assert(flaggedVerbose === flaggedPlain)
+      flaggedPlain
+    }
     val inDir = Files.createTempDirectory("verbx").toString
     writeFixture(inDir)
-    val batch = spark.read.schema(ChangeSchema.change).json(inDir)
-    val flaggedVerbose = RcStreaming.pipelineVerbose(batch, users, revisions, spec)
-      .filter("reason IS NULL AND size(matched) > 0")
-      .select("id").as[Long].collect().sorted.toSeq
-    val flaggedPlain = RcStreaming.pipeline(batch, users, revisions, spec)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(flaggedVerbose === flaggedPlain)
+    flaggedBoth(spark.read.schema(ChangeSchema.change).json(inDir), users, revisions)
+
+    // Per-site dims: the same user and the same revid exist on two wikis
+    // and only wiki A's text matches, so each event must be resolved
+    // against its own wiki's text.
+    val siteDir = Files.createTempDirectory("verbsite").toString
+    Files.writeString(java.nio.file.Path.of(s"$siteDir/b.json"), Seq(
+      changeJson(11, "User:SA", "shared", 500).replace("en.wikipedia.org", "aa.example.org"),
+      changeJson(12, "User:SB", "shared", 500).replace("en.wikipedia.org", "bb.example.org")
+    ).mkString("\n"))
+    val siteBatch = spark.read.schema(ChangeSchema.change).json(siteDir)
+    val siteUsers = Seq(("aa.example.org", "shared", 5L), ("bb.example.org", "shared", 6L))
+      .toDF("server_name", "user", "editcount")
+    val siteRevs = Seq(("aa.example.org", 500L, "userbox alpha"),
+      ("bb.example.org", 500L, "plain beta")).toDF("server_name", "revid", "text")
+    assert(flaggedBoth(siteBatch, siteUsers, siteRevs) === Seq(11L))
+    val texts = RcStreaming.pipelineVerbose(siteBatch, siteUsers, siteRevs, spec)
+      .select("id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(texts === Seq((11L, "userbox alpha"), (12L, "plain beta")))
   }
 }
