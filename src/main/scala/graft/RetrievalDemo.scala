@@ -18,11 +18,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RetrievalDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(8)
     println(summary(spark, "/root/testdata/sf0.001"))
     spark.stop()
   }

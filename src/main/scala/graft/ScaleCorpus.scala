@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: materialize the ScaleSmoke 10x replica corpus to a FIXED
@@ -41,11 +40,7 @@ object ScaleCorpus {
       .map(_.split(",").toSet)
       .getOrElse(Set("docs", "vecs", "events", "facts", "dims"))
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32)
     val base = Tables.documents(spark, src)
     // dense packing: source ids are [0, n) — replica k occupies
     // [k*n, (k+1)*n), so the union is [0, reps*n) with no gaps and

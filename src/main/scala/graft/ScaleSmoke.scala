@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress smoke: replicate the sf0.1 documents corpus AND the
@@ -15,11 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32)
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("big").toString

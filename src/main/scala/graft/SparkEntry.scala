@@ -34,6 +34,18 @@ object SparkEntry {
       RcOps.sanitizedFilename(col("user_id"), col("event_id")).as("filename"))
   }
 
+  /** The session of the dev and demo mains: `local[n]`, `n` shuffle
+    * partitions, UTC, UI off, log level ERROR.
+    */
+  def localSession(n: Int): SparkSession = {
+    val spark = SparkSession.builder().master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ParityQueries.queries ++ AnalyticsQueries.queries ++ ExtensionQueries.queries

@@ -14,11 +14,7 @@ import graft.streaming.{RcSinks, RcStreaming}
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(8)
     import spark.implicits._
 
     // A recorded SSE stream: 6 events, two on the same title.

@@ -185,12 +185,7 @@ final class StringSet(strings0: Array[String]) extends Serializable {
   * distillate) — corpus-scale sets belong in a join.
   */
 case class InStringSet(child: Expression, set: StringSet)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"in_string_set requires a string input, got ${child.dataType.sql}")
+    extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "in_string_set"

@@ -11,6 +11,21 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The type check of every string-input expression: each child must be
+  * a string, and the error names the expression by its `prettyName`
+  * ("<name> requires a string input, got <type>"; "string inputs, got
+  * <a> / <b>" for several children).
+  */
+trait StringInputs extends Expression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.forall(_.dataType == StringType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(children match {
+      case Seq(c) => s"$prettyName requires a string input, got ${c.dataType.sql}"
+      case cs => s"$prettyName requires string inputs, got " +
+        cs.map(_.dataType.sql).mkString(" / ")
+    })
+}
+
 /** Native word-shingling for the dedup family's hottest map stage.
   *
   * The declarative formulation — `transform(sequence(1, n_sh), i =>
@@ -32,14 +47,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `greatest(size(ws)-(n-1), 1)` guard of the HOF form and the DuckDB
   * oracle's `greatest(len(ws)-4, 1)`.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, n: Int) extends UnaryExpression with StringInputs {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
@@ -78,14 +88,10 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
   * (native); the md5 work itself is irreducible (the oracle pays it
   * too), the delta is the lambda/allocation overhead.
   */
-case class CdcChunkHashes(child: Expression, window: Int) extends UnaryExpression {
+case class CdcChunkHashes(child: Expression, window: Int)
+    extends UnaryExpression with StringInputs {
 
   require(window >= 2, s"cdc window must be >= 2 tokens, got $window")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunk_hashes requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "cdc_chunk_hashes"
@@ -118,12 +124,7 @@ case class CdcChunkHashes(child: Expression, window: Int) extends UnaryExpressio
   * [[TextExpressions.termCount]] byte walk.
   */
 case class TermCount(child: Expression, term: String)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"term_count requires a string input, got ${child.dataType.sql}")
+    extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "term_count"
@@ -146,12 +147,7 @@ case class TermCount(child: Expression, term: String)
 }
 
 case class PhraseCount(child: Expression, w1: String, w2: String)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"phrase_count requires a string input, got ${child.dataType.sql}")
+    extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "phrase_count"
@@ -175,14 +171,9 @@ case class PhraseCount(child: Expression, w1: String, w2: String)
   * downstream `explode` consumes a ready array with no `array_distinct`
   * (a per-element hash-set pass over interpreted equality) in between.
   */
-case class DistinctShingles(child: Expression, n: Int) extends UnaryExpression {
+case class DistinctShingles(child: Expression, n: Int) extends UnaryExpression with StringInputs {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"distinct_shingles requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "distinct_shingles"
@@ -207,14 +198,10 @@ case class DistinctShingles(child: Expression, n: Int) extends UnaryExpression {
   * hotspot of the n-gram Jaccard pipeline; the hash now runs AFTER the
   * explode, compiled, one row at a time.
   */
-case class DistinctShingleStructs(child: Expression, n: Int) extends UnaryExpression {
+case class DistinctShingleStructs(child: Expression, n: Int)
+    extends UnaryExpression with StringInputs {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"distinct_shingle_structs requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -260,12 +247,7 @@ case class DistinctShingleStructs(child: Expression, n: Int) extends UnaryExpres
   * pressure ever shows up here, copy terms onto fresh arrays with
   * `UTF8String.fromBytes` per term.
   */
-case class TermCountStructs(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"term_count_structs requires a string input, got ${child.dataType.sql}")
+case class TermCountStructs(child: Expression) extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -305,12 +287,8 @@ case class TermCountStructs(child: Expression) extends UnaryExpression {
   * zero-copy slices. Empty tokens (doubled spaces) are non-stopwords,
   * exactly like the `isin(stopEn)` they replace.
   */
-case class PhraseRuns(child: Expression, stopCsv: String) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"phrase_runs requires a string input, got ${child.dataType.sql}")
+case class PhraseRuns(child: Expression, stopCsv: String)
+    extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -358,12 +336,7 @@ case class PhraseRuns(child: Expression, stopCsv: String) extends UnaryExpressio
   * a tight loop per row — a pure map, no Generate, no shuffle at all
   * before the consumer's own bucketing.
   */
-case class SimHash32(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash32 requires a string input, got ${child.dataType.sql}")
+case class SimHash32(child: Expression) extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash32"
@@ -390,14 +363,9 @@ case class SimHash32(child: Expression) extends UnaryExpression {
   * (Min over a multiset equals min over its distinct set, so no dedup
   * pass is needed.)
   */
-case class MinHashSlices(child: Expression, n: Int) extends UnaryExpression {
+case class MinHashSlices(child: Expression, n: Int) extends UnaryExpression with StringInputs {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"minhash_slices requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "minhash_slices"
@@ -424,14 +392,9 @@ case class MinHashSlices(child: Expression, n: Int) extends UnaryExpression {
   * being CodegenFallback. 0.0 when the doc has fewer than n tokens (no
   * grams); the oracle mirrors with COALESCE over its empty group.
   */
-case class TopGramFrac(child: Expression, n: Int) extends UnaryExpression {
+case class TopGramFrac(child: Expression, n: Int) extends UnaryExpression with StringInputs {
 
   require(n >= 1, s"gram width must be >= 1, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"top_gram_frac requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
   override def prettyName: String = "top_gram_frac"
@@ -460,16 +423,11 @@ case class TopGramFrac(child: Expression, n: Int) extends UnaryExpression {
   * is kept in the property spec as the semantic pin.
   */
 case class WordChunks(child: Expression, size: Int, stride: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StringInputs {
 
   require(size >= 1, s"chunk size must be >= 1, got $size")
   require(stride >= 1 && stride <= size,
     s"stride must be in [1, size=$size] (windows must tile or overlap), got $stride")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_chunks requires a string input, got ${child.dataType.sql}")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_chunks"
@@ -514,12 +472,7 @@ case class WordChunks(child: Expression, size: Int, stride: Int)
   * UrlOpsSpec as the cross-checked reference semantics (the
   * DotProduct-vs-fold contract).
   */
-case class PercentNormalize(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"percent_normalize requires a string input, got ${child.dataType.sql}")
+case class PercentNormalize(child: Expression) extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "percent_normalize"
@@ -535,12 +488,7 @@ case class PercentNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-case class HtmlToText(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_to_text requires a string input, got ${child.dataType.sql}")
+case class HtmlToText(child: Expression) extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "html_to_text"
@@ -569,12 +517,7 @@ case class HtmlToText(child: Expression) extends UnaryExpression {
   * raw (resolution against the page's base URI is [[ResolveUrl]]'s
   * job). Single pass, codegen'd static call.
   */
-case class ExtractLinks(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"extract_links requires a string input, got ${child.dataType.sql}")
+case class ExtractLinks(child: Expression) extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "extract_links"
@@ -603,12 +546,7 @@ case class ExtractLinks(child: Expression) extends UnaryExpression {
   * `array<struct<href: string, anchor: string>>` in document order.
   * Single pass, codegen'd static call.
   */
-case class ExtractAnchors(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"extract_anchors requires a string input, got ${child.dataType.sql}")
+case class ExtractAnchors(child: Expression) extends UnaryExpression with StringInputs {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -639,14 +577,7 @@ case class ExtractAnchors(child: Expression) extends UnaryExpression {
   * references, so a rule bug here breaks the hash gate.
   */
 case class ResolveUrl(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"resolve_url requires string inputs, got " +
-        s"${left.dataType.sql} / ${right.dataType.sql}")
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with StringInputs {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "resolve_url"
@@ -757,25 +688,7 @@ object TextExpressions {
   /** Tight-loop shingle builder shared by eval and generated code. */
   def shingleBytes(text: UTF8String, n: Int): GenericArrayData = {
     val bytes = text.getBytes
-    val len = bytes.length
-    // token i spans [starts(i), ends(i)); boundaries are the 0x20 bytes
-    var numTokens = 1
-    var i = 0
-    while (i < len) { if (bytes(i) == ' '.toByte) numTokens += 1; i += 1 }
-    val starts = new Array[Int](numTokens)
-    val ends = new Array[Int](numTokens)
-    var tok = 0
-    starts(0) = 0
-    i = 0
-    while (i < len) {
-      if (bytes(i) == ' '.toByte) {
-        ends(tok) = i
-        tok += 1
-        starts(tok) = i + 1
-      }
-      i += 1
-    }
-    ends(tok) = len
+    val (starts, ends, numTokens) = boundaries(bytes)
     val numShingles = math.max(numTokens - n + 1, 1)
     val out = new Array[Any](numShingles)
     var s = 0
@@ -836,8 +749,9 @@ object TextExpressions {
   def cdc_chunk_hashes(text: Column, window: Int): Column =
     bridge.column(CdcChunkHashes(bridge.expression(text), window))
 
-  /** Shingle byte-ranges of `text` as (starts, ends, count) without
-    * materializing strings — shared scaffolding of the three variants.
+  /** Token byte-ranges of `text` as (starts, ends, count) without
+    * materializing strings — token i spans [starts(i), ends(i)), split
+    * on the 0x20 bytes; shared scaffolding of the shingle variants.
     */
   private def boundaries(bytes: Array[Byte]): (Array[Int], Array[Int], Int) = {
     val len = bytes.length
@@ -1199,30 +1113,7 @@ object TextExpressions {
         sb.append(' ') // tags separate words; the collapse pass dedups
       } else if (c == '&') {
         val semi = html.indexOf(';', i + 1)
-        val decoded: Int = // -1 = not a recognized entity
-          if (semi < 0 || semi > i + 12) -1
-          else {
-            val name = html.substring(i + 1, semi)
-            name match {
-              case "amp" => '&'
-              case "lt" => '<'
-              case "gt" => '>'
-              case "quot" => '"'
-              case "apos" => '\''
-              case "nbsp" => ' ' // regular space, deliberately (see scaladoc)
-              case _ =>
-                if (name.length >= 2 && name.charAt(0) == '#') {
-                  try {
-                    val cp =
-                      if (name.charAt(1) == 'x' || name.charAt(1) == 'X')
-                        Integer.parseInt(name.substring(2), 16)
-                      else Integer.parseInt(name.substring(1))
-                    if (cp >= 0 && cp <= 0x10ffff &&
-                        !(cp >= 0xd800 && cp <= 0xdfff)) cp else -1
-                  } catch { case _: NumberFormatException => -1 }
-                } else -1
-            }
-          }
+        val decoded = entityAt(html, i, semi)
         if (decoded >= 0) { sb.appendCodePoint(decoded); i = semi + 1 }
         else { sb.append('&'); i += 1 } // bare ampersand: literal
       } else { sb.append(c); i += 1 }
@@ -1245,6 +1136,35 @@ object TextExpressions {
     new GenericArrayData(extractLinksStrings(html.toString)
       .map(UTF8String.fromString).toArray[Any])
 
+  /** The code point of the entity between the '&' at `i` and the ';'
+    * at `semi` of `s` (amp, lt, gt, quot, apos, nbsp as a regular space,
+    * decimal or hex numeric), or -1 when it is not a recognized entity.
+    */
+  private def entityAt(s: String, i: Int, semi: Int): Int =
+    if (semi < 0 || semi > i + 12) -1
+    else {
+      val name = s.substring(i + 1, semi)
+      name match {
+        case "amp" => '&'
+        case "lt" => '<'
+        case "gt" => '>'
+        case "quot" => '"'
+        case "apos" => '\''
+        case "nbsp" => ' ' // regular space, deliberately (see scaladoc)
+        case _ =>
+          if (name.length >= 2 && name.charAt(0) == '#') {
+            try {
+              val cp =
+                if (name.charAt(1) == 'x' || name.charAt(1) == 'X')
+                  Integer.parseInt(name.substring(2), 16)
+                else Integer.parseInt(name.substring(1))
+              if (cp >= 0 && cp <= 0x10ffff &&
+                  !(cp >= 0xd800 && cp <= 0xdfff)) cp else -1
+            } catch { case _: NumberFormatException => -1 }
+          } else -1
+      }
+    }
+
   /** [[HtmlToText]]'s entity rules applied to a flat string (attribute
     * values — no tag stripping, no whitespace collapse).
     */
@@ -1256,30 +1176,7 @@ object TextExpressions {
       val c = s.charAt(i)
       if (c == '&') {
         val semi = s.indexOf(';', i + 1)
-        val decoded: Int =
-          if (semi < 0 || semi > i + 12) -1
-          else {
-            val name = s.substring(i + 1, semi)
-            name match {
-              case "amp" => '&'
-              case "lt" => '<'
-              case "gt" => '>'
-              case "quot" => '"'
-              case "apos" => '\''
-              case "nbsp" => ' '
-              case _ =>
-                if (name.length >= 2 && name.charAt(0) == '#') {
-                  try {
-                    val cp =
-                      if (name.charAt(1) == 'x' || name.charAt(1) == 'X')
-                        Integer.parseInt(name.substring(2), 16)
-                      else Integer.parseInt(name.substring(1))
-                    if (cp >= 0 && cp <= 0x10ffff &&
-                        !(cp >= 0xd800 && cp <= 0xdfff)) cp else -1
-                  } catch { case _: NumberFormatException => -1 }
-                } else -1
-            }
-          }
+        val decoded = entityAt(s, i, semi)
         if (decoded >= 0) { sb.appendCodePoint(decoded); i = semi + 1 }
         else { sb.append('&'); i += 1 }
       } else { sb.append(c); i += 1 }

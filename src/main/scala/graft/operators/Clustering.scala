@@ -100,14 +100,38 @@ object Clustering {
   def connectedComponents(spark: SparkSession, pairs: DataFrame,
       maxRounds: Int = 30): DataFrame = {
     import spark.implicits._
-    val localLimit = math.min(
-      spark.conf.get("spark.graft.cc.localEdgeLimit", (1 << 16).toString).toLong,
-      LocalEdgeLimitCeiling.toLong).toInt
+    val localLimit = localEdgeLimit(spark)
     val longPairs = pairs
       .select(col("a_id").cast("long").as("a_id"), col("b_id").cast("long").as("b_id"))
     val probe = longPairs.limit(localLimit + 1).as[(Long, Long)].collect()
     if (probe.length <= localLimit) unionFindLabels(spark, probe)
     else distributedConnectedComponents(spark, longPairs, maxRounds)
+  }
+
+  /** `spark.graft.cc.localEdgeLimit` (default 65536), clamped to
+    * [[LocalEdgeLimitCeiling]]: the "graph small enough for the driver"
+    * bound every adaptive graph operator here shares.
+    */
+  private def localEdgeLimit(spark: SparkSession): Int = math.min(
+    spark.conf.get("spark.graft.cc.localEdgeLimit", (1 << 16).toString).toLong,
+    LocalEdgeLimitCeiling.toLong).toInt
+
+  /** The adaptive strategy probe of [[bfsLayers]], [[kcorePeelCounts]]
+    * and [[lpaLabels]]: bounded `limit(limit + 1)` collects of the
+    * long edge pairs and then of the one-column node set. When both
+    * fit under [[localEdgeLimit]] the probe rows ARE the graph and are
+    * returned for the driver-side path; otherwise None.
+    */
+  private def localProbe(spark: SparkSession, edges: DataFrame, nodes: DataFrame)
+      : Option[(Array[(Long, Long)], Array[Long])] = {
+    import spark.implicits._
+    val limit = localEdgeLimit(spark)
+    val edgeProbe = edges.limit(limit + 1).as[(Long, Long)].collect()
+    if (edgeProbe.length > limit) None
+    else {
+      val nodeProbe = nodes.limit(limit + 1).as[Long].collect()
+      if (nodeProbe.length > limit) None else Some((edgeProbe, nodeProbe))
+    }
   }
 
   /** Driver-side union-find over an already-collected edge list (the
@@ -196,22 +220,15 @@ object Clustering {
     */
   def bfsLayers(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       maxRounds: Int, checkpointEvery: Int = 8): DataFrame = {
-    import spark.implicits._
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
     val s = seeds.select(col("v").cast("long").as("v"))
-    val localLimit = math.min(
-      spark.conf.get("spark.graft.cc.localEdgeLimit", (1 << 16).toString).toLong,
-      LocalEdgeLimitCeiling.toLong).toInt
-    val edgeProbe = e.limit(localLimit + 1).as[(Long, Long)].collect()
-    if (edgeProbe.length <= localLimit) {
-      val seedProbe = s.limit(localLimit + 1).as[Long].collect()
-      if (seedProbe.length <= localLimit)
-        return localBfsLayers(spark, edgeProbe, seedProbe, maxRounds)
+    localProbe(spark, e, s) match {
+      case Some((es, vs)) => localBfsLayers(spark, es, vs, maxRounds)
+      case None => distributedBfsLayers(spark, e, s, maxRounds, checkpointEvery)
     }
-    distributedBfsLayers(spark, e, s, maxRounds, checkpointEvery)
   }
 
   /** Driver-side BFS over an already-collected bounded graph (the
@@ -262,22 +279,15 @@ object Clustering {
     */
   def kcorePeelCounts(spark: SparkSession, edges: DataFrame, nodes: DataFrame,
       k: Int, rounds: Int): DataFrame = {
-    import spark.implicits._
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"))
     val nd = nodes.select(col("i").cast("long").as("i"))
-    val localLimit = math.min(
-      spark.conf.get("spark.graft.cc.localEdgeLimit", (1 << 16).toString).toLong,
-      LocalEdgeLimitCeiling.toLong).toInt
-    val edgeProbe = e.limit(localLimit + 1).as[(Long, Long)].collect()
-    if (edgeProbe.length <= localLimit) {
-      val nodeProbe = nd.limit(localLimit + 1).as[Long].collect()
-      if (nodeProbe.length <= localLimit)
-        return localKcorePeel(spark, edgeProbe, nodeProbe, k, rounds)
+    localProbe(spark, e, nd) match {
+      case Some((es, vs)) => localKcorePeel(spark, es, vs, k, rounds)
+      case None => distributedKcorePeel(spark, e, nd, k, rounds)
     }
-    distributedKcorePeel(spark, e, nd, k, rounds)
   }
 
   /** Driver-side peel over an already-collected bounded graph (the
@@ -314,8 +324,7 @@ object Clustering {
     * the most frequent neighbor label counting multiplicity plus the
     * node's own current label once, ties to the SMALLEST label —
     * integer-only, bit-exact cross-engine (the `crawl_communities`
-    * contract, hoisted here verbatim). Returns (u, lbl), one row per
-    * labeled node.
+    * contract). Returns (u, lbl), one row per labeled node.
     *
     * Adaptive like [[kcorePeelCounts]] (same
     * `spark.graft.cc.localEdgeLimit` knob): under the bound the
@@ -332,21 +341,14 @@ object Clustering {
     */
   def lpaLabels(spark: SparkSession, edges: DataFrame, nodes: DataFrame,
       rounds: Int): DataFrame = {
-    import spark.implicits._
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
     val nd = nodes.select(col("v").cast("long").as("v"))
-    val localLimit = math.min(
-      spark.conf.get("spark.graft.cc.localEdgeLimit", (1 << 16).toString).toLong,
-      LocalEdgeLimitCeiling.toLong).toInt
-    val edgeProbe = e.limit(localLimit + 1).as[(Long, Long)].collect()
-    if (edgeProbe.length <= localLimit) {
-      val nodeProbe = nd.limit(localLimit + 1).as[Long].collect()
-      if (nodeProbe.length <= localLimit)
-        return localLpa(spark, edgeProbe, nodeProbe, rounds)
+    localProbe(spark, e, nd) match {
+      case Some((es, vs)) => localLpa(spark, es, vs, rounds)
+      case None => distributedLpa(spark, e, nd, rounds)
     }
-    distributedLpa(spark, e, nd, rounds)
   }
 
   /** Driver-side LPA over an already-collected bounded graph (the
@@ -400,16 +402,22 @@ object Clustering {
   }
 
   /** Distributed per-round loop (the pre-adaptive `crawl_communities`
-    * shape, hoisted verbatim); package-visible so ClusteringSpec can
-    * drive it below the adaptive threshold and pin parity with the
-    * local path.
+    * shape); package-visible so ClusteringSpec can drive it below the
+    * adaptive threshold and pin parity with the local path.
     */
   private[graft] def distributedLpa(spark: SparkSession,
       e: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
     val und = e.select(col("src").as("v"), col("dst").as("u"))
       .unionByName(e.select(col("dst").as("v"), col("src").as("u")))
       .unionByName(nodes.select(col("v"), col("v").as("u")))
-    var labels = nodes.select(col("v").as("u"), col("v").as("lbl"))
+    // the packed argmax below needs 0 <= label < 2^32; labels only
+    // ever move between nodes, so checking the seed labels covers
+    // every round
+    var labels = nodes.select(col("v").as("u"),
+      when(col("v").between(0L, 0xffffffffL), col("v"))
+        .otherwise(raise_error(lit(
+          "lpaLabels: node id outside [0, 2^32) does not fit the packed label field")))
+        .as("lbl"))
     for (_ <- 1 to rounds) {
       val counted = und.join(labels, Seq("u"))
         .groupBy(col("v"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -420,9 +428,8 @@ object Clustering {
       // Catalyst keeps it a HASH aggregate (struct-max falls back to
       // SortAggregate; the window adds a per-node sort — the
       // dedup_ngram_jaccard packed-long recipe applied to argmax).
-      // Packing bound: counts and labels < 2^31 — labels are doc_ids
-      // (the jaccard packable contract) and a count is bounded by
-      // degree+1.
+      // Packing bound: labels < 2^32 (guarded above) and counts < 2^31
+      // (a count is bounded by degree+1).
       labels = counted
         .groupBy(col("v"))
         .agg(max(shiftleft(col("c"), 32) +

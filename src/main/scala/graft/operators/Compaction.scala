@@ -56,16 +56,38 @@ object Compaction {
     require(spark.read.parquet(tmp.toString).count() == expectedRows,
       s"compaction rewrite row count mismatch for $dir — aborting, source untouched")
 
-    val bak = new Path(dir + "__old")
-    fs.delete(bak, true) // stale backup from an earlier crash
-    fs.rename(path, bak)
-    fs.rename(tmp, path)
-    // keep the backup until the swapped-in directory proves readable
-    val after = parquetFiles(fs, path)
-    require(after.nonEmpty && spark.read.parquet(dir).count() == expectedRows,
-      s"post-swap verification failed for $dir — backup kept at $bak")
-    fs.delete(bak, true)
+    lazy val after = parquetFiles(fs, path) // listed after the swap
+    swapStaged(spark, dir, tmp.toString)(
+      after.nonEmpty && spark.read.parquet(dir).count() == expectedRows)
     Stats(files.length.toLong, after.length.toLong, bytes)
+  }
+
+  /** Move the verified `staged` directory into `live`: (1) drop a stale
+    * `live__old` backup, (2) `live` -> `live__old`, (3) `staged` ->
+    * `live`, (4) delete the backup only once `verified` (evaluated on
+    * the swapped-in directory) holds, else keep it and fail. Hadoop
+    * reports a failed rename by returning false, and `verified` checks
+    * readability, not identity (old and new data can both pass it), so
+    * both renames are checked: if (2) fails nothing moved; if (3) fails
+    * the original is renamed back in-process instead of waiting for
+    * [[recover]].
+    */
+  private[operators] def swapStaged(spark: SparkSession, live: String, staged: String)(
+      verified: => Boolean): Unit = {
+    val path = new Path(live)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bak = new Path(live + "__old")
+    fs.delete(bak, true) // stale backup from an earlier crash
+    require(fs.rename(path, bak),
+      s"could not move $live aside — swap aborted, live data untouched")
+    if (!fs.rename(new Path(staged), path)) {
+      val restored = fs.rename(bak, path)
+      throw new IllegalStateException(
+        s"could not move staged $staged into place for $live — " +
+          (if (restored) "original restored" else s"RESTORE FAILED, original at $bak"))
+    }
+    require(verified, s"post-swap verification failed for $live — backup kept at $bak")
+    fs.delete(bak, true)
   }
 
   /** Restore after a crash mid-swap: if `dir` is missing but `dir__old`

@@ -504,33 +504,11 @@ object Hnsw {
       s"compacted node store row count mismatch for $dir — aborting, live index untouched")
     require(spark.read.parquet(stageE).count() > 0,
       s"compacted adjacency is empty for $dir — aborting, live index untouched")
-    swapInto(spark, fs, s"$dir/edges", stageE)
-    swapInto(spark, fs, s"$dir/nodes", stageN)
+    for ((live, staged) <- Seq(s"$dir/edges" -> stageE, s"$dir/nodes" -> stageN))
+      Compaction.swapStaged(spark, live, staged)(spark.read.parquet(live).count() > 0)
     fs.delete(new Path(s"$dir/delta"), true)
     nodesFrameCache.remove(dir) // folded layers: re-list on next probe
     true
-  }
-
-  /** live <- staged with an `__old` backup kept until the swapped-in
-    * dir verifies readable (the Compaction/retrainIndex ordering).
-    */
-  private def swapInto(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, live: String, staged: String): Unit = {
-    val livePath = new Path(live)
-    val bak = new Path(live + "__old")
-    fs.delete(bak, true) // stale backup from an earlier crash
-    require(fs.rename(livePath, bak),
-      s"could not move $live aside — swap aborted, live index untouched")
-    if (!fs.rename(new Path(staged), livePath)) {
-      val restored = fs.rename(bak, livePath)
-      throw new IllegalStateException(
-        s"could not move staged $staged into place — " +
-          (if (restored) "original restored" else s"RESTORE FAILED, original at $bak"))
-    }
-    require(spark.read.parquet(live).count() > 0,
-      s"post-swap verification failed for $live — backup kept at $bak")
-    fs.delete(bak, true)
-    ()
   }
 
   /** Heal a crashed [[compactIndex]] swap: restore any `__old` backup
@@ -539,10 +517,7 @@ object Hnsw {
     */
   def recoverIndex(spark: SparkSession, dir: String): Boolean = {
     val fs = hadoopFs(spark, dir)
-    val healed = Seq(s"$dir/edges", s"$dir/nodes").map { live =>
-      val p = new Path(live); val bak = new Path(live + "__old")
-      if (!fs.exists(p) && fs.exists(bak)) { fs.rename(bak, p); true } else false
-    }
+    val healed = Seq(s"$dir/edges", s"$dir/nodes").map(Compaction.recover(spark, _))
     Seq(s"$dir/edges__compacting", s"$dir/nodes__compacting")
       .foreach(s => fs.delete(new Path(s), true))
     healed.contains(true)

@@ -451,7 +451,6 @@ object Similarity {
     */
   def retrainIndex(spark: SparkSession, dir: String,
       kCells: Int = 0, iters: Int = 3): Int = {
-    import org.apache.hadoop.fs.Path
     recoverSwap(spark, dir) // heal a crashed earlier swap before reading
     val all = spark.read.parquet(s"$dir/cells")
       .select(col("vec_id"), col("v").as("embedding"))
@@ -468,29 +467,8 @@ object Similarity {
     cents.write.mode("overwrite").parquet(s"$stage/centroids")
     require(spark.read.parquet(s"$stage/cells").count() == n,
       s"retrained index row count mismatch for $dir — aborting, live index untouched")
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new Path(dir + "__old")
-    fs.delete(bak, true) // stale backup from an earlier crash
-    // Hadoop rename reports failure by RETURNING false (cross-device,
-    // permission, concurrent recreation of the target) — an unchecked
-    // result here would leave the stale index live while claiming
-    // success, and the count re-check below could not catch it (old
-    // and new both count n; it verifies readability, not identity)
-    require(fs.rename(path, bak),
-      s"could not move live index aside for $dir — swap aborted, live index untouched")
-    if (!fs.rename(new Path(stage), path)) {
-      // restore the live index IN-PROCESS rather than leaving the
-      // rename-back to a later recoverSwap (which only runs if someone
-      // opens this index again)
-      val restored = fs.rename(bak, path)
-      throw new IllegalStateException(
-        s"could not move staged index into place for $dir — " +
-          (if (restored) "original restored" else s"RESTORE FAILED, original at $bak"))
-    }
-    require(spark.read.parquet(s"$dir/cells").count() == n,
-      s"post-swap verification failed for $dir — backup kept at $bak")
-    fs.delete(bak, true)
+    Compaction.swapStaged(spark, dir, stage)(
+      spark.read.parquet(s"$dir/cells").count() == n)
     k
   }
 
@@ -504,7 +482,6 @@ object Similarity {
     */
   def retrainPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
       kCells: Int = 0, iters: Int = 3, nHint: Long = 0L): (Int, PqCodebooks) = {
-    import org.apache.hadoop.fs.Path
     recoverSwap(spark, dir) // heal a crashed earlier swap before reading
     val stage = s"${dir}__retraining"
     val out = savePqIndex(spark, emb, stage, kCells, iters, nHint)
@@ -512,22 +489,8 @@ object Similarity {
     val staged = spark.read.parquet(s"$stage/codes").count()
     require(staged >= n,
       s"retrained PQ index lost rows ($staged < $n) for $dir — aborting, live index untouched")
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new Path(dir + "__old")
-    fs.delete(bak, true)
-    // rename results checked — see retrainIndex
-    require(fs.rename(path, bak),
-      s"could not move live index aside for $dir — swap aborted, live index untouched")
-    if (!fs.rename(new Path(stage), path)) {
-      val restored = fs.rename(bak, path)
-      throw new IllegalStateException(
-        s"could not move staged index into place for $dir — " +
-          (if (restored) "original restored" else s"RESTORE FAILED, original at $bak"))
-    }
-    require(spark.read.parquet(s"$dir/codes").count() == staged,
-      s"post-swap verification failed for $dir — backup kept at $bak")
-    fs.delete(bak, true)
+    Compaction.swapStaged(spark, dir, stage)(
+      spark.read.parquet(s"$dir/codes").count() == staged)
     out
   }
 
@@ -543,6 +506,16 @@ object Similarity {
     // the corpus and re-run the broadcast-crossJoin assignment on BOTH
     // sides (no exchange reuse) — materialize the assignment once.
     val cells = assignCells(emb, centroidDf(spark, idx.centroids)).localCheckpoint()
+    cellPairs(cells, minCos).orderBy(col("a_id"), col("b_id"))
+  }
+
+  /** Within-cell cosine pairs: `cells` (cell, vec_id, v, nv) self-joined
+    * on cell, a_id < b_id, kept where cos_sim = round(cosine, 6) >=
+    * `minCos`. Carrying the norm `nv` on each row makes the quadratic
+    * stage one dot product per pair. Output (a_id, b_id, cos_sim),
+    * unsorted.
+    */
+  private[graft] def cellPairs(cells: DataFrame, minCos: Double): DataFrame = {
     val l = cells.select(col("cell"), col("vec_id").as("a_id"),
       col("v").as("va"), col("nv").as("na"))
     val r = cells.select(col("cell"), col("vec_id").as("b_id"),
@@ -553,6 +526,5 @@ object Similarity {
         round(VectorOps.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 6))
       .filter(col("cos_sim") >= minCos)
       .select(col("a_id"), col("b_id"), col("cos_sim"))
-      .orderBy(col("a_id"), col("b_id"))
   }
 }

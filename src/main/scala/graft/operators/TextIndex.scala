@@ -135,7 +135,6 @@ object TextIndex {
     * posting row count.
     */
   def compactIndex(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
     Compaction.recover(spark, dir) // heal a crashed earlier swap first
     val posts = spark.read.parquet(s"$dir/postings")
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
@@ -150,21 +149,8 @@ object TextIndex {
       .parquet(s"$stage/postings/ingest=base")
     require(spark.read.parquet(s"$stage/postings").count() == n,
       s"compacted index row count mismatch for $dir — aborting, live index untouched")
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = new Path(dir + "__old")
-    fs.delete(bak, true)
-    require(fs.rename(path, bak),
-      s"could not move live index aside for $dir — swap aborted, live index untouched")
-    if (!fs.rename(new Path(stage), path)) {
-      val restored = fs.rename(bak, path)
-      throw new IllegalStateException(
-        s"could not move staged index into place for $dir — " +
-          (if (restored) "original restored" else s"RESTORE FAILED, original at $bak"))
-    }
-    require(spark.read.parquet(s"$dir/postings").count() == n,
-      s"post-swap verification failed for $dir — backup kept at $bak")
-    fs.delete(bak, true)
+    Compaction.swapStaged(spark, dir, stage)(
+      spark.read.parquet(s"$dir/postings").count() == n)
     n
   }
 

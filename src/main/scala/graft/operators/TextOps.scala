@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text / dedup building blocks for the training-data-pipeline
@@ -110,6 +110,19 @@ object TextOps {
   def cappedPairs(ids: Column, cap: Int = MaxBucket): Column =
     pairCombinations(capBucket(ids, cap))
 
+  /** Bucket to capped pairs, the one LSH pairing stage: group `rows` by
+    * the `keys` columns, collect each bucket's distinct `member` values
+    * in sorted order (`ids`), and explode the [[cappedPairs]] of every
+    * bucket with two or more members as `p` (struct `a`, `b`, a <= b in
+    * member order). `carry` names key columns kept beside `p`.
+    */
+  def bucketPairs(rows: DataFrame, keys: Seq[String], member: Column,
+      carry: Seq[String] = Nil): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_set(member)).as("ids"))
+      .filter(size(col("ids")) > 1)
+      .select(carry.map(col) :+ explode(cappedPairs(col("ids"))).as("p"): _*)
+
   /** Side-channel overflow stats for a bucketed DataFrame (must carry an
     * `ids` array column): one row per over-cap bucket with the number of
     * members dropped by [[capBucket]]. Empty on healthy corpora; a
@@ -181,13 +194,8 @@ object TextOps {
     * bands self-join: a self-join rescans the whole signature pipeline
     * on both sides (no exchange reuse once AQE broadcasts one side).
     */
-  def minhashCandidatePairs(docs: org.apache.spark.sql.DataFrame,
-      shingleN: Int = 5): org.apache.spark.sql.DataFrame =
-    minhashBandRows(docs, shingleN)
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(array_sort(collect_set(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(cappedPairs(col("ids"))).as("p"))
+  def minhashCandidatePairs(docs: DataFrame, shingleN: Int = 5): DataFrame =
+    bucketPairs(minhashBandRows(docs, shingleN), Seq("band_idx", "band_hash"), col("doc_id"))
       .select(col("p.a").as("a_id"), col("p.b").as("b_id")).distinct()
 
   /** Portable 32-bit hash: the first 8 md5 hex chars of the value's

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Stores, Tables}
@@ -505,39 +505,45 @@ object ExtensionQueries {
     ("sim_ivfpq_residual_topk", 297L, 10),
     ("sim_pq_rerank_topk", 294L, 10))
 
+  /** Exact cosine top-`k` of every query vector in `qids` against the
+    * whole corpus (itself excluded): ONE pass that crossJoins the
+    * broadcast query rows, scores in integer micro-cosines and keeps
+    * each query's best `k` with the bounded [[graft.functions.SketchAgg.TopK]]
+    * aggregator (ties to the lower vec_id). Output: (qid, rk 1.., vec_id,
+    * score = round(cos * 1e6)).
+    */
+  private def exactCosineTopK(s: SparkSession, dir: String, qids: Seq[Long],
+      k: Int): DataFrame = {
+    import s.implicits._
+    val q = embWithNorm(s, dir).filter(col("vec_id").isin(qids: _*))
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nv").as("nq"))
+    embWithNorm(s, dir).crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"),
+        round(VectorOps.dot(col("qv"), col("v")) / sqrt(col("nq") * col("nv"))
+          * 1e6).cast("long").as("score"),
+        col("vec_id"))
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .mapValues(t => graft.functions.SketchAgg.TopKRow(t._2, t._3, 0L))
+      .agg(new graft.functions.SketchAgg.TopK(k).toColumn.name("top"))
+      .toDF("qid", "top")
+      .select(col("qid"), posexplode(col("top")).as(Seq("i0", "t")))
+      .select(col("qid"), (col("i0") + 1).cast("long").as("rk"),
+        col("t.id").as("vec_id"), col("t.score").as("score"))
+  }
+
   /** Exact cosine top-10 ids per recall-rung query vector, in rank
     * order — the rungs' shared ground truth, memoized per corpus
-    * version as a DRIVER constant (the queryVec0 / postingSumdl
-    * bounded-collect pattern: ≤ 8 qids × 10 ids). All eight baselines
-    * still come from ONE corpus pass (the sim_batch_topk TopK(10)
-    * shape); memoizing the ~80-row result replaces the per-call eager
-    * pass + localCheckpoint + eight broadcast-hash builds that
-    * `sim_recall_report` used to pay on EVERY invocation (measured
-    * 1.3–1.4 s of per-call build; SCALE.md round-20 table) with
-    * eight pushed `isin` literals — recompute happens per JVM per
-    * corpus version, the store lifecycle every other learned/derived
-    * artifact here follows.
+    * version as a DRIVER constant (≤ 8 qids × 10 ids), so
+    * `sim_recall_report` pushes eight `isin` literals instead of
+    * re-running the exact pass per call (SCALE.md round-20 table).
     */
   private def exactTopIds(s: SparkSession, dir: String): Map[Long, Seq[Long]] =
     Stores.value(s, "recall-exact", dir, "embeddings") {
       import s.implicits._
-      val topk = new graft.functions.SketchAgg.TopK(10)
-      val qids = recallRungs.map(_._2).distinct
-      val q = embWithNorm(s, dir).filter(col("vec_id").isin(qids: _*))
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nv").as("nq"))
-      embWithNorm(s, dir).crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"),
-          round(VectorOps.dot(col("qv"), col("v")) / sqrt(col("nq") * col("nv"))
-            * 1e6).cast("long").as("score"),
-          col("vec_id"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(t => graft.functions.SketchAgg.TopKRow(t._2, t._3, 0L))
-        .agg(topk.toColumn.name("top"))
-        .toDF("qid", "top")
-        .select(col("qid"), posexplode(col("top")).as(Seq("i0", "t")))
-        .select(col("qid"), col("i0").cast("long").as("i0"), col("t.id").as("vec_id"))
+      exactCosineTopK(s, dir, recallRungs.map(_._2).distinct, 10)
+        .select(col("qid"), col("rk"), col("vec_id"))
         .as[(Long, Long, Long)].collect()
         .groupBy(_._1).map { case (qid, rows) =>
           qid -> rows.sortBy(_._2).map(_._3).toSeq
@@ -600,25 +606,11 @@ object ExtensionQueries {
       embPairsBuildFrame(s, dir)
     }
 
-  /** Construction plan (exposed for PlanAuditSpec): norms are hoisted
-    * inside [[seededCells]] — cosine(a,b) naively costs THREE dot
-    * products per pair; carrying norm2(v) on each row makes the
-    * O(pairs) stage one dot + one multiply — bit-identical doubles,
-    * 3x less work on the quadratic term.
+  /** Construction plan (exposed for PlanAuditSpec): the seeded cells'
+    * within-cell pairs at cosine >= 0.45.
     */
-  private[graft] def embPairsBuildFrame(s: SparkSession, dir: String): DataFrame = {
-    val cells = seededCells(s, dir)
-    val l = cells.select(col("cell"), col("vec_id").as("a_id"),
-      col("v").as("va"), col("nv").as("na"))
-    val r = cells.select(col("cell"), col("vec_id").as("b_id"),
-      col("v").as("vb"), col("nv").as("nb"))
-    l.join(r, Seq("cell"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 6))
-      .filter(col("cos_sim") >= 0.45)
-      .select(col("a_id"), col("b_id"), col("cos_sim"))
-  }
+  private[graft] def embPairsBuildFrame(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Similarity.cellPairs(seededCells(s, dir), 0.45)
 
   /** (vec_id, cell) projection of [[seededCells]] exposed for spec
     * replays (the sim_knn_graph cell-closure check needs the full
@@ -653,6 +645,19 @@ object ExtensionQueries {
   private def fanDocs(s: SparkSession, dir: String, df: DataFrame,
       minRows: Long = 0L): DataFrame =
     Tables.fanOutForCpu(s, df, dir, "documents", minRows)
+
+  /** (doc_id, n_bytes, content_hash) per document, fanned out for the
+    * codec kernels: the input every synthetic-container query decodes
+    * from.
+    */
+  private def containerDocs(s: SparkSession, dir: String): Dataset[(Long, Long, String)] = {
+    import s.implicits._
+    fanDocs(s, dir, Tables.documents(s, dir)
+      .select(col("doc_id"),
+        octet_length(col("text")).cast("long").as("n_bytes"),
+        md5(col("text")).as("content_hash")), minRows = 20000L)
+      .as[(Long, Long, String)]
+  }
 
   /** The image-fingerprint frame shared by `dedup_image_phash` and
     * `decon_image_phash`: family-structured synthetic PNGs through the
@@ -1259,72 +1264,28 @@ object ExtensionQueries {
     (banks, tables, perm)
   }
 
-  /** The RESIDUAL-PQ codebook of `sim_ivfpq_residual_topk` — the
-    * faithful FAISS IndexIVFPQ composition: PQ trains on RESIDUALS
-    * (vector minus its coarse cell's centroid), not raw vectors, so
-    * the codewords only have to cover the within-cell spread — the
-    * precision win that makes residual encoding the production
-    * standard. Codewords per subspace = the first 256 vectors'
-    * residual subvectors (each against its OWN cell's centroid, in
-    * exact float->double arithmetic); the probe-cell centroid rides
-    * inside each [[graft.functions.ResidualPqBank]] so the engine
-    * subtracts it per candidate row. Seed/query cell assignments come
-    * from a bounded 257-row collect through the SAME native argmax
-    * expression the corpus side uses (no driver re-derivation to
-    * drift). ADC tables are squared-L2 of the query residual
-    * subvector against every codeword, summed sequentially — memoized
-    * per (dir, query) like the raw-PQ tables. Returns (banks, tables,
-    * probe cell id).
-    */
-  private def resPqCodebook(s: SparkSession, dir: String, qid: Long)
-      : (Seq[graft.functions.ResidualPqBank], Seq[Array[Double]], Long) =
-    Stores.value(s, "respq", dir, "embeddings", s"$qid") {
-      import s.implicits._
-      val bank = seedCentroidBank(s, dir)
-      val rows = assignSeededCells(
-          embWithNorm(s, dir).filter(col("vec_id") < 256 || col("vec_id") === qid), bank)
-        .select(col("vec_id"), col("cell"), col("v"))
-        .as[(Long, Long, Array[Float])].collect()
-      val centroidByCid: Map[Long, Array[Float]] = bank.cids.zip(bank.vecs).toMap
-      def residual(v: Array[Float], cell: Long): Array[Double] = {
-        val c = centroidByCid(cell)
-        Array.tabulate(math.min(v.length, c.length))(i => v(i).toDouble - c(i).toDouble)
-      }
-      def sub(r: Array[Double], si: Int): Array[Double] = r.slice(si * 8, si * 8 + 8)
-      def l2seq(a: Array[Double], b: Array[Double]): Double = {
-        var acc = 0.0; var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { val d = a(i) - b(i); acc += d * d; i += 1 }
-        acc
-      }
-      val seeds = rows.filter(_._1 < 256).sortBy(_._1)
-      val (_, qCell, qVec) = rows.find(_._1 == qid)
-        .getOrElse(sys.error(s"query vector $qid missing from $dir"))
-      val qRes = residual(qVec, qCell)
-      val qCentroid = centroidByCid(qCell).map(_.toDouble)
-      val banks = (0 until 8).map { si =>
-        new graft.functions.ResidualPqBank(
-          seeds.map(_._1),
-          seeds.map(r => sub(residual(r._3, r._2), si)),
-          qCentroid.slice(si * 8, si * 8 + 8))
-      }
-      val tables = (0 until 8).map { si =>
-        banks(si).vecs.map(cw => l2seq(sub(qRes, si), cw))
-      }
-      (banks, tables, qCell)
-    }
-
-  /** Multi-probe residual-PQ codebook: the [[resPqCodebook]] build
-    * widened to the query's `probes` nearest coarse cells — per
-    * probed cell, a bank set whose centroidSub is THAT cell's (the
-    * codewords are identical across branches: they are the seeds'
-    * residuals against their OWN cells, independent of the probe) and
-    * ADC tables against the query's residual IN that cell (FAISS
-    * nprobe semantics: the query re-residualizes per probed list).
-    * The probe ranking replays the coarse quantizer's exact contract —
-    * round6 cosine, ties to the lower cid — so the oracle's
-    * row_number ordering matches. Returns (cell -> (banks, tables))
-    * in probe order.
+  /** The RESIDUAL-PQ codebooks of `sim_ivfpq_residual_topk` and
+    * `sim_ivfpq_multiprobe_topk` — the faithful FAISS IndexIVFPQ
+    * composition: PQ trains on RESIDUALS (vector minus its coarse
+    * cell's centroid), not raw vectors, so the codewords only have to
+    * cover the within-cell spread — the precision win that makes
+    * residual encoding the production standard. Codewords per subspace
+    * = the first 256 vectors' residual subvectors (each against its OWN
+    * cell's centroid, in exact float->double arithmetic), identical
+    * across probed cells. Seed cell assignments come from a bounded
+    * 257-row collect through the SAME native argmax expression the
+    * corpus side uses (no driver re-derivation to drift).
+    *
+    * Per probed cell — the query's `probes` nearest coarse cells — a
+    * bank set whose centroidSub is THAT cell's (the engine subtracts it
+    * per candidate row) and ADC tables: squared-L2 of the query's
+    * residual IN that cell (FAISS nprobe semantics) against every
+    * codeword, summed sequentially. The probe ranking replays the
+    * coarse quantizer's contract ([[graft.functions.SeededCellArgmax]]:
+    * sequential widening dot, rounded-6 comparison, ties to the lower
+    * cid), so the first probe IS the query's assigned cell and the
+    * oracle's row_number ordering matches. Returns (cell -> (banks,
+    * tables)) in probe order.
     */
   private def resPqMultiCodebook(s: SparkSession, dir: String, qid: Long,
       probes: Int): Seq[(Long, (Seq[graft.functions.ResidualPqBank], Seq[Array[Double]]))] =
@@ -1352,14 +1313,14 @@ object ExtensionQueries {
       val seedIds = seeds.map(_._1)
       val qVec = rows.find(_._1 == qid)
         .getOrElse(sys.error(s"query vector $qid missing from $dir"))._3
-      // probe ranking: the coarse quantizer's own arithmetic — dot via
-      // the sequential widening sum, round6 BEFORE ordering, tie lower
       val nq = pqDotSeq(qVec, qVec)
-      val probeCells: Seq[Long] = bank.cids.indices.map { j =>
-        val cs = graft.functions.SeededCellArgmax.round6(
-          pqDotSeq(qVec, bank.vecs(j)) / math.sqrt(nq * bank.norms(j)))
-        (-cs, bank.cids(j))
-      }.sorted.take(probes).map(_._2)
+      val cosine = bank.cids.indices.map(j =>
+        pqDotSeq(qVec, bank.vecs(j)) / math.sqrt(nq * bank.norms(j)))
+      // bank.cids ascend, so the lower index is the lower cid
+      val probeCells: Seq[Long] = bank.cids.indices.sortWith { (i, j) =>
+        val c = graft.functions.SeededCellArgmax.compareRounded6(cosine(i), cosine(j))
+        c > 0 || (c == 0 && i < j)
+      }.take(probes).map(bank.cids(_))
       probeCells.map { cell =>
         val cSub = centroidByCid(cell).map(_.toDouble)
         val qRes = residualVs(qVec, centroidByCid(cell))
@@ -1457,12 +1418,8 @@ object ExtensionQueries {
     * SAME exchange, so no separate distinct stage is planned.
     */
   private def perceptualFramePairs(frames: DataFrame, maxHamming: Int): DataFrame =
-    bandExplode(frames)
-      .groupBy(col("b"), col("v"))
-      .agg(array_sort(collect_set(struct(col("doc_id"), col("f"), col("b0"),
-        col("b1"), col("b2"), col("b3")))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(TextOps.cappedPairs(col("ids"))).as("p"))
+    TextOps.bucketPairs(bandExplode(frames), Seq("b", "v"),
+        struct(col("doc_id"), col("f"), col("b0"), col("b1"), col("b2"), col("b3")))
       // struct sort order is doc_id-major, so p.a.doc_id <= p.b.doc_id;
       // dropping equality leaves a_id < b_id (intra-doc frame pairs are
       // not near-DUPS — the same clip trivially matches itself)
@@ -1489,12 +1446,8 @@ object ExtensionQueries {
     * queries cannot drift in plan shape or pairing semantics.
     */
   private def perceptualPairs(hashed: DataFrame, maxHamming: Int): DataFrame =
-    bandExplode(hashed)
-      .groupBy(col("b"), col("v"))
-      .agg(array_sort(collect_set(struct(col("doc_id"), col("b0"), col("b1"),
-        col("b2"), col("b3")))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(col("b"), explode(TextOps.cappedPairs(col("ids"))).as("p"))
+    TextOps.bucketPairs(bandExplode(hashed), Seq("b", "v"),
+        struct(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3")), carry = Seq("b"))
       // a pair colliding in several bands would duplicate; instead of
       // a DISTINCT (a whole extra exchange), keep only the copy from
       // the LOWEST matching band — computable from the two
@@ -1853,12 +1806,6 @@ object ExtensionQueries {
       .select(col("bg"), p.as("p"))
   }
 
-  /** The trained-recall contract's construction plan (see the
-    * `sim_recall_report_trained` entry for bars + contract): measures
-    * every trained/persisted rung's REAL overlap against a batched
-    * exact cosine baseline and emits one (rung, recall_ok) row per
-    * rung. Runs once per corpus version (memoized by the entry).
-    */
   /** Exact cosine top-20 PER SEEDED QUERY ID (42, 299) — (qid, rk,
     * vec_id), ONE batched corpus pass for BOTH ids, stored once per
     * corpus version ([[Stores]]): the six
@@ -1869,24 +1816,8 @@ object ExtensionQueries {
     */
   private def exactTopFrame(s: SparkSession, dir: String): DataFrame =
     Stores.frame(s, "exacttop", dir, "embeddings") {
-      import s.implicits._
-      val topk = new graft.functions.SketchAgg.TopK(20)
-      val q = embWithNorm(s, dir).filter(col("vec_id").isin(42L, 299L))
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nv").as("nq"))
-      embWithNorm(s, dir).crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"),
-          round(VectorOps.dot(col("qv"), col("v")) / sqrt(col("nq") * col("nv"))
-            * 1e6).cast("long").as("score"),
-          col("vec_id"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(t => graft.functions.SketchAgg.TopKRow(t._2, t._3, 0L))
-        .agg(topk.toColumn.name("top"))
-        .toDF("qid", "top")
-        .select(col("qid"), posexplode(col("top")).as(Seq("i0", "t")))
-        .select(col("qid"), (col("i0") + 1).cast("long").as("rk"),
-          col("t.id").as("vec_id"))
+      exactCosineTopK(s, dir, Seq(42L, 299L), 20)
+        .select(col("qid"), col("rk"), col("vec_id"))
     }
 
   /** The trained-path pq recall floor is corpus-size-aware: 8-byte
@@ -1931,6 +1862,12 @@ object ExtensionQueries {
         (col("ov") >= bar).cast("long").as("recall_ok"))
   }
 
+  /** The trained-recall contract's construction plan (see the
+    * `sim_recall_report_trained` entry for bars + contract): measures
+    * every trained/persisted rung's REAL overlap against a batched
+    * exact cosine baseline and emits one (rung, recall_ok) row per
+    * rung. Runs once per corpus version (memoized by the entry).
+    */
   private def trainedRecallBuildFrame(s: SparkSession, dir: String): DataFrame = {
     val exact = exactTopFrame(s, dir)
     def okRow(name: String, qid: Long, rkMax: Int, bar: Long): DataFrame =
@@ -2110,7 +2047,7 @@ object ExtensionQueries {
     // (without that pruning, both intersection-join inputs would be
     // the full corpus gram stream — the scale-killer this two-phase
     // shape exists to avoid). The materialized pair set is tiny by
-    // construction (localCheckpoint, same pattern as nearDupPairs), so
+    // construction (localCheckpoint), so
     // the banding pipeline runs once, not once per consumer. No
     // stop-shingle filter is needed: the pair set is already
     // LSH-bounded, so a hot gram adds linear rows per pair, never new
@@ -2139,10 +2076,7 @@ object ExtensionQueries {
       val banded = sh
         .select(col("doc_id"), col("simhash"), explode(sequence(lit(0), lit(1))).as("b"))
         .withColumn("band_val", expr("shiftright(simhash, CAST(16 * b AS INT)) % 65536"))
-      banded.groupBy(col("b"), col("band_val"))
-        .agg(array_sort(collect_set(struct(col("doc_id"), col("simhash")))).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .select(explode(TextOps.cappedPairs(col("ids"))).as("p"))
+      TextOps.bucketPairs(banded, Seq("b", "band_val"), struct(col("doc_id"), col("simhash")))
         .select(col("p.a.doc_id").as("a_id"), col("p.b.doc_id").as("b_id"),
           expr("CAST(bit_count(p.a.simhash ^ p.b.simhash) AS INT)").as("hamming"))
         .distinct()
@@ -2863,7 +2797,7 @@ object ExtensionQueries {
     // TakeOrderedAndProject: ZERO exchange, like its siblings.
     "sim_ivfpq_residual_topk" -> ((s, dir) => {
       val bank = seedCentroidBank(s, dir)
-      val (rbanks, rtables, qcell) = resPqCodebook(s, dir, qid = 297L)
+      val Seq((qcell, (rbanks, rtables))) = resPqMultiCodebook(s, dir, qid = 297L, probes = 1)
       assignSeededCells(embWithNorm(s, dir), bank)
         .filter(col("cell") === lit(qcell) && col("vec_id") =!= 297)
         .select(col("vec_id"),
@@ -3012,28 +2946,10 @@ object ExtensionQueries {
         .toDF("rk", "vec_id", "rel", "max_prev_sim", "mmr")
     }),
 
-    "sim_batch_topk" -> ((s, dir) => {
-      import s.implicits._
-      val topk = new graft.functions.SketchAgg.TopK(5)
-      val q = embWithNorm(s, dir)
-        .filter(col("vec_id").isin(290L, 291L, 292L, 293L))
-        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nv").as("nq"))
-      embWithNorm(s, dir).crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"),
-          round(VectorOps.dot(col("qv"), col("v")) / sqrt(col("nq") * col("nv"))
-            * 1e6).cast("long").as("score"),
-          col("vec_id"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .mapValues(t => graft.functions.SketchAgg.TopKRow(t._2, t._3, 0L))
-        .agg(topk.toColumn.name("top"))
-        .toDF("qid", "top")
-        .select(col("qid"), posexplode(col("top")).as(Seq("i0", "t")))
-        .select(col("qid"), (col("i0") + 1).cast("long").as("rk"),
-          col("t.id").as("vec_id"), (col("t.score") / 1e6).as("cos_sim"))
-        .orderBy(col("qid"), col("rk"))
-    }),
+    "sim_batch_topk" -> ((s, dir) =>
+      exactCosineTopK(s, dir, Seq(290L, 291L, 292L, 293L), 5)
+        .select(col("qid"), col("rk"), col("vec_id"), (col("score") / 1e6).as("cos_sim"))
+        .orderBy(col("qid"), col("rk"))),
 
     // PRODUCTION twin of sim_ivf_topk: learned k ~ sqrt(n) quantizer +
     // multi-probe (2 nearest cells) for recall at cell boundaries.
@@ -4164,7 +4080,10 @@ object ExtensionQueries {
       val g = ing.filter(size(split(col("text"), " ")) >= 8)
         .select(col("doc_id"),
           posexplode(TextOps.shinglesOfText(col("text"), 8)).as(Seq("pos", "gram")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"),
+        .select(col("doc_id"),
+          when(col("pos") < 1048576, col("pos").cast("long"))
+            .otherwise(raise_error(lit("dedup_substring: token position >= 2^20 " +
+              "does not fit the packed (doc_id, pos) member field"))).as("pos"),
           xxhash64(col("gram")).as("h"))
       // r21 rewrite (guide §2.4): the former shape was a count-window
       // over h (Exchange + sort + WindowExec) followed by a SELF-JOIN
@@ -4178,8 +4097,8 @@ object ExtensionQueries {
       // window sort + a sort-merge join. Isolated min-of-7 at sf0.1:
       // 0.954 -> 0.512 s; the anchor stage's Exchange count 2 -> 1.
       // members ride as ONE packed long (doc_id in the high bits, pos
-      // in the low 20 — positions are token indexes, bounded far below
-      // 2^20 by the doc length contract): narrower shuffle rows and a
+      // in the low 20; a position past 2^20 would carry into the doc
+      // id, so `g` raises an error on one): narrower shuffle rows and a
       // primitive-array aggregation buffer (§2.3 narrower types)
       val b = g.groupBy(col("h"))
         .agg(collect_list(col("doc_id") * lit(1048576L) + col("pos")).as("ms"))
@@ -5053,11 +4972,7 @@ object ExtensionQueries {
     // the hash gate covers the decoder output end to end.
     "multimodal_luma_stats" -> ((s, dir) => {
       import s.implicits._
-      fanDocs(s, dir, Tables.documents(s, dir)
-        .select(col("doc_id"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          md5(col("text")).as("content_hash")), minRows = 20000L)
-        .as[(Long, Long, String)]
+      containerDocs(s, dir)
         .mapPartitions { it =>
           it.map { case (id, nBytes, hash) =>
             val payload = graft.operators.Multimodal.syntheticPgmContainer(hash, nBytes)
@@ -5078,11 +4993,7 @@ object ExtensionQueries {
 
     "multimodal_features" -> ((s, dir) => {
       import s.implicits._
-      fanDocs(s, dir, Tables.documents(s, dir)
-        .select(col("doc_id"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          md5(col("text")).as("content_hash")), minRows = 20000L)
-        .as[(Long, Long, String)]
+      containerDocs(s, dir)
         .mapPartitions { it =>
           // codec init would happen here, once per partition
           it.map { case (id, nBytes, hash) =>
@@ -5105,11 +5016,7 @@ object ExtensionQueries {
     // clip-boundary detection misparses anything.
     "multimodal_audio" -> ((s, dir) => {
       import s.implicits._
-      fanDocs(s, dir, Tables.documents(s, dir)
-        .select(col("doc_id"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          md5(col("text")).as("content_hash")), minRows = 20000L)
-        .as[(Long, Long, String)]
+      containerDocs(s, dir)
         .mapPartitions { it =>
           // codec init would happen here, once per partition
           it.map { case (id, nBytes, hash) =>
@@ -5204,11 +5111,7 @@ object ExtensionQueries {
 
     "multimodal_video" -> ((s, dir) => {
       import s.implicits._
-      fanDocs(s, dir, Tables.documents(s, dir)
-        .select(col("doc_id"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          md5(col("text")).as("content_hash")), minRows = 20000L)
-        .as[(Long, Long, String)]
+      containerDocs(s, dir)
         .mapPartitions { it =>
           // codec init would happen here, once per partition
           it.map { case (id, nBytes, hash) =>
@@ -5332,11 +5235,7 @@ object ExtensionQueries {
     // The oracle replays construction, windowing, bit packing, and
     // the distinct-value join in SQL.
     "dedup_audio_shingle" -> ((s, dir) =>
-      audioShingleFrame(s, dir)
-        .groupBy(col("sh"))
-        .agg(array_sort(collect_set(col("doc_id"))).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .select(explode(TextOps.cappedPairs(col("ids"))).as("p"))
+      TextOps.bucketPairs(audioShingleFrame(s, dir), Seq("sh"), col("doc_id"))
         .select(col("p.a").as("a_id"), col("p.b").as("b_id"))
         .groupBy(col("a_id"), col("b_id"))
         .agg(count(lit(1)).as("n_shared"))

@@ -40,6 +40,12 @@ class BucketCapSpec extends SparkSpec {
     assert(boilerPairs === cap * (cap - 1) / 2,
       s"expected C($cap,2)=${cap * (cap - 1) / 2} capped pairs, got $boilerPairs")
     assert(pairs.length < 200000, s"total pair volume must stay bounded: ${pairs.length}")
+    // the same bound straight through the bucket-pairs builder, on one
+    // exact-content bucket per text: the 2000-clone bucket yields C(cap, 2)
+    val direct = TextOps.bucketPairs(Tables.documents(spark, advDir)
+        .select(col("doc_id"), md5(col("text")).as("h")), Seq("h"), col("doc_id"))
+      .select(col("p.a"), col("p.b")).as[(Long, Long)].collect()
+    assert(direct.count { case (a, b) => a >= 1000000L && b >= 1000000L } === cap * (cap - 1) / 2)
   }
 
   test("overflow side channel reports the dropped members per bucket") {
@@ -86,6 +92,12 @@ class BucketCapSpec extends SparkSpec {
       .select(explode(TextOps.cappedPairs(ids)).as("p"))
       .select(col("p.a"), col("p.b")).as[(Long, Long)].collect().toSet
     assert(capped === Set((3L, 5L), (3L, 9L), (5L, 9L)))
+    // through the bucket-pairs builder: members arrive unsorted and
+    // repeated, a one-member bucket pairs nothing, the key rides along
+    val rows = Seq(("x", 9L), ("x", 3L), ("x", 5L), ("x", 3L), ("y", 7L)).toDF("k", "m")
+    val built = TextOps.bucketPairs(rows, Seq("k"), col("m"), carry = Seq("k"))
+      .select(col("k"), col("p.a"), col("p.b")).as[(String, Long, Long)].collect()
+    assert(built.sorted.toSeq === Seq(("x", 3L, 5L), ("x", 3L, 9L), ("x", 5L, 9L)))
   }
 
   test("fuzzy-join deletion-variant buckets stay bounded at the gate scale factors") {

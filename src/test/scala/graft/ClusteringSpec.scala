@@ -76,6 +76,20 @@ class ClusteringSpec extends SparkSpec {
     assert(run(hub, hn, rounds = 4)(21L) === 21L, "isolated node keeps its own label")
   }
 
+  test("distributed lpa rejects node ids outside its packed 32-bit label field") {
+    val big = 1L << 32
+    val edges = Seq((big + 1, big + 2), (big + 2, big + 3), (big + 3, big + 1)).toDF("src", "dst")
+    val nodes = Seq(big + 1, big + 2, big + 3).toDF("v")
+    // the driver-side path packs nothing: every node lands in the
+    // triangle's smallest label
+    assert(Clustering.lpaLabels(spark, edges, nodes, rounds = 2)
+      .as[(Long, Long)].collect().toMap.values.toSet === Set(big + 1))
+    val err = intercept[Exception] {
+      distributed { Clustering.lpaLabels(spark, edges, nodes, rounds = 2).collect() }
+    }
+    assert(err.getMessage.contains("2^32"), err.getMessage)
+  }
+
   test("two components get their min-node labels") {
     val labels = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))

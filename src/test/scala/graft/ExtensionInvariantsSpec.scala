@@ -667,6 +667,23 @@ class ExtensionInvariantsSpec extends SparkSpec {
     assert(q("dedup_exact").count() === docs.select("text").distinct().count())
   }
 
+  test("substring dedup raises on a token position past its 2^20 packing field") {
+    import org.apache.spark.sql.functions.{col, length, lit}
+    val dir = java.nio.file.Files.createTempDirectory("longdoc").toString
+    val shared = "q1 q2 q3 q4 q5 q6 q7 q8"
+    // doc 1: 2^20 filler tokens, then the 8-gram doc 3 holds, anchored
+    // at position 2^20 — one past the packed position field, where it
+    // would carry into the doc id and name doc 2
+    Seq((1L, "w " * (1 << 20) + shared), (3L, shared)).toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("adv"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    val err = intercept[Exception] {
+      SparkEntry.queries("dedup_substring")(spark, dir).collect()
+    }
+    assert(err.getMessage.contains("2^20"), err.getMessage)
+  }
+
   test("span-exact dedup: counts shared spans per doc, not pairs (shipped query)") {
     // doc 1 and 2 share one exact 32-token span (1's second span, 2's
     // first); doc 3 is unique; doc 4 is a full clone of doc 3 (both of
