@@ -5,7 +5,11 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URLEncoder
 import java.nio.charset.StandardCharsets
 
+import java.util.concurrent.Executors
+
 import scala.collection.concurrent.TrieMap
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -16,18 +20,20 @@ import org.apache.spark.sql.functions._
   * `get_editcount` + one `get_text` HTTP round trip per event, serial).
   *
   * Spark-first reshaping: instead of 2 RTTs inside the per-row hot path,
-  * each micro-batch's DISTINCT users / revision ids are fetched by the
-  * executors via `mapPartitions` — usernames batched 50 per request
-  * (the MediaWiki `list=users` API is natively multi-user; the reference
-  * pays one request per event), revisions one per request but on a
-  * keep-alive connection — and the results become ordinary dimension
-  * frames for the SAME broadcast joins the static pipeline uses. The
-  * network cost is O(distinct keys per batch), not O(events), and the
-  * scan/filter/join plan is unchanged.
+  * one pass collects a micro-batch's DISTINCT keys to the driver, which
+  * fetches them in one bounded round of requests — usernames batched 50
+  * per request (the MediaWiki `list=users` API is natively multi-user;
+  * the reference pays one request per event), revisions one per request
+  * on a keep-alive client, at most [[MaxInFlight]] requests at once —
+  * and the replies become small local dimension frames for the SAME
+  * broadcast joins the static pipeline uses (the broadcast collects
+  * every dim row on the driver anyway). The network cost is
+  * O(distinct keys per batch), not O(events), and the scan/filter/join
+  * plan is the static one.
   *
-  * A per-JVM (= per-executor) LRU cache short-circuits keys seen in
-  * recent batches — the streaming analog of the reference process's
-  * implicit "same user edits twice" locality, made explicit and bounded.
+  * A per-JVM LRU cache short-circuits keys seen in recent batches — the
+  * streaming analog of the reference process's implicit "same user
+  * edits twice" locality, made explicit and bounded.
   *
   * Failure semantics: a key missing from a response, an unparseable
   * body, or a failed request yields NO row for that key; the downstream
@@ -42,6 +48,11 @@ object LiveEnrichment {
 
   /** Entries per (endpoint, kind) LRU. */
   private val CacheSize = 10000
+
+  /** Requests in flight at once across the JVM: the polite-client bound
+    * (the reference is serial = 1).
+    */
+  private val MaxInFlight = 4
 
   /** Bounded per-JVM LRU (access-order LinkedHashMap), one per
     * (endpoint, kind) so unrelated streams don't evict each other.
@@ -63,6 +74,14 @@ object LiveEnrichment {
   private lazy val http = HttpClient.newBuilder().connectTimeout(Timeout).build()
   private lazy val mapper = new ObjectMapper
 
+  /** The request pool: [[MaxInFlight]] daemon threads. */
+  private lazy val pool = ExecutionContext.fromExecutorService(
+    Executors.newFixedThreadPool(MaxInFlight, (r: Runnable) => {
+      val t = new Thread(r, "live-enrichment")
+      t.setDaemon(true)
+      t
+    }))
+
   private def get(url: String): Option[String] =
     try {
       val r = http.send(HttpRequest.newBuilder(URI.create(url)).timeout(Timeout).GET().build(),
@@ -72,64 +91,61 @@ object LiveEnrichment {
 
   private def enc(s: String): String = URLEncoder.encode(s, StandardCharsets.UTF_8)
 
-  /** Keys are consumed in bounded chunks of this size, so a skewed
-    * partition never materializes wholesale in task memory — the
-    * fetchers stay O(chunk), not O(partition). Keys are deduplicated
-    * within each chunk (and the LRU absorbs cross-chunk re-FETCHES);
-    * callers that need globally distinct output pairs must pass
-    * distinct keys — [[dim]] does via `.distinct()` upstream.
+  /** One fetch's pending replies: LRU hits complete at once, every
+    * request runs on [[pool]].
     */
-  private val FetchChunk = 512
+  private type Pending[R] = Seq[Future[Seq[R]]]
+
+  private def await[R](pending: Pending[R]): Seq[R] =
+    pending.flatMap(Await.result(_, Duration.Inf))
+
+  /** Split `keys` into LRU hits and the misses `request` fetches. */
+  private def cached[K, R](lru: java.util.LinkedHashMap[String, String], keys: Seq[K])(
+      hit: (K, String) => R)(request: Seq[K] => Pending[R]): Pending[R] = {
+    // snapshot value AND membership in one synchronized read — a
+    // separate containsKey/get pair races with eviction by other threads
+    val snapshot = keys.map(k => k -> lru.synchronized(Option(lru.get(k.toString))))
+    Future.successful(snapshot.collect { case (k, Some(v)) => hit(k, v) }) +:
+      request(snapshot.collect { case (k, None) => k })
+  }
 
   /** `list=users&ususers=a|b|c` batch lookup (`scanner.py:199-218`),
-    * [[UsersPerRequest]] users per request. Returns found (user,
+    * [[UsersPerRequest]] distinct users per request. Yields found (user,
     * editcount) pairs; missing users produce no pair (race downstream).
     */
-  def fetchEditCountsPartition(apiUrl: String,
-      users: Iterator[String]): Iterator[(String, Long)] =
-    users.grouped(FetchChunk).flatMap(chunk => fetchEditCountsChunk(apiUrl, chunk))
-
-  private def fetchEditCountsChunk(apiUrl: String,
-      chunk: Seq[String]): Iterator[(String, Long)] = {
+  private def editCounts(apiUrl: String, users: Seq[String]): Pending[(String, Long)] = {
     val lru = cache(s"$apiUrl#editcount")
-    // snapshot value AND membership in one synchronized read — a
-    // separate containsKey/get pair races with eviction by other tasks
-    val snapshot = chunk.distinct.map(u =>
-      u -> lru.synchronized(Option(lru.get(u))))
-    val hits = snapshot.collect { case (u, Some(v)) => u -> v.toLong }
-    val toFetch = snapshot.collect { case (u, None) => u }
-    val fetched = toFetch.grouped(UsersPerRequest).flatMap { group =>
-      val url = s"$apiUrl?format=json&action=query&list=users&usprop=editcount" +
-        s"&ususers=${enc(group.mkString("|"))}"
-      get(url).toSeq.flatMap { body =>
-        try {
-          val arr = mapper.readTree(body).path("query").path("users")
-          (0 until arr.size).flatMap { i =>
-            val u = arr.get(i)
-            val name = u.path("name").asText(null)
-            val ec = u.path("editcount")
-            if (name != null && ec.isNumber) {
-              lru.synchronized(lru.put(name, ec.asLong.toString))
-              Some(name -> ec.asLong)
-            } else None // user exists in reply but no editcount -> race
-          }
-        } catch { case _: Exception => Nil }
-      }
-    }
-    hits.iterator ++ fetched
+    cached(lru, users)((u, v) => u -> v.toLong)(_.grouped(UsersPerRequest).map { group =>
+      Future {
+        val url = s"$apiUrl?format=json&action=query&list=users&usprop=editcount" +
+          s"&ususers=${enc(group.mkString("|"))}"
+        get(url).toSeq.flatMap { body =>
+          try {
+            val arr = mapper.readTree(body).path("query").path("users")
+            (0 until arr.size).flatMap { i =>
+              val u = arr.get(i)
+              val name = u.path("name").asText(null)
+              val ec = u.path("editcount")
+              if (name != null && ec.isNumber) {
+                lru.synchronized(lru.put(name, ec.asLong.toString))
+                Some(name -> ec.asLong)
+              } else None // user exists in reply but no editcount -> race
+            }
+          } catch { case _: Exception => Nil }
+        }
+      }(pool)
+    }.toSeq)
   }
 
   /** `action=parse&oldid=N&prop=wikitext` per-revision lookup
-    * (`scanner.py:178-196`); one request per revision on a keep-alive
-    * client, LRU-cached. Missing `parse.wikitext.*` = race (no row).
+    * (`scanner.py:178-196`); one request per distinct revision,
+    * LRU-cached. Missing `parse.wikitext.*` = race (no row).
     */
-  def fetchTextPartition(apiUrl: String,
-      revids: Iterator[Long]): Iterator[(Long, String)] = {
+  private def texts(apiUrl: String, revids: Seq[Long]): Pending[(Long, String)] = {
     val lru = cache(s"$apiUrl#text")
-    revids.grouped(FetchChunk).flatMap(_.distinct).flatMap { rev =>
-      val hit = lru.synchronized(Option(lru.get(rev.toString)))
-      hit.map(rev -> _).orElse {
-        get(s"$apiUrl?format=json&action=parse&oldid=$rev&prop=wikitext").flatMap { body =>
+    cached(lru, revids)((rev, t) => rev -> t)(_.map { rev =>
+      Future {
+        get(s"$apiUrl?format=json&action=parse&oldid=$rev&prop=wikitext").toSeq.flatMap { body =>
           try {
             val t = mapper.readTree(body).path("parse").path("wikitext").path("*")
             if (t.isTextual) {
@@ -138,43 +154,64 @@ object LiveEnrichment {
             } else None
           } catch { case _: Exception => None }
         }
-      }
-    }
+      }(pool)
+    })
   }
 
-  /** The one dim builder: the distinct non-null `keys` of `df`, spread
-    * over `partitions` tasks (the polite-client knob; the reference is
-    * serial = 1), fetched on the executors and named `names`.
+  /** The one key pass and the one fetch round: the distinct non-null
+    * (`site`, `user`, `revid`) keys of `df` are collected to the driver,
+    * grouped by site, and every site's user and revision requests are
+    * issued together before any reply is awaited. A site that
+    * `endpoint` does not resolve fetches nothing: its events get NULL
+    * enrichment.
     */
-  private def dim[K, R](df: DataFrame, keys: Seq[Column], partitions: Int,
-      keyEnc: Encoder[K], rowEnc: Encoder[R], names: String*)(
-      fetch: Iterator[K] => Iterator[R]): DataFrame =
-    df.select(keys: _*).na.drop().distinct()
-      .repartition(partitions)
-      .as[K](keyEnc)
-      .mapPartitions(fetch)(rowEnc)
-      .toDF(names: _*)
+  private def fetch(df: DataFrame, site: Column, user: Column, revid: Column,
+      endpoint: String => Option[String]): (Seq[(String, String, Long)], Seq[(String, Long, String)]) = {
+    val keys = df.select(site.cast("string"), user.cast("string"), revid.cast("long"))
+      .distinct().collect().filterNot(_.isNullAt(0))
+    val pending = keys.groupBy(_.getString(0)).toSeq.flatMap { case (s, rows) =>
+      endpoint(s).map { url =>
+        val users = rows.filterNot(_.isNullAt(1)).map(_.getString(1)).distinct.toSeq
+        val revids = rows.filterNot(_.isNullAt(2)).map(_.getLong(2)).distinct.toSeq
+        (s, editCounts(url, users), texts(url, revids))
+      }
+    }
+    (pending.flatMap { case (s, u, _) => await(u).map { case (name, n) => (s, name, n) } },
+      pending.flatMap { case (s, _, t) => await(t).map { case (rev, text) => (s, rev, text) } })
+  }
 
-  /** Distinct users of `df.user` -> (user, editcount) dim frame. */
-  def editCountDim(df: DataFrame, apiUrl: String, partitions: Int = 4): DataFrame =
-    dim(df, Seq(col("user").cast("string")), partitions, Encoders.STRING,
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong), "user", "editcount")(
-      fetchEditCountsPartition(apiUrl, _))
+  private def frame[T](df: DataFrame, rows: Seq[T], enc: Encoder[T], names: String*): DataFrame =
+    df.sparkSession.createDataset(rows)(enc).toDF(names: _*)
 
-  /** Distinct revision ids -> (revid, text) dim frame. */
-  def textDim(df: DataFrame, apiUrl: String, partitions: Int = 4): DataFrame =
-    dim(df, Seq(col("revision.new").cast("long")), partitions, Encoders.scalaLong,
-      Encoders.tuple(Encoders.scalaLong, Encoders.STRING), "revid", "text")(
-      fetchTextPartition(apiUrl, _))
+  /** One endpoint: the (user, editcount) and (revid, text) frames. */
+  private def singleDims(df: DataFrame, apiUrl: String, user: Column,
+      revid: Column): (DataFrame, DataFrame) = {
+    val (u, t) = fetch(df, lit(""), user, revid, _ => Some(apiUrl))
+    (frame(df, u.map(r => (r._2, r._3)), Encoders.tuple(Encoders.STRING, Encoders.scalaLong),
+      "user", "editcount"),
+      frame(df, t.map(r => (r._2, r._3)), Encoders.tuple(Encoders.scalaLong, Encoders.STRING),
+        "revid", "text"))
+  }
+
+  /** Distinct users of `df.user` -> local (user, editcount) dim frame. */
+  def editCountDim(df: DataFrame, apiUrl: String): DataFrame =
+    singleDims(df, apiUrl, col("user"), lit(null))._1
+
+  /** Distinct revision ids -> local (revid, text) dim frame. */
+  def textDim(df: DataFrame, apiUrl: String): DataFrame =
+    singleDims(df, apiUrl, lit(null), col("revision.new"))._2
+
+  /** Both dims of one batch from one key pass over its (user, revid)
+    * pairs and one fetch round: (user, editcount), (revid, text).
+    */
+  def dims(df: DataFrame, apiUrl: String): (DataFrame, DataFrame) =
+    singleDims(df, apiUrl, col("user"), col("revision.new"))
 
   // ---- Per-site routing ---------------------------------------------
   // The reference builds one API session per configured site and routes
   // each event to its own wiki's endpoint (`filter_.py:57`,
-  // `scanner.py:128` `apis[change['server_name']]`). Same here: the
-  // batch's distinct (server_name, key) pairs are grouped by site inside
-  // each bounded chunk (never a whole-partition materialization; a
-  // mixed-site chunk can yield sub-[[UsersPerRequest]] requests per
-  // site, the bounded-memory tradeoff) and fetched against that site's
+  // `scanner.py:128` `apis[change['server_name']]`). Same here: the key
+  // pass carries server_name, each site's keys go to that site's
   // endpoint; the LRU caches are already endpoint-keyed, so sites never
   // evict each other. A site absent from `apis` contributes no rows —
   // its events surface as NULL enrichment and take the race /
@@ -182,36 +219,18 @@ object LiveEnrichment {
   // streamfilter guarantees server_name ∈ sites; here it degrades
   // instead of failing).
 
-  private def bySite[K, R](apis: Map[String, String], rows: Iterator[(String, K)])(
-      fetch: (String, Iterator[K]) => Iterator[R]): Iterator[(String, R)] =
-    rows.grouped(FetchChunk).flatMap(_.groupBy(_._1).iterator.flatMap {
-      case (site, siteRows) =>
-        apis.get(site).iterator.flatMap(url =>
-          fetch(url, siteRows.iterator.map(_._2)).map(site -> _))
-    })
-
-  /** Distinct (server_name, user) -> (server_name, user, editcount) dim;
-    * [[graft.streaming.RcStreaming.pipeline]] joins it on BOTH keys (the
-    * same username can exist on every wiki with different counts).
-    */
-  def editCountDimBySite(df: DataFrame, apis: Map[String, String],
-      partitions: Int = 4): DataFrame =
-    dim(df, Seq(col("server_name").cast("string"), col("user").cast("string")), partitions,
-      Encoders.tuple(Encoders.STRING, Encoders.STRING),
-      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong),
-      "server_name", "user", "editcount")(
-      bySite(apis, _)(fetchEditCountsPartition).map { case (s, (u, ec)) => (s, u, ec) })
-
-  /** Distinct (server_name, revid) -> (server_name, revid, text) dim —
-    * revision ids are only unique within one wiki, so the site key must
-    * ride along or a cross-site id collision hands one event another
+  /** Per-site [[dims]]: (server_name, user, editcount) and
+    * (server_name, revid, text). [[graft.streaming.RcStreaming.pipeline]]
+    * joins them on both keys: the same username can exist on every wiki
+    * with different counts, and revision ids are only unique within one
+    * wiki, so a cross-site id collision must not hand one event another
     * wiki's text.
     */
-  def textDimBySite(df: DataFrame, apis: Map[String, String],
-      partitions: Int = 4): DataFrame =
-    dim(df, Seq(col("server_name").cast("string"), col("revision.new").cast("long")),
-      partitions, Encoders.tuple(Encoders.STRING, Encoders.scalaLong),
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING),
-      "server_name", "revid", "text")(
-      bySite(apis, _)(fetchTextPartition).map { case (s, (rev, t)) => (s, rev, t) })
+  def dimsBySite(df: DataFrame, apis: Map[String, String]): (DataFrame, DataFrame) = {
+    val (u, t) = fetch(df, col("server_name"), col("user"), col("revision.new"), apis.get)
+    (frame(df, u, Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong),
+      "server_name", "user", "editcount"),
+      frame(df, t, Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING),
+        "server_name", "revid", "text"))
+  }
 }

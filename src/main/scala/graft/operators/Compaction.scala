@@ -70,7 +70,8 @@ object Compaction {
     * readability, not identity (old and new data can both pass it), so
     * both renames are checked: if (2) fails nothing moved; if (3) fails
     * the original is renamed back in-process instead of waiting for
-    * [[recover]].
+    * [[recover]], and `staged` is deleted once that restore succeeded
+    * (kept when it failed: it may be the only copy that reads).
     */
   private[operators] def swapStaged(spark: SparkSession, live: String, staged: String)(
       verified: => Boolean): Unit = {
@@ -82,6 +83,7 @@ object Compaction {
       s"could not move $live aside — swap aborted, live data untouched")
     if (!fs.rename(new Path(staged), path)) {
       val restored = fs.rename(bak, path)
+      if (restored) fs.delete(new Path(staged), true)
       throw new IllegalStateException(
         s"could not move staged $staged into place for $live — " +
           (if (restored) "original restored" else s"RESTORE FAILED, original at $bak"))
@@ -91,14 +93,18 @@ object Compaction {
   }
 
   /** Restore after a crash mid-swap: if `dir` is missing but `dir__old`
-    * exists, the original data is intact — move it back. Returns true if
-    * a recovery was performed.
+    * exists, the original data is intact — move it back. A leftover
+    * `dir__compacting` / `dir__retraining` stage is deleted either way
+    * (one writer per directory: no swap of `dir` is in flight when its
+    * reader or next writer calls this). Returns true if the original
+    * was restored.
     */
   def recover(spark: SparkSession, dir: String): Boolean = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bak = new Path(dir + "__old")
-    if (!fs.exists(path) && fs.exists(bak)) { fs.rename(bak, path); true }
-    else false
+    val restored = !fs.exists(path) && fs.exists(bak) && fs.rename(bak, path)
+    Seq("__compacting", "__retraining").foreach(s => fs.delete(new Path(dir + s), true))
+    restored
   }
 }

@@ -432,9 +432,7 @@ object Hnsw {
     recoverIndex(spark, dir)
     if (!fs.exists(new Path(s"$dir/delta"))) return false // nothing to fold
     val stageE = s"$dir/edges__compacting"
-    val stageN = s"$dir/nodes__compacting"
-    fs.delete(new Path(stageE), true)
-    fs.delete(new Path(stageN), true)
+    val stageN = s"$dir/nodes__compacting" // recoverIndex dropped stale stages
     val liveNodeCount = spark.read.parquet(s"$dir/nodes").count()
     for (level <- 0 to MaxLevel) {
       val nodes = spark.read.parquet(s"$dir/nodes")
@@ -512,16 +510,11 @@ object Hnsw {
   }
 
   /** Heal a crashed [[compactIndex]] swap: restore any `__old` backup
-    * whose live dir vanished (the Compaction.recover contract) and
-    * drop orphaned staging dirs. Returns true if anything moved.
+    * whose live dir vanished and drop orphaned staging dirs (the
+    * Compaction.recover contract). Returns true if anything moved.
     */
-  def recoverIndex(spark: SparkSession, dir: String): Boolean = {
-    val fs = hadoopFs(spark, dir)
-    val healed = Seq(s"$dir/edges", s"$dir/nodes").map(Compaction.recover(spark, _))
-    Seq(s"$dir/edges__compacting", s"$dir/nodes__compacting")
-      .foreach(s => fs.delete(new Path(s), true))
-    healed.contains(true)
-  }
+  def recoverIndex(spark: SparkSession, dir: String): Boolean =
+    Seq(s"$dir/edges", s"$dir/nodes").map(Compaction.recover(spark, _)).contains(true)
 
   private def d2(q: Array[Double], nq: Double, v: Seq[Double], nv: Double): Double = {
     var dot = 0.0; var i = 0

@@ -6,13 +6,13 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -43,10 +43,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scan bookkeeping is incremental: the driver keeps (bytesScanned,
   * eventsSeen) per stream and `latestOffset` reads only bytes appended
-  * since the previous trigger — O(new data), not O(file). A sampled
+  * since the previous trigger — O(new data), not O(file). An
   * (eventIndex -> byteOffset) index rides into each partition so readers
-  * seek near their range instead of streaming the whole prefix; all
-  * counters are Long (no Int truncation at any offset).
+  * seek to their range instead of streaming the whole prefix: a
+  * micro-batch seeks to its exact start byte (recorded when that offset
+  * was reported), a backfill or a restarted stream to the nearest stride
+  * sample; all counters are Long (no Int truncation at any offset).
+  *
+  * With `filter.<field>` options set, a payload that is not valid JSON
+  * is dropped at the source and counted in the scan node's
+  * `unparseableDropped` SQL metric, on both read paths.
   *
   * Transport is pluggable: this build reads a local SSE-framed file
   * (`option("path", ...)`) because the environment has no egress; a live
@@ -163,13 +169,15 @@ object SseSource {
     * applies the source-registered `filter.<field>` predicates on the
     * raw payload (dropped events never become Spark rows), and emits
     * only the pruned columns — an `offset`-only projection allocates no
-    * payload UTF8Strings.
+    * payload UTF8Strings. Reports the payloads it dropped as unparseable
+    * through [[UnparseableDropped]].
     */
   def reader(p: SsePartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val frames = new FrameIterator(p.path, p.sampleByte)
       private var idx = p.sampleEvent - 1 // raw index of the current frame
       private var cur: String = _
+      private var unparseable = 0L
       private lazy val mapper = new ObjectMapper
       // 0 = value, 1 = offset, in the pruned schema's order
       private val proj: Array[Int] =
@@ -189,7 +197,7 @@ object SseSource {
               v != null && allowed.contains(
                 if (v.isTextual) v.asText() else v.toString)
             }
-          } catch { case _: Exception => false } // unparseable: drop at source
+          } catch { case _: Exception => unparseable += 1; false } // drop at source
         }
 
       override def next(): Boolean = {
@@ -209,36 +217,64 @@ object SseSource {
         }
         new GenericInternalRow(vals)
       }
+      override def currentMetricsValues(): Array[CustomTaskMetric] =
+        Array(UnparseableDropped.value(unparseable))
       override def close(): Unit = frames.close()
     }
+}
+
+/** DSv2 sum metric: payloads the partition readers dropped because a
+  * `filter.<field>` option could not parse them. Spark instantiates it
+  * by class name to aggregate the task values, hence the no-arg class.
+  */
+final class UnparseableDropped extends CustomSumMetric {
+  override def name(): String = UnparseableDropped.Name
+  override def description(): String = "SSE payloads dropped as unparseable"
+}
+
+object UnparseableDropped {
+  val Name = "unparseableDropped"
+  def value(n: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = Name
+    override def value(): Long = n
+  }
 }
 
 /** Driver-side incremental scan state: one instance per stream, updated
   * once per trigger. `refresh()` reads only the bytes appended since the
   * previous call. Every `sampleStride` events it records the event's
-  * byte offset so partition readers can seek instead of re-streaming the
-  * prefix. Exposes `bytesRead` so tests can prove the no-rescan claim.
+  * byte offset, and each time it reports a larger count N it records the
+  * byte where event N starts, so a micro-batch starting at a reported
+  * offset seeks to it exactly. `commit(end)` drops the exact points
+  * below `end`: the index holds O(file / sampleStride + uncommitted
+  * batches) entries. Exposes `bytesRead` so tests can prove the
+  * no-rescan claim.
   */
 final class SseScanState(path: String, sampleStride: Long = 4096L) {
   private var bytesScanned = 0L
   private var eventsSeen = 0L
   private var totalBytesRead = 0L
-  // (eventIndex, byteOffsetOfItsLine); invariant: sorted by eventIndex.
-  private val samples = ArrayBuffer[(Long, Long)]((0L, 0L))
+  // eventIndex -> byte offset a reader can seek to for that event
+  private val samples = new util.TreeMap[Long, Long](util.Map.of(0L, 0L))
+  private val points = new util.TreeMap[Long, Long]()
 
   def refresh(): Long = synchronized {
     if (Files.size(Paths.get(path)) > bytesScanned) {
       val scanFrom = bytesScanned
+      val seenFrom = eventsSeen
       val it = new SseSource.FrameIterator(path, scanFrom)
       try {
         while (it.hasNext) {
           val (_, lineStart, nextPos) = it.next()
-          if (eventsSeen % sampleStride == 0L) samples += ((eventsSeen, lineStart))
+          if (eventsSeen % sampleStride == 0L) samples.put(eventsSeen, lineStart)
           eventsSeen += 1
           bytesScanned = nextPos
         }
       } finally it.close()
       totalBytesRead += bytesScanned - scanFrom
+      // every counted data line ends before bytesScanned, so the next
+      // data line from there on is event `eventsSeen`
+      if (eventsSeen > seenFrom) points.put(eventsSeen, bytesScanned)
       // Tail bytes after the last complete data line (comments, event:/
       // id: lines, or a partially flushed data line) are NOT consumed:
       // they re-scan next trigger, so a frame split across writes is
@@ -249,11 +285,18 @@ final class SseScanState(path: String, sampleStride: Long = 4096L) {
 
   def bytesRead: Long = synchronized(totalBytesRead)
 
-  /** Best sampled (eventIndex, byteOffset) at or below `eventIdx`. */
+  /** Entries held by the seek index (stride samples + exact points). */
+  def indexSize: Int = synchronized(samples.size + points.size)
+
+  /** Drop the exact points below `end`: no batch starts there again. */
+  def commit(end: Long): Unit = synchronized(points.headMap(end).clear())
+
+  /** Best recorded (eventIndex, byteOffset) at or below `eventIdx`. */
   def floorSample(eventIdx: Long): (Long, Long) = synchronized {
-    var best = samples.head
-    samples.foreach { s => if (s._1 <= eventIdx && s._1 >= best._1) best = s }
-    best
+    val s = samples.floorEntry(eventIdx)
+    val p = points.floorEntry(eventIdx)
+    val best = if (p != null && p.getKey > s.getKey) p else s
+    (best.getKey, best.getValue)
   }
 }
 
@@ -327,6 +370,8 @@ final class SseScanBuilder(path: String, sourceFilters: Map[String, Set[String]]
 final class SseScan(path: String, sourceFilters: Map[String, Set[String]],
     lo: Long, hi: Long, required: StructType, maxPartitions: Int) extends Scan {
   override def readSchema(): StructType = required
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new UnparseableDropped)
   override def description(): String =
     s"sse($path) events=[$lo, ${if (hi == Long.MaxValue) "end" else hi})"
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -372,14 +417,18 @@ final case class SseOffset(n: Long) extends Offset {
   override def json(): String = n.toString
 }
 
+/** Micro-batch read: one partition per batch, seeking to the exact byte
+  * of its start offset when this stream reported it (a restarted stream
+  * falls back to the stride samples for the checkpointed start).
+  */
 final class SseMicroBatchStream(path: String, filters: Map[String, Set[String]])
     extends MicroBatchStream {
-  private val state = new SseScanState(path)
+  private[graft] val state = new SseScanState(path)
 
   override def initialOffset(): Offset = SseOffset(0L)
   override def latestOffset(): Offset = SseOffset(state.refresh())
   override def deserializeOffset(json: String): Offset = SseOffset(json.trim.toLong)
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit = state.commit(end.asInstanceOf[SseOffset].n)
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

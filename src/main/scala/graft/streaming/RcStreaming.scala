@@ -173,11 +173,15 @@ object RcStreaming {
     if (emitDeadLetter) out else out.drop("dead_letter")
   }
 
-  /** Live-enrichment twin of [[pipeline]]: the editcount/text dimension
-    * frames are fetched per micro-batch from the (stub or real) API by
-    * the executors — `LiveEnrichment` batches users 50/request and LRU-
-    * caches across batches — then the IDENTICAL join/gate/dedup plan
-    * runs. Call from foreachBatch (the standard Structured Streaming
+  /** Live-enrichment twin of [[pipeline]] for one micro-batch: one key
+    * pass collects the batch's distinct (user, revid) keys, the driver
+    * fetches them from the (stub or real) API in one bounded round —
+    * `LiveEnrichment` batches users 50/request and LRU-caches across
+    * batches — and the IDENTICAL join/gate/dedup plan runs over the
+    * local dims. The batch is coalesced to one partition first (the SSE
+    * source plans one input partition per micro-batch, so no scan
+    * parallelism is lost): the key pass and D1's window then need no
+    * shuffle. Call from foreachBatch (the standard Structured Streaming
     * pattern for per-batch external lookups); failed lookups surface as
     * NULL enrichment and take the existing race/dead-letter route.
     * Within-batch dedup only in this mode — cross-batch repeat state
@@ -185,17 +189,9 @@ object RcStreaming {
     * the verbose stateful op.
     */
   def livePipeline(batch: DataFrame, apiUrl: String, spec: FilterSpec,
-      emitDeadLetter: Boolean = false): DataFrame = {
-    // Streamfilter FIRST (the reference registers filters on the stream
-    // client before any API call): the dims are built from the events
-    // that survive F1, not the raw multiplexed batch — otherwise a
-    // one-wiki filter would still pay API quota for every wiki.
-    val surviving = RcOps.streamFilter(batch, spec.effectiveStreamfilter)
-    pipeline(batch,
-      graft.enrichment.LiveEnrichment.editCountDim(surviving, apiUrl),
-      graft.enrichment.LiveEnrichment.textDim(surviving, apiUrl),
-      spec, emitDeadLetter)
-  }
+      emitDeadLetter: Boolean = false): DataFrame =
+    live(batch, spec, emitDeadLetter)(
+      graft.enrichment.LiveEnrichment.dims(_, apiUrl))
 
   /** Multi-site twin of [[livePipeline]]: each event's lookups go to its
     * OWN wiki's API, routed by `server_name` (the reference builds a
@@ -207,12 +203,19 @@ object RcStreaming {
     * dead-letter route (skip-and-continue, never fail).
     */
   def livePipelineBySite(batch: DataFrame, apis: Map[String, String],
-      spec: FilterSpec, emitDeadLetter: Boolean = false): DataFrame = {
-    val surviving = RcOps.streamFilter(batch, spec.effectiveStreamfilter)
-    pipeline(batch,
-      graft.enrichment.LiveEnrichment.editCountDimBySite(surviving, apis),
-      graft.enrichment.LiveEnrichment.textDimBySite(surviving, apis),
-      spec, emitDeadLetter)
+      spec: FilterSpec, emitDeadLetter: Boolean = false): DataFrame =
+    live(batch, spec, emitDeadLetter)(
+      graft.enrichment.LiveEnrichment.dimsBySite(_, apis))
+
+  private def live(batch: DataFrame, spec: FilterSpec, emitDeadLetter: Boolean)(
+      dims: DataFrame => (DataFrame, DataFrame)): DataFrame = {
+    val one = batch.coalesce(1)
+    // Streamfilter FIRST (the reference registers filters on the stream
+    // client before any API call): the dims are built from the events
+    // that survive F1, not the raw multiplexed batch — otherwise a
+    // one-wiki filter would still pay API quota for every wiki.
+    val (users, revisions) = dims(RcOps.streamFilter(one, spec.effectiveStreamfilter))
+    pipeline(one, users, revisions, spec, emitDeadLetter)
   }
 
   // ---- Verbose mode (-v): every event with its skip reason ------------

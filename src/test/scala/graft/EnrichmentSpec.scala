@@ -27,8 +27,7 @@ class EnrichmentSpec extends SparkSpec {
     val users = (1 to 120).map(i => s"batchuser$i")
     val srv = new StubApiServer(users.map(_ -> 7L).toMap, Map.empty)
     try {
-      val dim = LiveEnrichment.editCountDim(
-        users.toDF("user"), srv.url, partitions = 1)
+      val dim = LiveEnrichment.editCountDim(users.toDF("user"), srv.url)
       val got = dim.as[(String, Long)].collect().toMap
       assert(got.size === 120 && got.values.forall(_ === 7L))
       assert(srv.requests.get() === 3L, // ceil(120/50), NOT 120
@@ -40,9 +39,9 @@ class EnrichmentSpec extends SparkSpec {
     val users = (1 to 20).map(i => s"cacheuser$i")
     val srv = new StubApiServer(users.map(_ -> 3L).toMap, Map.empty)
     try {
-      LiveEnrichment.editCountDim(users.toDF("user"), srv.url, partitions = 1).count()
+      LiveEnrichment.editCountDim(users.toDF("user"), srv.url).count()
       val after1 = srv.requests.get()
-      val again = LiveEnrichment.editCountDim(users.toDF("user"), srv.url, partitions = 1)
+      val again = LiveEnrichment.editCountDim(users.toDF("user"), srv.url)
       assert(again.count() === 20)
       assert(srv.requests.get() === after1, "second batch must be served from cache")
     } finally srv.close()
@@ -79,9 +78,7 @@ class EnrichmentSpec extends SparkSpec {
 
   test("repeat dedup with dead letters fetches each enrichment key once") {
     val inDir = Files.createTempDirectory("liveonce").toString
-    // One user (the editcount dim spreads its users over 4 partitions, so
-    // only a single user keeps its request count at ceil(users / 50)),
-    // three titles edited twice each, one deleted revision (race).
+    // One user, three titles edited twice each, one deleted revision (race).
     val events = Seq(
       changeJson(31, "User:P", "onceuser", 9301),
       changeJson(32, "User:P", "onceuser", 9302), // repeat of a flagged title
@@ -103,15 +100,16 @@ class EnrichmentSpec extends SparkSpec {
         r.getAs[Boolean]("dead_letter"))).sortBy(_._1).toSeq
 
       object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-      import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec}
+      import org.apache.spark.sql.execution.LocalTableScanExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       val plan = live.queryExecution.executedPlan
-      // each dim's fetch is one MapPartitions over its distinct keys: the
-      // users dim reads strings, the text dim revision ids
-      val fetches = plans.collectWithSubqueries(plan) { case m: MapPartitionsExec =>
-        m.child.collectFirst { case d: DeserializeToObjectExec =>
-          d.child.output.map(_.dataType.simpleString).mkString(",") }
-      }
-      assert(fetches.sortBy(_.toString) === Seq(Some("bigint"), Some("string")), plan.toString)
+      // both dims are local relations built from the driver's fetches
+      val dims = plans.collectWithSubqueries(plan) { case l: LocalTableScanExec =>
+        l.output.map(_.name).mkString(",") }
+      assert(dims.sorted === Seq("revid,text", "user,editcount"), plan.toString)
+      // one partition end to end: neither D1's window nor anything else shuffles
+      assert(plans.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+        plan.toString)
       assert(srv.requests.get() === 6L + 1L, // 6 distinct revids + ceil(1 user / 50)
         s"saw ${srv.requests.get()} requests")
 
@@ -124,6 +122,86 @@ class EnrichmentSpec extends SparkSpec {
       assert(l === Seq((31L, "userbox", false), (33L, "userbox", false),
         (35L, "", true), (36L, "userbox", false)))
     } finally srv.close()
+  }
+
+  test("a batch's users share one list=users request, each revision one parse") {
+    val inDir = Files.createTempDirectory("liveround").toString
+    // 4 users over 5 events and 5 revisions, in 3 input partitions
+    Files.writeString(java.nio.file.Path.of(s"$inDir/b.json"), (1 to 5).map(i =>
+      changeJson(50L + i, s"User:F$i", s"rounduser${i % 4}", 9500L + i)).mkString("\n"))
+    val srv = new StubApiServer((0 to 3).map(i => s"rounduser$i" -> 1L).toMap,
+      (9501L to 9505L).map(_ -> "userbox").toMap)
+    try {
+      val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), None,
+        skipRepeats = false, regexes = Seq("userbox"))
+      val batch = spark.read.schema(ChangeSchema.change).json(inDir).repartition(3)
+      val live = RcStreaming.livePipeline(batch, srv.url, spec, emitDeadLetter = true)
+      assert(live.count() === 5L)
+      assert(srv.requests.get() === 1L + 5L, s"saw ${srv.requests.get()} requests")
+    } finally srv.close()
+  }
+
+  test("property: livePipeline == pipeline with the same maps as static dims") {
+    import org.scalacheck.{Gen, Prop, Test => ScTest}
+    val sites = Seq("aa.example.org", "bb.example.org", "cc.example.org") // cc: no endpoint
+    // (title, user, revid, site) indices: titles repeat, user 3 has no edit
+    // count, revisions 5 and 6 have no text
+    val genEvent = for {
+      t <- Gen.choose(0, 3); u <- Gen.choose(0, 3)
+      r <- Gen.choose(0, 6); s <- Gen.choose(0, 2)
+    } yield (t, u, r, s)
+    val genCase = for {
+      n <- Gen.choose(1, 14)
+      events <- Gen.listOfN(n, genEvent)
+      parts <- Gen.choose(1, 4)
+      empty <- Gen.oneOf("none", "users", "texts") // a dim with no rows
+      perSite <- Gen.oneOf(false, true)
+      skipRepeats <- Gen.oneOf(false, true)
+      emit <- Gen.oneOf(false, true)
+      maxEdits <- Gen.option(Gen.choose(1L, 6L))
+    } yield (events, parts, empty, perSite, skipRepeats, emit, maxEdits)
+    val round = new java.util.concurrent.atomic.AtomicInteger(0)
+    val prop = Prop.forAll(genCase) {
+      case (events, parts, empty, perSite, skipRepeats, emit, maxEdits) =>
+        // fresh keys per case: a stub's port (and so its LRU) can be reused
+        val k = round.incrementAndGet()
+        def user(u: Int) = s"prop${k}u$u"
+        def rev(r: Int) = 100000L * k + r
+        def maps(site: Int) = (
+          if (empty == "users") Map.empty[String, Long]
+          else (0 to 2).map(u => user(u) -> (u + 2L * site)).toMap,
+          if (empty == "texts") Map.empty[Long, String]
+          else (0 to 4).map(r => rev(r) ->
+            (if ((r + site) % 2 == 0) s"userbox $r" else "plain")).toMap)
+        val json = events.zipWithIndex.map { case ((t, u, r, s), i) =>
+          changeJson(i + 1L, s"User:P$t", user(u), rev(r))
+            .replace("en.wikipedia.org", if (perSite) sites(s) else "en.wikipedia.org")
+        }
+        val batch = spark.read.schema(ChangeSchema.change)
+          .json(spark.createDataset(json).repartition(parts))
+        val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), maxEdits,
+          skipRepeats = skipRepeats, regexes = Seq("userbox"))
+        val servers = (0 to 1).map { site => val (e, t) = maps(site); new StubApiServer(e, t) }
+        try {
+          val (live, users, revisions) =
+            if (perSite) (
+              RcStreaming.livePipelineBySite(batch,
+                Map(sites(0) -> servers(0).url, sites(1) -> servers(1).url), spec, emit),
+              (0 to 1).flatMap(s => maps(s)._1.map { case (u, n) => (sites(s), u, n) })
+                .toDF("server_name", "user", "editcount"),
+              (0 to 1).flatMap(s => maps(s)._2.map { case (r, t) => (sites(s), r, t) })
+                .toDF("server_name", "revid", "text"))
+            else (
+              RcStreaming.livePipeline(batch, servers(0).url, spec, emit),
+              maps(0)._1.toSeq.toDF("user", "editcount"),
+              maps(0)._2.toSeq.toDF("revid", "text"))
+          val static0 = RcStreaming.pipeline(batch, users, revisions, spec, emit)
+          def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+          rows(live) == rows(static0)
+        } finally servers.foreach(_.close())
+    }
+    val r = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(16), prop)
+    assert(r.passed, r.status.toString)
   }
 
   test("an API that accepts and never answers dead-letters as race, bounded in time") {

@@ -72,6 +72,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(err.getMessage.contains("t__compacting") &&
       err.getMessage.contains("original restored"), err.getMessage)
     assert(!new File(local + "__old").exists)
+    assert(!new File(local + "__compacting").exists)
     assert(spark.read.parquet(local).orderBy("doc_id").collect().sameElements(before))
   }
 
@@ -88,5 +89,14 @@ class MaintenanceSpec extends SparkSpec {
     assert(Compaction.recover(spark, dir))
     assert(spark.read.parquet(dir).count() === 10)
     assert(!Compaction.recover(spark, dir)) // no-op when healthy
+  }
+
+  test("recover drops a stale staging directory next to a healthy one") {
+    val dir = Files.createTempDirectory("stale").toString + "/t"
+    Tables.documents(spark, sf0001).limit(10).write.parquet(dir)
+    Tables.documents(spark, sf0001).limit(3).write.parquet(dir + "__retraining")
+    assert(!Compaction.recover(spark, dir)) // nothing to restore
+    assert(!new File(dir + "__retraining").exists)
+    assert(spark.read.parquet(dir).count() === 10)
   }
 }

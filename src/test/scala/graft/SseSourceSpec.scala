@@ -164,4 +164,69 @@ class SseSourceSpec extends SparkSpec {
       assert(payload.contains("\"id\":31")) // frame #31 = raw index 30
     } finally it.close()
   }
+
+  test("a micro-batch seeks to the exact byte of its start offset") {
+    import graft.sources.{SseMicroBatchStream, SseOffset, SsePartition, SseSource}
+    val f = Files.createTempFile("events6", ".sse")
+    Files.writeString(f, (1L to 50L).map(sseFrame).mkString("\n"))
+    val stream = new SseMicroBatchStream(f.toString, Map.empty)
+    assert(stream.latestOffset() === SseOffset(50L))
+    Files.writeString(f, "\n" + (51L to 60L).map(sseFrame).mkString("\n"),
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(stream.latestOffset() === SseOffset(60L))
+    val Array(p: SsePartition) = stream.planInputPartitions(SseOffset(50L), SseOffset(60L))
+    // no stride sample lies near event 50: only the recorded point does
+    assert(p.sampleEvent === 50L)
+    val it = new SseSource.FrameIterator(f.toString, p.sampleByte)
+    try assert(it.next()._1.contains("\"id\":51")) // frame #51 = raw index 50
+    finally it.close()
+  }
+
+  test("committed batches drop their seek points: the index stops growing") {
+    import graft.sources.{SseMicroBatchStream, SseOffset}
+    val f = Files.createTempFile("events7", ".sse")
+    Files.writeString(f, "")
+    val stream = new SseMicroBatchStream(f.toString, Map.empty)
+    var start = stream.latestOffset()
+    val sizes = (1 to 30).map { i =>
+      Files.writeString(f, sseFrame(i) + "\n", java.nio.file.StandardOpenOption.APPEND)
+      val end = stream.latestOffset()
+      stream.planInputPartitions(start, end)
+      stream.commit(end)
+      start = end
+      stream.state.indexSize
+    }
+    // one stride sample (event 0) + the point of the next batch's start
+    assert(sizes.forall(_ == 2), sizes.toString)
+  }
+
+  test("unparseable payloads dropped by a source filter are counted") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanExecBase
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    object plans extends AdaptiveSparkPlanHelper
+    def dropped(plan: SparkPlan): Long = plans.collect(plan) {
+      case s: DataSourceV2ScanExecBase => s.metrics("unparseableDropped").value
+    }.sum
+    val f = Files.createTempFile("events8", ".sse")
+    Files.writeString(f, Seq("""{"type":"edit","id":1}""", """{"type":"edit",""",
+      """{"type":"log","id":3}""", """{"type":"edit","id":4}""")
+      .map(j => s"data: $j\n").mkString("\n"))
+    // batch path
+    val batch = spark.read.format("sse").option("path", f.toString)
+      .option("filter.type", "edit").load()
+    assert(batch.collect().map(_.getLong(1)).toSeq === Seq(0L, 3L))
+    assert(dropped(batch.queryExecution.executedPlan) === 1L)
+    // micro-batch path: the one batch's scan node
+    val q = spark.readStream.format("sse").option("path", f.toString)
+      .option("filter.type", "edit").load()
+      .writeStream.format("memory").queryName("sse_t8")
+      .option("checkpointLocation", Files.createTempDirectory("sseout8").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    assert(spark.table("sse_t8").count() === 2L)
+    val last = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+    assert(dropped(last.executedPlan) === 1L)
+  }
 }
