@@ -13,40 +13,40 @@ import scala.concurrent.duration.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Live per-event enrichment (reference `scanner.py:178-218`: one
   * `get_editcount` + one `get_text` HTTP round trip per event, serial).
   *
   * Spark-first reshaping: instead of 2 RTTs inside the per-row hot path,
-  * one pass collects a micro-batch's DISTINCT keys to the driver, which
-  * fetches them in one bounded round of requests — usernames batched 50
-  * per request (the MediaWiki `list=users` API is natively multi-user;
-  * the reference pays one request per event), revisions one per request
-  * on a keep-alive client, at most [[MaxInFlight]] requests at once —
-  * and the replies become small local dimension frames for the SAME
-  * broadcast joins the static pipeline uses (the broadcast collects
-  * every dim row on the driver anyway). The network cost is
-  * O(distinct keys per batch), not O(events), and the scan/filter/join
-  * plan is the static one.
+  * the driver takes a micro-batch's F1 survivors (the batch's one read
+  * of the source) and fetches their DISTINCT keys in one bounded round
+  * of requests — usernames batched 50 per request (the MediaWiki
+  * `list=users` API is natively multi-user; the reference pays one
+  * request per event), revisions one per request on a keep-alive
+  * client, at most [[MaxInFlight]] requests at once — then attaches
+  * `editcount` and `text` to each row itself. The network cost is
+  * O(distinct keys per batch), not O(events), and no reply goes back
+  * through a broadcast: the driver already holds both sides.
   *
-  * A per-JVM LRU cache short-circuits keys seen in recent batches — the
-  * streaming analog of the reference process's implicit "same user
-  * edits twice" locality, made explicit and bounded.
+  * A per-JVM LRU cache short-circuits revision texts seen in recent
+  * batches (a revision is immutable). Edit counts are fetched every
+  * batch: a count changes with every edit, and F2 (`max_edits`) must
+  * gate on the current one, as the reference's per-event lookup does.
   *
   * Failure semantics: a key missing from a response, an unparseable
-  * body, or a failed request yields NO row for that key; the downstream
-  * left join leaves the event's enrichment NULL and the existing
-  * race-skip / dead-letter routing applies (`QueryRaceCondition`,
-  * `scanner.py:193-196,215-218` — skip-and-continue, never fail).
+  * body, or a failed request yields NO value for that key; the event's
+  * enrichment stays NULL and the existing race-skip / dead-letter
+  * routing applies (`QueryRaceCondition`, `scanner.py:193-196,215-218`
+  * — skip-and-continue, never fail).
   */
 object LiveEnrichment {
 
   /** Users per `list=users` request: the MediaWiki API's own limit. */
   private val UsersPerRequest = 50
 
-  /** Entries per (endpoint, kind) LRU. */
+  /** Entries per endpoint's revision-text LRU. */
   private val CacheSize = 10000
 
   /** Requests in flight at once across the JVM: the polite-client bound
@@ -54,15 +54,15 @@ object LiveEnrichment {
     */
   private val MaxInFlight = 4
 
-  /** Bounded per-JVM LRU (access-order LinkedHashMap), one per
-    * (endpoint, kind) so unrelated streams don't evict each other.
+  /** Bounded per-JVM LRU of revision texts (access-order LinkedHashMap),
+    * one per endpoint so unrelated streams don't evict each other.
     */
-  private val caches = TrieMap.empty[String, java.util.LinkedHashMap[String, String]]
-  private def cache(key: String): java.util.LinkedHashMap[String, String] =
-    caches.getOrElseUpdate(key,
-      new java.util.LinkedHashMap[String, String](CacheSize, 0.75f, true) {
+  private val caches = TrieMap.empty[String, java.util.LinkedHashMap[Long, String]]
+  private def cache(apiUrl: String): java.util.LinkedHashMap[Long, String] =
+    caches.getOrElseUpdate(apiUrl,
+      new java.util.LinkedHashMap[Long, String](CacheSize, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[String, String]): Boolean = size() > CacheSize
+            e: java.util.Map.Entry[Long, String]): Boolean = size() > CacheSize
       })
 
   /** Connect and per-request timeout: an API that accepts and never
@@ -99,23 +99,13 @@ object LiveEnrichment {
   private def await[R](pending: Pending[R]): Seq[R] =
     pending.flatMap(Await.result(_, Duration.Inf))
 
-  /** Split `keys` into LRU hits and the misses `request` fetches. */
-  private def cached[K, R](lru: java.util.LinkedHashMap[String, String], keys: Seq[K])(
-      hit: (K, String) => R)(request: Seq[K] => Pending[R]): Pending[R] = {
-    // snapshot value AND membership in one synchronized read — a
-    // separate containsKey/get pair races with eviction by other threads
-    val snapshot = keys.map(k => k -> lru.synchronized(Option(lru.get(k.toString))))
-    Future.successful(snapshot.collect { case (k, Some(v)) => hit(k, v) }) +:
-      request(snapshot.collect { case (k, None) => k })
-  }
-
   /** `list=users&ususers=a|b|c` batch lookup (`scanner.py:199-218`),
-    * [[UsersPerRequest]] distinct users per request. Yields found (user,
-    * editcount) pairs; missing users produce no pair (race downstream).
+    * [[UsersPerRequest]] distinct users per request, never cached. Yields
+    * found (user, editcount) pairs; missing users produce no pair (race
+    * downstream).
     */
-  private def editCounts(apiUrl: String, users: Seq[String]): Pending[(String, Long)] = {
-    val lru = cache(s"$apiUrl#editcount")
-    cached(lru, users)((u, v) => u -> v.toLong)(_.grouped(UsersPerRequest).map { group =>
+  private def editCounts(apiUrl: String, users: Seq[String]): Pending[(String, Long)] =
+    users.grouped(UsersPerRequest).map { group =>
       Future {
         val url = s"$apiUrl?format=json&action=query&list=users&usprop=editcount" +
           s"&ususers=${enc(group.mkString("|"))}"
@@ -126,111 +116,87 @@ object LiveEnrichment {
               val u = arr.get(i)
               val name = u.path("name").asText(null)
               val ec = u.path("editcount")
-              if (name != null && ec.isNumber) {
-                lru.synchronized(lru.put(name, ec.asLong.toString))
-                Some(name -> ec.asLong)
-              } else None // user exists in reply but no editcount -> race
+              // user exists in reply but no editcount -> race
+              Option.when(name != null && ec.isNumber)(name -> ec.asLong)
             }
           } catch { case _: Exception => Nil }
         }
       }(pool)
-    }.toSeq)
-  }
+    }.toSeq
 
   /** `action=parse&oldid=N&prop=wikitext` per-revision lookup
-    * (`scanner.py:178-196`); one request per distinct revision,
-    * LRU-cached. Missing `parse.wikitext.*` = race (no row).
+    * (`scanner.py:178-196`); one request per distinct revision not in
+    * the LRU. Missing `parse.wikitext.*` = race (no pair).
     */
   private def texts(apiUrl: String, revids: Seq[Long]): Pending[(Long, String)] = {
-    val lru = cache(s"$apiUrl#text")
-    cached(lru, revids)((rev, t) => rev -> t)(_.map { rev =>
-      Future {
-        get(s"$apiUrl?format=json&action=parse&oldid=$rev&prop=wikitext").toSeq.flatMap { body =>
-          try {
-            val t = mapper.readTree(body).path("parse").path("wikitext").path("*")
-            if (t.isTextual) {
-              lru.synchronized(lru.put(rev.toString, t.asText))
-              Some(rev -> t.asText)
-            } else None
-          } catch { case _: Exception => None }
-        }
-      }(pool)
-    })
-  }
-
-  /** The one key pass and the one fetch round: the distinct non-null
-    * (`site`, `user`, `revid`) keys of `df` are collected to the driver,
-    * grouped by site, and every site's user and revision requests are
-    * issued together before any reply is awaited. A site that
-    * `endpoint` does not resolve fetches nothing: its events get NULL
-    * enrichment.
-    */
-  private def fetch(df: DataFrame, site: Column, user: Column, revid: Column,
-      endpoint: String => Option[String]): (Seq[(String, String, Long)], Seq[(String, Long, String)]) = {
-    val keys = df.select(site.cast("string"), user.cast("string"), revid.cast("long"))
-      .distinct().collect().filterNot(_.isNullAt(0))
-    val pending = keys.groupBy(_.getString(0)).toSeq.flatMap { case (s, rows) =>
-      endpoint(s).map { url =>
-        val users = rows.filterNot(_.isNullAt(1)).map(_.getString(1)).distinct.toSeq
-        val revids = rows.filterNot(_.isNullAt(2)).map(_.getLong(2)).distinct.toSeq
-        (s, editCounts(url, users), texts(url, revids))
+    val lru = cache(apiUrl)
+    // snapshot value AND membership in one synchronized read — a
+    // separate containsKey/get pair races with eviction by other threads
+    val snapshot = revids.map(rev => rev -> lru.synchronized(Option(lru.get(rev))))
+    Future.successful(snapshot.collect { case (rev, Some(t)) => rev -> t }) +:
+      snapshot.collect { case (rev, None) =>
+        Future {
+          get(s"$apiUrl?format=json&action=parse&oldid=$rev&prop=wikitext").toSeq.flatMap { body =>
+            try {
+              val t = mapper.readTree(body).path("parse").path("wikitext").path("*")
+              Option.when(t.isTextual) {
+                lru.synchronized(lru.put(rev, t.asText))
+                rev -> t.asText
+              }
+            } catch { case _: Exception => None }
+          }
+        }(pool)
       }
-    }
-    (pending.flatMap { case (s, u, _) => await(u).map { case (name, n) => (s, name, n) } },
-      pending.flatMap { case (s, _, t) => await(t).map { case (rev, text) => (s, rev, text) } })
   }
 
-  private def frame[T](df: DataFrame, rows: Seq[T], enc: Encoder[T], names: String*): DataFrame =
-    df.sparkSession.createDataset(rows)(enc).toDF(names: _*)
-
-  /** One endpoint: the (user, editcount) and (revid, text) frames. */
-  private def singleDims(df: DataFrame, apiUrl: String, user: Column,
-      revid: Column): (DataFrame, DataFrame) = {
-    val (u, t) = fetch(df, lit(""), user, revid, _ => Some(apiUrl))
-    (frame(df, u.map(r => (r._2, r._3)), Encoders.tuple(Encoders.STRING, Encoders.scalaLong),
-      "user", "editcount"),
-      frame(df, t.map(r => (r._2, r._3)), Encoders.tuple(Encoders.scalaLong, Encoders.STRING),
-        "revid", "text"))
-  }
+  /** Distinct non-null values of one key column of `df`. */
+  private def keys[K](df: DataFrame, key: Column): Seq[K] =
+    df.select(key).distinct().collect().toSeq.filterNot(_.isNullAt(0)).map(_.getAs[K](0))
 
   /** Distinct users of `df.user` -> local (user, editcount) dim frame. */
-  def editCountDim(df: DataFrame, apiUrl: String): DataFrame =
-    singleDims(df, apiUrl, col("user"), lit(null))._1
+  def editCountDim(df: DataFrame, apiUrl: String): DataFrame = {
+    val users = keys[String](df, col("user").cast("string"))
+    df.sparkSession.createDataset(await(editCounts(apiUrl, users)))(
+      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)).toDF("user", "editcount")
+  }
 
   /** Distinct revision ids -> local (revid, text) dim frame. */
-  def textDim(df: DataFrame, apiUrl: String): DataFrame =
-    singleDims(df, apiUrl, lit(null), col("revision.new"))._2
+  def textDim(df: DataFrame, apiUrl: String): DataFrame = {
+    val revids = keys[Long](df, col("revision.new").cast("long"))
+    df.sparkSession.createDataset(await(texts(apiUrl, revids)))(
+      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)).toDF("revid", "text")
+  }
 
-  /** Both dims of one batch from one key pass over its (user, revid)
-    * pairs and one fetch round: (user, editcount), (revid, text).
+  /** The one fetch round for a batch's F1 survivors (Change rows): each
+    * row's lookups go to `endpoint(server_name)` — the reference routes
+    * every event to its own wiki's API (`filter_.py:57`, `scanner.py:128`
+    * `apis[change['server_name']]`) — and every endpoint's user and
+    * revision requests are issued together before any reply is awaited.
+    * Returns each row with `editcount` (Long) and `text` (String)
+    * appended. Replies are keyed by endpoint: the same username can
+    * exist on every wiki with different counts, and revision ids are only
+    * unique within one wiki. A row whose lookup failed, or whose site
+    * `endpoint` does not resolve, gets NULL (the race / dead-letter
+    * route; the reference cannot reach the unrouted state, its
+    * streamfilter guarantees server_name ∈ sites, here it degrades
+    * instead of failing).
     */
-  def dims(df: DataFrame, apiUrl: String): (DataFrame, DataFrame) =
-    singleDims(df, apiUrl, col("user"), col("revision.new"))
-
-  // ---- Per-site routing ---------------------------------------------
-  // The reference builds one API session per configured site and routes
-  // each event to its own wiki's endpoint (`filter_.py:57`,
-  // `scanner.py:128` `apis[change['server_name']]`). Same here: the key
-  // pass carries server_name, each site's keys go to that site's
-  // endpoint; the LRU caches are already endpoint-keyed, so sites never
-  // evict each other. A site absent from `apis` contributes no rows —
-  // its events surface as NULL enrichment and take the race /
-  // dead-letter route (the reference cannot reach this state: its
-  // streamfilter guarantees server_name ∈ sites; here it degrades
-  // instead of failing).
-
-  /** Per-site [[dims]]: (server_name, user, editcount) and
-    * (server_name, revid, text). [[graft.streaming.RcStreaming.pipeline]]
-    * joins them on both keys: the same username can exist on every wiki
-    * with different counts, and revision ids are only unique within one
-    * wiki, so a cross-site id collision must not hand one event another
-    * wiki's text.
-    */
-  def dimsBySite(df: DataFrame, apis: Map[String, String]): (DataFrame, DataFrame) = {
-    val (u, t) = fetch(df, col("server_name"), col("user"), col("revision.new"), apis.get)
-    (frame(df, u, Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong),
-      "server_name", "user", "editcount"),
-      frame(df, t, Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.STRING),
-        "server_name", "revid", "text"))
+  def enrich(rows: Seq[Row], endpoint: String => Option[String]): Seq[Row] = {
+    val keyed = rows.map { r =>
+      val rev = r.getAs[Row]("revision")
+      (endpoint(r.getAs[String]("server_name")), Option(r.getAs[String]("user")),
+        Option(rev).filterNot(_.isNullAt(rev.fieldIndex("new"))).map(_.getAs[Long]("new")))
+    }
+    val pending = keyed.collect { case (Some(url), u, rev) => (url, u, rev) }.groupBy(_._1)
+      .toSeq.map { case (url, ks) =>
+        (url, editCounts(url, ks.flatMap(_._2).distinct), texts(url, ks.flatMap(_._3).distinct))
+      }
+    val counts = pending.flatMap { case (url, u, _) => await(u).map(p => (url, p._1) -> p._2) }.toMap
+    val found = pending.flatMap { case (url, _, t) => await(t).map(p => (url, p._1) -> p._2) }.toMap
+    rows.zip(keyed).map { case (r, (url, u, rev)) =>
+      def at[K, V](m: Map[(String, K), V], k: Option[K]): Any =
+        url.zip(k).flatMap(m.get).getOrElse(null)
+      Row.fromSeq(r.toSeq :+ at(counts, u) :+ at(found, rev))
+    }
   }
 }

@@ -14,10 +14,11 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * in-memory maps, with the same response shapes including the
   * missing-key bodies that make the real API raise QueryRaceCondition.
   * JDK-builtin HttpServer, no dependencies; used by EnrichmentSpec and
-  * drivable for demos.
+  * drivable for demos. `editCounts` is settable: a user's count moves
+  * with every edit, and the next lookup must see the new one.
   */
 final class StubApiServer(
-    editCounts: Map[String, Long],
+    @volatile var editCounts: Map[String, Long],
     texts: Map[Long, String]) extends AutoCloseable {
 
   val requests = new AtomicLong(0L)

@@ -4,6 +4,7 @@ import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's four sinks (`scanner.py:143-175,221-249`,
   * `flaglog.py:37-66`) as a foreachBatch fan-out. One upstream
@@ -27,7 +28,8 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
     * emitDeadLetter), those rows go to `$baseDir/dead_letter` and only
     * live rows reach K1-K4.
     *
-    * The frame is persisted and filled once, then coalesced to
+    * The frame is persisted (unless its caller already did; a caller's
+    * cache stays) and filled once, then coalesced to
     * ceil(cached bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
     * partitions — AQE's own sizing rule, which AQE does not apply to a
     * cached plan's output, so a micro-batch of a few hundred rows writes
@@ -162,19 +164,21 @@ final case class RcSinks(baseDir: String, logLevel: Int, filterName: String,
 }
 
 object RcSinks {
-  /** Persists `full`, fills its cache once, coalesces it to
-    * ceil(cached bytes / advisory partition size) partitions and runs
-    * the writes `plan` builds on that frame concurrently.
+  /** Persists `full` unless the caller already did, fills its cache
+    * once, coalesces it to ceil(cached bytes / advisory partition size)
+    * partitions and runs the writes `plan` builds on that frame
+    * concurrently. Only a cache made here is dropped here.
     */
   private def fanOut(full: DataFrame)(plan: DataFrame => Seq[() => Unit]): Unit = {
-    full.persist()
+    val owned = full.storageLevel == StorageLevel.NONE
+    if (owned) full.persist()
     try {
       val spark = full.sparkSession
       val bytes = bridge.materializedCacheBytes(full)
       val target = bridge.advisoryPartitionBytes(spark)
       val parts = ((bytes + target - 1) / target).max(1L).min(Int.MaxValue.toLong)
       runAll(spark, plan(full.coalesce(parts.toInt)))
-    } finally full.unpersist()
+    } finally if (owned) full.unpersist()
   }
 
   /** Runs `writes` at the same time on a pool made for this call, each

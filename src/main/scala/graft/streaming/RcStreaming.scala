@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
+import scala.jdk.CollectionConverters._
 import graft.operators.RcOps
 
 /** Streaming twin of the reference pipeline (`scanner.py:120-175`) over a
@@ -61,23 +63,28 @@ object RcStreaming {
       "skip_repeats=true requires LOG_LEVEL >= 2")
   }
 
-  /** F1 → J1, shared by [[pipeline]] and [[pipelineVerbose]]. The
-    * ORIGINAL Change record rides along as one `change` struct column so
-    * the K3 flag log can persist it with the full declared schema
+  /** F1, shared by [[pipeline]], [[pipelineVerbose]] and the live path.
+    * The ORIGINAL Change record rides along as one `change` struct column
+    * so the K3 flag log can persist it with the full declared schema
     * (ChangeSchema.flagLogEntry / utils.py:42 embeds the whole input
-    * row, not the output projection). Edit counts join per site when the
-    * dim carries server_name (the reference queries each event's own
-    * site API, `scanner.py:128-130`); a user-only dim joins on user alone.
+    * row, not the output projection).
+    */
+  private def streamFiltered(changes: DataFrame, spec: FilterSpec): DataFrame =
+    RcOps.streamFilter(changes, spec.effectiveStreamfilter)
+      .withColumn("change", struct(changes.columns.toIndexedSeq.map(col): _*))
+      .withColumn("event_time", to_timestamp(col("meta.dt")))
+
+  /** F1 → J1, shared by [[pipeline]] and [[pipelineVerbose]]. Edit
+    * counts join per site when the dim carries server_name (the
+    * reference queries each event's own site API, `scanner.py:128-130`);
+    * a user-only dim joins on user alone.
     */
   private def enrichUsers(changes: DataFrame, users: DataFrame,
       spec: FilterSpec): DataFrame = {
-    val filtered = RcOps.streamFilter(changes, spec.effectiveStreamfilter)
-      .withColumn("change", struct(changes.columns.toIndexedSeq.map(col): _*))
-      .withColumn("event_time", to_timestamp(col("meta.dt")))
     val userKeys =
       if (users.columns.contains("server_name")) Seq("user", "server_name")
       else Seq("user")
-    filtered.join(broadcast(users), userKeys, "left")
+    streamFiltered(changes, spec).join(broadcast(users), userKeys, "left")
   }
 
   /** J2, shared by [[pipeline]] and [[pipelineVerbose]]: revision text
@@ -104,21 +111,31 @@ object RcStreaming {
     * dimension tables (the API-lookup stand-ins, FIXTURES.md A.3).
     */
   def pipeline(changes: DataFrame, users: DataFrame, revisions: DataFrame,
-               spec: FilterSpec, emitDeadLetter: Boolean = false): DataFrame = {
-    val enriched = enrichUsers(changes, users, spec)
+               spec: FilterSpec, emitDeadLetter: Boolean = false): DataFrame =
+    gates(enrichUsers(changes, users, spec), joinRevisions(_, revisions), spec, emitDeadLetter)
 
+  /** F2 → J2 → E1 → R1 → D1 → output projection over F1 survivors that
+    * carry `editcount`: the one gate stage of [[pipeline]] (J2 is its
+    * broadcast join) and of the live path (whose driver-enriched rows
+    * already carry `text`, so its J2 is the identity).
+    */
+  private def gates(events: DataFrame, j2: DataFrame => DataFrame, spec: FilterSpec,
+      emitDeadLetter: Boolean): DataFrame = {
     // F2 — threshold gate. A row whose edit-count lookup failed (NULL
     // editcount) is NOT silently dropped by three-valued logic: the
     // reference treats a failed lookup as QueryRaceCondition skip
     // regardless of max_edits (`scanner.py:130-135,199-218`), so it is
-    // routed to the dead-letter side below, same as missing text.
-    val underMax = col("editcount").isNotNull && RcOps.countUnderMax(spec.maxEdits)
+    // routed to the dead-letter side below, same as missing text. No
+    // threshold, no filter: `editcount <= m OR editcount IS NULL` with
+    // no `m` is a per-row tautology the optimizer would keep.
+    val underMax = spec.maxEdits.fold(events)(_ => events.filter(
+      col("editcount").isNotNull && RcOps.countUnderMax(spec.maxEdits) ||
+        col("editcount").isNull))
 
     // J2 / E1 — text enrichment after the cheap gates; missing editcount
     // or missing text => dead letter (skip-and-continue, never fail,
     // `scanner.py:77-81`).
-    val withText =
-      joinRevisions(enriched.filter(underMax || col("editcount").isNull), revisions)
+    val withText = j2(underMax)
       .withColumn("dead_letter", col("editcount").isNull || col("text").isNull)
 
     // R1 — matched-set + match gate (RcOps.matchedPatterns, shared with
@@ -143,8 +160,8 @@ object RcStreaming {
     // ONE pass, a row_number over (title, dead_letter) that keeps every
     // dead letter and the first live row per title: as two branches
     // (live deduped ∪ dead letters) the optimizer turns the live
-    // branch's left joins into inner joins, the branches' dim broadcasts
-    // stop matching, and a live dim's API fetch runs once per branch.
+    // branch's left joins into inner joins and the branches' dim
+    // broadcasts stop matching.
     val deduped =
       if (!spec.skipRepeats) gated
       else if (gated.isStreaming) {
@@ -173,49 +190,50 @@ object RcStreaming {
     if (emitDeadLetter) out else out.drop("dead_letter")
   }
 
-  /** Live-enrichment twin of [[pipeline]] for one micro-batch: one key
-    * pass collects the batch's distinct (user, revid) keys, the driver
-    * fetches them from the (stub or real) API in one bounded round —
-    * `LiveEnrichment` batches users 50/request and LRU-caches across
-    * batches — and the IDENTICAL join/gate/dedup plan runs over the
-    * local dims. The batch is coalesced to one partition first (the SSE
-    * source plans one input partition per micro-batch, so no scan
-    * parallelism is lost): the key pass and D1's window then need no
-    * shuffle. Call from foreachBatch (the standard Structured Streaming
-    * pattern for per-batch external lookups); failed lookups surface as
-    * NULL enrichment and take the existing race/dead-letter route.
+  /** Live-enrichment twin of [[pipeline]] for one micro-batch: the
+    * batch's F1 survivors are collected to the driver once (the batch's
+    * only read of the source), `LiveEnrichment.enrich` fetches their
+    * keys from the (stub or real) API in one bounded round — users 50
+    * per request, revision texts LRU-cached across batches — and
+    * attaches `editcount` and `text` to each row, and [[pipeline]]'s own
+    * gate stage runs over that one-partition local frame: no broadcast,
+    * no shuffle. The driver holds one batch's F1 survivors (about 20
+    * rows on a live tail; a backlog's first batch holds all of it until
+    * the SSE source admits bounded batches). Call from
+    * foreachBatch (the standard Structured Streaming pattern for
+    * per-batch external lookups); failed lookups surface as NULL
+    * enrichment and take the existing race/dead-letter route.
     * Within-batch dedup only in this mode — cross-batch repeat state
     * lives in the non-live pipeline's dropDuplicatesWithinWatermark or
     * the verbose stateful op.
     */
   def livePipeline(batch: DataFrame, apiUrl: String, spec: FilterSpec,
       emitDeadLetter: Boolean = false): DataFrame =
-    live(batch, spec, emitDeadLetter)(
-      graft.enrichment.LiveEnrichment.dims(_, apiUrl))
+    live(batch, spec, emitDeadLetter, _ => Some(apiUrl))
 
   /** Multi-site twin of [[livePipeline]]: each event's lookups go to its
     * OWN wiki's API, routed by `server_name` (the reference builds a
     * per-site session map and indexes it per event —
-    * `filter_.py:57`, `scanner.py:128` `apis[change['server_name']]`).
-    * The dims come back keyed (server_name, user) / (server_name,
-    * revid), so the joins are per-site as well; an event whose site has
-    * no endpoint in `apis` gets NULL enrichment and takes the race /
-    * dead-letter route (skip-and-continue, never fail).
+    * `filter_.py:57`, `scanner.py:128` `apis[change['server_name']]`);
+    * an event whose site has no endpoint in `apis` gets NULL enrichment
+    * and takes the race / dead-letter route (skip-and-continue, never
+    * fail).
     */
   def livePipelineBySite(batch: DataFrame, apis: Map[String, String],
       spec: FilterSpec, emitDeadLetter: Boolean = false): DataFrame =
-    live(batch, spec, emitDeadLetter)(
-      graft.enrichment.LiveEnrichment.dimsBySite(_, apis))
+    live(batch, spec, emitDeadLetter, apis.get)
 
-  private def live(batch: DataFrame, spec: FilterSpec, emitDeadLetter: Boolean)(
-      dims: DataFrame => (DataFrame, DataFrame)): DataFrame = {
-    val one = batch.coalesce(1)
-    // Streamfilter FIRST (the reference registers filters on the stream
-    // client before any API call): the dims are built from the events
-    // that survive F1, not the raw multiplexed batch — otherwise a
-    // one-wiki filter would still pay API quota for every wiki.
-    val (users, revisions) = dims(RcOps.streamFilter(one, spec.effectiveStreamfilter))
-    pipeline(one, users, revisions, spec, emitDeadLetter)
+  /** Streamfilter FIRST (the reference registers filters on the stream
+    * client before any API call): only F1 survivors are fetched for,
+    * so a one-wiki filter does not pay API quota for every wiki.
+    */
+  private def live(batch: DataFrame, spec: FilterSpec, emitDeadLetter: Boolean,
+      endpoint: String => Option[String]): DataFrame = {
+    val events = streamFiltered(batch, spec)
+    val rows = graft.enrichment.LiveEnrichment.enrich(events.collect().toSeq, endpoint)
+    gates(events.sparkSession.createDataFrame(rows.asJava, events.schema
+      .add("editcount", LongType).add("text", StringType)).coalesce(1), identity, spec,
+      emitDeadLetter)
   }
 
   // ---- Verbose mode (-v): every event with its skip reason ------------

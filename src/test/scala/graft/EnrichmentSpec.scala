@@ -8,8 +8,9 @@ import graft.schema.ChangeSchema
 import graft.streaming.{RcSinks, RcStreaming}
 
 /** Live enrichment against a local stub of the MediaWiki API
-  * (`scanner.py:178-218`): request batching, cross-batch LRU caching,
-  * race routing, and equivalence with the static dim-join twin.
+  * (`scanner.py:178-218`): request batching, cross-batch text caching,
+  * fresh edit counts, race routing, and equivalence with the static
+  * dim-join twin.
   */
 class EnrichmentSpec extends SparkSpec {
   import spark.implicits._
@@ -36,14 +37,37 @@ class EnrichmentSpec extends SparkSpec {
   }
 
   test("LRU cache short-circuits keys seen in earlier batches") {
-    val users = (1 to 20).map(i => s"cacheuser$i")
-    val srv = new StubApiServer(users.map(_ -> 3L).toMap, Map.empty)
+    // revision texts only: a revision is immutable, an edit count is not
+    val revisions = (1 to 20).map(i => 9700L + i).toDF("new")
+      .select(org.apache.spark.sql.functions.struct("new").as("revision"))
+    val srv = new StubApiServer(Map.empty, (9701L to 9720L).map(_ -> "cached text").toMap)
     try {
-      LiveEnrichment.editCountDim(users.toDF("user"), srv.url).count()
+      LiveEnrichment.textDim(revisions, srv.url).count()
       val after1 = srv.requests.get()
-      val again = LiveEnrichment.editCountDim(users.toDF("user"), srv.url)
+      assert(after1 === 20L)
+      val again = LiveEnrichment.textDim(revisions, srv.url)
       assert(again.count() === 20)
       assert(srv.requests.get() === after1, "second batch must be served from cache")
+    } finally srv.close()
+  }
+
+  test("an edit count that crosses maxEdits between batches gates by the new count") {
+    val inDir = Files.createTempDirectory("livecross").toString
+    def batch(id: Long, rev: Long) = {
+      Files.writeString(java.nio.file.Path.of(s"$inDir/b.json"), changeJson(id, s"User:X$id",
+        "crossuser", rev))
+      spark.read.schema(ChangeSchema.change).json(inDir)
+    }
+    val srv = new StubApiServer(Map("crossuser" -> 4L),
+      Map(9801L -> "userbox one", 9802L -> "userbox two"))
+    try {
+      val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), Some(5L),
+        skipRepeats = false, regexes = Seq("userbox"))
+      def ids(id: Long, rev: Long) = RcStreaming.livePipeline(batch(id, rev), srv.url, spec,
+        emitDeadLetter = true).select("id").as[Long].collect().toSeq
+      assert(ids(61L, 9801L) === Seq(61L)) // 4 edits <= 5: flagged
+      srv.editCounts = Map("crossuser" -> 6L) // the user edited twice more
+      assert(ids(62L, 9802L) === Nil, "batch 2 was gated by a stale count")
     } finally srv.close()
   }
 
@@ -101,14 +125,15 @@ class EnrichmentSpec extends SparkSpec {
 
       object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
       import org.apache.spark.sql.execution.LocalTableScanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
       val plan = live.queryExecution.executedPlan
-      // both dims are local relations built from the driver's fetches
-      val dims = plans.collectWithSubqueries(plan) { case l: LocalTableScanExec =>
-        l.output.map(_.name).mkString(",") }
-      assert(dims.sorted === Seq("revid,text", "user,editcount"), plan.toString)
-      // one partition end to end: neither D1's window nor anything else shuffles
-      assert(plans.collectWithSubqueries(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      // one leaf: the batch, enriched on the driver from its fetches
+      val leaves = plans.collectWithSubqueries(plan) { case l: LocalTableScanExec =>
+        l.output.map(_.name).toSet }
+      assert(leaves.size === 1 && Set("editcount", "text").subsetOf(leaves.head), plan.toString)
+      // one partition end to end: nothing is broadcast, D1's window does not shuffle
+      assert(plans.collectWithSubqueries(plan) {
+        case e: BroadcastExchangeExec => e; case e: ShuffleExchangeExec => e }.isEmpty,
         plan.toString)
       assert(srv.requests.get() === 6L + 1L, // 6 distinct revids + ceil(1 user / 50)
         s"saw ${srv.requests.get()} requests")
@@ -138,6 +163,52 @@ class EnrichmentSpec extends SparkSpec {
       val live = RcStreaming.livePipeline(batch, srv.url, spec, emitDeadLetter = true)
       assert(live.count() === 5L)
       assert(srv.requests.get() === 1L + 5L, s"saw ${srv.requests.get()} requests")
+    } finally srv.close()
+  }
+
+  test("the frame livePipeline returns reads no source relation") {
+    val inDir = Files.createTempDirectory("livelocal").toString
+    Files.writeString(java.nio.file.Path.of(s"$inDir/b.json"), Seq(
+      changeJson(71, "User:L", "localuser", 9901),
+      changeJson(72, "User:M", "localuser", 9902)).mkString("\n"))
+    val srv = new StubApiServer(Map("localuser" -> 1L), Map(9901L -> "userbox"))
+    try {
+      val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), None,
+        skipRepeats = true, regexes = Seq("userbox"))
+      val batch = spark.read.schema(ChangeSchema.change).json(inDir)
+      val live = RcStreaming.livePipeline(batch, srv.url, spec, emitDeadLetter = true)
+      val plan = live.queryExecution.analyzed
+      // the source was read once, inside livePipeline: the frame is driver data
+      assert(plan.collectLeaves().map(_.getClass.getSimpleName).distinct === Seq("LocalRelation"),
+        plan.toString)
+      assert(live.select("id", "dead_letter").as[(Long, Boolean)].collect().sortBy(_._1).toSeq ===
+        Seq((71L, false), (72L, true)))
+    } finally srv.close()
+  }
+
+  test("a live micro-batch reads its source once: numInputRows equals its events") {
+    val f = Files.createTempFile("liveread", ".sse")
+    Files.writeString(f, (1 to 3).map(i => changeJson(80L + i, s"User:N$i", "onereader",
+      9950L + i)).map(j => s"data: $j\n").mkString("\n"))
+    val srv = new StubApiServer(Map("onereader" -> 1L), Map(9951L -> "userbox"))
+    try {
+      val spec = RcStreaming.FilterSpec(Map("type" -> Seq("edit")), None,
+        skipRepeats = false, regexes = Seq("userbox"))
+      val flagged = new java.util.concurrent.atomic.AtomicLong(0L)
+      val q = spark.readStream.format("sse").option("path", f.toString).load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val changes = b.select(org.apache.spark.sql.functions.from_json(
+            org.apache.spark.sql.functions.col("value"), ChangeSchema.change).as("c")).select("c.*")
+          flagged.addAndGet(RcStreaming.livePipeline(changes, srv.url, spec).count())
+          ()
+        }
+        .option("checkpointLocation", Files.createTempDirectory("livereadckpt").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      assert(flagged.get() === 1L)
+      assert(q.recentProgress.map(_.numInputRows).sum === 3L,
+        q.recentProgress.map(_.numInputRows).mkString(","))
     } finally srv.close()
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.storage.StorageLevel
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import graft.operators.RcOps
 import graft.schema.ChangeSchema
@@ -390,5 +391,24 @@ class StreamingSpec extends SparkSpec {
     val bytes = try bridge.materializedCacheBytes(batch) finally batch.unpersist(blocking = true)
     assert(filesPerSink(Some((bytes + 1) / 2)) === Seq(2L, 2L, 2L))
     assert(filesPerSink(Some(1L)) === Seq(4L, 4L, 4L)) // capped at the 4 input partitions
+  }
+
+  test("sink fan-out keeps a cache its caller made and drops only its own") {
+    val batch = spark.range(0, 40, 1, 2).select(col("id").as("revid"),
+      concat(lit("match "), col("id")).as("message"),
+      to_date(lit("2026-08-12")).as("event_date"),
+      concat(lit("u_"), col("id")).as("filename"))
+    val sinks = RcSinks(Files.createTempDirectory("sinkscache").toString, logLevel = 3,
+      filterName = "example")
+    sinks.writeBatch(batch, 0L)
+    assert(batch.storageLevel === StorageLevel.NONE, "the fan-out's own cache must go")
+    batch.persist()
+    try {
+      batch.count()
+      val before = batch.storageLevel
+      sinks.writeBatch(batch, 1L)
+      assert(before !== StorageLevel.NONE)
+      assert(batch.storageLevel === before, "writeBatch dropped its caller's cache")
+    } finally batch.unpersist(blocking = true)
   }
 }
