@@ -1,15 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Dev tool: materialize the ScaleSmoke 10x replica corpus to a FIXED
-  * directory (args(0), default /tmp/scale10x) so the same files can be
-  * read by BOTH engines for the SCALE.md same-scale pairing —
-  * ScaleSmoke's own replica lives in a run-private temp dir and runs
-  * the smoke suite, not a bench. Construction is ScaleSmoke's, with
-  * DENSE id packing for docs/vectors (r19 verdict item 8): replica k
-  * shifts ids by k * n_base, so the replica corpus keeps the source's
-  * dense [0, n) id space. The old 1e6 stride left ~99% of the id range
+/** Dev tool: materialize a 10x replica corpus to a FIXED directory
+  * (args(0), default /tmp/scale10x) so the same files can be read by
+  * BOTH engines for the SCALE.md same-scale pairing; `QBench` times
+  * named queries over it (`SPARK_GRAFT_SF_DIR=<dir>`). Docs and
+  * vectors use DENSE id packing ([[denseReplicas]]): replica k shifts
+  * ids by k * n_base, so the replica corpus keeps the source's dense
+  * [0, n) id space. A 1e6 stride left ~99% of the id range
   * unpopulated at 100x, and every `id-arithmetic % n` link target
   * (crawlEdgeTable, crawl_triangles) then pointed at a PHANTOM id with
   * no document row — the rank vector carried 972k rows for 500k docs,
@@ -26,6 +26,16 @@ import org.apache.spark.sql.functions._
   * growth (pair volume) from its plan cost in the SCALE.md pairing.
   */
 object ScaleCorpus {
+  /** `reps` copies of `base`, copy k with `idCol` shifted by k * n: a
+    * dense [0, n) id space becomes a dense [0, reps * n). `perturb`
+    * rewrites copy k after the shift.
+    */
+  def denseReplicas(base: DataFrame, idCol: String, n: Long, reps: Int)(
+      perturb: (DataFrame, Int) => DataFrame = (df, _) => df): DataFrame =
+    (0 until reps)
+      .map(k => perturb(base.withColumn(idCol, col(idCol) + lit(k * n)), k))
+      .reduce(_.unionByName(_))
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/scale10x")
     val perturbPpm = args.drop(1).headOption.map(_.toLong).getOrElse(0L)
@@ -46,8 +56,7 @@ object ScaleCorpus {
     // [k*n, (k+1)*n), so the union is [0, reps*n) with no gaps and
     // every `% (reps*n)` link target is a real document
     val nDocs = Tables.parquetRowCount(spark, s"$src/documents.parquet")
-    if (groups("docs")) (0 until reps).map { k =>
-        val shifted = base.withColumn("doc_id", col("doc_id") + lit(k * nDocs))
+    if (groups("docs")) denseReplicas(base, "doc_id", nDocs, reps) { (shifted, k) =>
         if (k == 0 || perturbPpm <= 0) shifted
         else shifted.withColumn("text",
           concat_ws(" ", expr(
@@ -56,13 +65,10 @@ object ScaleCorpus {
                |    cast(i AS string))), 1000000L) < ${perturbPpm}L
                |  THEN concat(w, '~$k') ELSE w END)""".stripMargin)))
       }
-      .reduce(_.unionByName(_))
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     val embBase = Tables.embeddings(spark, src)
     val nVecs = Tables.parquetRowCount(spark, s"$src/embeddings.parquet")
-    if (groups("vecs")) (0 until reps).map(k =>
-        embBase.withColumn("vec_id", col("vec_id") + lit(k * nVecs)))
-      .reduce(_.unionByName(_))
+    if (groups("vecs")) denseReplicas(embBase, "vec_id", nVecs, reps)()
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     val evBase = Tables.events(spark, src)
     if (groups("events")) (0 until reps).map(k =>

@@ -203,21 +203,14 @@ object Export {
     * `operators.Compaction`'s job.
     */
   def appendShards(stream: DataFrame, path: String, nShards: Int,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val token = Similarity.ingestToken(checkpoint)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        shuffledShards(batch, nShards)
-          .repartition(col("shard"))
-          .sortWithinPartitions(col("shard"), col("shuffle_rank"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$path/ingest=$token-$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    Similarity.appendLayers(stream, checkpoint) { (batch, tag) =>
+      shuffledShards(batch, nShards)
+        .repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col("shuffle_rank"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("shard")
+        .parquet(s"$path/ingest=$tag")
+    }
 
   /** Streaming maintenance of the ORDERED export: boundaries are
     * FROZEN at stream start (an online stream cannot re-derive exact
@@ -232,24 +225,17 @@ object Export {
     * guarantee as the batch export.
     */
   def appendOrderedShards(stream: DataFrame, cuts: Array[Long], path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val token = Similarity.ingestToken(checkpoint)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("ord_key",
-            TextOps.subwordCount(TextOps.tokens(col("text"))).cast("long"))
-          .withColumn("shard", bucketOf(col("ord_key"), cuts).cast("int"))
-          .repartition(col("shard"))
-          .sortWithinPartitions(col("shard"), col("ord_key"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$path/ingest=$token-$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    Similarity.appendLayers(stream, checkpoint) { (batch, tag) =>
+      batch
+        .withColumn("ord_key",
+          TextOps.subwordCount(TextOps.tokens(col("text"))).cast("long"))
+        .withColumn("shard", bucketOf(col("ord_key"), cuts).cast("int"))
+        .repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col("ord_key"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("shard")
+        .parquet(s"$path/ingest=$tag")
+    }
 
   /** GLOBALLY ORDERED shard assignment — the range-partitioned twin of
     * [[shuffledShards]], for exports that must keep a global order

@@ -301,108 +301,100 @@ object Hnsw {
     * nodes through the delta rows.
     */
   def appendToIndex(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val token = Similarity.ingestToken(checkpoint)
-    stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val tag = s"$token-$batchId"
-        val fs = hadoopFs(spark, dir)
-        val batch = b.select(col("vec_id").as("node"),
-            transform(col("embedding"),
-              x => round(x.cast("double") * 1e6)).as("v"))
-          .withColumn("nv", VectorOps.norm2(col("v")))
-          .withColumn("lvl", levelCol(col("node")))
-          .localCheckpoint() // MaxLevel+1 level passes reuse it
-        for (level <- 0 to MaxLevel) {
-          val newNodes = batch.filter(col("lvl") >= level)
-            .select(col("node"), col("v"), col("nv"))
-          // home cell + probed cells per new node from the layer's
-          // persisted quantizer; a layer built exact (<= cap nodes)
-          // has no quantizer — everything is cell 0, and the candidate
-          // "pruning" below degenerates to the bounded full-layer scan
-          val assigned = (
-            if (fs.exists(new Path(s"$dir/cells/level=$level"))) {
-              val cents = spark.read.parquet(s"$dir/cells/level=$level")
-                .withColumn("ncv", VectorOps.norm2(col("cv")))
-              val wc = org.apache.spark.sql.expressions.Window
-                .partitionBy(col("node")).orderBy(col("cd2"), col("cid"))
-              newNodes.crossJoin(broadcast(cents))
-                .withColumn("cd2", col("nv") + col("ncv") -
-                  lit(2.0) * VectorOps.dot(col("v"), col("cv")))
-                .withColumn("crk", row_number().over(wc))
-                .filter(col("crk") <= CellProbes)
-                .groupBy(col("node"))
-                .agg(first(col("v")).as("v"), first(col("nv")).as("nv"),
-                  min_by(col("cid"), col("crk")).as("cell"),
-                  collect_set(col("cid")).as("pcells"))
-            } else newNodes.withColumn("cell", lit(0))
-              .withColumn("pcells", array(lit(0)))
-          ).localCheckpoint() // candidate read + pair join + node write reuse it
-          // the batch's probed-cell union — bounded by the layer's k
-          // (~sqrt(n_L)), a driver constant like the centroid bank
-          val probed = assigned.select(explode(col("pcells")).as("c"))
-            .distinct().collect().map(_.getInt(0)).toIndexedSeq
-          // candidates: nodes already AT this level (base + prior
-          // ingests) in the probed cells only — the cell partition
-          // filter prunes the read. The current tag's own ingest layer
-          // is EXCLUDED: foreachBatch is at-least-once, so a replayed
-          // batch would otherwise see its crashed attempt's node rows
-          // and pair each member against a duplicate of itself (the
-          // overwrite below heals the store; this filter heals the
-          // replay's candidate set).
-          // one file-index resolution per batch across the three level
-          // passes (nodesFrame memo; invalidated at batch end below)
-          val cand = nodesFrame(spark, dir)
-            .filter(col("level") === level &&
-              col("ingest").cast("string") =!= tag &&
-              col("cell").isin(probed: _*))
-            .select(col("node").as("nb"), col("v").as("vb"),
-              col("nv").as("nvb"), col("cell").as("cellb"))
-          val candAll = cand.unionByName(assigned
-            .select(col("node").as("nb"), col("v").as("vb"),
-              col("nv").as("nvb"), col("cell").as("cellb")))
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("node"))
-            .orderBy(col("d2"), col("nb"))
-          // pair each new node against candidates IN ITS OWN probed
-          // cells (array_contains on the broadcast side), not the
-          // batch-wide union — per-node candidate sets stay cell-sized.
-          // The 4M-pool + diversity selection matches the build path
-          // (a batch of duplicates would otherwise link only to its
-          // own copies and stay unreachable from the rest of the graph)
-          val ranked = candAll.join(broadcast(assigned
-                .select(col("node"), col("v"), col("nv"), col("pcells"))),
-              array_contains(col("pcells"), col("cellb")) &&
-                col("node") =!= col("nb"))
-            .withColumn("d2", col("nv") + col("nvb") -
-              lit(2.0) * VectorOps.dot(col("v"), col("vb")))
-            .withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= DiverseCandidates)
-            .select(col("node"), col("v"), col("nv"),
-              col("nb"), col("vb"), col("nvb"), col("d2"))
-          val links = selectDiverseEdges(spark, ranked)
-            .select(col("node"), col("nb"), col("vb"), col("nvb"),
-              col("v"), col("nv"))
-            .localCheckpoint() // forward + reverse writes share it
-          // forward: new node -> its M nearest (neighbor vector
-          // denormalized); reverse: each chosen neighbor -> the new
-          // node, so descent from the base graph can reach it
-          links.select(col("node"), col("nb"), col("vb"), col("nvb"))
-            .unionByName(links.select(col("nb").as("node"),
-              col("node").as("nb"), col("v").as("vb"), col("nv").as("nvb")))
-            .write.mode("overwrite")
-            .parquet(s"$dir/delta/level=$level/ingest=$tag")
-          assigned.select(col("cell"), col("node"), col("v"), col("nv"))
-            .write.partitionBy("cell").mode("overwrite")
-            .parquet(s"$dir/nodes/level=$level/ingest=$tag")
-        }
-        nodesFrameCache.remove(dir) // next probe's seed sees this batch
-        ()
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    Similarity.appendLayers(stream, checkpoint) { (b, tag) =>
+      val fs = hadoopFs(spark, dir)
+      val batch = b.select(col("vec_id").as("node"),
+          transform(col("embedding"),
+            x => round(x.cast("double") * 1e6)).as("v"))
+        .withColumn("nv", VectorOps.norm2(col("v")))
+        .withColumn("lvl", levelCol(col("node")))
+        .localCheckpoint() // MaxLevel+1 level passes reuse it
+      for (level <- 0 to MaxLevel) {
+        val newNodes = batch.filter(col("lvl") >= level)
+          .select(col("node"), col("v"), col("nv"))
+        // home cell + probed cells per new node from the layer's
+        // persisted quantizer; a layer built exact (<= cap nodes)
+        // has no quantizer — everything is cell 0, and the candidate
+        // "pruning" below degenerates to the bounded full-layer scan
+        val assigned = (
+          if (fs.exists(new Path(s"$dir/cells/level=$level"))) {
+            val cents = spark.read.parquet(s"$dir/cells/level=$level")
+              .withColumn("ncv", VectorOps.norm2(col("cv")))
+            val wc = org.apache.spark.sql.expressions.Window
+              .partitionBy(col("node")).orderBy(col("cd2"), col("cid"))
+            newNodes.crossJoin(broadcast(cents))
+              .withColumn("cd2", col("nv") + col("ncv") -
+                lit(2.0) * VectorOps.dot(col("v"), col("cv")))
+              .withColumn("crk", row_number().over(wc))
+              .filter(col("crk") <= CellProbes)
+              .groupBy(col("node"))
+              .agg(first(col("v")).as("v"), first(col("nv")).as("nv"),
+                min_by(col("cid"), col("crk")).as("cell"),
+                collect_set(col("cid")).as("pcells"))
+          } else newNodes.withColumn("cell", lit(0))
+            .withColumn("pcells", array(lit(0)))
+        ).localCheckpoint() // candidate read + pair join + node write reuse it
+        // the batch's probed-cell union — bounded by the layer's k
+        // (~sqrt(n_L)), a driver constant like the centroid bank
+        val probed = assigned.select(explode(col("pcells")).as("c"))
+          .distinct().collect().map(_.getInt(0)).toIndexedSeq
+        // candidates: nodes already AT this level (base + prior
+        // ingests) in the probed cells only — the cell partition
+        // filter prunes the read. The current tag's own ingest layer
+        // is EXCLUDED: foreachBatch is at-least-once, so a replayed
+        // batch would otherwise see its crashed attempt's node rows
+        // and pair each member against a duplicate of itself (the
+        // overwrite below heals the store; this filter heals the
+        // replay's candidate set).
+        // one file-index resolution per batch across the three level
+        // passes (nodesFrame memo; invalidated at batch end below)
+        val cand = nodesFrame(spark, dir)
+          .filter(col("level") === level &&
+            col("ingest").cast("string") =!= tag &&
+            col("cell").isin(probed: _*))
+          .select(col("node").as("nb"), col("v").as("vb"),
+            col("nv").as("nvb"), col("cell").as("cellb"))
+        val candAll = cand.unionByName(assigned
+          .select(col("node").as("nb"), col("v").as("vb"),
+            col("nv").as("nvb"), col("cell").as("cellb")))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("node"))
+          .orderBy(col("d2"), col("nb"))
+        // pair each new node against candidates IN ITS OWN probed
+        // cells (array_contains on the broadcast side), not the
+        // batch-wide union — per-node candidate sets stay cell-sized.
+        // The 4M-pool + diversity selection matches the build path
+        // (a batch of duplicates would otherwise link only to its
+        // own copies and stay unreachable from the rest of the graph)
+        val ranked = candAll.join(broadcast(assigned
+              .select(col("node"), col("v"), col("nv"), col("pcells"))),
+            array_contains(col("pcells"), col("cellb")) &&
+              col("node") =!= col("nb"))
+          .withColumn("d2", col("nv") + col("nvb") -
+            lit(2.0) * VectorOps.dot(col("v"), col("vb")))
+          .withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= DiverseCandidates)
+          .select(col("node"), col("v"), col("nv"),
+            col("nb"), col("vb"), col("nvb"), col("d2"))
+        val links = selectDiverseEdges(spark, ranked)
+          .select(col("node"), col("nb"), col("vb"), col("nvb"),
+            col("v"), col("nv"))
+          .localCheckpoint() // forward + reverse writes share it
+        // forward: new node -> its M nearest (neighbor vector
+        // denormalized); reverse: each chosen neighbor -> the new
+        // node, so descent from the base graph can reach it
+        links.select(col("node"), col("nb"), col("vb"), col("nvb"))
+          .unionByName(links.select(col("nb").as("node"),
+            col("node").as("nb"), col("v").as("vb"), col("nv").as("nvb")))
+          .write.mode("overwrite")
+          .parquet(s"$dir/delta/level=$level/ingest=$tag")
+        assigned.select(col("cell"), col("node"), col("v"), col("nv"))
+          .write.partitionBy("cell").mode("overwrite")
+          .parquet(s"$dir/nodes/level=$level/ingest=$tag")
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      nodesFrameCache.remove(dir) // next probe's seed sees this batch
+    }
 
   /** Fold accumulated delta layers into the base adjacency WITHOUT a
     * retrain — the maintenance op between [[buildIndex]] swaps (r19

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.VectorAgg
 
 /** IVF index construction: Lloyd's k-means over the embedding corpus.
@@ -201,15 +202,24 @@ object Similarity {
     */
   def probeIndex(spark: SparkSession, dir: String, qv: Array[Double],
       topK: Int, probes: Int = 2): DataFrame = {
-    recoverSwap(spark, dir) // heal a crashed retrain swap before reading
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cid"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-    val probeCells = nearestCells(cents, qv, probes)
+    val probeCells = probedCells(spark, dir, qv, probes)
     scoreTopK(
       spark.read.parquet(s"$dir/cells")
         .filter(col("cell").isin(probeCells.toIndexedSeq: _*)),
       qv, topK)
+  }
+
+  /** The probe load shared by [[probeIndex]] and [[probePqIndex]]:
+    * heal a crashed retrain swap, collect the centroids (k x dim) and
+    * resolve the `probes` cells nearest to `qv` locally.
+    */
+  private def probedCells(spark: SparkSession, dir: String, qv: Array[Double],
+      probes: Int): Seq[Int] = {
+    recoverSwap(spark, dir)
+    val cents = spark.read.parquet(s"$dir/centroids")
+      .select(col("cid"), col("cv")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
+    nearestCells(cents, qv, probes)
   }
 
   /** Replay-safe ingest-layer key shared by every streaming append
@@ -225,6 +235,21 @@ object Similarity {
   def ingestToken(checkpoint: String): String =
     f"${scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff}%08x"
 
+  /** The streaming append tail shared by the index and export
+    * appenders: each micro-batch calls `write` with its replay-safe
+    * layer tag `<token>-<batchId>` ([[ingestToken]]), and the query
+    * drains what is available once under `checkpoint`.
+    */
+  private[operators] def appendLayers(stream: DataFrame, checkpoint: String)(
+      write: (DataFrame, String) => Unit): StreamingQuery = {
+    val token = ingestToken(checkpoint)
+    stream.writeStream
+      .foreachBatch((b: DataFrame, batchId: Long) => write(b, s"$token-$batchId"))
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+
   /** Streaming index maintenance: arriving vectors are assigned to
     * their nearest SAVED centroid (broadcast dim — no retraining) and
     * appended into the cell-partitioned index, so new data becomes
@@ -235,23 +260,17 @@ object Similarity {
     * is a periodic batch `saveIndex` swap.
     */
   def appendToIndex(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     val cents = spark.read.parquet(s"$dir/centroids")
-    val token = ingestToken(checkpoint)
-    stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        // foreachBatch is at-least-once: write into a deterministic
-        // ingest=<token>-<batchId> directory with overwrite, so a
-        // replayed micro-batch rewrites its own files instead of
-        // appending duplicate vectors (RcSinks.writeBatch convention).
-        assignCells(b, cents)
-          .write.partitionBy("cell").mode("overwrite")
-          .parquet(s"$dir/cells/ingest=$token-$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    // foreachBatch is at-least-once: write into a deterministic
+    // ingest=<token>-<batchId> directory with overwrite, so a
+    // replayed micro-batch rewrites its own files instead of
+    // appending duplicate vectors (RcSinks.writeBatch convention).
+    appendLayers(stream, checkpoint) { (b, tag) =>
+      assignCells(b, cents)
+        .write.partitionBy("cell").mode("overwrite")
+        .parquet(s"$dir/cells/ingest=$tag")
+    }
   }
 
   /** Per-subspace PQ codebooks, trained with the SAME Lloyd's trainer
@@ -338,11 +357,7 @@ object Similarity {
     */
   def probePqIndex(spark: SparkSession, dir: String, qv: Array[Double],
       topK: Int, probes: Int = 2): DataFrame = {
-    recoverSwap(spark, dir) // heal a crashed retrain swap before reading
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cid"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-    val probeCells = nearestCells(cents, qv, probes)
+    val probeCells = probedCells(spark, dir, qv, probes)
     val books = spark.read.parquet(s"$dir/books")
       .select(col("si"), col("cid"), col("cv")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
@@ -380,7 +395,7 @@ object Similarity {
     * exactly like the IVF path's retrain story.
     */
   def appendToPqIndex(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     import spark.implicits._
     val cents = spark.read.parquet(s"$dir/centroids")
     val books: Array[Array[Array[Double]]] = spark.read.parquet(s"$dir/books")
@@ -390,39 +405,33 @@ object Similarity {
       .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
     val dsub = books(0)(0).length
     val bc = spark.sparkContext.broadcast(books)
-    val token = ingestToken(checkpoint)
-    stream.writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        assignCells(b, cents)
-          .select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
-          .as[(Long, Int, Array[Double])]
-          .map { case (id, cell, v) =>
-            val bk = bc.value
-            var packed = 0L
-            var si = 0
-            while (si < bk.length) {
-              val book = bk(si)
-              var best = 0; var bestD = Double.MaxValue
-              var c = 0
-              while (c < book.length) {
-                var d = 0.0; var i = 0
-                while (i < dsub) { val t = v(si * dsub + i) - book(c)(i); d += t * t; i += 1 }
-                if (d < bestD) { bestD = d; best = c }
-                c += 1
-              }
-              packed |= (best.toLong & 0xffL) << (si * 8)
-              si += 1
+    appendLayers(stream, checkpoint) { (b, tag) =>
+      assignCells(b, cents)
+        .select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
+        .as[(Long, Int, Array[Double])]
+        .map { case (id, cell, v) =>
+          val bk = bc.value
+          var packed = 0L
+          var si = 0
+          while (si < bk.length) {
+            val book = bk(si)
+            var best = 0; var bestD = Double.MaxValue
+            var c = 0
+            while (c < book.length) {
+              var d = 0.0; var i = 0
+              while (i < dsub) { val t = v(si * dsub + i) - book(c)(i); d += t * t; i += 1 }
+              if (d < bestD) { bestD = d; best = c }
+              c += 1
             }
-            (id, cell, packed)
+            packed |= (best.toLong & 0xffL) << (si * 8)
+            si += 1
           }
-          .toDF("vec_id", "cell", "code64")
-          .write.partitionBy("cell").mode("overwrite")
-          .parquet(s"$dir/codes/ingest=$token-$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+          (id, cell, packed)
+        }
+        .toDF("vec_id", "cell", "code64")
+        .write.partitionBy("cell").mode("overwrite")
+        .parquet(s"$dir/codes/ingest=$tag")
+    }
   }
 
   /** Crash-recovery for the retrain swap: the swap's only unsafe

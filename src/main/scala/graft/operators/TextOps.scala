@@ -17,23 +17,9 @@ object TextOps {
   /** Whitespace tokenization — the corpus is single-space separated. */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Word n-gram shingles; degenerate docs (< n tokens) produce one
-    * truncated shingle (`greatest(...,1)` on BOTH engines — Spark's
-    * `sequence(1,0)` would count DOWN, not return empty).
-    *
-    * Reference HOF formulation, kept for twin-testing the native
-    * expression; the dedup pipelines use [[shinglesOfText]] (same
-    * output, ~10x cheaper — the nested transform/slice/concat_ws is
-    * CodegenFallback with a per-shingle array allocation, and was the
-    * single hottest expression of the whole dedup family).
-    */
-  def shingles(ws: Column, n: Int): Column =
-    transform(sequence(lit(1), greatest(size(ws) - (n - 1), lit(1))),
-      i => concat_ws(" ", slice(ws, i, lit(n))))
-
-  /** Native one-pass word shingling over the raw text column —
-    * bit-identical to `shingles(tokens(text), n)` (see
-    * [[graft.functions.WordShingles]] for the identity argument).
+  /** Native one-pass word shingling over the raw text column: word
+    * n-gram shingles, and one truncated shingle for a doc of fewer than
+    * n tokens (see [[graft.functions.WordShingles]]).
     */
   def shinglesOfText(text: Column, n: Int): Column =
     graft.functions.TextExpressions.word_shingles(text, n)
@@ -49,33 +35,6 @@ object TextOps {
     */
   def distinctShingleStructsOfText(text: Column, n: Int): Column =
     graft.functions.TextExpressions.distinct_shingle_structs(text, n)
-
-  /** MinHash signature: k independent hash functions simulated as
-    * `md5(seed || '|' || shingle)`, min per seed. Classic
-    * Broder-style MinHash (see PAPERS.md); one array expression per
-    * row, no state.
-    */
-  def minhashSigs(sh: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      seed => array_min(transform(sh, s => md5(concat(seed.cast("string"), lit("|"), s)))))
-
-  /** LSH banding: hash `rowsPerBand` consecutive signature entries per
-    * band. Docs sharing any band hash become candidate pairs — the
-    * band hash is the shuffle/bucketing key at scale.
-    */
-  def lshBands(sigs: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b => {
-      val parts = (0 until rowsPerBand).map(r => element_at(sigs, b * rowsPerBand + r + 1))
-      md5(concat_ws("|", parts: _*))
-    })
-
-  /** Per-token 32-bit hash bits via md5 hex-digit parity: bit j of the
-    * token hash = low bit of hex digit j. Pure string ops — portable
-    * to any engine with md5/substr, unlike hex->int conversion.
-    */
-  def hexParityContrib(word: Column, j: Column): Column =
-    when(md5(word).substr(j, lit(1))
-      .isin("1", "3", "5", "7", "9", "b", "d", "f"), lit(1)).otherwise(lit(-1))
 
   /** All ordered pairs {(ids[i], ids[j]) : i < j} from a sorted bucket
     * array, as structs (a, b). Buckets are near-dup groups — tiny by

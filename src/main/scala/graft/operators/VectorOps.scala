@@ -44,13 +44,6 @@ object VectorOps {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / sqrt(norm2(a) * norm2(b))
 
-  /** Squared L2 distance via the polarization identity — three native
-    * dot products, all inside whole-stage codegen (a zip_with/aggregate
-    * fold would be CodegenFallback).
-    */
-  def l2sq(a: Column, b: Column): Column =
-    norm2(a) + norm2(b) - lit(2.0) * dot(a, b)
-
   /** Per-dimension uniform scalar quantization to the 0..255 codebook
     * (the int8-SQ memory-scale path: a quantized corpus is 4x smaller
     * than float32, and scoring is integer multiply-adds). `mns`/`mxs`

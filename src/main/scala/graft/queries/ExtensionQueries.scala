@@ -3260,8 +3260,8 @@ object ExtensionQueries {
     // and the honest contract is "neighbors within the probe cell").
     // Plan: the map-side native argmax assignment (zero exchange),
     // ONE self-join on the cell key — within-cell pair volume is the
-    // sum(c²) bound the ScaleSmoke quantizer audit pins (k ~ sqrt(n)
-    // keeps it ~linear) — then a per-vector top-3 window on the
+    // sum(c²) bound the ScalePostureSpec 10x quantizer audit pins
+    // (k ~ sqrt(n) keeps it ~linear) — then a per-vector top-3 window on the
     // join's own key. Determinism: cosine rounded to 6 BEFORE
     // ranking, ties to the lower neighbor id.
     "sim_knn_graph" -> ((s, dir) => {
@@ -4094,8 +4094,9 @@ object ExtensionQueries {
       // cross pairs are generated IN-ROW over the bounded member array
       // (nested transform + flatten, the cappedPairs idiom): identical
       // pair multiset, one exchange and zero sorts where there were a
-      // window sort + a sort-merge join. Isolated min-of-7 at sf0.1:
-      // 0.954 -> 0.512 s; the anchor stage's Exchange count 2 -> 1.
+      // window sort + a sort-merge join. Isolated at sf0.1 with the
+      // run fold below (OPTIMIZATION_r21.md): 0.954 -> 0.798 s; the
+      // anchor stage's Exchange count 2 -> 1.
       // members ride as ONE packed long (doc_id in the high bits, pos
       // in the low 20; a position past 2^20 would carry into the doc
       // id, so `g` raises an error on one): narrower shuffle rows and a
@@ -6141,7 +6142,7 @@ object ExtensionQueries {
     // node's second out-link targets one of 16 hub nodes, so hub
     // in-degree is ~n/16 vs ~1 elsewhere — the in-degree shape real
     // webgraphs have): at scale AQE's skew handling splits the hot
-    // dst partitions, and ScaleSmoke keeps the family valid at 10x.
+    // dst partitions (the ScaleCorpus 10x replica exercises it).
     // Same fixed-point ppm arithmetic as crawl_pagerank — bit-exact,
     // no rounding contract. Out-degree is exactly 3 (no dangling).
     // Community detection by synchronous label propagation (LPA,

@@ -24,10 +24,6 @@ case class Change(comment: String, wiki: String, `type`: String,
     patrolled: Option[Boolean], id: Option[Long], minor: Option[Boolean],
     revision: OldNew)
 
-case class LogLoc(folder: Option[String], file: Option[String])
-
-case class FlagLogEntry(filter: String, change: Change, log: LogLoc)
-
 object Change {
   implicit val encoder: Encoder[Change] = Encoders.product[Change]
 

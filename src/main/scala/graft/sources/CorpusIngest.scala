@@ -117,11 +117,4 @@ object CorpusIngest {
     val lines = if (dropHeader) lines0.filter(col("value") =!= header) else lines0
     split(parseCsvLines(lines, schema, sep), schema)
   }
-
-  /** Streaming CSV ingest of a landing-zone directory — the
-    * [[streamJsonl]] twin over [[parseCsvLines]].
-    */
-  def streamCsv(spark: SparkSession, dir: String,
-      schema: StructType = docSchema, sep: String = ","): DataFrame =
-    parseCsvLines(spark.readStream.text(dir), schema, sep)
 }

@@ -16,56 +16,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StatefulOps {
 
-  case class UserEvent(user_id: Long, n: Long)
-  case class UserTotal(user_id: Long, total: Long, batches: Long)
-
-  implicit private val ueEnc: Encoder[UserEvent] = Encoders.product[UserEvent]
-  implicit private val utEnc: Encoder[UserTotal] = Encoders.product[UserTotal]
   implicit private val longEnc: Encoder[Long] = Encoders.scalaLong
-
-  /** Running KMV distinct-count estimate per key across micro-batches
-    * — "distinct users per event type so far", continuously. The
-    * bucket is the SAME bounded sketch the batch `q12b_kmv_distinct`
-    * aggregates with (`SketchAgg.KMinValues`): its buffer is the
-    * per-key state (O(k), never grows with the stream), each batch
-    * folds its rows in via `reduce`, and the emitted estimate after
-    * every batch equals what the batch query would compute over all
-    * rows seen so far — sketch state IS mergeable state, which is why
-    * the same aggregator serves both deployment shapes.
-    * Input: (key, hash) rows where hash comes from
-    * `TextOps.portableHash32`'s scheme.
-    *
-    * State is O(k) PER KEY; the key space itself is what grows. For a
-    * small enum key (event types) NoTimeout is right; for unbounded
-    * keys (per-user, per-url) pass `ttl` to expire idle sketches by
-    * processing-time recency, the same contract as
-    * `StreamingCorpusOps.minhashCandidates`.
-    */
-  def runningDistinct(hashes: Dataset[(String, Long)], k: Int = 64,
-      ttl: Option[java.time.Duration] = None): Dataset[(String, Double)] = {
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    implicit val outEnc: Encoder[(String, Double)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaDouble)
-    implicit val bufEnc: Encoder[graft.functions.SketchAgg.KmvBuf] =
-      Encoders.product[graft.functions.SketchAgg.KmvBuf]
-    val agg = new graft.functions.SketchAgg.KMinValues(k)
-    val timeout = if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    hashes.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, timeout)(
-        (key: String, it: Iterator[(String, Long)],
-            state: GroupState[graft.functions.SketchAgg.KmvBuf]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val next = it.foldLeft(state.getOption.getOrElse(agg.zero)) {
-              (b, row) => agg.reduce(b, row._2)
-            }
-            state.update(next)
-            ttl.foreach(d => state.setTimeoutDuration(d.toMillis))
-            Iterator((key, agg.finish(next)))
-          }
-        })
-  }
 
   case class ScoredEvent(event_type: String, cents: Long, event_id: Long,
       user_id: Long)
@@ -185,20 +136,6 @@ object StatefulOps {
         })
   }
 
-  /** Running per-user totals across micro-batches: state survives
-    * between batches and across checkpoint restarts.
-    */
-  def runningTotals(events: Dataset[UserEvent]): Dataset[UserTotal] =
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (user: Long, it: Iterator[UserEvent], state: GroupState[UserTotal]) => {
-          val prev = state.getOption.getOrElse(UserTotal(user, 0L, 0L))
-          val add = it.map(_.n).sum
-          val next = UserTotal(user, prev.total + add, prev.batches + 1)
-          state.update(next)
-          Iterator(next)
-        })
-
   case class FunnelEvent(user_id: Long, ts_us: Long, event_type: String)
   /** Per-user funnel progress: earliest signup, earliest purchase
     * strictly after it, earliest click strictly after that — the
@@ -256,58 +193,25 @@ object StatefulOps {
 
   implicit private val fuEnc: Encoder[FrontierUrl] = Encoders.product[FrontierUrl]
   implicit private val gdEnc: Encoder[GateDecision] = Encoders.product[GateDecision]
-  implicit private val defEnc: Encoder[(Long, List[FrontierUrl])] =
-    Encoders.tuple(Encoders.scalaLong,
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[FrontierUrl]]())
 
-  /** Per-host crawl politeness gate: at most `budget` URLs emitted per
-    * host per micro-batch; the overflow is DEFERRED in per-host state
-    * (bounded by `deferCap` — beyond it, lowest-priority URLs drop,
-    * the standard frontier-pressure valve) and re-emitted in later
-    * batches as budget frees up. Ordering inside a host is
-    * (priority desc, url) — deterministic, so the same frontier replay
-    * emits the same schedule. State per host is O(deferCap); hosts
-    * hash-partition across executors — the politeness bottleneck of a
-    * 100 TB crawl is per-host, never global.
+  /** Per-host crawl politeness gate on transformWithState: at most
+    * `budget` URLs emitted per host per budget window, in (priority
+    * desc, url) order; the overflow is DEFERRED in per-host state
+    * (bounded by `deferCap` — beyond it, lowest-priority URLs drop, the
+    * standard frontier-pressure valve). State per host is O(deferCap);
+    * hosts hash-partition across executors — the politeness bottleneck
+    * of a 100 TB crawl is per-host, never global.
     *
-    * Draining contract: a host's deferred queue advances when the host
-    * sees input (a real frontier continuously re-ticks hosts it wants
-    * drained — discovered links, retries, scheduler heartbeats);
-    * fMGWS does not invoke data-less groups under NoTimeout. An
-    * idle-host drain would add ProcessingTimeTimeout wakeups — left
-    * out deliberately: wall-clock timers make the emission schedule
-    * non-replayable, and replay-determinism is this gate's contract.
-    */
-  def politenessGate(urls: Dataset[FrontierUrl], budget: Int,
-      deferCap: Int = 1000): Dataset[GateDecision] = {
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    urls.groupByKey(_.host)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (host: String, it: Iterator[FrontierUrl],
-         state: GroupState[(Long, List[FrontierUrl])]) => {
-          val (batchNo, deferred) = state.getOption.getOrElse((0L, Nil))
-          val pending = (deferred ++ it.toSeq)
-            .sortBy(u => (-u.priority, u.url))
-          val (emit, rest) = pending.splitAt(budget)
-          state.update((batchNo + 1, rest.take(deferCap)))
-          emit.map(u => GateDecision(host, u.url, batchNo)).iterator
-        })
-  }
-
-  /** The timer-draining politeness gate on transformWithState — the
-    * release path [[politenessGate]] deliberately omits: fMGWS under
-    * NoTimeout never invokes a data-less group, so a host whose
-    * frontier goes quiet would hold its deferred URLs forever. Here
-    * every deferral registers a processing-time timer one budget
-    * window (`drainMs`) out; when it fires with NO new input for the
-    * host, [[handleExpiredTimer]] releases the next `budget` URLs and
-    * re-arms until the queue drains dry. Stale timers are deleted
-    * before re-arming, so each host carries at most one. The trade is
-    * explicit: wall-clock drains make the emission SCHEDULE
-    * non-replayable (which batch a URL lands in depends on idle time),
-    * while the emission CONTENT stays deterministic — the same
-    * priority-desc/url order, the same deferCap valve. Use the fMGWS
-    * twin when replay-exact schedules matter more than idle drains.
+    * A window advances when the host sees input, and also when the
+    * host goes quiet: every deferral registers a processing-time timer
+    * one window (`drainMs`) out; when it fires with NO new input for
+    * the host, [[handleExpiredTimer]] releases the next `budget` URLs
+    * and re-arms until the queue drains dry. Stale timers are deleted
+    * before re-arming, so each host carries at most one. The trade:
+    * wall-clock drains make the emission SCHEDULE non-replayable
+    * (which batch a URL lands in depends on idle time), while the
+    * emission CONTENT stays deterministic — the same order, the same
+    * deferCap valve.
     */
   private class PolitenessProcessor(budget: Int, deferCap: Int, drainMs: Long)
       extends StatefulProcessor[String, FrontierUrl, GateDecision] {
@@ -354,9 +258,9 @@ object StatefulOps {
       window(host, Nil, timerValues.getCurrentProcessingTimeInMs())
   }
 
-  /** transformWithState twin of [[politenessGate]] WITH the idle-host
-    * timer drain — deferred URLs release one budget per `drain` window
-    * even when the host sees no further frontier input.
+  /** The politeness gate ([[PolitenessProcessor]]): deferred URLs
+    * release one budget per `drain` window even when the host sees no
+    * further frontier input. Needs the RocksDB state store provider.
     */
   def politenessGateTws(urls: Dataset[FrontierUrl], budget: Int,
       deferCap: Int = 1000,

@@ -35,7 +35,6 @@ import graft.functions.TextExpressions
 object StreamingCorpusOps {
 
   case class Doc(doc_id: Long, text: String)
-  case class SrcDoc(doc_id: Long, text: String, source: String)
   case class BandRow(band_idx: Int, band_hash: String, doc_id: Long)
   /** One candidate per (pair, band) it collides in — consumers dedupe
     * with a downstream aggregate exactly like the batch query does.
@@ -48,7 +47,6 @@ object StreamingCorpusOps {
   case class Bucket(members: Array[Long], overflowed: Boolean)
 
   implicit private val docEnc: Encoder[Doc] = Encoders.product[Doc]
-  implicit private val srcDocEnc: Encoder[SrcDoc] = Encoders.product[SrcDoc]
   implicit private val bandEnc: Encoder[BandRow] = Encoders.product[BandRow]
   implicit private val pairEnc: Encoder[CandidatePair] = Encoders.product[CandidatePair]
 
@@ -125,78 +123,6 @@ object StreamingCorpusOps {
             g => graft.functions.SketchExpressions.in_string_set(benchSet, g)),
         lit(false)))
       .drop("__grams")
-  }
-
-  /** Streaming token-budget admission: admit arriving docs per source
-    * shard while the shard's cumulative subword-token spend stays
-    * within `budget` — the ingest-time twin of `sample_token_budget`.
-    * DOCUMENTED DIVERGENCE from the batch query: batch ranks the whole
-    * shard by quality before taking the greedy prefix; an online gate
-    * cannot rank documents that have not arrived yet, so admission is
-    * in arrival order (doc_id within a batch, for determinism), and
-    * admission is GREEDY: a doc that would overflow is rejected but a
-    * later smaller doc may still fit (the batch query's strict prefix
-    * counts every ranked doc in the running total, so nothing after
-    * the first overflow survives there). The per-doc accounting is
-    * identical (`ceil(len/4)` subwords per whitespace token, the
-    * TextOps.subwordCount scheme); the running spend is one Long of
-    * state per shard — bounded, no retraction needed.
-    */
-  def tokenBudgetGate(docs: Dataset[SrcDoc], budget: Long): Dataset[SrcDoc] = {
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    def subwords(text: String): Long =
-      if (text == null || text.isEmpty) 0L
-      else text.split(" ", -1).map(w => (w.length + 3) / 4).map(_.toLong).sum
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, it: Iterator[SrcDoc], state: GroupState[Long]) => {
-          var spent = state.getOption.getOrElse(0L)
-          val out = Vector.newBuilder[SrcDoc]
-          it.toSeq.sortBy(_.doc_id).foreach { d =>
-            val t = subwords(d.text)
-            if (spent + t <= budget) { spent += t; out += d }
-          }
-          state.update(spent)
-          out.result().iterator
-        })
-  }
-
-  case class SlotDoc(doc_id: Long, source: String, rk: Long, vt_micro: Long)
-  implicit private val slotEnc: Encoder[SlotDoc] = Encoders.product[SlotDoc]
-
-  /** Streaming face of `export_interleave`'s stride scheduler:
-    * arriving documents get a VIRTUAL TIME vt = rk * 1e6 div weight,
-    * where rk is the per-source arrival rank (ONE Long of state per
-    * source, persisted across micro-batches) and `weights` is the
-    * FROZEN per-source weight table — the frozen-boundary convention
-    * of the streaming export family (an online stream cannot know
-    * final source sizes; re-derive weights batch-side when the mix
-    * drifts). A downstream consumer draining by ascending vt reads
-    * sources at their weight ratios — the dataloader fair-share
-    * contract — while each doc's (rk, vt) is assigned at INGEST, one
-    * integer per source of state. Within a micro-batch, ranks assign
-    * in doc_id order (the tokenBudgetGate replay-determinism
-    * convention); across batches, by arrival. Unknown sources get
-    * weight 1.
-    */
-  def interleaveGate(docs: Dataset[SrcDoc],
-      weights: Map[String, Long]): Dataset[SlotDoc] = {
-    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (src: String, it: Iterator[SrcDoc], state: GroupState[Long]) => {
-          val w = math.max(1L, weights.getOrElse(src, 1L))
-          var rk = state.getOption.getOrElse(0L)
-          val out = Vector.newBuilder[SlotDoc]
-          it.toSeq.sortBy(_.doc_id).foreach { d =>
-            rk += 1L
-            out += SlotDoc(d.doc_id, src, rk, rk * 1000000L / w)
-          }
-          state.update(rk)
-          out.result().iterator
-        })
   }
 
   /** Streaming PII scrub: the redaction chain applied at ingest — a
@@ -536,41 +462,6 @@ object StreamingCorpusOps {
         .map(a => Seq(("a", Multimodal.audioFingerprintBands(a)))))
       .getOrElse(Seq.empty)
   }
-
-  /** Banding projection for the SHIFT-TOLERANT audio fingerprint: WAV
-    * payloads through the real codec, one row per DISTINCT 32-bit
-    * shingle value (`Multimodal.audioShingleValues`) — value, not
-    * position, is the bucket key, so a clip arriving in a later
-    * micro-batch offset by whole windows still lands in the buckets
-    * its original populated. band_idx is constant 0: the shingle
-    * space is one banding dimension, and the `as:` modality tag keeps
-    * it disjoint from every dHash/envelope bucket.
-    */
-  def audioShingleBandRows(assets: DataFrame): Dataset[BandRow] = {
-    implicit val inEnc: Encoder[(Long, Array[Byte])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)
-    assets.select(col("doc_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, payload) =>
-          graft.operators.Multimodal.decodeWav(payload).toSeq.flatMap { clip =>
-            graft.operators.Multimodal.audioShingleValues(clip).distinct
-              .map(v => BandRow(0, s"as:$v", id))
-          }
-        }
-      }
-  }
-
-  /** Incremental shingle near-dup candidates — the streaming twin of
-    * `dedup_audio_shingle`'s candidate stage: the same bucket-state
-    * core, fed by shingle values. NOTE the batch query VERIFIES by
-    * shared-value count (>= 8); these are the pre-verify candidates,
-    * the same contract as [[minhashCandidates]] vs
-    * `dedup_minhash_verified`.
-    */
-  def audioShingleCandidates(assets: DataFrame, maxBucket: Int = 512,
-      ttl: Option[java.time.Duration] = None): Dataset[CandidatePair] =
-    candidatesFromBands(audioShingleBandRows(assets), maxBucket, ttl)
 
   /** Incremental perceptual near-dup candidates: the SAME bucket-state
     * operator as [[minhashCandidates]] fed by fingerprint bands — a

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
-import graft.enrichment.{LiveEnrichment, StubApiServer}
+import graft.enrichment.LiveEnrichment
 import graft.schema.ChangeSchema
 import graft.streaming.{RcSinks, RcStreaming}
 

@@ -11,6 +11,29 @@ class ExtensionInvariantsSpec extends SparkSpec {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf0001)
 
+  /** The retrieval serving surface chained the way a search-backed
+    * curation run uses it — posting store and persisted index BM25
+    * (must agree exactly), hybrid RRF fusion, hard-negative mining,
+    * MMR rerank, link-graph communities — summarized in one
+    * `RETRIEVAL_DEMO ...` line (seeded queries, rounded scores, pinned
+    * tiebreaks).
+    */
+  private def retrievalSummary(): String = {
+    val bm25 = q("search_bm25_topk").collect()
+    val indexed = q("search_bm25_indexed").collect()
+    val indexedEq = bm25.sameElements(indexed)
+    val hybridTop = q("search_hybrid_rrf").select("doc_id").head().getLong(0)
+    val hardNeg = q("mine_hard_negatives")
+      .where("is_hard_negative = 1").count()
+    val mmrTop2 = q("sim_mmr_rerank").select("vec_id").limit(2)
+      .collect().map(_.getLong(0)).mkString(",")
+    val nCommunities = q("crawl_communities")
+      .select("community").distinct().count()
+    s"RETRIEVAL_DEMO bm25=${bm25.length} indexed_eq=$indexedEq " +
+      s"hybrid_top=$hybridTop hardneg=$hardNeg mmr_top2=$mmrTop2 " +
+      s"communities=$nCommunities"
+  }
+
   test("jaccard pairs are ordered, bounded, and above threshold") {
     val rows = q("dedup_ngram_jaccard")
       .as[(Long, Long, Double)].collect()
@@ -1455,7 +1478,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
   }
 
   test("retrieval demo line is pinned verbatim") {
-    assert(RetrievalDemo.summary(spark, sf0001) ===
+    assert(retrievalSummary() ===
       "RETRIEVAL_DEMO bm25=20 indexed_eq=true hybrid_top=402 hardneg=5 " +
         "mmr_top2=17,299 communities=22")
   }

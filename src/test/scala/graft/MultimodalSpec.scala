@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Jpeg, Multimodal}
+import graft.operators.{Jpeg, JpegProgressive, Multimodal}
 
 /** Multimodal: the Spark plumbing (schema, bucketed partitioning,
   * batch shape, determinism) plus the five real codecs — PGM, BMP,
@@ -1099,7 +1099,7 @@ class MultimodalSpec extends SparkSpec {
     // 8x8 flat gray 144, quant all-16: FDCT DC = 8*(144-128) = 128,
     // quantized 8. Built byte by byte from T.81 Annex G with MINIMAL
     // hand tables (DC cats 0-3 at 3 bits, AC table = EOB only), NOT via
-    // encodeJpegProgressive — an encoder/decoder pair agreeing on the
+    // JpegProgressive.encode — an encoder/decoder pair agreeing on the
     // same wrong scan semantics can't pass. Scans: DC first at Al=1
     // (sends 8>>1 = 4, cat 3 code '011' + bits '100'), AC first 1-63
     // (EOB '00'), DC refine (bit (8>>0)&1 = 0).
@@ -1146,7 +1146,7 @@ class MultimodalSpec extends SparkSpec {
       }
       val img = Multimodal.PgmImage(w, h, 255, px)
       val seqDec = Jpeg.decodeJpeg(Jpeg.encodeJpeg(img)).get
-      val prog = Jpeg.encodeJpegProgressive(img)
+      val prog = JpegProgressive.encode(img)
       val progDec = Jpeg.decodeJpeg(prog)
       assert(progDec.isDefined, s"trial $trial ${w}x$h: progressive decode failed")
       assert(progDec.get.width === w && progDec.get.height === h)
@@ -1168,7 +1168,7 @@ class MultimodalSpec extends SparkSpec {
       }
       val img = Multimodal.PgmImage(w, h, 255, px)
       val seqDec = Jpeg.decodeJpeg(Jpeg.encodeJpeg(img)).get
-      val progDec = Jpeg.decodeJpeg(Jpeg.encodeJpegProgressive(img))
+      val progDec = Jpeg.decodeJpeg(JpegProgressive.encode(img))
       assert(progDec.isDefined, s"${w}x$h $kind: progressive decode failed")
       assert(java.util.Arrays.equals(progDec.get.pixels, seqDec.pixels),
         s"${w}x$h $kind: progressive != sequential decode")
@@ -1178,7 +1178,7 @@ class MultimodalSpec extends SparkSpec {
   test("progressive JPEG survives fuzzing and mixes with baseline frames") {
     val img = Multimodal.PgmImage(20, 16, 255,
       Array.tabulate(320)(i => ((i * 7) % 251).toByte))
-    val prog = Jpeg.encodeJpegProgressive(img)
+    val prog = JpegProgressive.encode(img)
     // random bit flips must never throw — reject or decode, both fine
     val rnd = new scala.util.Random(11)
     for (_ <- 0 until 300) {

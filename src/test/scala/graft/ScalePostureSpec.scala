@@ -313,4 +313,30 @@ class ScalePostureSpec extends SparkSpec {
         s"AQE did not mark the join as skew-split:\n$p")
     }
   }
+
+  test("10x dense replica: the IVF quantizer keeps within-cell pair work under n^2/16") {
+    // the k ~ sqrt(n) sizing claims within-cell pair work stays about
+    // linear when n grows 10x. Replicas are exact duplicates, so every
+    // copy lands in its original's cell: the collapse into a few
+    // mega-cells this bound would catch. The audit trains its own
+    // index through the same defaultK / trainIvf path production calls.
+    import graft.operators.Similarity
+    val src = new java.io.File(sf0001).getParent + "/sf0.01"
+    val dir = java.nio.file.Files.createTempDirectory("scale10x").toString
+    val nBase = Tables.parquetRowCount(spark, s"$src/embeddings.parquet")
+    ScaleCorpus.denseReplicas(Tables.embeddings(spark, src), "vec_id", nBase, 10)()
+      .write.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.embeddings(spark, dir)
+    val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
+    assert(n === 10 * nBase)
+    val k = Similarity.defaultK(n)
+    val idx = Similarity.trainIvf(spark, emb, k, iters = 3)
+    val sizes = Similarity.assignCells(emb, Similarity.centroidDf(spark, idx.centroids))
+      .groupBy("cell").count().as[(Int, Long)].collect()
+    val pairWork = sizes.map { case (_, c) => c * c }.sum
+    val quadratic = n * n
+    assert(pairWork < quadratic / 16,
+      s"10x quantizer degenerated: sum(c^2)=$pairWork vs n^2/16=${quadratic / 16} " +
+        s"over ${sizes.length} of $k cells")
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
-import graft.sources.{SseHttpRelay, StubSseServer}
+import graft.sources.SseHttpRelay
 
 /** Live HTTP SSE transport: stub endpoint -> relay -> buffer file ->
   * V2 source. Covers steady streaming, and reconnect-with-Last-Event-ID

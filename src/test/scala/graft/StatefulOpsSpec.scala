@@ -3,10 +3,22 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.StatefulOps
-import graft.streaming.StatefulOps.{UserEvent, UserTotal}
 
 /** Custom stateful op: state must accumulate across micro-batches. */
 class StatefulOpsSpec extends SparkSpec {
+
+  /** transformWithState needs the RocksDB state store provider. */
+  private def withRocksDb(body: => Unit): Unit = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
 
   test("running sample quantiles equal batch q48 after SHUFFLED multi-batch arrival") {
     // the bounded sample is a deterministic SET (the 64 smallest
@@ -45,61 +57,54 @@ class StatefulOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("flatMapGroupsWithState accumulates per-user totals across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[UserEvent]
-    val q = StatefulOps.runningTotals(in.toDS())
-      .writeStream.format("memory").queryName("totals")
-      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(UserEvent(1, 5), UserEvent(1, 2), UserEvent(2, 1))
-      q.processAllAvailable()
-      in.addData(UserEvent(1, 3), UserEvent(3, 4))
-      q.processAllAvailable()
-      val last = spark.table("totals").as[UserTotal].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.batches) }
-      assert(last(1L) === UserTotal(1, 10, 2)) // 7 in batch 1, +3 in batch 2
-      assert(last(2L) === UserTotal(2, 1, 1))
-      assert(last(3L) === UserTotal(3, 4, 1))
-    } finally q.stop()
-  }
-
   test("politeness gate: per-host budget per batch, overflow deferred in priority order") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StatefulOps.{FrontierUrl, GateDecision}
-    val in = MemoryStream[FrontierUrl]
-    val q = graft.streaming.StatefulOps.politenessGate(in.toDS(), budget = 2)
-      .writeStream.format("memory").queryName("gate")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // batch 0: five URLs for one host + one for another
-      in.addData(
-        FrontierUrl("a.com", "a/1", 5), FrontierUrl("a.com", "a/2", 4),
-        FrontierUrl("a.com", "a/3", 3), FrontierUrl("a.com", "a/4", 2),
-        FrontierUrl("a.com", "a/5", 1), FrontierUrl("b.com", "b/1", 9))
-      q.processAllAvailable()
-      // batch 1: a low-priority tick for a.com (the frontier re-ticks
-      // hosts it wants drained — see the draining contract) lets the
-      // deferred queue advance
-      in.addData(FrontierUrl("b.com", "b/2", 1), FrontierUrl("a.com", "a/6", 0))
-      q.processAllAvailable()
-      in.addData(FrontierUrl("c.com", "c/1", 1),
-        // a late high-priority URL jumps the remaining deferred queue
-        FrontierUrl("a.com", "a/9", 99))
-      q.processAllAvailable()
-      val got = spark.table("gate").as[GateDecision].collect()
-        .groupBy(_.host).map { case (h, rs) =>
-          h -> rs.sortBy(r => (r.emitted_batch, r.url)).map(r => (r.url, r.emitted_batch)).toSeq }
-      // a.com: top-2 by priority in its batch 0, next 2 in batch 1,
-      // then the late a/9 outranks deferred a/5 in batch 2 (a/6 stays
-      // deferred past the test's horizon)
-      assert(got("a.com") === Seq(("a/1", 0L), ("a/2", 0L),
-        ("a/3", 1L), ("a/4", 1L), ("a/5", 2L), ("a/9", 2L)))
-      assert(got("b.com") === Seq(("b/1", 0L), ("b/2", 1L)))
-      assert(got("c.com") === Seq(("c/1", 0L)))
-    } finally q.stop()
+    withRocksDb {
+      val in = MemoryStream[FrontierUrl]
+      // a drain window far past the test's horizon: no timer fires, so
+      // a host's window advances only when the host sees input
+      val q = StatefulOps.politenessGateTws(in.toDS(), budget = 2,
+          drain = java.time.Duration.ofHours(1))
+        .writeStream.format("memory").queryName("gate")
+        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      // processAllAvailable() never returns once timers are registered
+      // (see the timer gate cases): wait for each batch's emissions
+      def rows() = spark.table("gate").as[GateDecision].collect()
+      def awaitRows(n: Int): Unit = {
+        val deadline = System.currentTimeMillis + 120000
+        while (rows().length < n && System.currentTimeMillis < deadline)
+          Thread.sleep(100)
+        assert(rows().length === n, s"expected $n emissions: ${rows().toSeq}")
+      }
+      try {
+        // batch 0: five URLs for one host + one for another
+        in.addData(
+          FrontierUrl("a.com", "a/1", 5), FrontierUrl("a.com", "a/2", 4),
+          FrontierUrl("a.com", "a/3", 3), FrontierUrl("a.com", "a/4", 2),
+          FrontierUrl("a.com", "a/5", 1), FrontierUrl("b.com", "b/1", 9))
+        awaitRows(3)
+        // batch 1: a low-priority tick for a.com lets the deferred
+        // queue advance
+        in.addData(FrontierUrl("b.com", "b/2", 1), FrontierUrl("a.com", "a/6", 0))
+        awaitRows(6)
+        in.addData(FrontierUrl("c.com", "c/1", 1),
+          // a late high-priority URL jumps the remaining deferred queue
+          FrontierUrl("a.com", "a/9", 99))
+        awaitRows(9)
+        val got = rows()
+          .groupBy(_.host).map { case (h, rs) =>
+            h -> rs.sortBy(r => (r.emitted_batch, r.url)).map(r => (r.url, r.emitted_batch)).toSeq }
+        // a.com: top-2 by priority in its batch 0, next 2 in batch 1,
+        // then the late a/9 outranks deferred a/5 in batch 2 (a/6 stays
+        // deferred past the test's horizon)
+        assert(got("a.com") === Seq(("a/1", 0L), ("a/2", 0L),
+          ("a/3", 1L), ("a/4", 1L), ("a/5", 2L), ("a/9", 2L)))
+        assert(got("b.com") === Seq(("b/1", 0L), ("b/2", 1L)))
+        assert(got("c.com") === Seq(("c/1", 0L)))
+      } finally q.stop()
+    }
   }
 
   test("running top-k leaderboard: streaming snapshots match the batch TopK over the same rows") {
@@ -202,49 +207,41 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("timer gate drains a deferred URL with NO new event for its host") {
-    // the case fMGWS cannot express: under NoTimeout a data-less group
-    // is never invoked, so a quiet host's deferred queue starves. The
-    // transformWithState twin arms a processing-time timer per
+    // the case an fMGWS gate cannot express: under NoTimeout a
+    // data-less group is never invoked, so a quiet host's deferred
+    // queue starves. The gate arms a processing-time timer per
     // deferral; when the budget window rolls over, the host drains on
     // the timer even though every subsequent batch carries only OTHER
     // hosts' traffic.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.streaming.StatefulOps.{FrontierUrl, GateDecision}
-    // transformWithState requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[FrontierUrl]
-    val q = graft.streaming.StatefulOps.politenessGateTws(in.toDS(), budget = 2,
-        drain = java.time.Duration.ofMillis(300))
-      .writeStream.format("memory").queryName("timergate")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // ONE batch of input, then nothing ever again for any host. NOTE
-      // processAllAvailable() is unusable here BY DESIGN: registered
-      // timers make every execution require a follow-up batch, so the
-      // engine never latches noNewData — poll the sink instead.
-      in.addData(FrontierUrl("a.com", "a/1", 5), FrontierUrl("a.com", "a/2", 4),
-        FrontierUrl("a.com", "a/3", 3))
-      val deadline = System.currentTimeMillis + 120000
-      def rows() = spark.table("timergate").as[GateDecision].collect()
-      while (rows().length < 3 && System.currentTimeMillis < deadline)
-        Thread.sleep(200)
-      val got = rows().map(r => r.url -> r.emitted_batch).toMap
-      assert(got.keySet === Set("a/1", "a/2", "a/3"),
-        s"deferred a/3 must drain on the timer with no further input: $got")
-      // the budget window proves a/3 was DEFERRED first (window 0
-      // emitted the top-2 by priority; the timer's window 1 released
-      // it) — not just emitted late by scheduling noise
-      assert(got("a/1") === 0L && got("a/2") === 0L && got("a/3") === 1L,
-        s"expected a/3 in the timer's window 1: $got")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDb {
+      val in = MemoryStream[FrontierUrl]
+      val q = graft.streaming.StatefulOps.politenessGateTws(in.toDS(), budget = 2,
+          drain = java.time.Duration.ofMillis(300))
+        .writeStream.format("memory").queryName("timergate")
+        .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+      try {
+        // ONE batch of input, then nothing ever again for any host. NOTE
+        // processAllAvailable() is unusable here BY DESIGN: registered
+        // timers make every execution require a follow-up batch, so the
+        // engine never latches noNewData — poll the sink instead.
+        in.addData(FrontierUrl("a.com", "a/1", 5), FrontierUrl("a.com", "a/2", 4),
+          FrontierUrl("a.com", "a/3", 3))
+        val deadline = System.currentTimeMillis + 120000
+        def rows() = spark.table("timergate").as[GateDecision].collect()
+        while (rows().length < 3 && System.currentTimeMillis < deadline)
+          Thread.sleep(200)
+        val got = rows().map(r => r.url -> r.emitted_batch).toMap
+        assert(got.keySet === Set("a/1", "a/2", "a/3"),
+          s"deferred a/3 must drain on the timer with no further input: $got")
+        // the budget window proves a/3 was DEFERRED first (window 0
+        // emitted the top-2 by priority; the timer's window 1 released
+        // it) — not just emitted late by scheduling noise
+        assert(got("a/1") === 0L && got("a/2") === 0L && got("a/3") === 1L,
+          s"expected a/3 in the timer's window 1: $got")
+      } finally q.stop()
     }
   }
 
@@ -254,9 +251,6 @@ class StatefulOpsSpec extends SparkSpec {
     // the recovered processing-time timer must fire and drain it.
     import spark.implicits._
     import graft.streaming.StatefulOps.{FrontierUrl, GateDecision}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val root = java.nio.file.Files.createTempDirectory("gateckpt").toString
     val inDir = s"$root/in"; val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
     Seq(FrontierUrl("a.com", "a/1", 5), FrontierUrl("a.com", "a/2", 4),
@@ -277,7 +271,7 @@ class StatefulOpsSpec extends SparkSpec {
     def urls(): Set[String] =
       try spark.read.parquet(outDir).as[GateDecision].collect().map(_.url).toSet
       catch { case _: Exception => Set.empty }
-    try {
+    withRocksDb {
       val q1 = start()
       val d1 = System.currentTimeMillis + 120000
       // stop as soon as the budgeted two are out — ideally BEFORE the
@@ -293,11 +287,6 @@ class StatefulOpsSpec extends SparkSpec {
       q2.stop()
       assert(urls() === Set("a/1", "a/2", "a/3"),
         s"deferred URL must drain after restart (pre-restart: $preRestart, got: ${urls()})")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

@@ -389,32 +389,6 @@ class StreamingCorpusSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("audio shingle candidates: a time-OFFSET clip pairs across batches") {
-    import graft.operators.Multimodal
-    // the shifted family: batch-2 member starts 3 windows (24 samples)
-    // later than the batch-1 member — the global-envelope fingerprint
-    // realigns and misses this; shingle VALUES survive the shift
-    val bhA = "00112233445566778899aabbccddeeff"
-    val bhB = "fedcba98765432100123456789abcdef"
-    val in = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingCorpusOps.audioShingleCandidates(
-        in.toDF().toDF("doc_id", "payload"))
-      .writeStream.format("memory").queryName("cand_shingle")
-      .outputMode(OutputMode.Append).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData((1L, Multimodal.syntheticFamilyWavShifted(bhA, "aa0034567890123456789012345678ab")),
-        (20L, Multimodal.syntheticFamilyWavShifted(bhB, "cc0034567890123456789012345678ab")))
-      drain(q)
-      in.addData((2L, Multimodal.syntheticFamilyWavShifted(bhA, "ab0334567890123456789012345678ab")))
-      drain(q)
-      val pairs = spark.sql("SELECT DISTINCT a_id, b_id FROM cand_shingle")
-        .as[(Long, Long)].collect().toSet
-      assert(pairs.contains((1L, 2L)), s"offset clip did not pair: $pairs")
-      assert(!pairs.exists { case (a, b) => (a >= 20) != (b >= 20) },
-        s"cross-family candidate leaked: $pairs")
-    } finally q.stop()
-  }
-
   test("bucket freeze: bounded one-sided over-emission vs the batch whole-bucket drop") {
     // Batch drops an over-cap bucket WHOLE (zero pairs); an Append-mode
     // stream cannot retract, so pairs emitted before the freeze stand.
@@ -658,77 +632,6 @@ class StreamingCorpusSpec extends SparkSpec {
         t2.split(" ").filter(_.nonEmpty).toSeq,
         s"doc $d kept token streams diverge")
     }
-  }
-
-  test("interleave gate: per-source ranks persist, vt = rk*1e6 div weight") {
-    import graft.streaming.StreamingCorpusOps.SrcDoc
-    val in = MemoryStream[SrcDoc]
-    val q = StreamingCorpusOps.interleaveGate(in.toDS(),
-        Map("a" -> 3L, "b" -> 1L))
-      .writeStream.format("memory").queryName("il_t1")
-      .outputMode(OutputMode.Append).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(SrcDoc(1L, "x", "a"), SrcDoc(2L, "x", "a"), SrcDoc(10L, "x", "b"))
-      drain(q)
-      in.addData(SrcDoc(3L, "x", "a"), SrcDoc(11L, "x", "b"), SrcDoc(20L, "x", "c"))
-      drain(q)
-      val got = spark.sql("SELECT doc_id, source, rk, vt_micro FROM il_t1 ORDER BY doc_id")
-        .as[(Long, String, Long, Long)].collect().toSeq
-      assert(got === Seq(
-        (1L, "a", 1L, 333333L),   // 1e6/3 floor
-        (2L, "a", 2L, 666666L),
-        (3L, "a", 3L, 1000000L),  // rank persisted across batches
-        (10L, "b", 1L, 1000000L),
-        (11L, "b", 2L, 2000000L),
-        (20L, "c", 1L, 1000000L)  // unknown source -> weight 1
-      ), s"got $got")
-    } finally q.stop()
-  }
-
-  test("token-budget gate admits greedily per shard and persists spend across batches") {
-    import graft.streaming.StreamingCorpusOps.SrcDoc
-    // 4-char words => 1 subword each; "w w w w" = 4 tokens = 4 subwords
-    def doc(id: Long, words: Int, src: String) =
-      SrcDoc(id, Seq.fill(words)("word").mkString(" "), src)
-    val in = MemoryStream[SrcDoc]
-    val q = StreamingCorpusOps.tokenBudgetGate(in.toDS(), budget = 10L)
-      .writeStream.format("memory").queryName("budget_t1")
-      .outputMode(OutputMode.Append).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(doc(1L, 4, "a"), doc(2L, 4, "a"), doc(3L, 8, "b"))
-      drain(q)
-      // batch 2: doc 4 (4 subwords) would exceed a's remaining 2 —
-      // rejected; doc 5 (2 subwords) still fits greedily; b has 2 left
-      in.addData(doc(4L, 4, "a"), doc(5L, 2, "a"), doc(6L, 4, "b"))
-      drain(q)
-      val admitted = spark.sql("SELECT doc_id FROM budget_t1").as[Long].collect().toSet
-      assert(admitted === Set(1L, 2L, 3L, 5L),
-        "spend must persist across batches; greedy admission skips only non-fitting docs")
-    } finally q.stop()
-  }
-
-  test("running KMV distinct estimate converges to the batch sketch across batches") {
-    import graft.streaming.StatefulOps
-    val agg = new graft.functions.SketchAgg.KMinValues(16)
-    // two batches of hashed ids per key; the post-batch-2 estimate must
-    // equal folding ALL rows through the same aggregator
-    val b1 = (1L to 300L).map(i => ("clicks", i * 2654435761L % 4294967296L))
-    val b2 = (301L to 500L).map(i => ("clicks", i * 2654435761L % 4294967296L))
-    val expected = agg.finish((b1 ++ b2).foldLeft(agg.zero)((b, r) => agg.reduce(b, r._2)))
-    val in = MemoryStream[(String, Long)]
-    val q = StatefulOps.runningDistinct(in.toDS(), k = 16)
-      .toDF("key", "est")
-      .writeStream.format("memory").queryName("kmv_t1")
-      .outputMode(OutputMode.Update).trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      in.addData(b1: _*); drain(q)
-      in.addData(b2: _*); drain(q)
-      // memory sink in Update mode appends each batch's row; the LAST
-      // row per key is the current estimate
-      val last = spark.sql("SELECT est FROM kmv_t1").as[Double].collect().last
-      assert(last === expected,
-        "sketch state across micro-batches must equal the one-shot batch fold")
-    } finally q.stop()
   }
 
   test("exact dedup keeps the first arrival across batches") {

@@ -166,12 +166,88 @@ class StreamingWindowSpec extends SparkSpec {
   }
 
   test("StreamDemo event-analytics smoke line is pinned verbatim") {
-    // the runMain contract: funnel stages per user (full funnel /
+    // the pinned contract: funnel stages per user (full funnel /
     // stalled-at-signup / purchase-without-signup), the k=2 running
     // leaderboard after 3 batches (scores 900 > 800), and the session
     // set (user 10's batches MERGED into one 2-event session; user
     // 11's 85-min gap split into two)
-    assert(StreamDemo.eventAnalyticsDemo(spark) ===
+    assert(eventAnalyticsDemo() ===
       "STREAM_DEMO funnel_stages=3,1,0 topk=101,103 sessions=10:2,11:1,11:1")
+  }
+
+  /** Deterministic 3-batch run of the streaming event-analytics ops —
+    * per-user funnel progression, running per-type top-k, and session
+    * windows that merge ACROSS micro-batches — summarized in the
+    * `STREAM_DEMO ...` line the last case pins.
+    */
+  private def eventAnalyticsDemo(): String = {
+    import graft.streaming.StatefulOps
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def ts(s: String) = Timestamp.valueOf(s)
+    def us(s: String) = ts(s).getTime * 1000L
+
+    // funnel: user 1 completes all 3 stages across batches, user 2
+    // stalls after signup, user 3 purchases without signup (stage 0)
+    val fin = MemoryStream[StatefulOps.FunnelEvent]
+    val fq = StatefulOps.funnelStages(fin.toDS())
+      .writeStream.format("memory").queryName("demo_funnel")
+      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
+    // top-k: per-type running leaderboard, k=2, scores in cents
+    val tin = MemoryStream[StatefulOps.ScoredEvent]
+    val tq = StatefulOps.runningTopK(tin.toDS(), k = 2)
+      .writeStream.format("memory").queryName("demo_topk")
+      .outputMode("update").trigger(Trigger.ProcessingTime(0)).start()
+    // session windows: user 10's two batches merge into ONE session
+    // (10-min gap < the 30-min rule); user 11's second burst starts a
+    // new one; a late user-12 tick advances the watermark to close all
+    val sin = MemoryStream[(Long, Timestamp)]
+    val sq = sin.toDF().toDF("user_id", "ts")
+      .withWatermark("ts", "10 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("user_id"), col("session_window.start").as("s"),
+        col("session_window.end").as("e"), col("n"))
+      .writeStream.format("memory").queryName("demo_sessions")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      // batch 1
+      fin.addData(
+        StatefulOps.FunnelEvent(1L, us("2026-08-12 10:00:00"), "signup"),
+        StatefulOps.FunnelEvent(2L, us("2026-08-12 10:00:00"), "signup"),
+        StatefulOps.FunnelEvent(3L, us("2026-08-12 10:00:00"), "purchase"))
+      tin.addData(
+        StatefulOps.ScoredEvent("view", 500L, 100L, 1L),
+        StatefulOps.ScoredEvent("view", 900L, 101L, 2L))
+      sin.addData((10L, ts("2026-08-12 10:00:00")), (11L, ts("2026-08-12 10:05:00")))
+      Seq(fq, tq, sq).foreach(_.processAllAvailable())
+      // batch 2
+      fin.addData(StatefulOps.FunnelEvent(1L, us("2026-08-12 10:05:00"), "purchase"))
+      tin.addData(StatefulOps.ScoredEvent("view", 700L, 102L, 3L))
+      sin.addData((10L, ts("2026-08-12 10:10:00")), (11L, ts("2026-08-12 11:30:00")))
+      Seq(fq, tq, sq).foreach(_.processAllAvailable())
+      // batch 3 (+ a far-future tick to push the session watermark)
+      fin.addData(StatefulOps.FunnelEvent(1L, us("2026-08-12 10:06:00"), "click"))
+      tin.addData(StatefulOps.ScoredEvent("view", 800L, 103L, 4L))
+      sin.addData((12L, ts("2026-08-12 15:00:00")))
+      Seq(fq, tq, sq).foreach(_.processAllAvailable())
+
+      // latest funnel state per user (Update mode re-emits on change)
+      val stages = spark.table("demo_funnel")
+        .groupBy(col("user_id"))
+        .agg(max(when(col("c_us").isNotNull, 3)
+          .when(col("p_us").isNotNull, 2)
+          .when(col("s_us").isNotNull, 1).otherwise(0)).as("stage"))
+        .orderBy(col("user_id"))
+        .select(col("stage")).as[Int].collect().mkString(",")
+      val top = spark.table("demo_topk")
+        .filter(col("batches") === 3L).orderBy(col("rk"))
+        .select(col("event_id")).as[Long].collect().mkString(",")
+      val sessions = spark.table("demo_sessions")
+        .orderBy(col("user_id"), col("s"))
+        .select(col("user_id"), col("n")).as[(Long, Long)].collect()
+        .map { case (u, n) => s"$u:$n" }.mkString(",")
+      s"STREAM_DEMO funnel_stages=$stages topk=$top sessions=$sessions"
+    } finally Seq(fq, tq, sq).foreach(_.stop())
   }
 }

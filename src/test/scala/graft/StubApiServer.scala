@@ -1,4 +1,4 @@
-package graft.enrichment
+package graft
 
 import java.net.InetSocketAddress
 import java.net.URLDecoder
@@ -13,8 +13,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * `action=parse&oldid=...&prop=wikitext` (`scanner.py:178-196`) — from
   * in-memory maps, with the same response shapes including the
   * missing-key bodies that make the real API raise QueryRaceCondition.
-  * JDK-builtin HttpServer, no dependencies; used by EnrichmentSpec and
-  * drivable for demos. `editCounts` is settable: a user's count moves
+  * JDK-builtin HttpServer, no dependencies; used by EnrichmentSpec.
+  * `editCounts` is settable: a user's count moves
   * with every edit, and the next lookup must see the new one.
   */
 final class StubApiServer(
