@@ -26,6 +26,24 @@ trait StringInputs extends Expression {
     })
 }
 
+/** A string expression that is one static `TextExpressions` call per
+  * row, `TextExpressions.<staticName>(input, staticArgs...)`: `call`
+  * evaluates it and the generated code names it. One static call per
+  * row keeps the surrounding projection inside whole-stage codegen (vs
+  * CodegenFallback, which would split the span).
+  */
+trait StaticStringCall extends UnaryExpression with StringInputs {
+  protected def staticName: String
+  protected def staticArgs: Seq[Any] = Nil
+  protected def call(input: UTF8String): Any
+
+  override def nullSafeEval(input: Any): Any = call(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => (c +: staticArgs)
+      .mkString(s"graft.functions.TextExpressions.$staticName(", ", ", ")"))
+}
+
 /** Native word-shingling for the dedup family's hottest map stage.
   *
   * The declarative formulation — `transform(sequence(1, n_sh), i =>
@@ -33,8 +51,7 @@ trait StringInputs extends Expression {
   * higher-order function is CodegenFallback with per-element lambda
   * dispatch and a fresh n-element array allocation per shingle; at
   * sf0.1 that one expression cost more than the entire rest of the
-  * n-gram Jaccard pipeline (~1.5 s of a 1.7 s query). This is the
-  * task's "drop to a custom Expression" case.
+  * n-gram Jaccard pipeline (~1.5 s of a 1.7 s query).
   *
   * Semantics are IDENTICAL to the HOF form over `split(text, ' ')`:
   * splitting on every single space and re-joining with single spaces
@@ -47,21 +64,16 @@ trait StringInputs extends Expression {
   * `greatest(size(ws)-(n-1), 1)` guard of the HOF form and the DuckDB
   * oracle's `greatest(len(ws)-4, 1)`.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression with StringInputs {
+case class WordShingles(child: Expression, n: Int) extends StaticStringCall {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.shingleBytes(input.asInstanceOf[UTF8String], n)
-
-  // One static call per row keeps the surrounding projection inside
-  // whole-stage codegen (vs CodegenFallback, which would split the span).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.shingleBytes($c, $n)")
+  protected def staticName: String = "shingleBytes"
+  override protected def staticArgs: Seq[Any] = Seq(n)
+  protected def call(input: UTF8String): Any = TextExpressions.shingleBytes(input, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -83,25 +95,20 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression with 
   * tokens reconstructs the original bytes, so every window AND every
   * chunk is a contiguous byte range of the input — the scan feeds
   * those ranges straight into one thread-local MessageDigest, no
-  * intermediate strings at all. r16 A/B at sf0.1 (same run,
-  * min-of-7): full dedup_cdc_chunks 0.790 s (HOF) -> 0.414 s
-  * (native); the md5 work itself is irreducible (the oracle pays it
-  * too), the delta is the lambda/allocation overhead.
+  * intermediate strings at all. The md5 work itself is irreducible
+  * (the oracle pays it too); what this saves is the lambda/allocation
+  * overhead.
   */
-case class CdcChunkHashes(child: Expression, window: Int)
-    extends UnaryExpression with StringInputs {
+case class CdcChunkHashes(child: Expression, window: Int) extends StaticStringCall {
 
   require(window >= 2, s"cdc window must be >= 2 tokens, got $window")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "cdc_chunk_hashes"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.cdcChunkHashes(input.asInstanceOf[UTF8String], window)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.cdcChunkHashes($c, $window)")
+  protected def staticName: String = "cdcChunkHashes"
+  override protected def staticArgs: Seq[Any] = Seq(window)
+  protected def call(input: UTF8String): Any = TextExpressions.cdcChunkHashes(input, window)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -171,19 +178,16 @@ case class PhraseCount(child: Expression, w1: String, w2: String)
   * downstream `explode` consumes a ready array with no `array_distinct`
   * (a per-element hash-set pass over interpreted equality) in between.
   */
-case class DistinctShingles(child: Expression, n: Int) extends UnaryExpression with StringInputs {
+case class DistinctShingles(child: Expression, n: Int) extends StaticStringCall {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "distinct_shingles"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.distinctShingleBytes(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.distinctShingleBytes($c, $n)")
+  protected def staticName: String = "distinctShingleBytes"
+  override protected def staticArgs: Seq[Any] = Seq(n)
+  protected def call(input: UTF8String): Any = TextExpressions.distinctShingleBytes(input, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -198,8 +202,7 @@ case class DistinctShingles(child: Expression, n: Int) extends UnaryExpression w
   * hotspot of the n-gram Jaccard pipeline; the hash now runs AFTER the
   * explode, compiled, one row at a time.
   */
-case class DistinctShingleStructs(child: Expression, n: Int)
-    extends UnaryExpression with StringInputs {
+case class DistinctShingleStructs(child: Expression, n: Int) extends StaticStringCall {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
@@ -210,12 +213,9 @@ case class DistinctShingleStructs(child: Expression, n: Int)
     containsNull = false)
   override def prettyName: String = "distinct_shingle_structs"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.distinctShingleStructBytes(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.distinctShingleStructBytes($c, $n)")
+  protected def staticName: String = "distinctShingleStructBytes"
+  override protected def staticArgs: Seq[Any] = Seq(n)
+  protected def call(input: UTF8String): Any = TextExpressions.distinctShingleStructBytes(input, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -230,9 +230,8 @@ case class DistinctShingleStructs(child: Expression, n: Int)
   * `size(filter(ws, w => w === term))` formulation of the tf-idf /
   * posting-list family: that HOF filter is CodegenFallback (a lambda
   * dispatch per element) and re-scans the whole token array once per
-  * DISTINCT term — O(distinct-terms × tokens) per document, the worst
-  * real-work ratio on the round-10 board (corpus_keywords 17.8× the
-  * oracle). This computes every (term, tf) pair in a single
+  * DISTINCT term — O(distinct-terms × tokens) per document. This
+  * computes every (term, tf) pair in a single
   * O(tokens) counting scan; terms are zero-copy UTF8String slices
   * over the input's backing bytes (the distinct-shingle pattern).
   * Per-doc work is linear, so the win over the HOF formulation GROWS
@@ -247,7 +246,7 @@ case class DistinctShingleStructs(child: Expression, n: Int)
   * pressure ever shows up here, copy terms onto fresh arrays with
   * `UTF8String.fromBytes` per term.
   */
-case class TermCountStructs(child: Expression) extends UnaryExpression with StringInputs {
+case class TermCountStructs(child: Expression) extends StaticStringCall {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -256,12 +255,8 @@ case class TermCountStructs(child: Expression) extends UnaryExpression with Stri
     containsNull = false)
   override def prettyName: String = "term_count_structs"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.termCountStructBytes(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.termCountStructBytes($c)")
+  protected def staticName: String = "termCountStructBytes"
+  protected def call(input: UTF8String): Any = TextExpressions.termCountStructBytes(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -336,16 +331,13 @@ case class PhraseRuns(child: Expression, stopCsv: String)
   * a tight loop per row — a pure map, no Generate, no shuffle at all
   * before the consumer's own bucketing.
   */
-case class SimHash32(child: Expression) extends UnaryExpression with StringInputs {
+case class SimHash32(child: Expression) extends StaticStringCall {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash32"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.simhash32(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExpressions.simhash32($c)")
+  protected def staticName: String = "simhash32"
+  protected def call(input: UTF8String): Any = TextExpressions.simhash32(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -363,19 +355,16 @@ case class SimHash32(child: Expression) extends UnaryExpression with StringInput
   * (Min over a multiset equals min over its distinct set, so no dedup
   * pass is needed.)
   */
-case class MinHashSlices(child: Expression, n: Int) extends UnaryExpression with StringInputs {
+case class MinHashSlices(child: Expression, n: Int) extends StaticStringCall {
 
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "minhash_slices"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.minhashSlices(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.minhashSlices($c, $n)")
+  protected def staticName: String = "minhashSlices"
+  override protected def staticArgs: Seq[Any] = Seq(n)
+  protected def call(input: UTF8String): Any = TextExpressions.minhashSlices(input, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -392,19 +381,16 @@ case class MinHashSlices(child: Expression, n: Int) extends UnaryExpression with
   * being CodegenFallback. 0.0 when the doc has fewer than n tokens (no
   * grams); the oracle mirrors with COALESCE over its empty group.
   */
-case class TopGramFrac(child: Expression, n: Int) extends UnaryExpression with StringInputs {
+case class TopGramFrac(child: Expression, n: Int) extends StaticStringCall {
 
   require(n >= 1, s"gram width must be >= 1, got $n")
 
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
   override def prettyName: String = "top_gram_frac"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.topGramFrac(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.topGramFrac($c, $n)")
+  protected def staticName: String = "topGramFrac"
+  override protected def staticArgs: Seq[Any] = Seq(n)
+  protected def call(input: UTF8String): Any = TextExpressions.topGramFrac(input, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -422,8 +408,7 @@ case class TopGramFrac(child: Expression, n: Int) extends UnaryExpression with S
   * (`transform(sequence(...), i => concat_ws(" ", slice(ws, ...)))`)
   * is kept in the property spec as the semantic pin.
   */
-case class WordChunks(child: Expression, size: Int, stride: Int)
-    extends UnaryExpression with StringInputs {
+case class WordChunks(child: Expression, size: Int, stride: Int) extends StaticStringCall {
 
   require(size >= 1, s"chunk size must be >= 1, got $size")
   require(stride >= 1 && stride <= size,
@@ -432,12 +417,9 @@ case class WordChunks(child: Expression, size: Int, stride: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_chunks"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.chunkBytes(input.asInstanceOf[UTF8String], size, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.chunkBytes($c, $size, $stride)")
+  protected def staticName: String = "chunkBytes"
+  override protected def staticArgs: Seq[Any] = Seq(size, stride)
+  protected def call(input: UTF8String): Any = TextExpressions.chunkBytes(input, size, stride)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -465,40 +447,31 @@ case class WordChunks(child: Expression, size: Int, stride: Int)
   * times (scheme/host/path/query splits all reference the normalized
   * string) and HOF-bearing projections fall out of codegen WITHOUT
   * common-subexpression elimination — the optimizer's inlining
-  * re-evaluated the whole HOF chain ~10x per row (the crawl_pipeline
-  * round-7 lesson, resurfacing in crawl_url_canon's bench). This is a
+  * re-evaluated the whole HOF chain ~10x per row. This is a
   * single byte-level pass, one output buffer, compiled as a static
   * call inside whole-stage codegen; the HOF formulation survives in
   * UrlOpsSpec as the cross-checked reference semantics (the
   * DotProduct-vs-fold contract).
   */
-case class PercentNormalize(child: Expression) extends UnaryExpression with StringInputs {
+case class PercentNormalize(child: Expression) extends StaticStringCall {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "percent_normalize"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.percentNormalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.percentNormalize($c)")
+  protected def staticName: String = "percentNormalize"
+  protected def call(input: UTF8String): Any = TextExpressions.percentNormalize(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class HtmlToText(child: Expression) extends UnaryExpression with StringInputs {
+case class HtmlToText(child: Expression) extends StaticStringCall {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "html_to_text"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.htmlToText(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.htmlToText($c)")
+  protected def staticName: String = "htmlToText"
+  protected def call(input: UTF8String): Any = TextExpressions.htmlToText(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -517,17 +490,13 @@ case class HtmlToText(child: Expression) extends UnaryExpression with StringInpu
   * raw (resolution against the page's base URI is [[ResolveUrl]]'s
   * job). Single pass, codegen'd static call.
   */
-case class ExtractLinks(child: Expression) extends UnaryExpression with StringInputs {
+case class ExtractLinks(child: Expression) extends StaticStringCall {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "extract_links"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.extractLinks(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.extractLinks($c)")
+  protected def staticName: String = "extractLinks"
+  protected def call(input: UTF8String): Any = TextExpressions.extractLinks(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -546,7 +515,7 @@ case class ExtractLinks(child: Expression) extends UnaryExpression with StringIn
   * `array<struct<href: string, anchor: string>>` in document order.
   * Single pass, codegen'd static call.
   */
-case class ExtractAnchors(child: Expression) extends UnaryExpression with StringInputs {
+case class ExtractAnchors(child: Expression) extends StaticStringCall {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -555,12 +524,8 @@ case class ExtractAnchors(child: Expression) extends UnaryExpression with String
     containsNull = false)
   override def prettyName: String = "extract_anchors"
 
-  override def nullSafeEval(input: Any): Any =
-    TextExpressions.extractAnchors(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextExpressions.extractAnchors($c)")
+  protected def staticName: String = "extractAnchors"
+  protected def call(input: UTF8String): Any = TextExpressions.extractAnchors(input)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

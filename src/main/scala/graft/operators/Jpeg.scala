@@ -229,25 +229,20 @@ object Jpeg {
     o == body + bodyLen
   }
 
-  /** Dequantize + separable IDCT of one 8x8 block of UNQUANTIZED
-    * natural-order coefficients (at `off` in `coefs`) into the luma
-    * plane at block origin (ox, oy) — same arithmetic as the baseline
-    * path's inline IDCT, shared by the progressive output stage.
+  /** Separable IDCT (rows then cols) + level shift of one 8x8 block of
+    * DEQUANTIZED natural-order coefficients into the luma plane at
+    * block origin (ox, oy), clamped and cropped to the plane — the
+    * output stage of both the baseline and the progressive decoder.
     */
-  private def idctToLuma(coefs: Array[Int], off: Int, quant: Array[Int],
-      luma: Array[Byte], lumaW: Int, lumaH: Int, ox: Int, oy: Int,
-      tmp: Array[Double]): Unit = {
+  private def idctToLuma(coef: Array[Double], luma: Array[Byte], lumaW: Int,
+      lumaH: Int, ox: Int, oy: Int, tmp: Array[Double]): Unit = {
     var y0 = 0
     while (y0 < 8) { // 1-D IDCT over each row of coefficients
       var x0 = 0
       while (x0 < 8) {
         var acc = 0.0
         var u = 0
-        while (u < 8) {
-          acc += CosTable(u * 8 + x0) *
-            (coefs(off + y0 * 8 + u).toDouble * quant(y0 * 8 + u))
-          u += 1
-        }
+        while (u < 8) { acc += CosTable(u * 8 + x0) * coef(y0 * 8 + u); u += 1 }
         tmp(y0 * 8 + x0) = acc / 2.0
         x0 += 1
       }
@@ -271,6 +266,9 @@ object Jpeg {
     }
   }
 
+  /** Big-endian unsigned 16-bit field at `at` (marker lengths, SOF dims, DRI). */
+  private def u16(p: Array[Byte], at: Int): Int = ((p(at) & 0xff) << 8) | (p(at + 1) & 0xff)
+
   /** One frame component: SOF id, sampling factors, quant selector,
     * scan entropy tables (filled at SOS), and its DC predictor.
     */
@@ -288,7 +286,6 @@ object Jpeg {
   def decodeJpegAt(payload: Array[Byte], offset: Int): Option[(PgmImage, Int)] = {
     val n = payload.length
     var i = offset
-    def u16(at: Int): Int = ((payload(at) & 0xff) << 8) | (payload(at + 1) & 0xff)
     if (i + 2 > n || (payload(i) & 0xff) != 0xff || (payload(i + 1) & 0xff) != 0xd8)
       return None // SOI
     i += 2
@@ -320,7 +317,7 @@ object Jpeg {
       // segment length.
       if (marker == 0xd8 || marker == 0x01 ||
           (marker >= 0xd0 && marker <= 0xd7)) return None
-      val segLen = u16(i + 2)
+      val segLen = u16(payload, i + 2)
       if (segLen < 2 || i + 2L + segLen > n) return None
       val body = i + 4
       val bodyLen = segLen - 2
@@ -349,8 +346,8 @@ object Jpeg {
           if (comps != null) return None // one frame header only
           progressive = marker == 0xc2
           if (bodyLen < 8 || (payload(body) & 0xff) != 8) return None // 8-bit
-          height = u16(body + 1)
-          width = u16(body + 3)
+          height = u16(payload, body + 1)
+          width = u16(payload, body + 3)
           val nComp = payload(body + 5) & 0xff
           if ((nComp != 1 && nComp != 3) || bodyLen != 6 + 3 * nComp) return None
           comps = Array.tabulate(nComp) { c =>
@@ -383,7 +380,7 @@ object Jpeg {
           return None // extended/lossless/arithmetic: stub path
         case 0xdd => // DRI
           if (bodyLen != 2) return None
-          restartInterval = u16(body)
+          restartInterval = u16(payload, body)
         case 0xda if progressive => // first SOS of a progressive frame:
           // scan headers differ per scan and are parsed by the
           // progressive scan loop itself — just record where it starts
@@ -464,7 +461,7 @@ object Jpeg {
     val lumaH = (height * lc.v + vMax - 1) / vMax
     val luma = new Array[Byte](lumaW * lumaH)
     val reader = new BitReader(payload, scanStart, n)
-    val coef = new Array[Int](64)
+    val coef = new Array[Double](64)
     val tmp = new Array[Double](64)
     var mcuIdx = 0
     var restartCount = 0
@@ -489,7 +486,7 @@ object Jpeg {
             var bhh = 0
             while (bhh < comp.h) {
               // ---- entropy-decode one 8x8 block (T.81 §F.2.2) ----
-              if (isLuma) java.util.Arrays.fill(coef, 0)
+              if (isLuma) java.util.Arrays.fill(coef, 0.0)
               val s = reader.decodeHuff(comp.dcT)
               if (reader.bad || s < 0 || s > 11) return None
               comp.pred += extend(reader.readBits(s), s)
@@ -512,39 +509,9 @@ object Jpeg {
                 }
               }
               if (reader.bad) return None
-              if (isLuma) {
-                // ---- separable IDCT (rows then cols) + level shift ----
-                var y0 = 0
-                while (y0 < 8) { // 1-D IDCT over each row of coefficients
-                  var x0 = 0
-                  while (x0 < 8) {
-                    var acc = 0.0
-                    var u = 0
-                    while (u < 8) { acc += CosTable(u * 8 + x0) * coef(y0 * 8 + u); u += 1 }
-                    tmp(y0 * 8 + x0) = acc / 2.0
-                    x0 += 1
-                  }
-                  y0 += 1
-                }
-                val ox = (mx * comp.h + bhh) * 8 // block origin in luma grid
-                val oy = (my * comp.v + bv) * 8
-                var x1 = 0
-                while (x1 < 8) { // 1-D IDCT down each column, write clamped
-                  var y1 = 0
-                  while (y1 < 8) {
-                    var acc = 0.0
-                    var v = 0
-                    while (v < 8) { acc += CosTable(v * 8 + y1) * tmp(v * 8 + x1); v += 1 }
-                    val s2 = (acc / 2.0 + 128.0).round.toInt
-                    val gx = ox + x1
-                    val gy = oy + y1
-                    if (gx < lumaW && gy < lumaH)
-                      luma(gy * lumaW + gx) = math.max(0, math.min(255, s2)).toByte
-                    y1 += 1
-                  }
-                  x1 += 1
-                }
-              }
+              if (isLuma)
+                idctToLuma(coef, luma, lumaW, lumaH,
+                  (mx * comp.h + bhh) * 8, (my * comp.v + bv) * 8, tmp)
               bhh += 1
             }
             bv += 1
@@ -604,7 +571,6 @@ object Jpeg {
       quantTables: Array[Array[Int]], huffDc: Array[HuffTable],
       huffAc: Array[HuffTable], restartInterval0: Int,
       hMax: Int, vMax: Int): Option[(PgmImage, Int)] = {
-    def u16(at: Int): Int = ((payload(at) & 0xff) << 8) | (payload(at + 1) & 0xff)
     var restartInterval = restartInterval0
     val mcusX = (width + 8 * hMax - 1) / (8 * hMax)
     val mcusY = (height + 8 * vMax - 1) / (8 * vMax)
@@ -660,7 +626,7 @@ object Jpeg {
       */
     def handleScan(sosPos: Int): Int = {
       if (sosPos + 4 > n) return -1
-      val segLen = u16(sosPos + 2)
+      val segLen = u16(payload, sosPos + 2)
       if (segLen < 2 || sosPos + 2L + segLen > n) return -1
       val body = sosPos + 4
       val bodyLen = segLen - 2
@@ -896,14 +862,14 @@ object Jpeg {
           (marker >= 0xd0 && marker <= 0xd7)) return None
       else {
         if (i + 4 > n) return None
-        val segLen = u16(i + 2)
+        val segLen = u16(payload, i + 2)
         if (segLen < 2 || i + 2L + segLen > n) return None
         marker match {
           case 0xc4 =>
             if (!parseDht(payload, i + 4, segLen - 2, huffDc, huffAc)) return None
           case 0xdd =>
             if (segLen != 4) return None
-            restartInterval = u16(i + 4)
+            restartInterval = u16(payload, i + 4)
           case 0xdb | 0xdc => return None // mid-frame DQT/DNL: reject
           case m2 if m2 >= 0xc0 && m2 <= 0xcf => return None // second SOF
           case _ => () // APPn / COM: skip
@@ -915,13 +881,16 @@ object Jpeg {
     // ---- dequantize + IDCT the luma grid, then replicate to frame ----
     val quant = quantTables(lc.tq)
     val luma = new Array[Byte](lumaW * lumaH)
+    val coef = new Array[Double](64)
     val tmp = new Array[Double](64)
     var by = 0
     while (by < bhN) {
       var bx = 0
       while (bx < bwN) {
-        idctToLuma(lumaCoef, (by * lumaBw + bx) * 64, quant,
-          luma, lumaW, lumaH, bx * 8, by * 8, tmp)
+        val off = (by * lumaBw + bx) * 64
+        var k = 0
+        while (k < 64) { coef(k) = lumaCoef(off + k).toDouble * quant(k); k += 1 }
+        idctToLuma(coef, luma, lumaW, lumaH, bx * 8, by * 8, tmp)
         bx += 1
       }
       by += 1

@@ -144,12 +144,4 @@ object RcOps {
       explode(sequence(lit(0), lit(buckets - 1))))
     salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
   }
-
-  /** E1 — race-condition skip (`scanner.py:77-81,195-196`): enrichment
-    * came back empty (page deleted mid-flight) => drop the row, never
-    * fail the query. After a left join this is simply a null-filter; the
-    * complement is the dead-letter side.
-    */
-  def skipMissingEnrichment(df: DataFrame, enriched: String): DataFrame =
-    df.filter(col(enriched).isNotNull)
 }

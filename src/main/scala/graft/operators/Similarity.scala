@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -313,9 +314,84 @@ object Similarity {
     val cents = centroidDf(spark, coarse.centroids)
     val pq = trainPq(spark, emb, nHint = nHint)
     require(pq.books.forall(_.length <= 256), "PQ codes must fit one byte each")
-    val bc = spark.sparkContext.broadcast(pq)
-    val coded = assignCells(emb, cents)
-      .select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
+    val coded = pqCodes(assignCells(emb, cents), spark.sparkContext.broadcast(pq))
+    coded.write.partitionBy("cell").mode("overwrite").parquet(s"$dir/codes/ingest=base")
+    cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    pq.books.zipWithIndex.flatMap { case (book, si) =>
+      book.zipWithIndex.map { case (cw, cid) => (si, cid, cw) }
+    }.toSeq.toDF("si", "cid", "cv").write.mode("overwrite").parquet(s"$dir/books")
+    (k, pq)
+  }
+
+  /** Probe a persisted IVF-PQ index: centroids + codebooks load
+    * driver-side (k x dim and m x k x dsub — both corpus-independent),
+    * the probe set resolves locally, the codes scan carries the cell
+    * partition filter, and scoring is pure ADC: unpack each byte of
+    * code64 and sum m broadcast-literal table lookups — the scan
+    * touches 8 bytes per candidate, never a float vector.
+    */
+  def probePqIndex(spark: SparkSession, dir: String, qv: Array[Double],
+      topK: Int, probes: Int = 2): DataFrame = {
+    val probeCells = probedCells(spark, dir, qv, probes)
+    val pq = loadPqBooks(spark, dir)
+    // ADC tables: dot(query subvector, codeword) per (subspace, code)
+    val tables: IndexedSeq[Seq[Double]] = (0 until pq.m).map { si =>
+      pq.books(si).toSeq.map { cw =>
+        var s = 0.0; var i = 0
+        while (i < pq.dsub) { s += qv(si * pq.dsub + i) * cw(i); i += 1 }
+        s
+      }
+    }
+    val adc = (0 until pq.m).map { si =>
+      element_at(typedLit(tables(si)),
+        (shiftright(col("code64"), si * 8).bitwiseAND(lit(0xffL))).cast("int") + 1)
+    }.reduce(_ + _)
+    spark.read.parquet(s"$dir/codes")
+      .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
+      .select(col("vec_id"), round(adc, 6).as("adc_score"))
+      .orderBy(col("adc_score").desc, col("vec_id"))
+      .limit(topK)
+  }
+
+  /** Streaming maintenance for the PQ index: arriving vectors are
+    * coarse-assigned against the SAVED centroids and PQ-encoded
+    * against the SAVED codebooks (both broadcast — no retraining),
+    * then appended as packed codes under `ingest=<token>-<batchId>`
+    * (the [[ingestToken]] replay-safe convention). New data
+    * becomes ADC-probe-able as it lands at 8 bytes per vector;
+    * codebook drift is handled by a periodic batch `savePqIndex` swap,
+    * exactly like the IVF path's retrain story.
+    */
+  def appendToPqIndex(spark: SparkSession, stream: DataFrame, dir: String,
+      checkpoint: String): StreamingQuery = {
+    val cents = spark.read.parquet(s"$dir/centroids")
+    val bc = spark.sparkContext.broadcast(loadPqBooks(spark, dir))
+    appendLayers(stream, checkpoint) { (b, tag) =>
+      pqCodes(assignCells(b, cents), bc)
+        .write.partitionBy("cell").mode("overwrite")
+        .parquet(s"$dir/codes/ingest=$tag")
+    }
+  }
+
+  /** The codebooks a saved PQ index was built with, from `dir/books`. */
+  private def loadPqBooks(spark: SparkSession, dir: String): PqCodebooks = {
+    val books = spark.read.parquet(s"$dir/books")
+      .select(col("si"), col("cid"), col("cv")).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map(_._2.sortBy(_._2).map(_._3)).toArray
+    PqCodebooks(books.length, books(0)(0).length, books)
+  }
+
+  /** PQ-encode cell-assigned vectors ([[assignCells]] output) into
+    * (vec_id, cell, code64): per subspace the nearest codeword by
+    * squared L2 (ties to the lower code), packed 8 bits per subspace,
+    * subspace si in byte si.
+    */
+  private def pqCodes(cells: DataFrame, bc: Broadcast[PqCodebooks]): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    cells.select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
       .as[(Long, Int, Array[Double])]
       .map { case (id, cell, v) =>
         val p = bc.value
@@ -340,98 +416,6 @@ object Similarity {
         (id, cell, packed)
       }
       .toDF("vec_id", "cell", "code64")
-    coded.write.partitionBy("cell").mode("overwrite").parquet(s"$dir/codes/ingest=base")
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    pq.books.zipWithIndex.flatMap { case (book, si) =>
-      book.zipWithIndex.map { case (cw, cid) => (si, cid, cw) }
-    }.toSeq.toDF("si", "cid", "cv").write.mode("overwrite").parquet(s"$dir/books")
-    (k, pq)
-  }
-
-  /** Probe a persisted IVF-PQ index: centroids + codebooks load
-    * driver-side (k x dim and m x k x dsub — both corpus-independent),
-    * the probe set resolves locally, the codes scan carries the cell
-    * partition filter, and scoring is pure ADC: unpack each byte of
-    * code64 and sum m broadcast-literal table lookups — the scan
-    * touches 8 bytes per candidate, never a float vector.
-    */
-  def probePqIndex(spark: SparkSession, dir: String, qv: Array[Double],
-      topK: Int, probes: Int = 2): DataFrame = {
-    val probeCells = probedCells(spark, dir, qv, probes)
-    val books = spark.read.parquet(s"$dir/books")
-      .select(col("si"), col("cid"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).map { case (si, rows) =>
-        si -> rows.sortBy(_._2).map(_._3)
-      }
-    val m = books.size
-    val dsub = books(0).head.length
-    // ADC tables: dot(query subvector, codeword) per (subspace, code)
-    val tables: IndexedSeq[Seq[Double]] = (0 until m).map { si =>
-      books(si).toSeq.map { cw =>
-        var s = 0.0; var i = 0
-        while (i < dsub) { s += qv(si * dsub + i) * cw(i); i += 1 }
-        s
-      }
-    }
-    val adc = (0 until m).map { si =>
-      element_at(typedLit(tables(si)),
-        (shiftright(col("code64"), si * 8).bitwiseAND(lit(0xffL))).cast("int") + 1)
-    }.reduce(_ + _)
-    spark.read.parquet(s"$dir/codes")
-      .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
-      .select(col("vec_id"), round(adc, 6).as("adc_score"))
-      .orderBy(col("adc_score").desc, col("vec_id"))
-      .limit(topK)
-  }
-
-  /** Streaming maintenance for the PQ index: arriving vectors are
-    * coarse-assigned against the SAVED centroids and PQ-encoded
-    * against the SAVED codebooks (both broadcast — no retraining),
-    * then appended as packed codes under `ingest=<token>-<batchId>`
-    * (the [[ingestToken]] replay-safe convention). New data
-    * becomes ADC-probe-able as it lands at 8 bytes per vector;
-    * codebook drift is handled by a periodic batch `savePqIndex` swap,
-    * exactly like the IVF path's retrain story.
-    */
-  def appendToPqIndex(spark: SparkSession, stream: DataFrame, dir: String,
-      checkpoint: String): StreamingQuery = {
-    import spark.implicits._
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val books: Array[Array[Array[Double]]] = spark.read.parquet(s"$dir/books")
-      .select(col("si"), col("cid"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3).toArray).toArray
-    val dsub = books(0)(0).length
-    val bc = spark.sparkContext.broadcast(books)
-    appendLayers(stream, checkpoint) { (b, tag) =>
-      assignCells(b, cents)
-        .select(col("vec_id"), col("cell").cast("int").as("cell"), col("v"))
-        .as[(Long, Int, Array[Double])]
-        .map { case (id, cell, v) =>
-          val bk = bc.value
-          var packed = 0L
-          var si = 0
-          while (si < bk.length) {
-            val book = bk(si)
-            var best = 0; var bestD = Double.MaxValue
-            var c = 0
-            while (c < book.length) {
-              var d = 0.0; var i = 0
-              while (i < dsub) { val t = v(si * dsub + i) - book(c)(i); d += t * t; i += 1 }
-              if (d < bestD) { bestD = d; best = c }
-              c += 1
-            }
-            packed |= (best.toLong & 0xffL) << (si * 8)
-            si += 1
-          }
-          (id, cell, packed)
-        }
-        .toDF("vec_id", "cell", "code64")
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$dir/codes/ingest=$tag")
-    }
   }
 
   /** Crash-recovery for the retrain swap: the swap's only unsafe

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Stores, Tables}
 
@@ -90,6 +90,91 @@ object AnalyticsQueries {
       .agg(min(unix_micros(col("ts"))).as("s_us"),
         max(unix_micros(col("ts"))).as("e_us"))
       .select(col("s_us"), col("e_us"))
+
+  /** Each purchase event with `signup_ts`, its user's latest signup
+    * at or before it (NULL if none): the tagged-union window of the
+    * as-of joins q13/q37 — one (user, ts) window, one shuffle. The
+    * RANGE (not ROWS) frame ordered by ts alone makes a signup sharing
+    * the purchase's exact ts a frame peer and therefore visible,
+    * matching ASOF's `s.ts <= p.ts` (a ROWS frame ordered by (ts,
+    * event_id) would exclude an equal-ts signup with a larger
+    * event_id).
+    */
+  private def purchasesAsOfSignup(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
+      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    Tables.events(s, dir)
+      .filter(col("event_type").isin("signup", "purchase"))
+      .withColumn("signup_ts",
+        max(when(col("event_type") === "signup", col("ts"))).over(w))
+      .filter(col("event_type") === "purchase")
+  }
+
+  /** The per-day closed-interval concurrency sweep of q38/q38b over
+    * `spans`: each [start, end] interval (epoch micros) under day
+    * `day` (a column named `d`) emits a +1 boundary at start and a -1
+    * one microsecond after end, so an interval ending exactly when
+    * another starts still overlaps it. Both boundary rows come out of
+    * ONE map-side explode — a union of two projections would evaluate
+    * the span subtree twice and pay a union exchange before the sweep
+    * window. The window per `d` keeps the running active count; a
+    * start pairs with everything already open. No user_id tiebreak in
+    * the sweep order: within an equal (t_us, delta) tie group the
+    * multiset of running sums is order-invariant, so peak/overlap/
+    * n_sessions are identical for ANY tie order. Output (d,
+    * peak_concurrency, overlap_pairs, n_sessions) in day order.
+    */
+  private def concurrencySweep(spans: DataFrame, day: Column, start: Column,
+      end: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bounds = spans.select(day,
+        explode(array(
+          struct(start.as("t_us"), lit(1L).as("delta")),
+          struct((end + 1L).as("t_us"), lit(-1L).as("delta")))).as("b"))
+      .select(col("d"), col("b.t_us"), col("b.delta"))
+    val sweep = Window.partitionBy(col("d"))
+      .orderBy(col("t_us"), col("delta"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    bounds
+      .withColumn("active", sum(col("delta")).over(sweep))
+      .groupBy(col("d"))
+      .agg(max(col("active")).as("peak_concurrency"),
+        sum(when(col("delta") === 1L, col("active") - 1L).otherwise(0L))
+          .as("overlap_pairs"),
+        sum(when(col("delta") === 1L, 1L).otherwise(0L)).as("n_sessions"))
+      // per-day agg output is <= #days rows and already partitioned by
+      // d: coalesce(1) + in-partition sort gives the deterministic
+      // output order WITHOUT a range exchange (one fewer stage than
+      // orderBy; at any scale this frame is calendar-bounded)
+      .coalesce(1).sortWithinPartitions(col("d"))
+  }
+
+  /** Each event's portable 32-bit user hash grouped by event type —
+    * the input of the per-type KMV sketches (q12b, q27, q34).
+    */
+  private def userHashesByType(s: SparkSession,
+      dir: String): KeyValueGroupedDataset[String, Long] = {
+    import s.implicits._
+    Tables.events(s, dir)
+      .select(col("event_type"),
+        graft.operators.TextOps.portableHash32(col("user_id")).as("h"))
+      .as[(String, Long)]
+      .groupByKey(_._1).mapValues(_._2)
+  }
+
+  /** Per-type bottom-64 KMV sketches: (event_type, sk). */
+  private def kmvSketches(s: SparkSession, dir: String): DataFrame =
+    userHashesByType(s, dir)
+      .agg(new graft.functions.SketchAgg.KMinValuesSketch(64).toColumn.name("sk"))
+      .toDF("event_type", "sk")
+
+  /** KMV distinct estimate of a sorted bottom-64 hash sketch: the exact
+    * count below 64 hashes, else 63 * 2^32 / (64th smallest hash).
+    */
+  private def kmvEstimate(sk: Column): Column =
+    when(size(sk) < 64, size(sk).cast("double"))
+      .otherwise(lit(63 * 4294967296.0) / greatest(element_at(sk, 64), lit(1L)))
 
   /** The "ingested" orders/lineitem frames the DQ audits run on: the
     * clean fixtures unioned with DETERMINISTIC planted defects (the
@@ -309,19 +394,12 @@ object AnalyticsQueries {
     // replays the identical k-th smallest hash and the ESTIMATE itself
     // hash-matches (HLL can only be rows-checked). Bounded O(k) state,
     // map-side merged; exact count when a group has < k distinct users.
-    "q12b_kmv_distinct" -> ((s, dir) => {
-      import s.implicits._
-      val kmv = new graft.functions.SketchAgg.KMinValues(64)
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          graft.operators.TextOps.portableHash32(col("user_id")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1).mapValues(_._2)
-        .agg(kmv.toColumn.name("est"))
+    "q12b_kmv_distinct" -> ((s, dir) =>
+      userHashesByType(s, dir)
+        .agg(new graft.functions.SketchAgg.KMinValues(64).toColumn.name("est"))
         .toDF("event_type", "est")
         .select(col("event_type"), round(col("est"), 6).as("kmv_users"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
 
     // Bucketized range join: banding events.value into interval dims.
     // A naive BETWEEN join is a broadcast nested loop (O(n*m) probes);
@@ -401,22 +479,10 @@ object AnalyticsQueries {
     // (user, time) window — ONE shuffle, no range self-join blowup.
     // The DuckDB oracle uses its native ASOF LEFT JOIN, proving the
     // window formulation implements exact as-of semantics.
-    "q13_asof_join" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("signup", "purchase"))
-      // RANGE (not ROWS) frame ordered by ts alone: a signup sharing the
-      // purchase's exact ts is a frame peer and therefore visible, matching
-      // ASOF's `s.ts <= p.ts` (a ROWS frame ordered by (ts, event_id) would
-      // exclude an equal-ts signup with a larger event_id).
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("signup_ts",
-          max(when(col("event_type") === "signup", col("ts"))).over(w))
-        .filter(col("event_type") === "purchase")
+    "q13_asof_join" -> ((s, dir) =>
+      purchasesAsOfSignup(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"), col("signup_ts"))
-        .orderBy(col("event_id"))
-    }),
+        .orderBy(col("event_id"))),
 
     // Sessionization: 30-minute-gap sessions per user (lag + running
     // count of session starts + per-session aggregate; two window passes
@@ -620,18 +686,7 @@ object AnalyticsQueries {
     // — the property that lets a 100 TB sketch store serve any scope
     // rollup without a rescan.
     "q27_sketch_rollup" -> ((s, dir) => {
-      import s.implicits._
-      val kmvSk = new graft.functions.SketchAgg.KMinValuesSketch(64)
-      def est(sk: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        when(size(sk) < 64, size(sk).cast("double"))
-          .otherwise(lit(63 * 4294967296.0) / greatest(element_at(sk, 64), lit(1L)))
-      val perType = Tables.events(s, dir)
-        .select(col("event_type"),
-          graft.operators.TextOps.portableHash32(col("user_id")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1).mapValues(_._2)
-        .agg(kmvSk.toColumn.name("sk"))
-        .toDF("event_type", "sk")
+      val perType = kmvSketches(s, dir)
         // ~|types| rows, consumed by BOTH the merged-scope derivation
         // and the final union — uncheckpointed, the typed sketch
         // aggregate (a full corpus scan) runs twice
@@ -642,9 +697,9 @@ object AnalyticsQueries {
         .agg(sort_array(collect_list(col("h"))).as("sk"))
       perType
         .select(concat(lit("type:"), col("event_type")).as("scope"),
-          round(est(col("sk")), 6).as("kmv_users"))
+          round(kmvEstimate(col("sk")), 6).as("kmv_users"))
         .unionByName(merged.select(lit("all").as("scope"),
-          round(est(col("sk")), 6).as("kmv_users")))
+          round(kmvEstimate(col("sk")), 6).as("kmv_users")))
         .orderBy(col("scope"))
     }),
 
@@ -833,28 +888,17 @@ object AnalyticsQueries {
     // rollup to set algebra. All 10 type pairs; the pair join is
     // sketch-table-sized (|types| rows), broadcast by Catalyst.
     "q34_kmv_intersect" -> ((s, dir) => {
-      import s.implicits._
-      val kmvSk = new graft.functions.SketchAgg.KMinValuesSketch(64)
-      def est(sk: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        when(size(sk) < 64, size(sk).cast("double"))
-          .otherwise(lit(63 * 4294967296.0) / greatest(element_at(sk, 64), lit(1L)))
-      val perType = Tables.events(s, dir)
-        .select(col("event_type"),
-          graft.operators.TextOps.portableHash32(col("user_id")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1).mapValues(_._2)
-        .agg(kmvSk.toColumn.name("sk"))
-        .toDF("event_type", "sk")
+      val perType = kmvSketches(s, dir)
       val a = perType.select(col("event_type").as("type_a"), col("sk").as("ska"))
       val b = perType.select(col("event_type").as("type_b"), col("sk").as("skb"))
       a.join(b, col("type_a") < col("type_b"))
         .withColumn("sku", slice(array_sort(array_distinct(
           concat(col("ska"), col("skb")))), 1, 64))
         .select(col("type_a"), col("type_b"),
-          round(est(col("ska")), 6).as("est_a"),
-          round(est(col("skb")), 6).as("est_b"),
-          round(est(col("sku")), 6).as("est_union"),
-          round(est(col("ska")) + est(col("skb")) - est(col("sku")), 6)
+          round(kmvEstimate(col("ska")), 6).as("est_a"),
+          round(kmvEstimate(col("skb")), 6).as("est_b"),
+          round(kmvEstimate(col("sku")), 6).as("est_union"),
+          round(kmvEstimate(col("ska")) + kmvEstimate(col("skb")) - kmvEstimate(col("sku")), 6)
             .as("est_intersect"))
         .orderBy(col("type_a"), col("type_b"))
     }),
@@ -1237,15 +1281,8 @@ object AnalyticsQueries {
     // leaking ancient state). Same one-shuffle tagged-union window as
     // q13; the tolerance is a post-window null-out, so the scale shape
     // is unchanged. Output adds the staleness age in integer seconds.
-    "q37_asof_tolerance" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("signup", "purchase"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("signup_ts",
-          max(when(col("event_type") === "signup", col("ts"))).over(w))
-        .filter(col("event_type") === "purchase")
+    "q37_asof_tolerance" -> ((s, dir) =>
+      purchasesAsOfSignup(s, dir)
         .withColumn("age_s",
           col("ts").cast("long") - col("signup_ts").cast("long"))
         .withColumn("signup_ts",
@@ -1254,8 +1291,7 @@ object AnalyticsQueries {
           when(col("signup_ts").isNotNull, col("age_s")))
         .select(col("event_id"), col("user_id"), col("ts"),
           col("signup_ts"), col("age_s"))
-        .orderBy(col("event_id"))
-    }),
+        .orderBy(col("event_id"))),
 
     // Concurrency sweep over sessionized intervals — "how many session
     // pairs overlapped, and what was peak concurrency, per day" WITHOUT
@@ -1273,41 +1309,9 @@ object AnalyticsQueries {
     // a session starting exactly 1 us after another ends does NOT
     // count as overlapping, while closed-interval touching (s' = e)
     // does.
-    "q38_concurrency_sweep" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val sess = sessionSpans(s, dir)
-      // boundary stream: (+1 at start, -1 just after end) so an
-      // interval ending exactly when another starts still counts as
-      // overlapping (closed intervals, the convention the oracle
-      // replays). Both boundary rows come out of ONE map-side explode
-      // over the session row — a union of two projections would
-      // evaluate the session subtree twice and pay a union exchange
-      // before the sweep window. No user_id tiebreak in the sweep
-      // order: within an equal (t_us, delta) tie group the multiset of
-      // running sums is order-invariant, so peak/overlap/n_sessions
-      // are identical for ANY tie order — carrying the key would only
-      // widen the sort.
-      val bounds = sess.select(to_date(timestamp_micros(col("s_us"))).as("d"),
-          explode(array(
-            struct(col("s_us").as("t_us"), lit(1L).as("delta")),
-            struct((col("e_us") + 1L).as("t_us"), lit(-1L).as("delta")))).as("b"))
-        .select(col("d"), col("b.t_us"), col("b.delta"))
-      val sweep = Window.partitionBy(col("d"))
-        .orderBy(col("t_us"), col("delta"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      bounds
-        .withColumn("active", sum(col("delta")).over(sweep))
-        .groupBy(col("d"))
-        .agg(max(col("active")).as("peak_concurrency"),
-          sum(when(col("delta") === 1L, col("active") - 1L).otherwise(0L))
-            .as("overlap_pairs"),
-          sum(when(col("delta") === 1L, 1L).otherwise(0L)).as("n_sessions"))
-        // per-day agg output is ≤ #days rows and already partitioned by
-        // d: coalesce(1) + in-partition sort gives the deterministic
-        // output order WITHOUT a range exchange (one fewer stage than
-        // orderBy; at any scale this frame is calendar-bounded)
-        .coalesce(1).sortWithinPartitions(col("d"))
-    }),
+    "q38_concurrency_sweep" -> ((s, dir) =>
+      concurrencySweep(sessionSpans(s, dir), to_date(timestamp_micros(col("s_us"))).as("d"),
+        col("s_us"), col("e_us"))),
 
     // Cross-midnight variant of the concurrency sweep: q38 buckets a
     // session under its START date, so a session alive at 23:59 still
@@ -1328,7 +1332,6 @@ object AnalyticsQueries {
     // which this boundary encoding already supports (deltas are
     // associative).
     "q38b_concurrency_sweep_midnight" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val dayUs = 86400000000L
       val segs = sessionSpans(s, dir)
         .withColumn("d", explode(sequence(
@@ -1337,25 +1340,7 @@ object AnalyticsQueries {
         .withColumn("day_s_us", unix_micros(col("d").cast("timestamp")))
         .withColumn("seg_s", greatest(col("s_us"), col("day_s_us")))
         .withColumn("seg_e", least(col("e_us"), col("day_s_us") + lit(dayUs - 1L)))
-      // no user_id in the boundary stream or the sweep tiebreak — see
-      // q38's invariance note (equal-(t_us, delta) tie groups yield the
-      // same prefix-sum multiset in any order)
-      val bounds = segs.select(col("d"),
-          explode(array(
-            struct(col("seg_s").as("t_us"), lit(1L).as("delta")),
-            struct((col("seg_e") + 1L).as("t_us"), lit(-1L).as("delta")))).as("b"))
-        .select(col("d"), col("b.t_us"), col("b.delta"))
-      val sweep = Window.partitionBy(col("d"))
-        .orderBy(col("t_us"), col("delta"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      bounds
-        .withColumn("active", sum(col("delta")).over(sweep))
-        .groupBy(col("d"))
-        .agg(max(col("active")).as("peak_concurrency"),
-          sum(when(col("delta") === 1L, col("active") - 1L).otherwise(0L))
-            .as("overlap_pairs"),
-          sum(when(col("delta") === 1L, 1L).otherwise(0L)).as("n_sessions"))
-        .coalesce(1).sortWithinPartitions(col("d"))
+      concurrencySweep(segs, col("d"), col("seg_s"), col("seg_e"))
     }),
 
     // SCD Type-2 interval reconstruction — turn an append-only change

@@ -382,9 +382,8 @@ object ExtensionQueries {
           (col("src") * 13 + 11) % n)).as("dst"))
     }
 
-  /** PageRank fixed point over the arithmetic link graph, promoted to
-    * the store lifecycle (r17 verdict weak item — the NB/token/bigram
-    * store precedent): learned ranks are a per-corpus-version ARTIFACT
+  /** PageRank fixed point over the arithmetic link graph, kept in the
+    * store lifecycle: learned ranks are a per-corpus-version ARTIFACT
     * serving many consumers (rank-weighted sampling, crawl budgeting,
     * frontier priority), not something recomputed per query. The
     * 5-round loop runs ONCE per corpus version inside the
@@ -401,29 +400,49 @@ object ExtensionQueries {
       pagerankBuildFrame(s, dir)
     }
 
-  /** The store's CONSTRUCTION plan (exposed for PlanAuditSpec — the
-    * linkEdgeBuildFrame convention): 5 damped
-    * iterations in fixed-point integer ppm arithmetic (floor
-    * divisions; integer sums are order-independent, so the result is
-    * bit-exact across engines with NO rounding contract). Edges derive
-    * arithmetically from doc_id (out-degree exactly 3, no dangling
-    * nodes); per iteration: map-side explode of the derived out-links
-    * + a zero row per node (keeps rankless nodes total) -> ONE hash
-    * exchange on the target id — the canonical bulk-synchronous shape.
+  /** The store's CONSTRUCTION plan (exposed for PlanAuditSpec):
+    * [[dampedRanks]] over [[derivedOutLinks]] (out-degree exactly 3, no
+    * dangling nodes); per iteration a map-side explode of the out-links
+    * -> ONE hash exchange on the target id — the canonical
+    * bulk-synchronous shape.
     */
   private[graft] def pagerankBuildFrame(s: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(s, dir).select(col("doc_id").as("i"))
+    val nodes = rankNodes(s, dir)
     val nFrame = nodes.agg(count(lit(1)).as("nn"))
-    def targets = array(
-      (col("i") * 31 + 7) % col("nn"),
-      (col("i") * 17 + 3) % col("nn"),
-      (col("i") * 13 + 11) % col("nn"))
+    dampedRanks(nodes)(_.crossJoin(broadcast(nFrame))
+      .select(explode(derivedOutLinks).as("i"), expr("r div 3").as("c")))
+  }
+
+  /** The node table of every derived-graph rank store: `(i = doc_id)`. */
+  private def rankNodes(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select(col("doc_id").as("i"))
+
+  /** The derived out-link graph of the synthetic rank queries: node `i`
+    * links to `(i*31+7, i*17+3, i*13+11) % nn`, over the columns `i` and
+    * `nn` (the node count).
+    */
+  private def derivedOutLinks: Column = array(
+    (col("i") * 31 + 7) % col("nn"),
+    (col("i") * 17 + 3) % col("nn"),
+    (col("i") * 13 + 11) % col("nn"))
+
+  /** Per-node sum `sc` of one round's contributions `(i, c)`; a zero
+    * row per node keeps nodes without in-links in the result.
+    */
+  private def rankSums(contribs: DataFrame, nodes: DataFrame): DataFrame =
+    contribs.union(nodes.select(col("i"), lit(0L).as("c")))
+      .groupBy(col("i")).agg(sum(col("c")).as("sc"))
+
+  /** The 5-round damped rank fixed point in ppm: every node starts at
+    * 1e6, each round sends `contribs(ranks)` (i, c) and sets
+    * `r = 150000 + (85 * sc) div 100`. Integer floor divisions and
+    * order-independent integer sums, so the result is bit-exact across
+    * engines with NO rounding contract. Output (doc_id, rank_ppm).
+    */
+  private def dampedRanks(nodes: DataFrame)(contribs: DataFrame => DataFrame): DataFrame = {
     var ranks = nodes.select(col("i"), lit(1000000L).as("r"))
     for (_ <- 1 to 5) {
-      val contribs = ranks.crossJoin(broadcast(nFrame))
-        .select(explode(targets).as("i"), expr("r div 3").as("c"))
-      ranks = contribs.union(nodes.select(col("i"), lit(0L).as("c")))
-        .groupBy(col("i")).agg(sum(col("c")).as("sc"))
+      ranks = rankSums(contribs(ranks), nodes)
         .select(col("i"), expr("CAST(150000 + (85 * sc) div 100 AS BIGINT)").as("r"))
     }
     ranks.select(col("i").as("doc_id"), col("r").as("rank_ppm"))
@@ -441,21 +460,16 @@ object ExtensionQueries {
     }
 
   private[graft] def pprBuildFrame(s: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(s, dir).select(col("doc_id").as("i"))
+    val nodes = rankNodes(s, dir)
     val nFrame = nodes.agg(count(lit(1)).as("nn"),
       sum(when(col("i") % 50 === 0, lit(1L)).otherwise(lit(0L))).as("ns"))
-    def targets = array(
-      (col("i") * 31 + 7) % col("nn"),
-      (col("i") * 17 + 3) % col("nn"),
-      (col("i") * 13 + 11) % col("nn"))
     val seed = col("i") % 50 === 0
     var ranks = nodes.select(col("i"),
       when(seed, lit(1000000L)).otherwise(lit(0L)).as("r"))
     for (_ <- 1 to 4) {
       val contribs = ranks.crossJoin(broadcast(nFrame))
-        .select(explode(targets).as("i"), expr("r div 3").as("c"))
-      ranks = contribs.union(nodes.select(col("i"), lit(0L).as("c")))
-        .groupBy(col("i")).agg(sum(col("c")).as("sc"))
+        .select(explode(derivedOutLinks).as("i"), expr("r div 3").as("c"))
+      ranks = rankSums(contribs, nodes)
         .crossJoin(broadcast(nFrame))
         .select(col("i"),
           (when(seed, expr("(150000 * nn) div ns")).otherwise(lit(0L)) +
@@ -477,17 +491,9 @@ object ExtensionQueries {
     }
 
   private[graft] def pagerankEdgesBuildFrame(s: SparkSession, dir: String): DataFrame = {
-    val nodes = Tables.documents(s, dir).select(col("doc_id").as("i"))
     val edges = crawlEdgeTable(s, dir)
-    var ranks = nodes.select(col("i"), lit(1000000L).as("r"))
-    for (_ <- 1 to 5) {
-      val contribs = ranks.join(edges, ranks("i") === edges("src"))
-        .select(col("dst").as("i"), expr("r div 3").as("c"))
-      ranks = contribs.union(nodes.select(col("i"), lit(0L).as("c")))
-        .groupBy(col("i")).agg(sum(col("c")).as("sc"))
-        .select(col("i"), expr("CAST(150000 + (85 * sc) div 100 AS BIGINT)").as("r"))
-    }
-    ranks.select(col("i").as("doc_id"), col("r").as("rank_ppm"))
+    dampedRanks(rankNodes(s, dir))(ranks => ranks.join(edges, ranks("i") === edges("src"))
+      .select(col("dst").as("i"), expr("r div 3").as("c")))
   }
 
   /** (rung query name, its seeded query vec_id, its top-k) for every
@@ -1122,18 +1128,7 @@ object ExtensionQueries {
   }
 
   private def pqBanks(s: SparkSession, dir: String): Seq[graft.functions.CentroidBank] =
-    Stores.value(s, "pq-banks", dir, "embeddings") {
-      import s.implicits._
-      val seedRows = Tables.embeddings(s, dir).filter(col("vec_id") < 256)
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect()
-      (0 until 8).map { si =>
-        new graft.functions.CentroidBank(
-          seedRows.map(_._1),
-          seedRows.map(r => pqSubOf(r._2, si)),
-          seedRows.map(r => pqDotSeq(pqSubOf(r._2, si), pqSubOf(r._2, si))))
-      }
-    }
+    Stores.value(s, "pq-banks", dir, "embeddings")(seededBanks(s, dir, pqSubOf))
 
   /** K-MEANS-TRAINED per-subspace codebooks — the production twin of
     * the seeded [[pqBanks]] (which exist so the DuckDB oracle can
@@ -1192,17 +1187,43 @@ object ExtensionQueries {
       : (Seq[graft.functions.CentroidBank], Seq[Array[Double]]) = {
     val banks = pqBanks(s, dir)
     val tables = Stores.value(s, "pq-adc", dir, "embeddings", s"$qid") {
-      import s.implicits._
-      val qv = Tables.embeddings(s, dir).filter(col("vec_id") === qid)
-        .select(col("embedding")).as[Array[Float]].head()
-      // ADC tables: dot(query subvector, codeword), indexed by cid
-      // (banks sort by ascending cid, and seed cids are 0..255)
-      (0 until 8).map { si =>
-        val qs = pqSubOf(qv, si)
-        banks(si).vecs.map(c => pqDotSeq(qs, c))
-      }
+      seededAdcTables(s, dir, qid, banks, pqSubOf)
     }
     (banks, tables)
+  }
+
+  /** The seeded PQ banks: subspace si's codewords are the subvectors
+    * `sub(v, si)` of the first 256 vectors (cid = vec_id), with their
+    * squared norms.
+    */
+  private def seededBanks(s: SparkSession, dir: String,
+      sub: (Array[Float], Int) => Array[Float]): Seq[graft.functions.CentroidBank] = {
+    import s.implicits._
+    val seedRows = Tables.embeddings(s, dir).filter(col("vec_id") < 256)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .collect()
+    (0 until 8).map { si =>
+      new graft.functions.CentroidBank(
+        seedRows.map(_._1),
+        seedRows.map(r => sub(r._2, si)),
+        seedRows.map(r => pqDotSeq(sub(r._2, si), sub(r._2, si))))
+    }
+  }
+
+  /** ADC tables of query `qid` against seeded banks: dot(query
+    * subvector `sub(qv, si)`, codeword), indexed by cid (banks sort by
+    * ascending cid, and seed cids are 0..255).
+    */
+  private def seededAdcTables(s: SparkSession, dir: String, qid: Long,
+      banks: Seq[graft.functions.CentroidBank],
+      sub: (Array[Float], Int) => Array[Float]): Seq[Array[Double]] = {
+    import s.implicits._
+    val qv = Tables.embeddings(s, dir).filter(col("vec_id") === qid)
+      .select(col("embedding")).as[Array[Float]].head()
+    (0 until 8).map { si =>
+      val qs = sub(qv, si)
+      banks(si).vecs.map(c => pqDotSeq(qs, c))
+    }
   }
 
   /** ENERGY-BALANCED dimension permutation for PQ (the OPQ idea
@@ -1231,6 +1252,9 @@ object ExtensionQueries {
         ranked.zipWithIndex.collect { case (d, r) if r % 8 == si => d })
     }
 
+  /** Subvector si of the contiguous PQ layout: dims 8*si .. 8*si+7. */
+  private def pqSlice(v: Column)(si: Int): Column = slice(v, si * 8 + 1, 8)
+
   private def pqBalancedSub(v: Column, dims: Array[Int]): Column =
     array(dims.map(d => element_at(v, d + 1)): _*)
   private def pqBalSubOf(v: Array[Float], dims: Array[Int]): Array[Float] =
@@ -1238,28 +1262,13 @@ object ExtensionQueries {
 
   private def pqBalancedCodebook(s: SparkSession, dir: String, qid: Long)
       : (Seq[graft.functions.CentroidBank], Seq[Array[Double]], Array[Array[Int]]) = {
-    import s.implicits._
     val perm = pqBalancedPerm(s, dir)
+    val sub = (v: Array[Float], si: Int) => pqBalSubOf(v, perm(si))
     // banks and tables share the permutation's corpus version, so a
     // rewrite can never pair new gathers with codewords of the old one
-    val banks = Stores.value(s, "pq-bal-banks", dir, "embeddings") {
-      val seedRows = Tables.embeddings(s, dir).filter(col("vec_id") < 256)
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .collect()
-      (0 until 8).map { si =>
-        new graft.functions.CentroidBank(
-          seedRows.map(_._1),
-          seedRows.map(r => pqBalSubOf(r._2, perm(si))),
-          seedRows.map(r => pqDotSeq(pqBalSubOf(r._2, perm(si)), pqBalSubOf(r._2, perm(si)))))
-      }
-    }
+    val banks = Stores.value(s, "pq-bal-banks", dir, "embeddings")(seededBanks(s, dir, sub))
     val tables = Stores.value(s, "pq-bal-adc", dir, "embeddings", s"$qid") {
-      val qv = Tables.embeddings(s, dir).filter(col("vec_id") === qid)
-        .select(col("embedding")).as[Array[Float]].head()
-      (0 until 8).map { si =>
-        val qs = pqBalSubOf(qv, perm(si))
-        banks(si).vecs.map(c => pqDotSeq(qs, c))
-      }
+      seededAdcTables(s, dir, qid, banks, sub)
     }
     (banks, tables, perm)
   }
@@ -1346,22 +1355,23 @@ object ExtensionQueries {
     (0 until 8).map { si =>
       element_at(typedLit(tables(si).toSeq),
         (graft.functions.VectorExpressions
-          .residual_argmin_l2(banks(si), slice(v, si * 8 + 1, 8))
+          .residual_argmin_l2(banks(si), pqSlice(v)(si))
           .cast("int")) + 1)
     }.reduce(_ + _)
 
-  /** The asymmetric-distance (ADC) PQ score of one row: per subspace,
-    * a native argmax assignment to the subspace codebook followed by a
-    * lookup into the query's precomputed codeword-dot table — 8
-    * argmaxes + 8 broadcast-literal array reads, all map-side. The 8
+  /** The asymmetric-distance (ADC) PQ score of one row: per subspace
+    * si, a native argmax assignment of the row's subvector `sub(si)` to
+    * the subspace codebook followed by a lookup into the query's
+    * precomputed codeword-dot table — 8 argmaxes + 8 broadcast-literal
+    * array reads, all map-side. The 8
     * subspace dots sum LEFT-TO-RIGHT (reduce order), which the oracle
     * replays with `list_sum(list(t ORDER BY s))`; consumers round(6)
     * at the edge to absorb the residual ulps.
     */
   private def pqAdcScore(banks: Seq[graft.functions.CentroidBank],
-      tables: Seq[Array[Double]], v: Column): Column =
+      tables: Seq[Array[Double]], sub: Int => Column): Column =
     (0 until 8).map { si =>
-      val vs = slice(v, si * 8 + 1, 8)
+      val vs = sub(si)
       element_at(typedLit(tables(si).toSeq),
         (graft.functions.VectorExpressions
           .seeded_cell_argmax(banks(si), vs, VectorOps.dot(vs, vs))
@@ -2617,7 +2627,7 @@ object ExtensionQueries {
       val (banks, tables) = pqCodebook(s, dir, qid = 299L)
       Tables.embeddings(s, dir).filter(col("vec_id") =!= 299)
         .select(col("vec_id"),
-          round(pqAdcScore(banks, tables, col("embedding")), 6).as("score"))
+          round(pqAdcScore(banks, tables, pqSlice(col("embedding"))), 6).as("score"))
         .orderBy(col("score").desc, col("vec_id"))
         .limit(10)
     }),
@@ -2634,13 +2644,7 @@ object ExtensionQueries {
     // permutation, assignment and the ordered table sum end to end.
     "sim_pq_balanced_topk" -> ((s, dir) => {
       val (banks, tables, perm) = pqBalancedCodebook(s, dir, qid = 293L)
-      val score = (0 until 8).map { si =>
-        val vs = pqBalancedSub(col("embedding"), perm(si))
-        element_at(typedLit(tables(si).toSeq),
-          (graft.functions.VectorExpressions
-            .seeded_cell_argmax(banks(si), vs, VectorOps.dot(vs, vs))
-            .cast("int")) + 1)
-      }.reduce(_ + _)
+      val score = pqAdcScore(banks, tables, si => pqBalancedSub(col("embedding"), perm(si)))
       Tables.embeddings(s, dir).filter(col("vec_id") =!= 293)
         .select(col("vec_id"), round(score, 6).as("score"))
         .orderBy(col("score").desc, col("vec_id"))
@@ -2683,7 +2687,7 @@ object ExtensionQueries {
       val (banks, tables) = pqCodebook(s, dir, qid = 294L)
       val shortlist = Tables.embeddings(s, dir).filter(col("vec_id") =!= 294)
         .select(col("vec_id"),
-          round(pqAdcScore(banks, tables, col("embedding")), 6).as("adc"))
+          round(pqAdcScore(banks, tables, pqSlice(col("embedding"))), 6).as("adc"))
         .orderBy(col("adc").desc, col("vec_id"))
         .limit(50)
       val qv = embWithNorm(s, dir).filter(col("vec_id") === 294)
@@ -2755,7 +2759,7 @@ object ExtensionQueries {
       assignSeededCells(embWithNorm(s, dir), bank).crossJoin(broadcast(qCell))
         .filter(col("cell") === col("qcell") && col("vec_id") =!= 298)
         .select(col("vec_id"),
-          round(pqAdcScore(banks, tables, col("v")), 6).as("score"))
+          round(pqAdcScore(banks, tables, pqSlice(col("v"))), 6).as("score"))
         .orderBy(col("score").desc, col("vec_id"))
         .limit(10)
     }),
@@ -6761,14 +6765,10 @@ object ExtensionQueries {
     // source aggregate (hub) — the canonical BSP shuffle pair; at
     // scale both exchanges key on node ids and AQE absorbs hub skew.
     "crawl_hits" -> ((s, dir) => {
-      val nodes = Tables.documents(s, dir).select(col("doc_id").as("i"))
+      val nodes = rankNodes(s, dir)
       val nFrame = nodes.agg(count(lit(1)).as("nn"))
-      def targets = array(
-        (col("i") * 31 + 7) % col("nn"),
-        (col("i") * 17 + 3) % col("nn"),
-        (col("i") * 13 + 11) % col("nn"))
       val edges = nodes.crossJoin(broadcast(nFrame))
-        .select(col("i"), explode(targets).as("t"))
+        .select(col("i"), explode(derivedOutLinks).as("t"))
       var hub = nodes.select(col("i"), lit(1L).as("h"))
       var auth = nodes.select(col("i"), lit(1L).as("a"))
       for (_ <- 1 to 4) {
@@ -6869,6 +6869,28 @@ object ExtensionQueries {
     "reach(node, r) AS (SELECT DISTINCT u, u FROM edges " +
     "UNION SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.node), " +
     "labels AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node)"
+
+  /** [[derivedOutLinks]] as a DuckDB list body over `i` and the node count `c`. */
+  private def derivedLinksSql: String = "(i*31+7)%c, (i*17+3)%c, (i*13+11)%c"
+
+  /** DuckDB replay of [[dampedRanks]] over the out-link list `links`
+    * (a DuckDB list over `i` and the node count `c`): the CTEs docs, nn,
+    * e, r0 .. r5, then `sep`. The 5 iterations are unrolled in the SAME
+    * fixed-point integer arithmetic as the Spark loop (floor divisions,
+    * ppm scale); integer sums are order-independent, so the compare is
+    * bit-exact with no rounding contract.
+    */
+  private def dampedRanksSql(links: String, sep: String): String = {
+    def iter(prev: String, cur: String): String =
+      s"$cur AS (SELECT d.i, CAST(150000 + (85 * COALESCE(SUM(x.c2), 0)) // 100 AS BIGINT) r " +
+      s"FROM docs d LEFT JOIN (SELECT e.t, $prev.r // 3 c2 FROM e JOIN $prev ON e.i = $prev.i) x " +
+      "ON x.t = d.i GROUP BY d.i)"
+    "WITH docs AS (SELECT doc_id i FROM documents), " +
+    "nn AS (SELECT COUNT(*) c FROM docs), " +
+    s"e AS (SELECT i, unnest([$links]) t FROM docs, nn), " +
+    "r0 AS (SELECT i, CAST(1000000 AS BIGINT) r FROM docs), " +
+    (1 to 5).map(k => iter(s"r${k - 1}", s"r$k")).mkString("", ", ", sep)
+  }
 
   private val baseOracleSql: Map[String, String] = Map(
     "dedup_exact" ->
@@ -8455,22 +8477,9 @@ object ExtensionQueries {
        "FROM p JOIN d ON p.term = d.term, nn) " +
        "SELECT doc_id, rk, term, CAST(tf AS BIGINT) AS tf, df, tfidf " +
        "FROM sc WHERE rk <= 3 ORDER BY doc_id, rk"),
-    "crawl_pagerank" -> {
-      // 5 unrolled damped iterations in the SAME fixed-point integer
-      // arithmetic as the Spark loop (floor divisions, ppm scale) —
-      // integer sums are order-independent, so the compare is bit-exact
-      // with no rounding contract
-      def iter(prev: String, cur: String): String =
-        s"$cur AS (SELECT d.i, CAST(150000 + (85 * COALESCE(SUM(x.c2), 0)) // 100 AS BIGINT) r " +
-        s"FROM docs d LEFT JOIN (SELECT e.t, $prev.r // 3 c2 FROM e JOIN $prev ON e.i = $prev.i) x " +
-        "ON x.t = d.i GROUP BY d.i)"
-      "WITH docs AS (SELECT doc_id i FROM documents), " +
-      "nn AS (SELECT COUNT(*) c FROM docs), " +
-      "e AS (SELECT i, unnest([(i*31+7)%c, (i*17+3)%c, (i*13+11)%c]) t FROM docs, nn), " +
-      "r0 AS (SELECT i, CAST(1000000 AS BIGINT) r FROM docs), " +
-      (1 to 5).map(k => iter(s"r${k - 1}", s"r$k")).mkString("", ", ", " ") +
-      "SELECT i AS doc_id, r AS rank_ppm FROM r5 ORDER BY doc_id"
-    },
+    "crawl_pagerank" ->
+      (dampedRanksSql(derivedLinksSql, " ") +
+       "SELECT i AS doc_id, r AS rank_ppm FROM r5 ORDER BY doc_id"),
     "crawl_link_graph" ->
       // construction + RFC 3986 resolution replay (the warc_ingest
       // work-asymmetry regime: Spark walks real WARC/HTTP/HTML bytes,
@@ -8627,7 +8636,7 @@ object ExtensionQueries {
         "ON x.t = d.i GROUP BY d.i)"
       "WITH docs AS (SELECT doc_id i FROM documents), " +
       "nn AS (SELECT COUNT(*) c, CAST(SUM(CASE WHEN i % 50 = 0 THEN 1 ELSE 0 END) AS BIGINT) s FROM docs), " +
-      "e AS MATERIALIZED (SELECT i, unnest([(i*31+7)%c, (i*17+3)%c, (i*13+11)%c]) t FROM docs, nn), " +
+      s"e AS MATERIALIZED (SELECT i, unnest([$derivedLinksSql]) t FROM docs, nn), " +
       "r0 AS (SELECT i, CAST(CASE WHEN i % 50 = 0 THEN 1000000 ELSE 0 END AS BIGINT) r FROM docs), " +
       (1 to 4).map(k => iter(s"r${k - 1}", s"r$k")).mkString("", ", ", " ") +
       "SELECT i AS doc_id, r AS ppr_ppm, " +
@@ -8656,21 +8665,11 @@ object ExtensionQueries {
       "SELECT l4.u AS doc_id, l4.lbl AS community, CAST(sz.n AS BIGINT) AS n_members " +
       "FROM l4 JOIN sz ON l4.lbl = sz.lbl ORDER BY doc_id"
     },
-    "crawl_pagerank_edges" -> {
+    "crawl_pagerank_edges" ->
       // the materialized edge table replayed arithmetically (two
-      // multiplicative-hash targets + the mod-16 hub link), then the
-      // same 5 unrolled fixed-point iterations as crawl_pagerank
-      def iter(prev: String, cur: String): String =
-        s"$cur AS (SELECT d.i, CAST(150000 + (85 * COALESCE(SUM(x.c2), 0)) // 100 AS BIGINT) r " +
-        s"FROM docs d LEFT JOIN (SELECT e.t, $prev.r // 3 c2 FROM e JOIN $prev ON e.i = $prev.i) x " +
-        "ON x.t = d.i GROUP BY d.i)"
-      "WITH docs AS (SELECT doc_id i FROM documents), " +
-      "nn AS (SELECT COUNT(*) c FROM docs), " +
-      "e AS (SELECT i, unnest([(i*31+7)%c, i%LEAST(16, c), (i*13+11)%c]) t FROM docs, nn), " +
-      "r0 AS (SELECT i, CAST(1000000 AS BIGINT) r FROM docs), " +
-      (1 to 5).map(k => iter(s"r${k - 1}", s"r$k")).mkString("", ", ", " ") +
-      "SELECT i AS doc_id, r AS rank_ppm FROM r5 ORDER BY doc_id"
-    },
+      // multiplicative-hash targets + the mod-16 hub link)
+      (dampedRanksSql("(i*31+7)%c, i%LEAST(16, c), (i*13+11)%c", " ") +
+       "SELECT i AS doc_id, r AS rank_ppm FROM r5 ORDER BY doc_id"),
     "crawl_triangles" ->
       // ring + hash edges, oriented low->high and deduped; canonical
       // two-join triangle closure; wedges from the undirected degree;
@@ -8719,19 +8718,9 @@ object ExtensionQueries {
        "md5(array_to_string(ws[(k*24+1):(k*24+32)], ' ')) AS chunk_hash " +
        "FROM c ORDER BY doc_id, chunk_id"),
     "sample_rank_weighted" -> {
-      // the crawl_pagerank oracle verbatim as a CTE (baseOracleSql
-      // composition happens below for the rollup; here the rank SQL is
-      // assembled in place from the same iteration builder), then the
-      // portable md5 coin against rank_ppm div 4
-      def iter(prev: String, cur: String): String =
-        s"$cur AS (SELECT d.i, CAST(150000 + (85 * COALESCE(SUM(x.c2), 0)) // 100 AS BIGINT) r " +
-        s"FROM docs d LEFT JOIN (SELECT e.t, $prev.r // 3 c2 FROM e JOIN $prev ON e.i = $prev.i) x " +
-        "ON x.t = d.i GROUP BY d.i)"
-      "WITH docs AS (SELECT doc_id i FROM documents), " +
-      "nn AS (SELECT COUNT(*) c FROM docs), " +
-      "e AS (SELECT i, unnest([(i*31+7)%c, (i*17+3)%c, (i*13+11)%c]) t FROM docs, nn), " +
-      "r0 AS (SELECT i, CAST(1000000 AS BIGINT) r FROM docs), " +
-      (1 to 5).map(k => iter(s"r${k - 1}", s"r$k")).mkString("", ", ", ", ") +
+      // the crawl_pagerank rank CTEs, then the portable md5 coin
+      // against rank_ppm div 4
+      dampedRanksSql(derivedLinksSql, ", ") +
       "coined AS (SELECT i AS doc_id, r AS rank_ppm, " +
       "CAST('0x' || substr(md5('rw|' || CAST(i AS VARCHAR)), 1, 8) AS BIGINT) % 1000000 AS coin " +
       "FROM r5) " +
@@ -9052,7 +9041,7 @@ object ExtensionQueries {
         "ON x.ii = d.i GROUP BY d.i)"
       "WITH docs AS (SELECT doc_id i FROM documents), " +
       "nn AS (SELECT COUNT(*) c FROM docs), " +
-      "e AS (SELECT i, unnest([(i*31+7)%c, (i*17+3)%c, (i*13+11)%c]) t FROM docs, nn), " +
+      s"e AS (SELECT i, unnest([$derivedLinksSql]) t FROM docs, nn), " +
       "h0 AS (SELECT i, CAST(1 AS BIGINT) h FROM docs), " +
       (1 to 4).map(k => authStep(s"h${k - 1}", s"a$k") + ", " +
         hubStep(s"a$k", s"h$k")).mkString("", ", ", " ") +

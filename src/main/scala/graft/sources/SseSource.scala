@@ -72,9 +72,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Batch path: `spark.read.format("sse")` reads the same buffer for
   * backfill/replay, with formal DSv2 pushdown — Catalyst `offset`
   * predicates become an exact event range handled at the source,
-  * columns prune into the reader, and the range splits across
-  * `batchPartitions` parallel readers seeded from the sample index
-  * (see [[SseScanBuilder]]).
+  * columns prune into the reader, and the range splits across at most
+  * `SseSource.BatchPartitions` (16) parallel readers seeded from the
+  * sample index (see [[SseScanBuilder]]).
   */
 class SseSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "sse"
@@ -92,6 +92,11 @@ object SseSource {
   val schema: StructType = StructType(Seq(
     StructField("value", StringType, nullable = false),
     StructField("offset", LongType, nullable = false)))
+
+  /** Most parallel readers one batch read (`spark.read.format("sse")`)
+    * splits its pushed event range into.
+    */
+  val BatchPartitions = 16
 
   /** `filter.<field>` options -> field -> allowed values (reference
     * `register_filter` dict semantics: equality against any listed value).
@@ -307,7 +312,7 @@ final class SseTable(path: String, filters: Map[String, Set[String]])
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SseScanBuilder(path, filters, options.getInt("batchPartitions", 16))
+    new SseScanBuilder(path, filters)
 }
 
 /** Formal DSv2 pushdown for the batch path (`spark.read.format("sse")` —
@@ -322,8 +327,8 @@ final class SseTable(path: String, filters: Map[String, Set[String]])
   * reference-faithful `option("filter.<field>", ...)` registration
   * (`filter_.py:107`), which both paths apply at the source.
   */
-final class SseScanBuilder(path: String, sourceFilters: Map[String, Set[String]],
-    maxPartitions: Int) extends ScanBuilder
+final class SseScanBuilder(path: String, sourceFilters: Map[String, Set[String]])
+    extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
   import org.apache.spark.sql.sources._
 
@@ -364,11 +369,11 @@ final class SseScanBuilder(path: String, sourceFilters: Map[String, Set[String]]
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan =
-    new SseScan(path, sourceFilters, lo, hi, required, maxPartitions)
+    new SseScan(path, sourceFilters, lo, hi, required)
 }
 
 final class SseScan(path: String, sourceFilters: Map[String, Set[String]],
-    lo: Long, hi: Long, required: StructType, maxPartitions: Int) extends Scan {
+    lo: Long, hi: Long, required: StructType) extends Scan {
   override def readSchema(): StructType = required
   override def supportedCustomMetrics(): Array[CustomMetric] =
     Array(new UnparseableDropped)
@@ -390,7 +395,7 @@ final class SseScan(path: String, sourceFilters: Map[String, Set[String]],
       val start = math.max(lo, 0L)
       val end = math.min(hi, n)
       if (end <= start) return Array.empty
-      val parts = math.max(1L, math.min(maxPartitions.toLong, end - start)).toInt
+      val parts = math.max(1L, math.min(SseSource.BatchPartitions.toLong, end - start)).toInt
       val step = (end - start + parts - 1) / parts
       (0 until parts).flatMap { i =>
         val s0 = start + i * step

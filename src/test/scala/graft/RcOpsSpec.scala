@@ -89,11 +89,6 @@ class RcOpsSpec extends SparkSpec {
     assert(got === Map("t1" -> "tie-low-id", "t2" -> "only"))
   }
 
-  test("E1 skip: null enrichment rows dropped, stream continues") {
-    val df = Seq(("a", Some("text")), ("b", None)).toDF("id", "text")
-    assert(RcOps.skipMissingEnrichment(df, "text").count() === 1)
-  }
-
   test("flagship entry returns matches on sf0.001 (driver smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -217,22 +217,25 @@ class SimilaritySpec extends SparkSpec {
     val q = Similarity.appendToPqIndex(spark, stream, dir, s"$newDir/ckpt")
     q.awaitTermination(120000)
     assert(spark.read.parquet(s"$dir/codes").count() === before + 100)
-    // an appended vector's stored code must equal a driver-side
+    // an appended vector's stored code (450) must equal a driver-side
     // re-encode against the SAVED codebooks — byte-exact, proving the
-    // stream used the persisted books, not a retrain
-    val stored = spark.read.parquet(s"$dir/codes")
-      .filter(col("vec_id") === 450).select(col("code64")).as[Long].head()
-    val v = emb.filter(col("vec_id") === 450)
-      .select(operators.VectorOps.toDouble(col("embedding")))
-      .as[Array[Double]].head()
-    (0 until pq.m).foreach { si =>
-      val book = pq.books(si)
-      val best = book.indices.minBy { c =>
-        var d = 0.0; var i = 0
-        while (i < pq.dsub) { val t = v(si * pq.dsub + i) - book(c)(i); d += t * t; i += 1 }
-        (d, c)
+    // stream used the persisted books, not a retrain — and so must a
+    // base-layer vector's (120), written by savePqIndex itself
+    for (id <- Seq(450L, 120L)) {
+      val stored = spark.read.parquet(s"$dir/codes")
+        .filter(col("vec_id") === id).select(col("code64")).as[Long].head()
+      val v = emb.filter(col("vec_id") === id)
+        .select(operators.VectorOps.toDouble(col("embedding")))
+        .as[Array[Double]].head()
+      (0 until pq.m).foreach { si =>
+        val book = pq.books(si)
+        val best = book.indices.minBy { c =>
+          var d = 0.0; var i = 0
+          while (i < pq.dsub) { val t = v(si * pq.dsub + i) - book(c)(i); d += t * t; i += 1 }
+          (d, c)
+        }
+        assert(((stored >> (si * 8)) & 0xffL).toInt === best, s"vec $id subspace $si")
       }
-      assert(((stored >> (si * 8)) & 0xffL).toInt === best, s"subspace $si")
     }
   }
 

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import graft.sources.SseSource
 
 /** DSv2 BATCH path of the SSE source (`spark.read.format("sse")` — the
   * backfill/replay read): Catalyst offset predicates push into the scan
@@ -65,13 +66,12 @@ class SseBatchSpec extends SparkSpec {
 
   test("pushed range splits into parallel partitions") {
     val path = buffer(40)
-    val df = spark.read.format("sse").option("path", path)
-      .option("batchPartitions", "4").load()
-    assert(df.rdd.getNumPartitions === 4)
+    val df = spark.read.format("sse").option("path", path).load()
+    assert(df.rdd.getNumPartitions > 1)
+    assert(df.rdd.getNumPartitions <= SseSource.BatchPartitions)
     assert(df.count() === 40)
     // a narrow pushed range never plans more partitions than events
-    val narrow = spark.read.format("sse").option("path", path)
-      .option("batchPartitions", "16").load()
+    val narrow = spark.read.format("sse").option("path", path).load()
       .filter(col("offset") >= 38)
     assert(narrow.count() === 2)
     assert(narrow.rdd.getNumPartitions <= 2)

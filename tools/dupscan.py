@@ -11,7 +11,12 @@ more places.
 The result is the number of distinct code lines covered by such windows,
 per file and in total.
 
-Usage: python3 tools/dupscan.py [root]   (default: src/main)
+With --where it prints, instead, one block per duplicated run: the run's
+length in code lines and each place it occurs (file:first-last line), so
+the copies of a family can be found. Overlapping windows that occur at
+the same set of places are merged into one run.
+
+Usage: python3 tools/dupscan.py [--where] [root]   (default: src/main)
 """
 import os
 import re
@@ -35,8 +40,35 @@ def code_lines(path):
     return out
 
 
+def runs(places, files):
+    """Merge the duplicated windows into maximal runs: consecutive window
+    starts that keep the same number of places, each place advancing by
+    one code line. Yields (length in code lines, [(path, first, last)])."""
+    dup = {(p, i): locs for locs in places.values() if len(locs) > 1
+           for p, i in locs}
+    seen = set()
+    for p, i in sorted(dup):
+        if (p, i) in seen:
+            continue
+        locs = sorted(dup[(p, i)])
+        if any((q, j - 1) in dup and len(dup[(q, j - 1)]) == len(locs)
+               for q, j in locs):
+            continue
+        n = 1
+        while all((q, j + n) in dup and len(dup[(q, j + n)]) == len(locs)
+                  for q, j in locs):
+            n += 1
+        for q, j in locs:
+            seen.update((q, j + k) for k in range(n))
+        yield n + WINDOW - 1, [(q, files[q][j][0], files[q][j + n + WINDOW - 2][0])
+                               for q, j in locs]
+
+
 def main():
-    root = sys.argv[1] if len(sys.argv) > 1 else "src/main"
+    args = sys.argv[1:]
+    where = "--where" in args
+    args = [a for a in args if a != "--where"]
+    root = args[0] if args else "src/main"
     files = {}
     for d, _, names in os.walk(root):
         for n in names:
@@ -49,6 +81,12 @@ def main():
             w = tuple(s for _, s in lines[i:i + WINDOW])
             if sum(map(len, w)) >= MIN_CHARS:
                 places[w].append((p, i))
+    if where:
+        for n, locs in sorted(runs(places, files), key=lambda r: -r[0]):
+            print(f"{n} code lines at {len(locs)} places")
+            for q, a, b in locs:
+                print(f"    {os.path.relpath(q, root)}:{a}-{b}")
+        return
     covered = defaultdict(set)
     for locs in places.values():
         if len(locs) > 1:
