@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Dev tool: time individual queries by name (args), min of `reps`
   * (env SPARK_GRAFT_REPS, default 2), same session shape as Bench.
@@ -7,10 +9,11 @@ import org.apache.spark.sql.SparkSession
   * (analysis + optimization + physical planning, forced through
   * `executedPlan`) and exec (the `count()` action, which also plans
   * its own aggregate over the frame); the line shows the split of the
-  * fastest rep. Not part of the engine surface — iteration harness
-  * only.
+  * fastest rep and `exchanges=N`, the shuffle exchanges (subqueries
+  * included) of that rep's executed plan. Not part of the engine
+  * surface — iteration harness only.
   */
-object QBench {
+object QBench extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -43,11 +46,13 @@ object QBench {
         val t2 = System.nanoTime()
         val rows = df.count()
         val t3 = System.nanoTime()
-        (Seq(t1 - t0, t2 - t1, t3 - t2).map(_ / 1e9), rows)
+        val exchanges = collectWithSubqueries(df.queryExecution.executedPlan) {
+          case e: ShuffleExchangeLike => e }.size
+        (Seq(t1 - t0, t2 - t1, t3 - t2).map(_ / 1e9), rows, exchanges)
       }
-      val Seq(build, plan, exec) = runs.minBy(_._1.sum)._1
+      val (Seq(build, plan, exec), _, exchanges) = runs.minBy(_._1.sum)
       println(f"$n%-28s min=${build + plan + exec}%8.3f s  all=${runs.map(r => f"${r._1.sum}%.3f").mkString(",")}  " +
-        f"build=$build%.3f plan=$plan%.3f exec=$exec%.3f  rows=${runs.head._2}")
+        f"build=$build%.3f plan=$plan%.3f exec=$exec%.3f  rows=${runs.head._2}  exchanges=$exchanges")
     }
     spark.stop()
   }

@@ -98,6 +98,26 @@ object Tables {
     * exact r20 frame-memo lesson, unapplied to the store paths; a
     * build/plan/exec split showed dedup_image_phash build=0.10-0.12 s,
     * all of it this; SCALE.md round 21).
+    *
+    * A path that scans as ONE split of at most AQE's
+    * `coalescePartitions.minPartitionSize` data bytes (1 MB by default)
+    * is returned under `coalesce(1)`. The scan is one task either way,
+    * but a plain file scan reports `UnknownPartitioning(1)`, which
+    * satisfies no clustered or ordered distribution, so every
+    * aggregate, window, global sort and sort-merge join over it planned
+    * an exchange (and a global sort its range-sampling job) that AQE
+    * then ran as a stage of its own and coalesced back to one
+    * partition. `CoalesceExec(1)` reports `SinglePartition`, which
+    * satisfies every distribution but a broadcast, so those exchanges
+    * are not planned at all (a join plans none only when both sides
+    * are single-partition; a tiny side joined to a large one is
+    * shuffled as before). The byte bound keeps the rule to inputs
+    * whose exchange output AQE would coalesce to one partition anyway;
+    * without it, q34_kmv_intersect over the 2 MB sf0.1 `events` lost
+    * its post-exchange parallelism (SCALE.md, "One-split tables").
+    * Multi-split and larger paths get the plain scan, so the plan at
+    * scale is unchanged. The choice is made when the frame is
+    * built and memoized with it.
     */
   def loadPath(spark: SparkSession, path: String): DataFrame = {
     val stamp =
@@ -113,11 +133,21 @@ object Tables {
     val cached = perSession.get(path)
     if (cached != null && cached._1 == stamp) cached._2
     else {
-      val df = spark.read.parquet(path)
+      val raw = spark.read.parquet(path)
+      val df = if (oneSmallSplit(spark, path)) raw.coalesce(1) else raw
       perSession.put(path, (stamp, df)) // replaces any superseded entry
       df
     }
   }
+
+  /** Whether [[loadPath]] plans a path as one partition: one predicted
+    * scan split holding no more data bytes than AQE's minimum
+    * coalesced partition size.
+    */
+  private def oneSmallSplit(spark: SparkSession, path: String): Boolean =
+    scanSplits(spark, path) == 1L && parquetDataBytes(spark, path) <=
+      org.apache.spark.sql.internal.SQLConf.get.getConf(
+        org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
@@ -260,24 +290,52 @@ object Tables {
   def parquetFileCount(spark: SparkSession, path: String): Long =
     stampedRowCount(spark, path)._1.split(':')(2).toLong
 
+  /** Predicted scan-split count of a parquet path, from the memoized
+    * listing only (no footer or page reads). Models Spark's own split
+    * sizing (`FilePartition.maxSplitBytes`, with the default
+    * minPartitionNum = default-parallelism floor), not a bare
+    * bytes/maxPartitionBytes quotient: a multi-file corpus at 10-100x
+    * ALREADY scans near default parallelism (the floor shrinks splits),
+    * and the r21 100x probe showed the naive estimate inserting a
+    * pointless full-text shuffle there (warc_ingest flat across core
+    * counts until this fix). Every data file counts as at least one
+    * split. Unknown (unreadable listing): `Long.MaxValue`, so neither
+    * caller changes the plan.
+    */
+  private def scanSplits(spark: SparkSession, path: String): Long =
+    try {
+      val files = parquetFileCount(spark, path)
+      val bytes = parquetDataBytes(spark, path)
+      val conf = org.apache.spark.sql.internal.SQLConf.get
+      val openCost = math.max(0L, conf.filesOpenCostInBytes)
+      val target = math.max(1, spark.sparkContext.defaultParallelism)
+      val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+        math.max(openCost, (bytes + openCost * files) / target)))
+      math.max(files, (bytes + maxSplit - 1) / maxSplit)
+    } catch { case _: Throwable => Long.MaxValue }
+
   /** Scale-adaptive fan-out for CPU-heavy per-row kernels (the codec /
     * WARC-parse mapPartitions stages): a small corpus arrives as ONE
     * scan task (`maxPartitionBytes` packs it into a single split), so a
     * kernel that costs ~0.1–1 ms/row runs serially on one core of the
     * whole cluster — at bench SFs the heavy map stages were 1-task
     * stages on a 32-core master (guide §2: make partitioning
-    * scale-adaptive, derive it from input size). When the ESTIMATED
-    * scan-task count (listing bytes / maxPartitionBytes — metadata
-    * only, memoized) is below the cluster's default parallelism,
-    * round-robin repartition to default parallelism so the kernel uses
-    * every core; at scale the estimate exceeds parallelism and the
-    * frame is returned UNCHANGED — no extra exchange on the 100 TB
-    * path. The shuffle this inserts moves only the projected columns
-    * of a corpus already known to be tiny (< cores x maxPartitionBytes).
-    * Results are unaffected: callers' kernels are per-row pure
-    * functions and every consumer aggregates or re-orders downstream.
-    */
-  /** `minRows` gates the fan-out on corpus size: the extra stage +
+    * scale-adaptive, derive it from input size). When the predicted
+    * scan-split count ([[scanSplits]]) is below the cluster's default
+    * parallelism, round-robin repartition to default parallelism so
+    * the kernel uses every core; at scale the prediction reaches
+    * parallelism and the frame is returned UNCHANGED — no extra
+    * exchange on the 100 TB path. The shuffle this inserts moves only
+    * the projected columns of a corpus already known to be tiny
+    * (< cores x maxPartitionBytes). Results are unaffected: callers'
+    * kernels are per-row pure functions and every consumer aggregates
+    * or re-orders downstream.
+    *
+    * A frame that [[loadPath]] planned as one partition (`coalesce(1)`)
+    * still fans out: `CollapseRepartition` replaces the coalesce with
+    * this round-robin repartition.
+    *
+    * `minRows` gates the fan-out on corpus size: the extra stage +
     * shuffle costs a fixed ~50 ms, so a kernel whose SERIAL cost is
     * smaller loses by fanning out (measured at sf0.1: the ~20 us/row
     * PGM/WAV codec servings regressed 40-60 ms each with an
@@ -289,28 +347,11 @@ object Tables {
   def fanOutForCpu(spark: SparkSession, df: DataFrame, dir: String,
       name: String, minRows: Long = 0L): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val estTasks =
-      try {
-        val path = s"$dir/$name.parquet"
-        if (minRows > 0L && parquetRowCount(spark, path) < minRows)
-          return df
-        // model Spark's actual split sizing (FilePartition.maxSplitBytes
-        // with the default minPartitionNum = default parallelism floor),
-        // not a bare bytes/maxPartitionBytes quotient: a multi-file
-        // corpus at 10-100x ALREADY scans near target parallelism (the
-        // floor shrinks splits), and the r21 100x probe showed the naive
-        // estimate inserting a pointless full-text shuffle there
-        // (warc_ingest flat across core counts until this fix).
-        val files = parquetFileCount(spark, path)
-        if (files >= target) return df // splits to >= target via the floor
-        val bytes = parquetDataBytes(spark, path)
-        val conf = org.apache.spark.sql.internal.SQLConf.get
-        val openCost = math.max(0L, conf.filesOpenCostInBytes)
-        val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
-          math.max(openCost, (bytes + openCost * files) / math.max(1, target))))
-        math.max(files, (bytes + maxSplit - 1) / maxSplit)
-      } catch { case _: Throwable => Long.MaxValue } // unknown: leave the plan alone
-    if (estTasks >= target) df else df.repartition(target)
+    val path = s"$dir/$name.parquet"
+    val small =
+      try minRows > 0L && parquetRowCount(spark, path) < minRows
+      catch { case _: Throwable => true } // unknown: leave the plan alone
+    if (small || scanSplits(spark, path) >= target) df else df.repartition(target)
   }
 
   /** Version TOKEN of a parquet path, the corpus-version part of the

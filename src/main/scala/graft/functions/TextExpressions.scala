@@ -44,6 +44,26 @@ trait StaticStringCall extends UnaryExpression with StringInputs {
       .mkString(s"graft.functions.TextExpressions.$staticName(", ", ", ")"))
 }
 
+/** A string expression whose row call needs per-instance state (a
+  * term's bytes, a stop-word set): `call` evaluates it, and the
+  * generated code calls the public method `callName._2` on this
+  * expression object, passed in as the reference `callName._1`. The
+  * method keeps its own typed signature so the generated code needs
+  * no cast.
+  */
+trait InstanceStringCall extends UnaryExpression with StringInputs {
+  protected def callName: (String, String)
+  protected def call(input: UTF8String): Any
+
+  override def nullSafeEval(input: Any): Any = call(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (refName, method) = callName
+    val ref = ctx.addReferenceObj(refName, this, getClass.getName)
+    defineCodeGen(ctx, ev, c => s"$ref.$method($c)")
+  }
+}
+
 /** Native word-shingling for the dedup family's hottest map stage.
   *
   * The declarative formulation — `transform(sequence(1, n_sh), i =>
@@ -130,8 +150,7 @@ case class CdcChunkHashes(child: Expression, window: Int) extends StaticStringCa
   * streaming standing-query gate). Codegen'd via the shared
   * [[TextExpressions.termCount]] byte walk.
   */
-case class TermCount(child: Expression, term: String)
-    extends UnaryExpression with StringInputs {
+case class TermCount(child: Expression, term: String) extends InstanceStringCall {
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "term_count"
@@ -140,35 +159,23 @@ case class TermCount(child: Expression, term: String)
 
   /** Row-level entry point shared by eval and generated code. */
   def count(t: UTF8String): Long = TextExpressions.termCount(t, termBytes)
-
-  override def nullSafeEval(input: Any): Any =
-    count(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("termCount", this, classOf[TermCount].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.count($c)")
-  }
+  protected def call(t: UTF8String): Any = count(t)
+  protected def callName: (String, String) = ("termCount", "count")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class PhraseCount(child: Expression, w1: String, w2: String)
-    extends UnaryExpression with StringInputs {
+    extends InstanceStringCall {
 
   override def dataType: DataType = org.apache.spark.sql.types.LongType
   override def prettyName: String = "phrase_count"
 
   /** Row-level entry point shared by eval and generated code. */
   def count(t: UTF8String): Long = TextExpressions.phraseCount(t, w1, w2)
-
-  override def nullSafeEval(input: Any): Any =
-    count(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("phraseCount", this, classOf[PhraseCount].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.count($c)")
-  }
+  protected def call(t: UTF8String): Any = count(t)
+  protected def callName: (String, String) = ("phraseCount", "count")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -282,8 +289,7 @@ case class TermCountStructs(child: Expression) extends StaticStringCall {
   * zero-copy slices. Empty tokens (doubled spaces) are non-stopwords,
   * exactly like the `isin(stopEn)` they replace.
   */
-case class PhraseRuns(child: Expression, stopCsv: String)
-    extends UnaryExpression with StringInputs {
+case class PhraseRuns(child: Expression, stopCsv: String) extends InstanceStringCall {
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -307,14 +313,8 @@ case class PhraseRuns(child: Expression, stopCsv: String)
   /** Row-level entry point shared by eval and generated code. */
   def runs(t: UTF8String): GenericArrayData =
     TextExpressions.phraseRuns(t, stopSet)
-
-  override def nullSafeEval(input: Any): Any =
-    runs(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("phraseRuns", this, classOf[PhraseRuns].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.runs($c)")
-  }
+  protected def call(t: UTF8String): Any = runs(t)
+  protected def callName: (String, String) = ("phraseRuns", "runs")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Stores, Tables}
 import graft.operators.{BpeTrainer, TextOps, UrlOps, VectorOps}
+import scala.collection.immutable.ArraySeq
 
 /** Training-data-pipeline extension operators (SURVEY.md §2.3 /
   * BASELINE.json north star): dedup (exact, MinHash-LSH, SimHash,
@@ -1256,7 +1257,7 @@ object ExtensionQueries {
   private def pqSlice(v: Column)(si: Int): Column = slice(v, si * 8 + 1, 8)
 
   private def pqBalancedSub(v: Column, dims: Array[Int]): Column =
-    array(dims.map(d => element_at(v, d + 1)): _*)
+    array(ArraySeq.unsafeWrapArray(dims.map(d => element_at(v, d + 1))): _*)
   private def pqBalSubOf(v: Array[Float], dims: Array[Int]): Array[Float] =
     dims.map(v(_))
 

@@ -13,8 +13,24 @@ import org.apache.spark.sql.DataFrame
   */
 class PlanAuditSpec extends SparkSpec {
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
+  private def plan(name: String, dir: String = sf0001): String =
+    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  /** The sf0.001 `events` and `documents` rewritten as three files
+    * each, once per suite. Every sf0.001 table is one small file, which
+    * `Tables.loadPath` plans as one partition with no exchanges; the
+    * audits of the scale plan's exchanges read this copy instead, which
+    * the loader predicts as three splits and scans as at scale.
+    */
+  private lazy val multiSplit: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-audit-").toString
+    Tables.events(spark, sf0001).repartition(3).write.parquet(s"$dir/events.parquet")
+    Tables.documents(spark, sf0001).repartition(3).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def hashExchanges(p: String): Int =
+    p.linesIterator.count(_.contains("Exchange hashpartitioning"))
 
   test("map-side text queries shuffle only for their output sort") {
     for (q <- Seq("dedup_simhash", "text_repetition", "text_quality",
@@ -572,12 +588,16 @@ class PlanAuditSpec extends SparkSpec {
     // hash-partition on (event_type, salt) before the per-key collapse;
     // if Catalyst ever fused the phases the skew protection silently
     // vanished while the (oracle-checked) result stayed identical
-    val p = plan("q26_salted_agg")
+    val p = plan("q26_salted_agg", multiSplit)
     val n = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(n === 2, s"expected the salted + final exchanges, got $n:\n$p")
     // the alias is rewritten to _groupingexpression; the salt's pmod
     // derivation is the stable fingerprint
     assert(p.contains("pmod(event_id"), s"salt key missing from the plan:\n$p")
+    // a one-split input is one partition: both phases run in one stage
+    val tiny = plan("q26_salted_agg")
+    assert(hashExchanges(tiny) === 0 && tiny.contains("pmod(event_id"),
+      s"a one-split events table must plan both phases without an exchange:\n$tiny")
   }
 
   test("fuzzy join: variant-key blocking join, never a cross product") {
@@ -722,12 +742,19 @@ class PlanAuditSpec extends SparkSpec {
     // at scale) — but a cartesian / nested-loop anywhere means the
     // join key got lost, and fewer than 5 hash exchanges means an
     // iteration's contribution aggregate collapsed into something else
-    val p = graft.queries.ExtensionQueries.pagerankEdgesBuildFrame(spark, sf0001)
+    val p = graft.queries.ExtensionQueries.pagerankEdgesBuildFrame(spark, multiSplit)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"pagerank-over-edges planned an unkeyed join:\n$p")
     val n = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(n >= 5, s"expected >= 5 contribution aggregates, got $n:\n$p")
+    // one-split documents and edge store: five keyed joins, no exchange
+    val tiny = graft.queries.ExtensionQueries.pagerankEdgesBuildFrame(spark, sf0001)
+      .queryExecution.executedPlan.toString
+    assert(hashExchanges(tiny) === 0 && !tiny.contains("CartesianProduct") &&
+      !tiny.contains("BroadcastNestedLoopJoin") &&
+      tiny.linesIterator.count(_.contains("BroadcastHashJoin")) === 5,
+      s"a one-split input must plan five keyed joins and no exchange:\n$tiny")
   }
 
   test("rank stores: serving plans are store scans with no iterative-union shape") {
@@ -779,7 +806,7 @@ class PlanAuditSpec extends SparkSpec {
     // is a map-side Generate — a shuffled join anywhere means the
     // arithmetic edge derivation regressed to a materialized
     // edge-table join
-    val p = graft.queries.ExtensionQueries.pagerankBuildFrame(spark, sf0001)
+    val p = graft.queries.ExtensionQueries.pagerankBuildFrame(spark, multiSplit)
       .queryExecution.executedPlan.toString
     val n = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(n === 5, s"expected exactly the 5 iteration exchanges, got $n:\n$p")
@@ -787,6 +814,12 @@ class PlanAuditSpec extends SparkSpec {
       s"pagerank planned a shuffled join:\n$p")
     assert(p.linesIterator.count(_.contains("Generate explode")) === 5,
       s"expected one map-side out-link explode per iteration:\n$p")
+    // one-split documents: the five iterations run in one stage
+    val tiny = graft.queries.ExtensionQueries.pagerankBuildFrame(spark, sf0001)
+      .queryExecution.executedPlan.toString
+    assert(hashExchanges(tiny) === 0 && !tiny.contains("SortMergeJoin") &&
+      tiny.linesIterator.count(_.contains("Generate explode")) === 5,
+      s"a one-split input must plan five map-side explodes and no exchange:\n$tiny")
   }
 
   test("zscore: per-type moments broadcast back; no low-cardinality window") {
