@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus drop and serves them many times; the registry reproduces
   * that lifecycle inside one JVM.
   *
-  * Key: (store name, corpus dir, [[Tables.parquetVersion]] of the
-  * named table under that dir, optional extra such as a query id).
+  * Key: (store name, optional extra such as a query id, the named
+  * table's path under the corpus dir, its [[Tables.parquetVersion]]).
   * The version folds the row count, file count, mtimes and bytes of
   * one metadata listing, so an in-place rewrite of the table, one that
   * keeps the row count included, misses and rebuilds. Nothing is ever
@@ -27,9 +27,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a build writes lives under one JVM temp root, deleted by one
   * shutdown hook.
   *
-  * Two lifecycles stay outside: [[Tables]]' session-scoped frame and
-  * row-count memos, and `Hnsw`'s per-index-dir caches, which an append
-  * invalidates.
+  * A persisted index opens through the same lifecycle: its relations
+  * through the [[Tables.loadPath]] frame memo, its driver-side
+  * constants (centroid banks, codebooks, entry meta) through the path
+  * form of [[value]], keyed on the [[Tables.parquetVersion]] of the
+  * path they were read from. An append, retrain swap, compaction or
+  * rebuild changes that version, so the next open misses and re-reads;
+  * no writer has to invalidate anything. Only [[Tables]]' frame memo
+  * keeps a lifecycle of its own (session-scoped, evicted when the
+  * session's context stops).
   */
 object Stores {
   private val entries = new java.util.concurrent.ConcurrentHashMap[String, Any]()
@@ -53,8 +59,14 @@ object Stores {
 
   /** The driver-side form: what `build` returns, built once per key. */
   def value[T](s: SparkSession, name: String, dir: String, table: String,
-      extra: String = "")(build: => T): T = {
-    val key = s"$name:$dir@${Tables.parquetVersion(s, s"$dir/$table.parquet")}#$extra"
+      extra: String = "")(build: => T): T =
+    value(s, s"$name#$extra", s"$dir/$table.parquet")(build)
+
+  /** The driver-side form keyed on a parquet `path` itself (an index's
+    * centroids or codebooks): built once per version of that path.
+    */
+  def value[T](s: SparkSession, name: String, path: String)(build: => T): T = {
+    val key = s"$name:$path@${Tables.parquetVersion(s, path)}"
     val hit = entries.get(key)
     if (hit != null) hit.asInstanceOf[T]
     else {

@@ -121,7 +121,7 @@ object Tables {
     */
   def loadPath(spark: SparkSession, path: String): DataFrame = {
     val stamp =
-      try stampedRowCount(spark, path)._1
+      try listing(spark, path)._1
       catch { case _: Throwable => // missing path: let read.parquet throw its own error
         return spark.read.parquet(path)
       }
@@ -134,18 +134,19 @@ object Tables {
     if (cached != null && cached._1 == stamp) cached._2
     else {
       val raw = spark.read.parquet(path)
-      val df = if (oneSmallSplit(spark, path)) raw.coalesce(1) else raw
+      val df = if (oneSmallSplit(spark, stamp)) raw.coalesce(1) else raw
       perSession.put(path, (stamp, df)) // replaces any superseded entry
       df
     }
   }
 
-  /** Whether [[loadPath]] plans a path as one partition: one predicted
-    * scan split holding no more data bytes than AQE's minimum
-    * coalesced partition size.
+  /** Whether [[loadPath]] plans a path as one partition, from the
+    * [[listing]] stamp it already took: one predicted scan split
+    * holding no more data bytes than AQE's minimum coalesced partition
+    * size.
     */
-  private def oneSmallSplit(spark: SparkSession, path: String): Boolean =
-    scanSplits(spark, path) == 1L && parquetDataBytes(spark, path) <=
+  private def oneSmallSplit(spark: SparkSession, stamp: String): Boolean =
+    scanSplits(spark, stamp) == 1L && stamp.split(':').last.toLong <=
       org.apache.spark.sql.internal.SQLConf.get.getConf(
         org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
@@ -235,33 +236,43 @@ object Tables {
   private val rowCountMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
-  /** Shared body of [[parquetRowCount]] / [[parquetVersion]]: one
-    * recursive listing -> freshness stamp; footer count memoized
-    * against that stamp.
+  /** One recursive metadata listing of a parquet path: its freshness
+    * stamp, its data files and the Hadoop conf they were listed with.
+    * No footer is read: [[loadPath]] and the byte / file counts need
+    * the stamp alone, and a new version of a partitioned index tree is
+    * thousands of footers (seconds on the driver at 10x).
     */
-  private def stampedRowCount(spark: SparkSession, path: String): (String, Long) = {
+  private def listing(spark: SparkSession, path: String): (String,
+      Seq[org.apache.hadoop.fs.FileStatus], org.apache.hadoop.conf.Configuration) = {
     import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val rootSt = fs.getFileStatus(root)
-    def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val st = fs.getFileStatus(p)
+    // the listing's own statuses: one listStatus per directory, no
+    // per-entry stat (a partitioned index tree is hundreds of entries)
+    def files(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
       if (st.isFile) Seq(st)
-      else fs.listStatus(p).toIndexedSeq.flatMap { c =>
+      else fs.listStatus(st.getPath).toIndexedSeq.flatMap { c =>
         val name = c.getPath.getName
         // skip hidden/metadata entries the parquet reader also skips
         if (name.startsWith("_") || name.startsWith(".")) Seq.empty
-        else files(c.getPath)
+        else files(c)
       }
-    }
-    val children = files(root)
+    val children = files(rootSt)
     val maxChildMtime = if (children.isEmpty) 0L else children.map(_.getModificationTime).max
     val totalBytes = children.map(_.getLen).sum
-    val stamp =
-      s"${rootSt.getModificationTime}:${rootSt.getLen}:${children.size}:$maxChildMtime:$totalBytes"
+    (s"${rootSt.getModificationTime}:${rootSt.getLen}:${children.size}:$maxChildMtime:$totalBytes",
+      children, conf)
+  }
+
+  /** Shared body of [[parquetRowCount]] / [[parquetVersion]]: the
+    * [[listing]]'s stamp, and the footer count memoized against it.
+    */
+  private def stampedRowCount(spark: SparkSession, path: String): (String, Long) = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val (stamp, children, conf) = listing(spark, path)
     val cached = rowCountMemo.get(path)
     if (cached != null && cached._1 == stamp) (stamp, cached._2)
     else {
@@ -277,21 +288,21 @@ object Tables {
   def parquetRowCount(spark: SparkSession, path: String): Long =
     stampedRowCount(spark, path)._2
 
-  /** Total DATA bytes under a parquet path, from the same memoized
-    * recursive listing as [[parquetRowCount]] (the stamp's last field)
-    * — no footer or page reads.
+  /** Total DATA bytes under a parquet path, from one [[listing]] (the
+    * stamp's last field) — no footer or page reads.
     */
   def parquetDataBytes(spark: SparkSession, path: String): Long =
-    stampedRowCount(spark, path)._1.split(':').last.toLong
+    listing(spark, path)._1.split(':').last.toLong
 
-  /** Data-file count under a parquet path (stamp field 3) — same
-    * memoized listing, no I/O.
+  /** Data-file count under a parquet path (stamp field 3) — one
+    * [[listing]], no footer reads.
     */
   def parquetFileCount(spark: SparkSession, path: String): Long =
-    stampedRowCount(spark, path)._1.split(':')(2).toLong
+    listing(spark, path)._1.split(':')(2).toLong
 
-  /** Predicted scan-split count of a parquet path, from the memoized
-    * listing only (no footer or page reads). Models Spark's own split
+  /** Predicted scan-split count of a parquet path, from the file count
+    * and data bytes of its [[listing]] stamp alone (no footer or page
+    * reads). Models Spark's own split
     * sizing (`FilePartition.maxSplitBytes`, with the default
     * minPartitionNum = default-parallelism floor), not a bare
     * bytes/maxPartitionBytes quotient: a multi-file corpus at 10-100x
@@ -299,20 +310,17 @@ object Tables {
     * and the r21 100x probe showed the naive estimate inserting a
     * pointless full-text shuffle there (warc_ingest flat across core
     * counts until this fix). Every data file counts as at least one
-    * split. Unknown (unreadable listing): `Long.MaxValue`, so neither
-    * caller changes the plan.
+    * split.
     */
-  private def scanSplits(spark: SparkSession, path: String): Long =
-    try {
-      val files = parquetFileCount(spark, path)
-      val bytes = parquetDataBytes(spark, path)
-      val conf = org.apache.spark.sql.internal.SQLConf.get
-      val openCost = math.max(0L, conf.filesOpenCostInBytes)
-      val target = math.max(1, spark.sparkContext.defaultParallelism)
-      val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
-        math.max(openCost, (bytes + openCost * files) / target)))
-      math.max(files, (bytes + maxSplit - 1) / maxSplit)
-    } catch { case _: Throwable => Long.MaxValue }
+  private def scanSplits(spark: SparkSession, stamp: String): Long = {
+    val Array(_, _, files, _, bytes) = stamp.split(':').map(_.toLong)
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = math.max(0L, conf.filesOpenCostInBytes)
+    val target = math.max(1, spark.sparkContext.defaultParallelism)
+    val maxSplit = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, (bytes + openCost * files) / target)))
+    math.max(files, (bytes + maxSplit - 1) / maxSplit)
+  }
 
   /** Scale-adaptive fan-out for CPU-heavy per-row kernels (the codec /
     * WARC-parse mapPartitions stages): a small corpus arrives as ONE
@@ -351,7 +359,9 @@ object Tables {
     val small =
       try minRows > 0L && parquetRowCount(spark, path) < minRows
       catch { case _: Throwable => true } // unknown: leave the plan alone
-    if (small || scanSplits(spark, path) >= target) df else df.repartition(target)
+    val splits = // unknown (unreadable listing): leave the plan alone
+      try scanSplits(spark, listing(spark, path)._1) catch { case _: Throwable => Long.MaxValue }
+    if (small || splits >= target) df else df.repartition(target)
   }
 
   /** Version TOKEN of a parquet path, the corpus-version part of the

@@ -73,7 +73,7 @@ object Compaction {
     * [[recover]], and `staged` is deleted once that restore succeeded
     * (kept when it failed: it may be the only copy that reads).
     */
-  private[operators] def swapStaged(spark: SparkSession, live: String, staged: String)(
+  private[graft] def swapStaged(spark: SparkSession, live: String, staged: String)(
       verified: => Boolean): Unit = {
     val path = new Path(live)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -118,30 +118,6 @@ object Hnsw {
       .toDF("node", "v", "nv", "nb", "vb", "nvb", "d2")
   }
 
-  // driver-memoized entry meta per index dir (bounded: 1 row each);
-  // buildIndex invalidates its dir's entry on rebuild
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long, Seq[Double], Double)]()
-  // driver-memoized level-0 centroid bank per index dir (k x dim,
-  // k ~ sqrt(n) — the IVF centroid-bank convention); None = the layer
-  // was built exact (no quantizer). Invalidated on rebuild.
-  private val cellCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Array[(Int, Array[Double], Double)]]]()
-  // memoized node-table relation per index dir: the parquet file index
-  // resolves ONCE per index generation instead of re-listing the whole
-  // nodes tree (levels x ingests x cells — hundreds of directories at
-  // scale) on every probe's seed read (measured: 5.3 s probes at 100x
-  // from per-probe discovery). Append batches and compaction
-  // invalidate it so the next probe sees the new layers; between
-  // invalidations a seed can be one batch stale — navigability to
-  // just-appended vectors is carried by their delta reverse edges
-  // hanging off the seeded region, not by the seed itself.
-  private val nodesFrameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def nodesFrame(spark: SparkSession, dir: String): DataFrame =
-    nodesFrameCache.computeIfAbsent(dir, _ => spark.read.parquet(s"$dir/nodes"))
-
   private def hadoopFs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -251,10 +227,6 @@ object Hnsw {
       .select(col("lvl").as("top_level"), col("node").as("entry_node"),
         col("v").as("entry_v"), col("nv").as("entry_nv"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    metaCache.remove(dir) // rebuild-into-same-dir must not serve stale meta
-    cellCache.remove(dir)
-    nodesFrameCache.remove(dir)
-    ()
   }
 
   /** Streaming ingest into a built index (r18 verdict "next round"
@@ -310,6 +282,9 @@ object Hnsw {
         .withColumn("nv", VectorOps.norm2(col("v")))
         .withColumn("lvl", levelCol(col("node")))
         .localCheckpoint() // MaxLevel+1 level passes reuse it
+      // the node tables as listed at batch start: a level pass reads
+      // only its own level, which no earlier pass of this batch wrote
+      val nodes = graft.Tables.loadPath(spark, s"$dir/nodes")
       for (level <- 0 to MaxLevel) {
         val newNodes = batch.filter(col("lvl") >= level)
           .select(col("node"), col("v"), col("nv"))
@@ -347,9 +322,7 @@ object Hnsw {
         // and pair each member against a duplicate of itself (the
         // overwrite below heals the store; this filter heals the
         // replay's candidate set).
-        // one file-index resolution per batch across the three level
-        // passes (nodesFrame memo; invalidated at batch end below)
-        val cand = nodesFrame(spark, dir)
+        val cand = nodes
           .filter(col("level") === level &&
             col("ingest").cast("string") =!= tag &&
             col("cell").isin(probed: _*))
@@ -393,7 +366,6 @@ object Hnsw {
           .write.partitionBy("cell").mode("overwrite")
           .parquet(s"$dir/nodes/level=$level/ingest=$tag")
       }
-      nodesFrameCache.remove(dir) // next probe's seed sees this batch
     }
 
   /** Fold accumulated delta layers into the base adjacency WITHOUT a
@@ -497,7 +469,6 @@ object Hnsw {
     for ((live, staged) <- Seq(s"$dir/edges" -> stageE, s"$dir/nodes" -> stageN))
       Compaction.swapStaged(spark, live, staged)(spark.read.parquet(live).count() > 0)
     fs.delete(new Path(s"$dir/delta"), true)
-    nodesFrameCache.remove(dir) // folded layers: re-list on next probe
     true
   }
 
@@ -521,6 +492,15 @@ object Hnsw {
     * node-pushed read of <= beam x M rows; total jobs are bounded by
     * hops x layers + efRounds, independent of corpus size.
     *
+    * The index opens once per version: the entry meta and the level-0
+    * centroid bank are driver constants collected through
+    * [[graft.Stores.value]]'s path form, and the edges, delta and node
+    * relations come from the [[graft.Tables.loadPath]] frame memo, all
+    * re-checked against their path's stamp on every call. A repeat
+    * probe of an unchanged index starts only its seed and hop reads; a
+    * rebuild, append, compaction or a directory swapped in by another
+    * writer changes a stamp and is served at once.
+    *
     * Defaults ef=32 / efRounds=4 are the MEASURED floor of the r19
     * recall sweep (5 query ids x 3 SFs, SCALE.md round 19): at 20k
     * vectors, (16, 3) collapsed to 0-2 of the brute top-10 on two
@@ -541,29 +521,27 @@ object Hnsw {
     val q = qv.map(x => BigDecimal(x * 1000000.0)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble)
     val nq = q.map(x => x * x).sum
-    // entry meta: one bounded row per index VERSION — memoized on the
-    // driver (the postingSumdl literal convention) so repeat probes
-    // skip the meta job entirely; appendToIndex never rewrites meta,
-    // so the cache cannot go stale within an index generation
-    val meta = metaCache.computeIfAbsent(dir, _ =>
-      spark.read.parquet(s"$dir/meta")
-        .select(col("top_level"), col("entry_node"), col("entry_v"), col("entry_nv"))
-        .as[(Int, Long, Seq[Double], Double)].head())
-    val (topLevel, entry0, entryV, entryNv) = meta
+    // entry meta: one bounded row per version of `meta`;
+    // appendToIndex never rewrites it, so appends keep the entry
+    val (topLevel, entry0, entryV, entryNv) =
+      graft.Stores.value(spark, "hnsw-meta", s"$dir/meta") {
+        spark.read.parquet(s"$dir/meta")
+          .select(col("top_level"), col("entry_node"), col("entry_v"), col("entry_nv"))
+          .as[(Int, Long, Seq[Double], Double)].head()
+      }
     // fetch: neighbors-with-vectors of a bounded node set at a level —
     // base adjacency plus any appendToIndex delta layers (both reads
     // stay partition-pruned on level and node-pushed; delta rows are
-    // what make post-build ingests navigable). The DataFrames are
-    // constructed ONCE per probe: the parquet file index resolves at
-    // construction, so per-hop jobs filter an already-listed relation
+    // what make post-build ingests navigable). Both relations come from
+    // the frame memo, so per-hop jobs filter an already-listed relation
     // instead of re-walking the directory every hop. Delta presence
     // resolves through Hadoop's FileSystem, NOT java.io.File — the
     // index dir may live on any Hadoop-compatible store, where a
     // local-path check would silently skip the delta layers and make
     // every appended vector unreachable (r19 advice).
     val hasDelta = hadoopFs(spark, dir).exists(new Path(s"$dir/delta"))
-    val baseEdges = spark.read.parquet(s"$dir/edges")
-    val deltaEdges = if (hasDelta) Some(spark.read.parquet(s"$dir/delta")) else None
+    val baseEdges = graft.Tables.loadPath(spark, s"$dir/edges")
+    val deltaEdges = if (hasDelta) Some(graft.Tables.loadPath(spark, s"$dir/delta")) else None
     def nbrs(level: Int, ofNodes: Seq[Long]): Array[(Long, Seq[Double], Double)] = {
       val base = baseEdges
         .filter(col("level") === level && col("node").isin(ofNodes: _*))
@@ -593,24 +571,29 @@ object Hnsw {
     // families, best cosine 0.27 where exact copies existed). The
     // quantizer IS the long-range structure the index already paid
     // for; seeding from it makes the probe robust with the read bound
-    // unchanged in kind. The centroid bank memoizes per index dir
-    // (k x dim driver constant, the IVF convention).
-    val seedCells = cellCache.computeIfAbsent(dir, _ => {
-      val p = new Path(s"$dir/cells/level=0")
-      if (!hadoopFs(spark, dir).exists(p)) None
-      else Some(spark.read.parquet(p.toString)
-        .select(col("cid"), col("cv")).as[(Int, Seq[Double])].collect()
-        .map { case (cid, cv) =>
-          (cid, cv.toArray, cv.map(x => x * x).sum) })
-    })
+    // unchanged in kind. The centroid bank is a k x dim driver constant
+    // per version of `cells/level=0` (the IVF convention); a layer
+    // built exact has no quantizer and no seed.
+    val cellsPath = s"$dir/cells/level=0"
+    val seedCells = if (!hadoopFs(spark, dir).exists(new Path(cellsPath))) None
+      else Some(graft.Stores.value(spark, "hnsw-seed-cells", cellsPath) {
+        spark.read.parquet(cellsPath)
+          .select(col("cid"), col("cv")).as[(Int, Seq[Double])].collect()
+          .map { case (cid, cv) => (cid, cv.toArray, cv.map(x => x * x).sum) }
+      })
     seedCells.foreach { cents =>
       val bestCell = cents.map { case (cid, cv, ncv) =>
         var dot = 0.0; var i = 0
         while (i < q.length) { dot += q(i) * cv(i); i += 1 }
         (nq + ncv - 2.0 * dot, cid)
       }.min._2
-      nodesFrame(spark, dir)
-        .filter(col("level") === 0 && col("cell") === bestCell)
+      // level 0's node tables through the frame memo: their file index
+      // (ingests x cells — hundreds of directories at scale) resolves
+      // once per version, not per probe (measured: 5.3 s probes at 100x
+      // from per-probe discovery), and the per-call stamp lists level 0
+      // only
+      graft.Tables.loadPath(spark, s"$dir/nodes/level=0")
+        .filter(col("cell") === bestCell)
         .select(col("node"), col("v"), col("nv"))
         .as[(Long, Seq[Double], Double)].collect()
         .foreach { case (id, v, nv) =>

@@ -195,33 +195,45 @@ object Similarity {
     k
   }
 
-  /** Probe a persisted index: centroids load driver-side (k x dim), the
-    * probe set resolves locally, and the cells scan carries a
-    * partition filter — Spark lists/reads ONLY the probed cell
-    * directories (asserted via the scan's partitionFilters in
-    * SimilaritySpec).
+  /** Probe a persisted index: the centroid bank (k x dim) resolves the
+    * probe set locally, and the cells scan carries a partition filter —
+    * Spark lists/reads ONLY the probed cell directories (asserted via
+    * the scan's partitionFilters in SimilaritySpec).
+    *
+    * The index opens once per version: the cells relation comes from
+    * the [[graft.Tables.loadPath]] frame memo and the bank from
+    * [[centroidBank]], both re-checked against the path's stamp on
+    * every call, so a repeat probe of an unchanged index starts no job
+    * before its scan while an append or retrain swap is seen at once.
     */
   def probeIndex(spark: SparkSession, dir: String, qv: Array[Double],
       topK: Int, probes: Int = 2): DataFrame = {
     val probeCells = probedCells(spark, dir, qv, probes)
     scoreTopK(
-      spark.read.parquet(s"$dir/cells")
+      graft.Tables.loadPath(spark, s"$dir/cells")
         .filter(col("cell").isin(probeCells.toIndexedSeq: _*)),
       qv, topK)
   }
 
   /** The probe load shared by [[probeIndex]] and [[probePqIndex]]:
-    * heal a crashed retrain swap, collect the centroids (k x dim) and
-    * resolve the `probes` cells nearest to `qv` locally.
+    * heal a crashed retrain swap and resolve the `probes` cells nearest
+    * to `qv` locally against the centroid bank.
     */
   private def probedCells(spark: SparkSession, dir: String, qv: Array[Double],
       probes: Int): Seq[Int] = {
-    recoverSwap(spark, dir)
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cid"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
-    nearestCells(cents, qv, probes)
+    Compaction.recover(spark, dir) // heal a crashed retrain swap first
+    nearestCells(centroidBank(spark, dir).zipWithIndex.map(_.swap).toSeq, qv, probes)
   }
+
+  /** A saved index's centroid bank (k x dim, indexed by cid), collected
+    * once per version of `dir/centroids` ([[graft.Stores.value]]'s path
+    * form): shared by the probes and the appenders.
+    */
+  private def centroidBank(spark: SparkSession, dir: String): Array[Array[Double]] =
+    graft.Stores.value(spark, "centroid-bank", s"$dir/centroids") {
+      spark.read.parquet(s"$dir/centroids").select(col("cid"), col("cv")).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).map(_._2)
+    }
 
   /** Replay-safe ingest-layer key shared by every streaming append
     * path (IVF cells, PQ codes, HNSW deltas): batchIds restart at 0
@@ -262,7 +274,7 @@ object Similarity {
     */
   def appendToIndex(spark: SparkSession, stream: DataFrame, dir: String,
       checkpoint: String): StreamingQuery = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = centroidDf(spark, centroidBank(spark, dir))
     // foreachBatch is at-least-once: write into a deterministic
     // ingest=<token>-<batchId> directory with overwrite, so a
     // replayed micro-batch rewrites its own files instead of
@@ -323,12 +335,15 @@ object Similarity {
     (k, pq)
   }
 
-  /** Probe a persisted IVF-PQ index: centroids + codebooks load
-    * driver-side (k x dim and m x k x dsub — both corpus-independent),
-    * the probe set resolves locally, the codes scan carries the cell
-    * partition filter, and scoring is pure ADC: unpack each byte of
-    * code64 and sum m broadcast-literal table lookups — the scan
-    * touches 8 bytes per candidate, never a float vector.
+  /** Probe a persisted IVF-PQ index: the centroid bank and codebooks
+    * (k x dim and m x k x dsub — both corpus-independent) resolve the
+    * probe set and the ADC tables driver-side, the codes scan carries
+    * the cell partition filter, and scoring is pure ADC: unpack each
+    * byte of code64 and sum m broadcast-literal table lookups — the
+    * scan touches 8 bytes per candidate, never a float vector. The
+    * index opens once per version, as in [[probeIndex]]: the codes
+    * relation through the frame memo, the bank and books through
+    * [[graft.Stores.value]]'s path form.
     */
   def probePqIndex(spark: SparkSession, dir: String, qv: Array[Double],
       topK: Int, probes: Int = 2): DataFrame = {
@@ -346,7 +361,7 @@ object Similarity {
       element_at(typedLit(tables(si)),
         (shiftright(col("code64"), si * 8).bitwiseAND(lit(0xffL))).cast("int") + 1)
     }.reduce(_ + _)
-    spark.read.parquet(s"$dir/codes")
+    graft.Tables.loadPath(spark, s"$dir/codes")
       .filter(col("cell").isin(probeCells.toIndexedSeq: _*))
       .select(col("vec_id"), round(adc, 6).as("adc_score"))
       .orderBy(col("adc_score").desc, col("vec_id"))
@@ -364,7 +379,7 @@ object Similarity {
     */
   def appendToPqIndex(spark: SparkSession, stream: DataFrame, dir: String,
       checkpoint: String): StreamingQuery = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = centroidDf(spark, centroidBank(spark, dir))
     val bc = spark.sparkContext.broadcast(loadPqBooks(spark, dir))
     appendLayers(stream, checkpoint) { (b, tag) =>
       pqCodes(assignCells(b, cents), bc)
@@ -373,15 +388,18 @@ object Similarity {
     }
   }
 
-  /** The codebooks a saved PQ index was built with, from `dir/books`. */
-  private def loadPqBooks(spark: SparkSession, dir: String): PqCodebooks = {
-    val books = spark.read.parquet(s"$dir/books")
-      .select(col("si"), col("cid"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3)).toArray
-    PqCodebooks(books.length, books(0)(0).length, books)
-  }
+  /** The codebooks a saved PQ index was built with, collected from
+    * `dir/books` once per version of that path.
+    */
+  private def loadPqBooks(spark: SparkSession, dir: String): PqCodebooks =
+    graft.Stores.value(spark, "pq-books", s"$dir/books") {
+      val books = spark.read.parquet(s"$dir/books")
+        .select(col("si"), col("cid"), col("cv")).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map(_._2.sortBy(_._2).map(_._3)).toArray
+      PqCodebooks(books.length, books(0)(0).length, books)
+    }
 
   /** PQ-encode cell-assigned vectors ([[assignCells]] output) into
     * (vec_id, cell, code64): per subspace the nearest codeword by
@@ -418,17 +436,6 @@ object Similarity {
       .toDF("vec_id", "cell", "code64")
   }
 
-  /** Crash-recovery for the retrain swap: the swap's only unsafe
-    * window is between "live moved to `__old`" and "stage moved to
-    * live" — a crash there leaves NO live directory but an intact
-    * backup. Rename the backup straight back (atomic on the same
-    * filesystem, same as the forward swap) and report whether a
-    * recovery happened. Idempotent and cheap (two metadata probes), so
-    * the open/retrain paths call it unconditionally first.
-    */
-  def recoverSwap(spark: SparkSession, dir: String): Boolean =
-    Compaction.recover(spark, dir) // same `__old` contract as compaction
-
   /** Retrain-and-swap for a persisted IVF index — the maintenance op
     * the append path defers to: streaming appends encode against the
     * ORIGINAL centroids, so after heavy ingest the coarse quantizer
@@ -444,7 +451,7 @@ object Similarity {
     */
   def retrainIndex(spark: SparkSession, dir: String,
       kCells: Int = 0, iters: Int = 3): Int = {
-    recoverSwap(spark, dir) // heal a crashed earlier swap before reading
+    Compaction.recover(spark, dir) // heal a crashed earlier swap before reading
     val all = spark.read.parquet(s"$dir/cells")
       .select(col("vec_id"), col("v").as("embedding"))
     val n = all.count()
@@ -475,7 +482,7 @@ object Similarity {
     */
   def retrainPqIndex(spark: SparkSession, emb: DataFrame, dir: String,
       kCells: Int = 0, iters: Int = 3, nHint: Long = 0L): (Int, PqCodebooks) = {
-    recoverSwap(spark, dir) // heal a crashed earlier swap before reading
+    Compaction.recover(spark, dir) // heal a crashed earlier swap before reading
     val stage = s"${dir}__retraining"
     val out = savePqIndex(spark, emb, stage, kCells, iters, nHint)
     val n = spark.read.parquet(s"$dir/codes").count()

@@ -90,11 +90,15 @@ object TextIndex {
     * global df (sum over the term's matched rows' segments — each doc
     * lives in one segment, so per-segment dfs sum to the global
     * value); single-segment readers can skip it and use the stored df.
+    * The postings relation comes from the [[graft.Tables.loadPath]]
+    * frame memo: a repeat probe skips schema inference and re-listing
+    * the bucket directories until a segment append or a compaction
+    * changes the stamp.
     */
   def probe(spark: SparkSession, dir: String, terms: Seq[String],
       refreshDf: Boolean = false): DataFrame = {
     val buckets = terms.map(bucketOf).distinct
-    val matched = spark.read.parquet(s"$dir/postings")
+    val matched = graft.Tables.loadPath(spark, s"$dir/postings")
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
     val out =

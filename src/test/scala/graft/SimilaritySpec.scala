@@ -634,4 +634,104 @@ class SimilaritySpec extends SparkSpec {
     checkReachable(470L, "after compaction")
     assert(!Hnsw.compactIndex(spark, dir), "no delta left — compact must no-op")
   }
+
+  /** The short call sites of the Spark jobs `body` starts: each job's
+    * result stage (its last) is named after the action's call site.
+    */
+  private def jobSites(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000L)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc, 10000L)
+    } finally sc.removeSparkListener(listener)
+    sites.asScala.toSeq
+  }
+
+  test("a repeat IVF or PQ probe of an unchanged index builds its frame without a job") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sf0001)
+    val ivf = java.nio.file.Files.createTempDirectory("ivfopen").toString
+    Similarity.saveIndex(spark, emb, ivf, iters = 2)
+    val pq = java.nio.file.Files.createTempDirectory("pqopen").toString
+    Similarity.savePqIndex(spark, emb, pq, iters = 2)
+    val qv = emb.filter(col("vec_id") === 42)
+      .select(operators.VectorOps.toDouble(col("embedding")))
+      .as[Array[Double]].head()
+    val probes = Seq(
+      "ivf" -> (() => Similarity.probeIndex(spark, ivf, qv, topK = 6, probes = 2)),
+      "pq" -> (() => Similarity.probePqIndex(spark, pq, qv, topK = 6, probes = 2)))
+    for ((name, probe) <- probes) {
+      var first: org.apache.spark.sql.DataFrame = null
+      // the first open infers the schemas and collects the constants
+      assert(jobSites { first = probe() }.nonEmpty, s"$name: the first open must read the index")
+      var again: org.apache.spark.sql.DataFrame = null
+      val sites = jobSites { again = probe() }
+      assert(sites.isEmpty, s"$name: a repeat probe re-opened the index: $sites")
+      // the probe itself still runs, and answers the same
+      assert(again.collect().toSeq === first.collect().toSeq)
+    }
+  }
+
+  /** An HNSW index over the vectors `emb` keeps, with trained cells on
+    * every level (a small exact-pair cap), so its probes also seed from
+    * the level-0 centroid bank.
+    */
+  private def celledHnsw(keep: org.apache.spark.sql.Column, dir: String): Unit =
+    operators.Hnsw.buildIndex(spark, Tables.embeddings(spark, sf0001).filter(keep), dir,
+      nHint = 250L, exactPairCap = 40L)
+
+  private def vectorOf(id: Long): Array[Double] = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    Tables.embeddings(spark, sf0001).filter(col("vec_id") === id)
+      .select(operators.VectorOps.toDouble(col("embedding")))
+      .as[Array[Double]].head()
+  }
+
+  test("hnsw: a repeat probe of an unchanged index starts only its hop reads") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Hnsw
+    val dir = java.nio.file.Files.createTempDirectory("hnswopen").toString
+    celledHnsw(col("vec_id") < 250, dir)
+    val qv = vectorOf(42L)
+    val first = Hnsw.probe(spark, dir, qv, topK = 5).collect().toSeq
+    // the probe runs its seed and hop reads eagerly; the top-k frame it
+    // returns is executed by the caller, outside the count
+    var again: org.apache.spark.sql.DataFrame = null
+    val sites = jobSites { again = Hnsw.probe(spark, dir, qv, topK = 5) }
+    assert(sites.nonEmpty && sites.forall(_.startsWith("collect at Hnsw.scala")),
+      s"a repeat probe must start only its seed and hop reads: $sites")
+    assert(again.collect().toSeq === first)
+  }
+
+  test("hnsw: an index directory swapped in by another writer is served at once") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.{Compaction, Hnsw}
+    val root = java.nio.file.Files.createTempDirectory("hnswswap").toString
+    val dir = s"$root/idx"
+    celledHnsw(col("vec_id") < 250, dir)
+    val qv = vectorOf(300L)
+    def probe(d: String) = Hnsw.probe(spark, d, qv, topK = 5).as[(Long, Double)].collect().toSeq
+    val old = probe(dir)
+    // another writer rebuilds the index from different vectors into a
+    // sibling and swaps it in: no Hnsw.buildIndex call on `dir`
+    val sibling = s"$root/idx__rebuilt"
+    celledHnsw(col("vec_id") >= 250, sibling)
+    val want = probe(sibling)
+    Compaction.swapStaged(spark, dir, sibling)(true)
+    val got = probe(dir)
+    assert(got.head === ((300L, 1.0)), s"the swapped-in index holds the query vector: $got")
+    assert(got === want, "the probe served the superseded index")
+    assert(got !== old)
+  }
 }
