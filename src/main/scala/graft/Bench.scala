@@ -182,10 +182,18 @@ object Bench {
       }
     } catch {
       case e: Throwable =>
-        Left((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
-          .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(180))
+        Left(errorText(e))
     }
   }
+
+  /** One line naming an exception for the JSON output. Quotes,
+    * backslashes and ALL control chars are blanked: any of them inside
+    * an errors JSON string would break the driver's parse of the whole
+    * bench line exactly when a query errored.
+    */
+  private def errorText(e: Throwable): String =
+    (e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
+      .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(180)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -202,35 +210,15 @@ object Bench {
     if (loadStart > nproc / 2.0)
       System.err.println(f"[bench] WARNING: system load $loadStart%.1f on $nproc cpus " +
         "— timings will be inflated by concurrent work; rerun on a quiet machine")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 8 shuffle partitions beats `cpus` at this scale factor: the data
-      // per shuffle is tiny, so task-scheduling overhead dominates; AQE
-      // (on by default) still coalesces/splits as volumes change.
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // Size the generated-class cache to the SUITE, not Spark's
-      // 100-entry default: the warmup pass exists so the timed reps hit
-      // the whole-stage-codegen class cache (see above), but the suite
-      // cycles ~2.4k distinct codegen units per SF through
-      // CodeGenerator.cache, so with the default every timed rep
-      // re-Janino-compiles its whole query — measured 2,661 compiles
-      // per steady-state pass (SCALE.md round-20 codegen section),
-      // falling to ~30 with a suite-sized cache and cutting the pure
-      // fixed-cost pass wall 84.4 -> 49.7 s at sf0.01. Static conf, set
-      // before the session exists; env-overridable for A/B probes. Not
-      // a local[32] artifact: the cache is per-JVM on any deployment
-      // and the entry count is set by the query portfolio, not the
-      // data scale.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    // ERROR, not WARN: WindowExec's no-partition-defined warning fires
-    // per window query and the spam (thousands of lines at 148 queries
-    // x 2 reps) twice pushed the JSON detail line out of the driver's
-    // tail-capture window (BENCH_r10/r11 both lost the per-query map).
-    // The bench's own diagnostics go through System.err directly.
-    spark.sparkContext.setLogLevel("ERROR")
+    // 8 shuffle partitions beats `cpus` at this scale factor: the data
+    // per shuffle is tiny, so task-scheduling overhead dominates; AQE
+    // (on by default) still coalesces/splits as volumes change. Log
+    // level ERROR, not WARN: WindowExec's no-partition-defined warning
+    // fires per window query and the spam twice pushed the JSON detail
+    // line out of the driver's tail-capture window (BENCH_r10/r11 both
+    // lost the per-query map). The bench's own diagnostics go through
+    // System.err directly.
+    val spark = SparkEntry.localSession(cpus.toInt, 8, suiteCodegenCache = true, "ERROR")
     // Every emitted JSON line is ALSO appended to a file (default
     // bench_out.json in the working directory) so the per-query map
     // survives even if stdout is truncated by the capture window.
@@ -332,11 +320,7 @@ object Bench {
         Right(Rep(sec, nJobs.get, gcTotalMs() - gc0))
       } catch {
         case e: Throwable =>
-          // scrub quotes, backslashes, and ALL control chars — any of
-          // them inside the errors JSON string would break the driver's
-          // parse of the whole bench line exactly when a query errored
-          Left((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage))
-            .replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(180))
+          Left(errorText(e))
       } finally spark.sparkContext.removeSparkListener(listener)
     }
     // Each query is timed twice and the MIN over SUCCESSFUL reps is

@@ -153,18 +153,9 @@ object CorpusDemo {
     writeAsset(6L, graft.operators.Multimodal.syntheticFamilyPng(heroBase, "aa0"))
     writeAsset(7L, graft.operators.Multimodal.syntheticFamilyPng(heroBase, "3f1"))
     writeAsset(1L, graft.operators.Multimodal.syntheticFamilyPng(otherBase, "c2b"))
-    // file streams require an explicit schema; binaryFile's is static
-    val binarySchema = {
-      import org.apache.spark.sql.types._
-      StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType)))
-    }
     val aq = StreamingCorpusOps.phashCandidates(
         spark.readStream.format("binaryFile")
-          .schema(binarySchema)
+          .schema(graft.sources.WarcIngest.BinaryFileSchema)
           .load(assetsDir.toString)
           .select(regexp_extract(col("path"), "(\\d+)\\.png$", 1)
             .cast("long").as("doc_id"), col("content").as("payload")))

@@ -1,12 +1,12 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.graft.bridge
 
 /** Dev tool: time individual queries by name (args), min of `reps`
-  * (env SPARK_GRAFT_REPS, default 2), same session shape as Bench.
+  * (env SPARK_GRAFT_REPS, default 2), same session confs as Bench
+  * (log level WARN).
   * Each rep is split into build (DataFrame construction), plan
   * (analysis + optimization + physical planning, forced through
   * `executedPlan`) and exec (the `count()` action, which also plans
@@ -22,16 +22,7 @@ object QBench extends AdaptiveSparkPlanHelper {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // match Bench's suite-sized codegen cache so isolated numbers
-      // are comparable to in-run rows
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus.toInt, 8, suiteCodegenCache = true, "WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.RcOps
-import graft.queries.{AnalyticsQueries, ExtensionQueries, ParityQueries}
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -34,45 +34,69 @@ object SparkEntry {
       RcOps.sanitizedFilename(col("user_id"), col("event_id")).as("filename"))
   }
 
-  /** The session of the dev and demo mains: `local[n]`, `n` shuffle
+  /** The session of the demo and dev mains: `local[n]`, `n` shuffle
     * partitions, UTC, UI off, log level ERROR.
     */
-  def localSession(n: Int): SparkSession = {
-    val spark = SparkSession.builder().master(s"local[$n]")
-      .config("spark.sql.shuffle.partitions", n.toString)
+  def localSession(n: Int): SparkSession =
+    localSession(n, n, suiteCodegenCache = false, "ERROR")
+
+  /** The session of every main: `local[cores]`, `partitions` shuffle
+    * partitions, UTC, UI off, log level `logLevel`. `suiteCodegenCache`
+    * sizes the generated-class cache to the query suite (8192 entries):
+    * one pass over the suite cycles ~2.4k codegen units, so Spark's
+    * 100-entry default recompiles every query on every timed rep (2,661
+    * compiles per pass, ~30 with the larger cache; SCALE.md round 20).
+    * It is a static conf, so it must be set before the session exists,
+    * and it changes compile time only, never a result.
+    */
+  def localSession(cores: Int, partitions: Int, suiteCodegenCache: Boolean,
+      logLevel: String): SparkSession = {
+    val b = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", partitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      .config("spark.ui.enabled", "false")
+    if (suiteCodegenCache) b.config("spark.sql.codegen.cache.maxEntries", "8192")
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
     spark
   }
 
+  /** Every named query, one [[NamedQuery]] per name, family by family:
+    * the reference's operators (SURVEY.md §2.1), the SQL analytics
+    * suite, then the training-data families.
+    */
+  private[graft] lazy val registry: Seq[NamedQuery] = Seq(
+    ParityQueries.entries, AnalyticsQueries.entries, DedupQueries.entries,
+    SimilarityQueries.entries, AnnIndexQueries.entries, SearchQueries.entries,
+    CrawlQueries.entries, CorpusQueries.entries, MultimodalQueries.entries,
+    ExportQueries.entries).flatten
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ AnalyticsQueries.queries ++ ExtensionQueries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     *
     * One deliberate exception to "equivalent SQL": the CONTRACT
     * oracles — constant expected-health tables, not computation
     * replays — covering the operators whose learned state is not
     * SQL-expressible: `sim_recall_report_trained` (the six-rung recall
-    * rollup) and, since r16, the six trained/indexed ANN rungs
-    * themselves (`sim_{ivf,pq}_topk_{trained,indexed}`,
+    * rollup), the six trained/indexed ANN rungs
+    * (`sim_{ivf,pq}_topk_{trained,indexed}`,
     * `sim_pq_trained_rerank_topk`, `dedup_embedding_trained` — each
     * runs its REAL rung inline and emits one row of structural +
-    * recall health bits, see ExtensionQueries.annRungContract) plus
+    * recall health bits, see AnnIndexQueries.annRungContract) and
     * `bpe_token_counts` (train + distributed apply, gated on merge
     * completion, losslessness, and apply/re-encode total agreement).
-    * A trained-path regression flips the specific rung's driver gate
-    * instead of hiding in a spec run. Their DuckDB times are ~0 and
-    * NOT fair perf denominators (the Spark side measures the real
-    * serving work). Since r17 `q12_approx_distinct` is gated the same
-    * way (HLL estimates differ by engine, so the oracle checks exact
-    * columns + per-group |est−exact|/exact ≤ 4×rsd health bits;
-    * `q12b_kmv_distinct` gates sketch semantics exactly) — EVERY
-    * query key now has an oracle entry: the rows-only set is empty.
+    * A trained-path regression flips the specific rung's gate instead
+    * of hiding in a spec run. Their DuckDB times are ~0 and NOT fair
+    * perf denominators (the Spark side measures the real serving
+    * work). `q12_approx_distinct` is gated the same way (HLL estimates
+    * differ by engine, so the oracle checks exact columns + per-group
+    * |est−exact|/exact ≤ 4×rsd health bits; `q12b_kmv_distinct` gates
+    * sketch semantics exactly). Every query has an oracle.
     */
-  def oracleSql: Map[String, String] =
-    ParityQueries.oracleSql ++ AnalyticsQueries.oracleSql ++ ExtensionQueries.oracleSql
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

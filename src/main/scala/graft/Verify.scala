@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,10 @@ object Verify {
     // aid; the driver always passes exactly two args = full dump)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // suite-sized generated-class cache (the Bench.scala rationale):
-      // one Verify run compiles every query once, but plan subtrees
-      // recur across queries and the dump re-runs shared stores — with
-      // the 100-entry default the session recompiles what it just
-      // evicted. Purely a compile-time cache; results are unaffected.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // suite-sized codegen cache: one Verify run compiles every query
+    // once, but plan subtrees recur across queries and the dump re-runs
+    // shared stores
+    val spark = SparkEntry.localSession(cpus.toInt, cpus.toInt, suiteCodegenCache = true, "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

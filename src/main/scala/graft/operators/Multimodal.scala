@@ -1055,6 +1055,13 @@ object Multimodal {
     }
     bands
   }
+  /** One (id, frame index, dHash bands 0..3) row per frame of a video. */
+  def frameDhashRows(id: Long, frames: IndexedSeq[PgmImage]): Iterator[(Long, Int, Int, Int, Int, Int)] =
+    frames.iterator.zipWithIndex.map { case (fr, f) =>
+      val b = dhashBands(fr)
+      (id, f, b(0), b(1), b(2), b(3))
+    }
+
 
   def syntheticPgmContainer(contentHash: String, nBytes: Long): Array[Byte] = {
     // dims kept small (16..44 px): decoder correctness is independent

@@ -30,7 +30,7 @@ object WarcIngest {
   /** The fixed `binaryFile` source schema — file streams require an
     * explicit schema, and binaryFile's is static.
     */
-  private val BinaryFileSchema: org.apache.spark.sql.types.StructType = {
+  val BinaryFileSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("path", StringType),

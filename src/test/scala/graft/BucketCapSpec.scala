@@ -76,7 +76,7 @@ class BucketCapSpec extends SparkSpec {
     // factors the gate actually runs (sf0.01 verify, sf0.1 re-check).
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
         if new java.io.File(dir).isDirectory) {
-      for ((name, banded) <- graft.queries.ExtensionQueries.perceptualBandFrames(spark, dir)) {
+      for ((name, banded) <- graft.queries.DedupQueries.perceptualBandFrames(spark, dir)) {
         val biggest = banded.groupBy(col("b"), col("v")).count()
           .agg(max(col("count"))).as[Long].head()
         assert(biggest < TextOps.MaxBucket,

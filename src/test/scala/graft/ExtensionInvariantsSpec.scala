@@ -306,7 +306,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
       ("xyzzy qwerty plugh", "und"))
     val got = fixtures.map(_._1).toDF("text")
       .select(col("text"),
-        graft.queries.ExtensionQueries.langidPrediction(col("text")).as("pred"))
+        graft.queries.CorpusQueries.langidPrediction(col("text")).as("pred"))
       .as[(String, String)].collect().toMap
     fixtures.foreach { case (text, want) =>
       assert(got(text) === want, s"for: $text")
@@ -391,7 +391,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
     // does, so the trained rung is the one savePqIndex serves.
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.01"
-    val pq = graft.queries.ExtensionQueries.trainedRungFrames("sim_pq_topk_trained")(spark, dir)
+    val pq = graft.queries.AnnIndexQueries.trainedRungFrames("sim_pq_topk_trained")(spark, dir)
       .as[(Long, Double)].collect().map(_._1)
     val emb = Tables.embeddings(spark, dir)
     val qv = emb.filter(col("vec_id") === 299)
@@ -480,7 +480,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
     // is the number a production deployment of the trained path ships.
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.1"
-    val rr = graft.queries.ExtensionQueries.trainedRungFrames("sim_pq_trained_rerank_topk")(spark, dir)
+    val rr = graft.queries.AnnIndexQueries.trainedRungFrames("sim_pq_trained_rerank_topk")(spark, dir)
       .select(col("vec_id")).as[Long].collect()
     val emb = Tables.embeddings(spark, dir)
     val qv = emb.filter(col("vec_id") === 299)
@@ -1139,7 +1139,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
           .cast("long").as("sc"))
       .orderBy(col("sc").desc, col("vec_id")).limit(10)
       .select("vec_id").as[Long].collect().toSet
-    val pqT = graft.queries.ExtensionQueries.trainedRungFrames("sim_pq_topk_trained")(spark, sf0001)
+    val pqT = graft.queries.AnnIndexQueries.trainedRungFrames("sim_pq_topk_trained")(spark, sf0001)
       .select(col("vec_id")).as[Long].collect().toSet
     val ov = pqT.intersect(exact).size
     assert(ov >= 6 && ov < 10,
@@ -1221,7 +1221,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
     // only for keepers; derive the full map from the kept cells plus
     // the graph's own transitivity (src and dst must co-occur with a
     // shared kept anchor) is weaker, so replay assignment directly
-    val cellOf = graft.queries.ExtensionQueries
+    val cellOf = graft.queries.SimilarityQueries
       .seededCellsForSpec(spark, sf0001)
       .as[(Long, Long)].collect().toMap
     rows.foreach(r => assert(cellOf(r._1) === cellOf(r._3),
@@ -2335,7 +2335,7 @@ class ExtensionInvariantsSpec extends SparkSpec {
     // uniform, the min-loss source's never above (losses from the
     // surprisal store replayed through the same integer spec)
     import org.apache.spark.sql.functions._
-    val ls = graft.queries.ExtensionQueries.surprisalBuildFrame(spark, sf0001)
+    val ls = graft.queries.CorpusQueries.surprisalBuildFrame(spark, sf0001)
       .select(col("doc_id"),
         round(col("avg_surprisal") * 1e6).cast("long").as("sm"), col("n_tokens"))
       .join(Tables.documents(spark, sf0001).select(col("doc_id"), col("source")),

@@ -180,7 +180,7 @@ class PlanAuditSpec extends SparkSpec {
     // The served query now reads the materialized score store, so the
     // audit targets the store's BUILD plan — the one that pays the
     // join.
-    val p = graft.queries.ExtensionQueries.surprisalBuildFrame(spark, sf0001)
+    val p = graft.queries.CorpusQueries.surprisalBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     val joinLines = p.linesIterator.filter(_.contains("Join")).toSeq
     assert(joinLines.exists(_.contains("BroadcastHashJoin")),
@@ -201,7 +201,7 @@ class PlanAuditSpec extends SparkSpec {
     // disables itself once the scan has >= parallelism tasks, so the
     // 100 TB plan stays exchange-free). KEYED exchanges stay forbidden:
     // those would shuffle raw page bytes by content, the actual killer.
-    val p = graft.queries.ExtensionQueries.linkEdgeBuildFrame(spark, sf0001)
+    val p = graft.queries.CrawlQueries.linkEdgeBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     val keyed = p.linesIterator.count(l =>
       l.contains("Exchange hashpartitioning") ||
@@ -224,7 +224,7 @@ class PlanAuditSpec extends SparkSpec {
     // The served query now reads the materialized score store (r17),
     // so the audit targets the store's BUILD plan — the one that pays
     // the join.
-    val p = graft.queries.ExtensionQueries.nbScoreBuildFrame(spark, sf0001)
+    val p = graft.queries.CorpusQueries.nbScoreBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     val joinLines = p.linesIterator.filter(_.contains("Join")).toSeq
     assert(joinLines.exists(_.contains("BroadcastHashJoin")),
@@ -344,7 +344,7 @@ class PlanAuditSpec extends SparkSpec {
     // audited here instead; decon_embedding still assigns inline.
     val plans = Seq(
       "embPairsBuildFrame" ->
-        graft.queries.ExtensionQueries.embPairsBuildFrame(spark, sf0001)
+        graft.queries.DedupQueries.embPairsBuildFrame(spark, sf0001)
           .queryExecution.executedPlan.toString,
       "decon_embedding" -> plan("decon_embedding"))
     for ((q, p) <- plans) {
@@ -543,7 +543,7 @@ class PlanAuditSpec extends SparkSpec {
     // the plan must not contain a doc_id hash aggregate before banding.
     // r18: audits the pair store's BUILD plan (serving is a scan —
     // see the pair-stores test below).
-    val p = graft.queries.ExtensionQueries.minhashPairsBuildFrame(spark, sf0001)
+    val p = graft.queries.DedupQueries.minhashPairsBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(!p.contains("HashAggregate(keys=[doc_id"),
       s"signature aggregation resurfaced (native expression bypassed):\n$p")
@@ -563,7 +563,7 @@ class PlanAuditSpec extends SparkSpec {
     }
     // the verify BUILD must consume the candidate STORE (a parquet
     // scan), not re-run the banding pipeline inline
-    val pb = graft.queries.ExtensionQueries.verifiedPairsBuildFrame(spark, sf0001)
+    val pb = graft.queries.DedupQueries.verifiedPairsBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(pb.contains("Scan parquet"),
       s"verify build re-derives candidates instead of reading the store:\n$pb")
@@ -742,14 +742,14 @@ class PlanAuditSpec extends SparkSpec {
     // at scale) — but a cartesian / nested-loop anywhere means the
     // join key got lost, and fewer than 5 hash exchanges means an
     // iteration's contribution aggregate collapsed into something else
-    val p = graft.queries.ExtensionQueries.pagerankEdgesBuildFrame(spark, multiSplit)
+    val p = graft.queries.CrawlQueries.pagerankEdgesBuildFrame(spark, multiSplit)
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"pagerank-over-edges planned an unkeyed join:\n$p")
     val n = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(n >= 5, s"expected >= 5 contribution aggregates, got $n:\n$p")
     // one-split documents and edge store: five keyed joins, no exchange
-    val tiny = graft.queries.ExtensionQueries.pagerankEdgesBuildFrame(spark, sf0001)
+    val tiny = graft.queries.CrawlQueries.pagerankEdgesBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(hashExchanges(tiny) === 0 && !tiny.contains("CartesianProduct") &&
       !tiny.contains("BroadcastNestedLoopJoin") &&
@@ -806,7 +806,7 @@ class PlanAuditSpec extends SparkSpec {
     // is a map-side Generate — a shuffled join anywhere means the
     // arithmetic edge derivation regressed to a materialized
     // edge-table join
-    val p = graft.queries.ExtensionQueries.pagerankBuildFrame(spark, multiSplit)
+    val p = graft.queries.CrawlQueries.pagerankBuildFrame(spark, multiSplit)
       .queryExecution.executedPlan.toString
     val n = p.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(n === 5, s"expected exactly the 5 iteration exchanges, got $n:\n$p")
@@ -815,7 +815,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.linesIterator.count(_.contains("Generate explode")) === 5,
       s"expected one map-side out-link explode per iteration:\n$p")
     // one-split documents: the five iterations run in one stage
-    val tiny = graft.queries.ExtensionQueries.pagerankBuildFrame(spark, sf0001)
+    val tiny = graft.queries.CrawlQueries.pagerankBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(hashExchanges(tiny) === 0 && !tiny.contains("SortMergeJoin") &&
       tiny.linesIterator.count(_.contains("Generate explode")) === 5,
@@ -899,7 +899,7 @@ class PlanAuditSpec extends SparkSpec {
     // assignment regressed to the r5 crossJoin + max_by shape.
     // r18: audits the assignment store's BUILD plan (serving is a
     // scan — cluster_kmeans/silhouette/balanced read the store).
-    val p = graft.queries.ExtensionQueries.kmeansClustersBuildFrame(spark, sf0001)
+    val p = graft.queries.SimilarityQueries.kmeansClustersBuildFrame(spark, sf0001)
       .queryExecution.executedPlan.toString
     assert(p.contains("seeded_cell_argmax"),
       s"assignment must be the native argmax projection:\n$p")

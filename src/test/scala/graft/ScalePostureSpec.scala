@@ -33,7 +33,7 @@ class ScalePostureSpec extends SparkSpec {
   test("text index probe prunes the file listing to the probed term buckets") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import graft.operators.TextIndex
-    import graft.queries.ExtensionQueries.{Bm25Terms, textIndexDir}
+    import graft.queries.SearchQueries.{Bm25Terms, textIndexDir}
     // the driver-side bucket hash must BE Spark's xxhash64 — recompute
     // through the engine and compare (a drift here would silently
     // probe the wrong directories and return an empty frame)

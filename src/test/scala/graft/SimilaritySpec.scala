@@ -166,7 +166,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("sim_ivf_topk_indexed query: probe-only serving path equals the trained twin") {
     import spark.implicits._
-    val got = graft.queries.ExtensionQueries.trainedRungFrames("sim_ivf_topk_indexed")(spark, sf0001)
+    val got = graft.queries.AnnIndexQueries.trainedRungFrames("sim_ivf_topk_indexed")(spark, sf0001)
       .as[(Long, Double)].collect().toSeq
     assert(got.length === 5)
     assert(!got.exists(_._1 == 42L), "self-match must be dropped")
@@ -420,7 +420,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(truth.nonEmpty, "fixture must contain at least one true near-dup pair")
 
-    val trained = graft.queries.ExtensionQueries.trainedRungFrames("dedup_embedding_trained")(spark, sf0001)
+    val trained = graft.queries.AnnIndexQueries.trainedRungFrames("dedup_embedding_trained")(spark, sf0001)
       .as[(Long, Long, Double)].collect().toSet
     val seeded = SparkEntry.queries("dedup_embedding")(spark, sf0001)
       .as[(Long, Long, Double)].collect().toSet

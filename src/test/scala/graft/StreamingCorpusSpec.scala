@@ -82,7 +82,7 @@ class StreamingCorpusSpec extends SparkSpec {
     // batch-trained bank; the admitted set per cluster is bottom-32
     // coins — order-free, so the final stream state must be BIT-EQUAL
     // to sample_cluster_balanced over the same rows
-    val bank = graft.queries.ExtensionQueries.trainedKmeansBank(spark, sf0001)
+    val bank = graft.queries.SimilarityQueries.trainedKmeansBank(spark, sf0001)
     val in = MemoryStream[(Long, Array[Float])]
     val q = StreamingCorpusOps.clusterBalancedGate(
         in.toDF().toDF("vec_id", "embedding"), bank, cap = 32)
